@@ -93,8 +93,10 @@ object Bench {
     * bench query's shuffle/spill/task footprint lands in the JSON
     * artifact — an anomalous wall-time (like r8's unexplained 13.8s
     * ctr_referrer) is then diagnosable from the artifact alone: CPU
-    * blip (same bytes, more time) vs plan change (different bytes). */
-  private final class StageMetrics extends SparkListener {
+    * blip (same bytes, more time) vs plan change (different bytes).
+    * `tools.RunOne` attaches the same listener, so its per-run counters
+    * and the sidecar's come from one class. */
+  private[graft] final class StageMetrics extends SparkListener {
     private var stages, tasks = 0L
     private var shufRead, shufWrite, spillMem, spillDisk, inBytes = 0L
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =

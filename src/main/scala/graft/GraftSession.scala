@@ -16,14 +16,12 @@ object GraftSession {
       // size. A blanket 8× multiple was MEASURED and rejected: it
       // fixes the one spill-heavy query at sf10 but taxes every
       // small shuffle ~30-80% at sf0.1 (task overhead AQE coalescing
-      // does not win back). Default stays 1×; the operators whose
+      // does not win back). It stays 1×; the operators whose
       // fan-out outgrows the session default (the Jaccard pair
       // aggregation) size their own exchanges from measured
-      // cardinality instead — see Dedup.jaccardJoin. The env knob
-      // remains for cluster-level experiments.
+      // cardinality instead — see Dedup.jaccardJoin.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (shufflePartitions *
-          sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS_FACTOR", "1").toInt).toString)
+        shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")

@@ -32,8 +32,7 @@ object Ctr {
 
   /** Deterministic impression log derived from events: every event is
     * an impression; referrer/adId from stable columns. The "ts=" prefix
-    * is the noise the reference strips before '{'. (Shared with
-    * tools.Perf so stage timings measure the real pipeline.) */
+    * is the noise the reference strips before '{'. */
   private[graft] def impressionLines(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.events(s, dir).select(concat(

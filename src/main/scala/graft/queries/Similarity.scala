@@ -2219,11 +2219,11 @@ object Similarity {
     * DiskANN walks pointers; on a cluster each hop is a join. */
   // Beam-search operating point, measured at sf0.01 (see scaladoc):
   // B=32/T=10 → recall@5 36/50 visiting ~46% of the 500-node corpus;
-  // B=16/T=6 → 20/50. Env knobs for operating-curve experiments only —
-  // they feed BOTH the plan and the oracle, so the gate stays paired.
-  private val BeamT = sys.env.getOrElse("SPARK_GRAFT_BEAM_T", "10").toInt
-  private val BeamB = sys.env.getOrElse("SPARK_GRAFT_BEAM_B", "32").toInt
-  private val BeamPoolK = sys.env.getOrElse("SPARK_GRAFT_BEAM_POOLK", "3").toInt
+  // B=16/T=6 → 20/50. The constants feed BOTH the plan and the oracle,
+  // so the gate stays paired.
+  private val BeamT = 10
+  private val BeamB = 32
+  private val BeamPoolK = 3
 
   /** The search state after T best-first rounds at beam width `b`,
     * over a pre-built symmetrized edge table: every visited node with

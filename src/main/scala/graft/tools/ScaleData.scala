@@ -38,7 +38,7 @@ object ScaleData {
     val Array(src, dst, factorS) = args.take(3)
     val factor = factorS.toInt
     require(factor >= 1, "factor must be >= 1")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     import spark.implicits._
 
     def table(n: String) = spark.read.parquet(s"$src/$n.parquet")
