@@ -3,10 +3,11 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Deterministic hash/sketch kernels shared by the expressions below and
@@ -254,54 +255,128 @@ object Kernels {
     out
   }
 
-  /** Whitespace tokens → w-shingle FNV hashes (w=3), distinct not
-    * required (min is idempotent). Empty docs → empty array. */
-  def shingleHashes(text: UTF8String, w: Int): Array[Long] = {
-    val toks = text.toString.split(" ")
-    if (toks.length < w) return Array.emptyLongArray
-    val out = new Array[Long](toks.length - w + 1)
+  /** Text bytes exactly as Spark's `split` sees them: it decodes
+    * through `toString`, which turns each malformed UTF-8 sequence into
+    * U+FFFD. Valid text (the common case) is returned as is. */
+  private def splitView(text: UTF8String): UTF8String =
+    if (text.isValid) text else UTF8String.fromString(text.toString)
+
+  /** Start of the window after the one starting at `from`: one byte past
+    * the first ' ' at or after `from` (a window of ≥ 2 tokens, or a
+    * 1-token window not at the text's end, always holds one). */
+  private def nextWindow(base: AnyRef, off: Long, from: Int): Int = {
+    var p = from
+    while (Platform.getByte(base, off + p) != ' ') p += 1
+    p + 1
+  }
+
+  /** Distinct XXH64 (seed 42) hashes of every w-token window, ascending.
+    * Bit-identical to Spark's
+    * `xxhash64(concat_ws(' ', slice(split(text, ' '), i, w)))` over all
+    * windows: the tokens of `split(text, " ", -1)` rejoined with ' ' are
+    * a contiguous byte range of the text, so each window is hashed in
+    * place — no String, no token array, no per-shingle allocation.
+    * Empty tokens (double, leading or trailing spaces) count as tokens;
+    * fewer than w tokens give an empty array. */
+  def shingleSet(text0: UTF8String, w: Int): UnsafeArrayData = {
+    val text = splitView(text0)
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    val len = text.numBytes
+    var spaces = 0
     var i = 0
-    while (i + w <= toks.length) {
-      var h = FnvOffset
-      var k = 0
-      while (k < w) {
-        val b = toks(i + k).getBytes("UTF-8")
-        var bi = 0
-        while (bi < b.length) { h ^= (b(bi) & 0xffL); h *= FnvPrime; bi += 1 }
-        h ^= ' '.toLong; h *= FnvPrime
-        k += 1
+    while (i < len) { if (Platform.getByte(base, off + i) == ' ') spaces += 1; i += 1 }
+    val nSh = spaces + 2 - w // tokens - w + 1
+    if (nSh <= 0) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
+    val hs = new Array[Long](nSh)
+    var m = 0
+    var toks = 0
+    var start = 0
+    i = 0
+    while (i <= len) {
+      if (i == len || Platform.getByte(base, off + i) == ' ') {
+        toks += 1
+        if (toks >= w) {
+          hs(m) = XXH64.hashUnsafeBytes(base, off + start, i - start, 42L)
+          m += 1
+          if (i < len) start = nextWindow(base, off, start)
+        }
       }
-      out(i) = h
       i += 1
     }
-    out
+    java.util.Arrays.sort(hs)
+    m = 1
+    i = 1
+    while (i < nSh) { if (hs(i) != hs(m - 1)) { hs(m) = hs(i); m += 1 }; i += 1 }
+    UnsafeArrayData.fromPrimitiveArray(hs, Platform.LONG_ARRAY_OFFSET, m, 8)
   }
+
+  // splitmix64 permutation constants (a_j odd, b_j) depend only on j —
+  // computed once per (process, numPerms), not per document
+  private val minhashPermCache =
+    new java.util.concurrent.ConcurrentHashMap[Int, (Array[Long], Array[Long])]()
+  private def minhashPerms(numPerms: Int): (Array[Long], Array[Long]) =
+    minhashPermCache.computeIfAbsent(numPerms, { n =>
+      val a = new Array[Long](n)
+      val b = new Array[Long](n)
+      var j = 0
+      while (j < n) {
+        a(j) = splitmix64(2L * j) | 1L // odd → bijective mod 2^64
+        b(j) = splitmix64(2L * j + 1)
+        j += 1
+      }
+      (a, b)
+    })
 
   /** MinHash signature: perm j is h -> a_j*h + b_j (wrapping 64-bit),
     * constants from splitmix64 — a universal-ish family, deterministic
-    * across the cluster (no Random). */
-  def minhashSig(text: UTF8String, numPerms: Int, shingleW: Int): Array[Long] = {
-    val hs = shingleHashes(text, shingleW)
-    val sig = new Array[Long](numPerms)
-    var j = 0
-    while (j < numPerms) {
-      val a = splitmix64(2L * j) | 1L // odd → bijective mod 2^64
-      val b = splitmix64(2L * j + 1)
-      var best = Long.MaxValue
-      var i = 0
-      while (i < hs.length) {
-        val v = a * hs(i) + b
-        if (v < best) best = v
-        i += 1
+    * across the cluster (no Random). A shingle hash is FNV-1a 64 over
+    * each of its w tokens' UTF-8 bytes followed by ' '. Tokens follow
+    * Java's `text.split(" ")` (limit 0): trailing empty tokens are
+    * dropped, so an all-space text has none, while "" is one empty
+    * token; malformed UTF-8 reads as U+FFFD, as a `toString` decode
+    * gives. Since single spaces separate the tokens, a window is the
+    * contiguous byte range from its first token's start to its last
+    * token's end, scanned in place. Fewer than w tokens → all zeros. */
+  def minhashSig(text0: UTF8String, numPerms: Int, shingleW: Int): Array[Long] = {
+    val text = splitView(text0)
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    var len = text.numBytes
+    while (len > 0 && Platform.getByte(base, off + len - 1) == ' ') len -= 1
+    val noTokens = len == 0 && text.numBytes > 0
+    val (a, b) = minhashPerms(numPerms)
+    val sig = Array.fill(numPerms)(Long.MaxValue)
+    var any = false
+    var toks = 0
+    var start = 0
+    var i = 0
+    while (!noTokens && i <= len) {
+      if (i == len || Platform.getByte(base, off + i) == ' ') {
+        toks += 1
+        if (toks >= shingleW) {
+          var h = FnvOffset
+          var p = start
+          while (p < i) { h ^= (Platform.getByte(base, off + p) & 0xffL); h *= FnvPrime; p += 1 }
+          h ^= ' '.toLong; h *= FnvPrime
+          var j = 0
+          while (j < numPerms) {
+            val v = a(j) * h + b(j)
+            if (v < sig(j)) sig(j) = v
+            j += 1
+          }
+          any = true
+          if (i < len) start = nextWindow(base, off, start)
+        }
       }
-      sig(j) = if (hs.isEmpty) 0L else best
-      j += 1
+      i += 1
     }
+    if (!any) java.util.Arrays.fill(sig, 0L)
     sig
   }
 
   def minhashSigData(text: UTF8String, numPerms: Int, shingleW: Int): ArrayData =
-    new GenericArrayData(minhashSig(text, numPerms, shingleW))
+    UnsafeArrayData.fromPrimitiveArray(minhashSig(text, numPerms, shingleW))
 
   /** Polynomial rolling hash over code points: Horner's method with
     * base 257 mod the Mersenne prime 2^31-1 — the document fingerprint.
@@ -618,12 +693,34 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
+/** Distinct w-token shingle hashes of a text column, ascending
+  * (array<bigint>; see Kernels.shingleSet): the set the Jaccard and
+  * containment joins key on. Values equal
+  * `xxhash64(concat_ws(' ', slice(split(text, ' '), i, w)))` over all
+  * windows, pinned by KernelsPropertySpec. */
+case class ShingleSet(child: Expression, w: Int) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType != StringType)
+      TypeCheckResult.TypeCheckFailure(s"shingle_set expects a string argument, got ${child.dataType.sql}")
+    else if (w <= 0)
+      TypeCheckResult.TypeCheckFailure(s"shingle width must be positive, got $w")
+    else TypeCheckResult.TypeCheckSuccess
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullSafeEval(v: Any): Any = Kernels.shingleSet(v.asInstanceOf[UTF8String], w)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.shingleSet($c, $w)")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
 /** MinHash signature (array<bigint>) of a text column. */
 case class MinHashSig(child: Expression, numPerms: Int, shingleW: Int)
     extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"minhash_sig expects a string argument, got ${child.dataType.sql}")
+    if (child.dataType != StringType)
+      TypeCheckResult.TypeCheckFailure(s"minhash_sig expects a string argument, got ${child.dataType.sql}")
+    else if (shingleW <= 0)
+      TypeCheckResult.TypeCheckFailure(s"shingleW must be positive, got $shingleW")
+    else TypeCheckResult.TypeCheckSuccess
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullSafeEval(v: Any): Any =
     Kernels.minhashSigData(v.asInstanceOf[UTF8String], numPerms, shingleW)
@@ -913,6 +1010,7 @@ object Fns {
   def simhash64(c: Column): Column = column(SimHash64(expression(c)))
   def minhash_sig(c: Column, numPerms: Int = 128, shingleW: Int = 3): Column =
     column(MinHashSig(expression(c), numPerms, shingleW))
+  def shingle_set(c: Column, w: Int = 3): Column = column(ShingleSet(expression(c), w))
   def rolling_hash(c: Column): Column = column(RollingHash(expression(c)))
   def simhash_md5(c: Column): Column = column(SimHashMd5(expression(c)))
   def nfc(c: Column): Column = column(NfcNormalize(expression(c)))
@@ -951,6 +1049,11 @@ object Fns {
       case Seq(c, n) => MinHashSig(c, intArg(n, "numPerms"), 3)
       case Seq(c, n, w) => MinHashSig(c, intArg(n, "numPerms"), intArg(w, "shingleW"))
       case es => throw new IllegalArgumentException(s"minhash_sig takes 1-3 args, got ${es.length}")
+    })
+    registerFunction(spark, "shingle_set", {
+      case Seq(c) => ShingleSet(c, 3)
+      case Seq(c, w) => ShingleSet(c, intArg(w, "w"))
+      case es => throw new IllegalArgumentException(s"shingle_set takes 1-2 args, got ${es.length}")
     })
     registerFunction(spark, "rolling_hash", es => RollingHash(es.head))
     registerFunction(spark, "text_scan", es => TextScanStats(es.head))

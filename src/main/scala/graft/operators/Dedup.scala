@@ -210,22 +210,21 @@ object Dedup {
     * shared-shingle pairs, not |docs|². */
   def ngramJaccardPairs(spark: SparkSession, docs: DataFrame, w: Int = 3): DataFrame = {
     import spark.implicits._
-    val tok = docs
-      .select($"doc_id", split($"text", " ").as("ws"))
-      .filter(size($"ws") >= w)
     // Join on the 64-bit shingle hash, not the string: the self-join
     // moves/compares 8-byte keys instead of ~25-byte UTF8 strings.
     // (Counts differ from exact only on a 64-bit collision.)
-    // Per-doc dedup is IN-ROW (array_distinct): a doc's shingles are
-    // all born in its own row, so the shingle stream never pays a
-    // (doc_id, s) exchange, and |set| is a free in-row size() — no
-    // groupBy for the per-doc sizes either.
+    // Per-doc dedup is IN-ROW (the shingle_set kernel returns a distinct
+    // set): a doc's shingles are all born in its own row, so the shingle
+    // stream never pays a (doc_id, s) exchange, and |set| is a free
+    // in-row size() — no groupBy for the per-doc sizes either.
     // localCheckpoint: the per-doc set feeds three consumers (both
     // self-join sides + sizes); aliasing defeats Catalyst's exchange
     // reuse, so without it the shingle kernel runs thrice.
-    val perDoc = tok
-      .select($"doc_id", expr(
-        s"array_distinct(transform(sequence(0, size(ws) - $w), i -> xxhash64(concat_ws(' ', slice(ws, i + 1, $w)))))").as("ss"))
+    // A doc with fewer than w tokens keeps an empty set: it never meets
+    // the self-join, and filtering it would run the kernel twice (the
+    // filter is pushed below the projection).
+    val perDoc = docs
+      .select($"doc_id", Fns.shingle_set($"text", w).as("ss"))
       .localCheckpoint()
     val sh = perDoc.select($"doc_id", explode($"ss").as("s"))
     val sz = perDoc.select($"doc_id", size($"ss").cast("long").as("n"))
@@ -272,33 +271,30 @@ object Dedup {
                   w: Int = 3): DataFrame = {
     import spark.implicits._
     require(tau > 0.0 && tau <= 1.0, "prefix filtering needs tau in (0,1]")
-    val tok = docs
-      .select($"doc_id", split($"text", " ").as("ws"))
-      .filter(size($"ws") >= w)
-    // Per-doc shingle dedup happens IN-ROW (array_distinct over the
-    // transform), not via explode+distinct(): every shingle of a doc is
-    // born in the doc's own row, so a within-row dedup is exact and the
-    // raw shingle stream never pays a (doc_id, s) exchange — at any
-    // scale that was the widest shuffle in the query.
-    val sh = tok
-      .select($"doc_id", explode(expr(
-        s"array_distinct(transform(sequence(0, size(ws) - $w), i -> xxhash64(concat_ws(' ', slice(ws, i + 1, $w)))))")).as("s"))
+    // Per-doc shingle dedup happens IN-ROW (the shingle_set kernel
+    // returns a distinct set), not via explode+distinct(): every
+    // shingle of a doc is born in the doc's own row, so a within-row
+    // dedup is exact and the raw shingle stream never pays a
+    // (doc_id, s) exchange — at any scale that was the widest shuffle
+    // in the query.
+    val sh = docs.select($"doc_id", explode(Fns.shingle_set($"text", w)).as("s"))
     // one df-ascending, hash-tiebroken order shared by every doc; the
     // per-doc sorted shingle array feeds the prefix explode AND both
     // verify sides — localCheckpoint so it computes once. df comes
     // from a count window over the SAME shingle pass (one exchange on
     // s), not a separate aggregate joined back — that join was pure
-    // fixed overhead at every scale.
+    // fixed overhead at every scale. Every step is a codegen'd
+    // built-in (sort_array, the oss.s field extraction): no lambda.
     val byRarity = sh
       .withColumn("df", count(lit(1)).over(Window.partitionBy($"s")))
       .groupBy($"doc_id")
-      .agg(array_sort(collect_list(struct($"df", $"s"))).as("oss"))
-      .select($"doc_id", expr("transform(oss, x -> x.s)").as("hs"),
+      .agg(sort_array(collect_list(struct($"df", $"s"))).as("oss"))
+      .select($"doc_id", $"oss.s".as("hs"),
         // numerically-sorted copy for the verify kernel: the verify
         // intersect is a two-pointer merge (sorted_intersect_count),
         // which needs a shared ascending order — the df order of hs
         // serves the prefix, this one serves verify
-        expr("array_sort(transform(oss, x -> x.s))").as("hv"),
+        sort_array($"oss.s").as("hv"),
         size($"oss").as("n"))
       .localCheckpoint()
     // free off the checkpoint (sums cached partition sizes); drives
@@ -346,6 +342,17 @@ object Dedup {
     // keep the session default anyway (measured fine at 50k docs), so
     // the aggregate would be a blocking driver job spent computing the
     // max() floor.
+    // Accepted skew bound below the cutoff: with no probe, a corpus of
+    // ≤ 100k docs emits Σ df² / 2 prefix-collision rows into the pair
+    // aggregation at the session-default partition count, at most
+    // nDocs² / 2 (5·10⁹) if one shingle sat in every prefix. Rarest-
+    // first order keeps that off real corpora: a hot shingle (a
+    // boilerplate footer on 15% of docs) sorts LAST, so it enters a
+    // doc's prefix only when that doc has fewer than n − ⌈τ·n⌉ + 1
+    // rarer shingles, i.e. when the doc is nearly all boilerplate. Such
+    // a corpus spills in the aggregation rather than failing; gating
+    // the probe on a cheap skew signal (max df off byRarity) instead of
+    // nDocs alone is left open.
     val big = nDocs > BroadcastVerifyMaxDocs
     val estRows =
       if (!big) 0L

@@ -159,20 +159,18 @@ object Dedup {
     // prefixes, so the fat buckets never reach the join); exact shared
     // is then a per-candidate two-pointer merge. Lossless: the DuckDB
     // all-pairs oracle is unchanged and still hash-matches.
+    // n, the full distinct-shingle count, is the set's in-row size,
+    // taken before the explode and the df cap.
     val sh = Tables.documents(s, dir)
-      .select($"doc_id", split($"text", " ").as("ws"))
-      .filter(size($"ws") >= w)
-      .select($"doc_id", explode(expr(
-        s"array_distinct(transform(sequence(0, size(ws) - $w), i -> xxhash64(concat_ws(' ', slice(ws, i + 1, $w)))))")).as("h"))
+      .select($"doc_id", graft.functions.Fns.shingle_set($"text", w).as("ss"))
+      .select($"doc_id", size($"ss").cast("long").as("n"), explode($"ss").as("h"))
     val byRarity = sh
       .withColumn("df", count(lit(1)).over(Window.partitionBy($"h")))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy($"doc_id")))
       .filter($"df" <= 64) // stop-shingle cap: shared counts kept only
       .groupBy($"doc_id")
-      .agg(array_sort(collect_list(struct($"df", $"h"))).as("oss"),
+      .agg(sort_array(collect_list(struct($"df", $"h"))).as("oss"),
         max($"n").as("n")) // full distinct-shingle count (incl. dropped)
-      .select($"doc_id", expr("transform(oss, x -> x.h)").as("hs"),
-        expr("array_sort(transform(oss, x -> x.h))").as("hv"),
+      .select($"doc_id", $"oss.h".as("hs"), sort_array($"oss.h").as("hv"),
         size($"oss").cast("long").as("k"), $"n")
       .localCheckpoint()
     // min-side prefix: only docs that can still reach shared >= ceil(n/2)

@@ -96,6 +96,53 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  /** Interpreted higher-order functions and lambdas in a plan. */
+  private def lambdas(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction, LambdaFunction}
+    val pick: PartialFunction[Expression, String] = {
+      case e: HigherOrderFunction => e.prettyName
+      case e: LambdaFunction => e.sql
+    }
+    p.collectWithSubqueries { case n => n.expressions.flatMap(_.collect(pick)) }.flatten
+  }
+
+  /** The lambdas of every plan `run` executes, keyed by action name, plus
+    * those of the returned frame's own plan ("result"). Every plan counts,
+    * not just the returned one: the shingle sets are built in eager
+    * localCheckpoint jobs whose plans never reach the result's lineage. */
+  private def plannedLambdas(run: => org.apache.spark.sql.DataFrame): Seq[(String, Seq[String])] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(f -> lambdas(qe.optimizedPlan))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(f -> lambdas(qe.optimizedPlan))
+    }
+    spark.listenerManager.register(l)
+    try {
+      val df = run
+      df.collect()
+      org.apache.spark.graft.ListenerBusWait.drain(spark.sparkContext)
+      seen.asScala.toSeq :+ ("result" -> lambdas(df.queryExecution.optimizedPlan))
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  test("shingle joins plan no lambda: jaccardJoin, ngramJaccardPairs, dedup_containment") {
+    val d = docs(Seq((1L, base), (2L, nearDup), (3L, other)))
+    for ((name, plans) <- Seq(
+        "jaccardJoin" -> plannedLambdas(Dedup.jaccardJoin(spark, d, 0.7)),
+        "ngramJaccardPairs" -> plannedLambdas(Dedup.ngramJaccardPairs(spark, d)),
+        "dedup_containment" -> plannedLambdas(
+          SparkEntry.all("dedup_containment").fn(spark, TestSpark.sf)))) {
+      assert(plans.exists(_._1 == "localCheckpoint"), s"$name: the shingle-set job was not seen")
+      val bad = plans.filter(_._2.nonEmpty)
+      assert(bad.isEmpty, s"$name runs interpreted lambdas: $bad")
+    }
+  }
+
   test("jaccardJoin finds the planted near-dup and nothing else") {
     // one word changed in 20 → 3 of 21 union shingles differ → j = 15/21 ≈ 0.714
     val d = docs(Seq((1L, base), (2L, nearDup), (3L, other)))

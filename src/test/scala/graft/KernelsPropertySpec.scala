@@ -172,7 +172,98 @@ class KernelsPropertySpec extends AnyFunSuite {
   test("minhash handles degenerate docs") {
     assert(Kernels.minhashSig(u8(""), 128, 3).forall(_ == 0L))
     assert(Kernels.minhashSig(u8("one two"), 128, 3).forall(_ == 0L)) // < shingle width
-    assert(Kernels.shingleHashes(u8("a b c"), 3).length == 1)
+    // exactly w tokens: exactly one shingle, so a real signature
+    assert(Kernels.shingleSet(u8("a b c"), 3).numElements() == 1)
+    assert(!Kernels.minhashSig(u8("a b c"), 128, 3).contains(0L))
+  }
+
+  // The four malformed UTF-8 shapes Spark's split() decodes to U+FFFD:
+  // a bare 0xFF, a UTF-16 surrogate, an overlong NUL, a code point past
+  // U+10FFFF. Hashing their raw bytes instead gives other values.
+  val malformed: Seq[Array[Byte]] = Seq(
+    Array(0x61, 0xFF, 0x20, 0x62, 0x20, 0x63, 0x20, 0x64),
+    Array(0x78, 0x20, 0xED, 0xA0, 0x80, 0x20, 0x79, 0x20, 0x7A),
+    Array(0x78, 0x20, 0xC0, 0x80, 0x20, 0x79, 0x20, 0x7A),
+    Array(0x78, 0x20, 0xF4, 0x90, 0x80, 0x80, 0x20, 0x79, 0x20, 0x7A),
+    Array(0xFF, 0x20, 0xC0, 0x80, 0x20, 0xED, 0xA0, 0x80, 0x20, 0xF4, 0x90, 0x80, 0x80)
+  ).map(_.map(_.toByte))
+
+  /** Random text over multi-byte and empty tokens: double, leading and
+    * trailing spaces, and now and then one of the malformed shapes. */
+  def noisyText(r: scala.util.Random): Array[Byte] = {
+    val pieces = Seq("the", "a", "w1", "w2", "café", "über", "世界", "😀x", "", "", " ")
+    val s = Seq.fill(r.nextInt(12))(pieces(r.nextInt(pieces.size))).mkString(" ")
+    val b = s.getBytes("UTF-8")
+    if (r.nextInt(4) == 0) b ++ Array(' '.toByte) ++ malformed(r.nextInt(malformed.size)) else b
+  }
+
+  test("shingle_set == sorted distinct xxhash64(concat_ws(' ', slice(split(text, ' '), i, w))) through Spark") {
+    import org.apache.spark.sql.functions._
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val r = new scala.util.Random(11)
+    val edge = Seq("", " ", "  ", "a", "a b", "a b c", " a b c", "a b c ", "a  b c",
+      "x y", "é ü 世 😀", "😀 😀 😀 😀").map(s => Option(s.getBytes("UTF-8")))
+    val inputs = edge ++ malformed.map(Option(_)) ++
+      Seq.fill(300)(Option(noisyText(r))) :+ Option.empty[Array[Byte]]
+    val df = inputs.zipWithIndex.map { case (b, i) => (i, b.orNull) }.toDF("id", "bytes")
+      .select($"id", $"bytes".cast("string").as("text"))
+    for (w <- 1 to 4) {
+      // the interpreted SQL formulation the operators ran before the kernel
+      val old = expr(s"""CASE WHEN text IS NULL THEN NULL
+        WHEN size(split(text, ' ')) < $w THEN CAST(array() AS array<bigint>)
+        ELSE array_sort(array_distinct(transform(sequence(0, size(split(text, ' ')) - $w),
+          i -> xxhash64(concat_ws(' ', slice(split(text, ' '), i + 1, $w)))))) END""")
+      val rows = df.select($"id", $"text", graft.functions.Fns.shingle_set($"text", w).as("got"),
+          old.as("want")).orderBy("id").collect()
+      assert(rows.length == inputs.length)
+      rows.foreach { row =>
+        val want = Option(row.getSeq[Long](3))
+        assert(Option(row.getSeq[Long](2)) == want, s"w=$w id=${row.getInt(0)} text='${row.getString(1)}'")
+        val b = inputs(row.getInt(0))
+        // the same values off the direct (non-codegen) kernel call
+        b.foreach { bs =>
+          val direct = Kernels.shingleSet(UTF8String.fromBytes(bs), w).toLongArray().toSeq
+          assert(Some(direct) == want, s"direct w=$w id=${row.getInt(0)}")
+        }
+      }
+      assert(rows.count(_.isNullAt(2)) == 1, "null text → null set")
+    }
+  }
+
+  test("byte-level minhashSig == the String split(\" \") implementation, malformed UTF-8 included") {
+    // the pre-byte-level kernel, kept here as the reference
+    def refShingles(text: UTF8String, w: Int): Array[Long] = {
+      val toks = text.toString.split(" ")
+      if (toks.length < w) return Array.emptyLongArray
+      (0 to toks.length - w).map { i =>
+        var h = Kernels.FnvOffset
+        (0 until w).foreach { k =>
+          toks(i + k).getBytes("UTF-8").foreach { b => h ^= (b & 0xffL); h *= Kernels.FnvPrime }
+          h ^= ' '.toLong; h *= Kernels.FnvPrime
+        }
+        h
+      }.toArray
+    }
+    def refSig(text: UTF8String, numPerms: Int, w: Int): Seq[Long] = {
+      val hs = refShingles(text, w)
+      (0 until numPerms).map { j =>
+        val a = Kernels.splitmix64(2L * j) | 1L
+        val b = Kernels.splitmix64(2L * j + 1)
+        if (hs.isEmpty) 0L else hs.map(a * _ + b).min
+      }
+    }
+    val r = new scala.util.Random(13)
+    val edge = Seq("", " ", "   ", "a", "a ", " a", "a  b", "a b c", "a b c  ", "  a b c",
+      "a  ", "é ü 世 😀").map(_.getBytes("UTF-8"))
+    val inputs = edge ++ malformed ++ Seq.fill(300)(noisyText(r))
+    for (bs <- inputs; w <- 1 to 3; numPerms <- Seq(16, 128)) {
+      val t = UTF8String.fromBytes(bs)
+      assert(Kernels.minhashSig(t, numPerms, w).toSeq == refSig(t, numPerms, w),
+        s"w=$w perms=$numPerms text='$t'")
+      val data = Kernels.minhashSigData(t, numPerms, w)
+      assert(data.toLongArray().toSeq == refSig(t, numPerms, w))
+    }
   }
 
   test("textScan matches the definitional regex/split formulas on random unicode text") {

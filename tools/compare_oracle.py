@@ -1,12 +1,18 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: run each oracle SQL
 in DuckDB against the same parquet tables, compare to the Spark result
-parquet (columns sorted by name, exact value compare)."""
+parquet (columns sorted by name, exact value compare).
+
+Usage: compare_oracle.py [sf_dir] [out_dir] [key1,key2,...]
+The optional third argument compares only the named keys. A filter key
+with no result or oracle counts as a failure, and so does a run that
+compares no key at all."""
 import sys, json, glob, math
 import duckdb
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/vout"
+keys = set(sys.argv[3].split(",")) - {""} if len(sys.argv) > 3 else None
 
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders",
@@ -14,6 +20,8 @@ for t in ["region","nation","customer","supplier","part","orders",
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+if keys is not None:
+    oracle = {k: v for k, v in oracle.items() if k in keys}
 fails = 0
 for name, sql in sorted(oracle.items()):
     try:
@@ -61,10 +69,19 @@ for name, sql in sorted(oracle.items()):
 
 # rows-only queries
 all_dirs = {d.split("/")[-1] for d in glob.glob(f"{out_dir}/*") if not d.endswith(".json")}
+if keys is not None:
+    all_dirs &= keys
 for name in sorted(all_dirs - set(oracle)):
     n = con.sql(f"SELECT count(*) FROM '{out_dir}/{name}/*.parquet'").fetchone()[0]
     print(f"{'ROWS' if n > 0 else 'FAIL'} {name} ({n} rows)")
     if n == 0:
         fails += 1
+compared = set(oracle) | all_dirs
+for name in sorted((keys or set()) - compared):
+    print(f"MISS {name}: in the filter, but no result or oracle")
+    fails += 1
 print(f"\n{fails} failures / {len(oracle)} oracle + {len(all_dirs - set(oracle))} rows-only")
-sys.exit(1 if fails else 0)
+print(f"{len(compared)} keys compared")
+if not compared:
+    print("FAIL no key compared")
+sys.exit(1 if fails or not compared else 0)
