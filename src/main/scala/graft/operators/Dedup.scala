@@ -428,7 +428,8 @@ object Dedup {
     * instead of 100, so maxIters=20 covers any realistic component
     * instead of silently splitting long chains. Convergence is a
     * scalar (count, hash-sum) signature per round — no data collect;
-    * `localCheckpoint` truncates the growing lineage. */
+    * each round's edge set is a [[Rounds]] pin, and the round it
+    * supersedes is freed. */
   def clusters(spark: SparkSession, pairs: DataFrame,
                maxIters: Int = 20): DataFrame =
     clustersWithRounds(spark, pairs, maxIters)._1
@@ -441,13 +442,17 @@ object Dedup {
     val nodes = pairs.select($"doc_a".as("id"))
       .union(pairs.select($"doc_b".as("id"))).distinct().localCheckpoint()
     // edges oriented larger -> smaller endpoint, no self-loops
-    var star = pairs.select(greatest($"doc_a", $"doc_b").as("a"),
+    val star0 = pairs.select(greatest($"doc_a", $"doc_b").as("a"),
         least($"doc_a", $"doc_b").as("b"))
       .filter($"a" =!= $"b").distinct().localCheckpoint()
-    var iter = 0
-    var prevSig = (-1L, 0L)
-    var converged = false
-    while (!converged && iter < maxIters) {
+    // XOR-fold, not sum: ANSI-safe (no overflow) and exact on the
+    // distinct edge rows
+    val sameSig = Rounds.unchanged((-1L, 0L)) { small =>
+      val row = small.agg(count(lit(1)),
+        coalesce(expr("bit_xor(xxhash64(a, b))"), lit(0L))).head()
+      (row.getLong(0), row.getLong(1))
+    }
+    val res = Rounds.run(star0, maxIters, sameSig) { (star, _) =>
       // LARGE-STAR over the symmetric closure: for each u, attach
       // every neighbor v > u to m = min(N(u) ∪ {u})
       val sym = star.select($"a".as("u"), $"b".as("v"))
@@ -460,40 +465,20 @@ object Dedup {
       // SMALL-STAR on the larger->smaller edges: point each smaller
       // neighbor of a (and a itself) at a's minimum neighbor
       val smin = large.groupBy($"a").agg(min($"b").as("m"))
-      val small = large.join(smin, "a").select($"b".as("v"), $"m")
+      large.join(smin, "a").select($"b".as("v"), $"m")
         .union(smin.select($"a".as("v"), $"m"))
         .filter($"v" =!= $"m").distinct()
         .select($"v".as("a"), $"m".as("b"))
-        .localCheckpoint()
-      // XOR-fold, not sum: ANSI-safe (no overflow) and exact on the
-      // distinct edge rows
-      val sigRow = small.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(a, b))"), lit(0L))).head()
-      val sig = (sigRow.getLong(0), sigRow.getLong(1))
-      converged = sig == prevSig
-      prevSig = sig
-      // `small` is materialized (eager localCheckpoint + the signature
-      // aggregate above), so the superseded round's blocks can be freed
-      // NOW — without this, a 20-round run on a big corpus parks ~20
-      // edge-list copies in storage memory and later queries in the
-      // same session thrash on eviction/recompute (measured at sf10:
-      // 19 s → 300 s run-to-run drift). Dataset.unpersist() is a
-      // silent NO-OP on a localCheckpoint'd frame (its blocks live on
-      // the checkpointed RDD, not in the CacheManager — r12 ADVICE),
-      // so release the RDD itself through the LogicalRDD leaf.
-      org.apache.spark.sql.graft.CheckpointBlocks.unpersist(star)
-      star = small
-      iter += 1
     }
-    if (!converged)
+    if (!res.converged)
       System.err.println(s"[graft] Dedup.clusters: NOT converged after $maxIters rounds — " +
         "components may still be contracting; raise maxIters")
     // at the fixpoint the edge set is one star per component, rooted
     // at the component min; roots and singletons label themselves
     val labels = nodes
-      .join(star.select($"a".as("id"), $"b".as("cluster")), Seq("id"), "left")
+      .join(res.state.select($"a".as("id"), $"b".as("cluster")), Seq("id"), "left")
       .select($"id".as("doc_id"), coalesce($"cluster", $"id").as("cluster"))
-    (labels, iter)
+    (labels, res.rounds)
   }
 
   /** Width-capped candidate edges over LSH-style hash buckets.

@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Rounds
 import graft.sources.Tables
 
 /** PageRank — the canonical iterative-MapReduce example (Page et al.
@@ -18,8 +19,8 @@ import graft.sources.Tables
   *
   * Scale: each iteration is one shuffle (contributions re-keyed by dst
   * — the MapReduce formulation); edges are localCheckpoint'd so the
-  * 4-table derivation runs once, and per-iteration lineage is truncated
-  * (same pattern as Dedup.clusters).
+  * 4-table derivation runs once, and each iteration's ranks are a
+  * `Rounds` pin.
   */
 object Graph {
 
@@ -54,27 +55,33 @@ object Graph {
       |  JOIN supplier ON l_suppkey = s_suppkey
       |  WHERE c_nationkey <> s_nationkey)""".stripMargin
 
-  private def pagerank(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val edges = tradeEdges(s, dir)
-    val nodes = Tables.nation(s, dir).select($"n_nationkey".as("id"))
-    val n = nodes.count() // bounded scalar (dimension cardinality), not data-sized
-    val init = 1000000000L / n
-    val teleport = 150000000L / n
+  /** The integer rank recurrence shared by pagerank and graph_ppr:
+    * `Iters` rounds from `init`, each node taking its `restart` term
+    * plus `(85·s) div 100` of its in-contributions `rank_n div deg`.
+    * The two keys differ only in the `init` and `restart` columns. */
+  private def rankRounds(edges: DataFrame, nodes: DataFrame,
+                         init: Column, restart: Column): DataFrame = {
+    import edges.sparkSession.implicits._
     val outdeg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-    var ranks = nodes.select($"id", lit(init).as("rank_n"))
-    for (_ <- 1 to Iters) {
+    Rounds.run(nodes.select($"id", init.as("rank_n")), Iters) { (ranks, _) =>
       val contribs = edges
         .join(outdeg, "src")
         .join(ranks.select($"id".as("src"), $"rank_n"), "src")
         .select($"dst", expr("rank_n div deg").as("contrib"))
         .groupBy($"dst").agg(sum($"contrib").as("s"))
-      ranks = nodes.join(contribs, $"id" === $"dst", "left")
+      nodes.join(contribs, $"id" === $"dst", "left")
         .select($"id",
-          (lit(teleport) + expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("rank_n"))
-        .localCheckpoint()
-    }
-    ranks.join(broadcast(Tables.nation(s, dir)), $"id" === $"n_nationkey")
+          (restart + expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("rank_n"))
+    }.state
+  }
+
+  private def pagerank(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val edges = tradeEdges(s, dir)
+    val nodes = Tables.nation(s, dir).select($"n_nationkey".as("id"))
+    val n = nodes.count() // bounded scalar (dimension cardinality), not data-sized
+    rankRounds(edges, nodes, init = lit(1000000000L / n), restart = lit(150000000L / n))
+      .join(broadcast(Tables.nation(s, dir)), $"id" === $"n_nationkey")
       .select($"n_name".as("nation"),
         ($"rank_n".cast("double") / 1000000000.0).as("pr_score"))
       .orderBy($"pr_score".desc, $"nation")
@@ -113,44 +120,64 @@ object Graph {
     * nodes report -1.
     *
     * Iteration runs until an iteration changes no distance (the
-    * convergence check is a scalar count, as in Dedup.clusters /
-    * pagerank), hard-bounded by |V| — so every reachable node gets its
-    * TRUE distance, with no assumed diameter bound (an under-sized
-    * fixed bound would silently mislabel far nodes as unreachable).
+    * convergence check is a scalar count), hard-bounded by |V| — so
+    * every reachable node gets its TRUE distance, with no assumed
+    * diameter bound (an under-sized fixed bound would silently
+    * mislabel far nodes as unreachable).
     * The oracle computes the same fixpoint with a recursive CTE
     * (min over all path lengths, pruned at d < 999 — path lengths
     * beyond |V|-1 can't be shortest).
     *
-    * Scale shape: each iteration is one join edges⋈dist re-keyed by dst
-    * + a min-aggregate (the MapReduce BFS formulation); dist is
-    * node-sized (tiny next to edges) so at scale Spark broadcasts it
-    * into the edge scan, and localCheckpoint truncates per-iteration
-    * lineage exactly as in pagerank. */
+    * Scale shape: the unit-weight, single-root case of
+    * [[shortestPaths]] (one edges⋈dist join + a min-aggregate per
+    * round, the MapReduce BFS formulation). */
   private def graphBfs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val edges = tradeEdges(s, dir)
     val nodes = Tables.nation(s, dir).select($"n_nationkey".as("id"))
     val maxIters = nodes.count() // dim-table scalar: diameter ≤ |V| - 1
-    val Inf = 1000000L
-    var dist = nodes.select($"id",
-      when($"id" === 0, 0L).otherwise(Inf).as("d")).localCheckpoint()
-    var changed = 1L
-    var iter = 0L
-    while (changed > 0 && iter < maxIters) {
-      val relaxed = edges
-        .join(dist.select($"id".as("src"), $"d"), "src")
-        .groupBy($"dst").agg(min($"d" + 1L).as("dr"))
-      val next = dist.join(relaxed, $"id" === $"dst", "left")
-        .select($"id", least($"d", coalesce($"dr", lit(Inf))).as("d"), $"d".as("old"))
-        .localCheckpoint()
-      changed = next.filter($"d" =!= $"old").count()
-      dist = next.select($"id", $"d")
-      iter += 1
-    }
-    dist.join(broadcast(Tables.nation(s, dir)), $"id" === $"n_nationkey")
+    shortestPaths(Some(0L), nodes, tradeEdges(s, dir).withColumn("w", lit(1L)), maxIters)
+      .join(broadcast(Tables.nation(s, dir)), $"id" === $"n_nationkey")
       .select($"n_name".as("nation"),
-        when($"d" >= Inf, -1L).otherwise($"d").as("hops"))
+        when($"d" >= Unreached, -1L).otherwise($"d").as("hops"))
       .orderBy($"hops", $"nation")
+  }
+
+  /** Distance for a node no path reaches yet; every real path sum (at
+    * most |V|−1 edges of weight ≤ 50 here) stays far below it. */
+  private val Unreached = 1000000000L
+
+  /** Shortest-path relaxation to fixpoint, the one body under
+    * graph_bfs, graph_sssp, graph_closeness and graph_betweenness:
+    * synchronous Bellman–Ford from the node `root`, or from every node
+    * when it is None, over `nodes` (`id`) and positive-weight `edges`
+    * (src, dst, w). State is (root, id, d), d = [[Unreached]] where no
+    * path is known. A round relaxes the edges out of every reached node
+    * — one join keyed by src plus a min-aggregate keyed by (root, dst) —
+    * and the loop stops once a round changes no distance (one scalar
+    * count) or after `maxRounds`, each caller's own cap. BFS is the
+    * w = 1, single-root case. The result may carry an extra `old`
+    * column. */
+  private def shortestPaths(root: Option[Long], nodes: DataFrame,
+                            edges: DataFrame, maxRounds: Long): DataFrame = {
+    val pairs = root match {
+      case Some(r) => nodes.select(lit(r).as("root"), col("id"))
+      case None => nodes.select(col("id").as("root")).crossJoin(nodes)
+    }
+    val init = pairs
+      .select(col("root"), col("id"),
+        when(col("root") === col("id"), 0L).otherwise(Unreached).as("d"))
+      .localCheckpoint()
+    Rounds.run(init, maxRounds, _.filter(col("d") =!= col("old")).count() == 0L) {
+      (dist, _) =>
+        val relaxed = dist.filter(col("d") < Unreached)
+          .join(edges, col("id") === col("src"))
+          .groupBy(col("root"), col("dst")).agg(min(col("d") + col("w")).as("dr"))
+          .select(col("root").as("rroot"), col("dst"), col("dr"))
+        dist.join(relaxed, col("root") === col("rroot") && col("id") === col("dst"), "left")
+          .select(col("root"), col("id"),
+            least(col("d"), coalesce(col("dr"), lit(Unreached))).as("d"),
+            col("d").as("old"))
+    }.state
   }
 
   private val graphBfsSql: String =
@@ -176,8 +203,8 @@ object Graph {
     * the survivor set only shrinks, so count-stability ⇒ set-stability
     * and one bounded scalar count per round is the convergence check
     * (graph_bfs precedent). Edges are localCheckpoint'd once and each
-    * round's survivor set is checkpointed (truncated lineage); a round
-    * is one join-degree-filter pass — one shuffle on the vertex key.
+    * round's survivor set is a `Rounds` pin; a round is one
+    * join-degree-filter pass — one shuffle on the vertex key.
     * The oracle replays the SAME round semantics as a recursive CTE
     * run to the shared 60-round cap: survivors re-assert each round,
     * so the round-60 row set IS the fixpoint whenever peeling
@@ -198,24 +225,16 @@ object Graph {
     val ed = pairs.select($"pa".as("a"), $"pb".as("b"))
       .unionAll(pairs.select($"pb".as("a"), $"pa".as("b")))
       .localCheckpoint()
-    var surv = ed.select($"a".as("v")).distinct().localCheckpoint()
-    var prev = surv.count()
-    var rounds = 0
-    var converged = prev == 0L
-    while (!converged && rounds < maxRounds) {
-      val next = ed
-        .join(surv.select($"v".as("va")), $"a" === $"va")
+    val surv0 = ed.select($"a".as("v")).distinct().localCheckpoint()
+    val n0 = surv0.count()
+    val surv = Rounds.run(surv0, if (n0 == 0L) 0 else maxRounds,
+        Rounds.unchanged(n0)(_.count())) { (surv, _) =>
+      ed.join(surv.select($"v".as("va")), $"a" === $"va")
         .join(surv.select($"v".as("vb")), $"b" === $"vb")
         .groupBy($"a").agg(count(lit(1)).as("deg"))
         .filter($"deg" >= k)
         .select($"a".as("v"))
-        .localCheckpoint()
-      val n = next.count()
-      converged = n == prev
-      prev = n
-      surv = next
-      rounds += 1
-    }
+    }.state
     ed.join(surv.select($"v".as("va")), $"a" === $"va")
       .join(surv.select($"v".as("vb")), $"b" === $"vb")
       .groupBy($"a".as("part_id"))
@@ -293,21 +312,12 @@ object Graph {
           struct(col("e1.a").as("a"), col("e2.b").as("b")))).as("e"))
         .groupBy($"e.a".as("a"), $"e.b".as("b"))
         .agg(count(lit(1)).as("support"))
-    var ed = pairs.select($"pa".as("a"), $"pb".as("b")).localCheckpoint()
-    var prev = ed.count()
-    var converged = prev == 0L
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      val next = supportOf(ed)
-        .filter($"support" >= minSupport)
-        .select($"a", $"b")
-        .localCheckpoint()
-      val n = next.count()
-      converged = n == prev
-      prev = n
-      ed = next
-      rounds += 1
-    }
+    val ed0 = pairs.select($"pa".as("a"), $"pb".as("b")).localCheckpoint()
+    val n0 = ed0.count()
+    val ed = Rounds.run(ed0, if (n0 == 0L) 0 else maxRounds,
+        Rounds.unchanged(n0)(_.count())) { (ed, _) =>
+      supportOf(ed).filter($"support" >= minSupport).select($"a", $"b")
+    }.state
     supportOf(ed)
       .select($"a".as("src"), $"b".as("dst"), $"support")
       .orderBy($"src", $"dst")
@@ -362,10 +372,8 @@ object Graph {
     * shortest path has ≤ 24 edges; sums ≤ 24·50 keep the recursion's
     * distinct-(id,d,h) state bounded) and takes the per-node MIN.
     *
-    * Scale shape: per round one join edges⋈dist keyed by src + a
-    * min-aggregate keyed by dst — dist is node-sized so at cluster
-    * scale it broadcasts into the edge scan; localCheckpoint truncates
-    * per-round lineage (pagerank/BFS precedent). */
+    * Scale shape: the single-root case of [[shortestPaths]] — dist is
+    * node-sized, so at cluster scale it broadcasts into the edge scan. */
   private def graphSssp(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val l = Tables.lineitem(s, dir).select($"l_orderkey", $"l_suppkey", $"l_quantity")
@@ -381,25 +389,10 @@ object Graph {
       .localCheckpoint()
     val nodes = Tables.nation(s, dir).select($"n_nationkey".as("id"))
     val maxIters = nodes.count() - 1 // Bellman–Ford round bound: |V|−1
-    val Inf = 1000000000L
-    var dist = nodes.select($"id",
-      when($"id" === 0, 0L).otherwise(Inf).as("d")).localCheckpoint()
-    var changed = 1L
-    var iter = 0L
-    while (changed > 0 && iter < maxIters) {
-      val relaxed = edges
-        .join(dist.select($"id".as("src"), $"d"), "src")
-        .groupBy($"dst").agg(min($"d" + $"w").as("dr"))
-      val next = dist.join(relaxed, $"id" === $"dst", "left")
-        .select($"id", least($"d", coalesce($"dr", lit(Inf))).as("d"), $"d".as("old"))
-        .localCheckpoint()
-      changed = next.filter($"d" =!= $"old").count()
-      dist = next.select($"id", $"d")
-      iter += 1
-    }
-    dist.join(broadcast(Tables.nation(s, dir)), $"id" === $"n_nationkey")
+    shortestPaths(Some(0L), nodes, edges, maxIters)
+      .join(broadcast(Tables.nation(s, dir)), $"id" === $"n_nationkey")
       .select($"n_name".as("nation"),
-        when($"d" >= Inf, -1L).otherwise($"d").as("dist"))
+        when($"d" >= Unreached, -1L).otherwise($"d").as("dist"))
       .orderBy($"dist", $"nation")
   }
 
@@ -437,7 +430,7 @@ object Graph {
     * Scale shape: a round is votes = edges ⋈ labels re-keyed by dst
     * (one vertex-key shuffle) + two key-only aggregations; state is
     * node-sized (v, lbl) pairs, never edge-sized, and each round's
-    * labels are localCheckpoint'd so lineage stays one round deep.
+    * labels are a `Rounds` pin, so lineage stays one round deep.
     * The oracle unrolls the same three rounds as chained CTEs. */
   /** Directed-both-ways co-purchase edge list (each undirected edge
     * appears twice), shared by graph_label_prop and
@@ -599,23 +592,22 @@ object Graph {
       |SELECT v AS node, MIN(lbl) AS component FROM r
       |GROUP BY v ORDER BY node""".stripMargin
 
-  /** Final (v, lbl) assignment after 3 synchronous LPA rounds. */
+  /** Final (v, lbl) assignment after 3 synchronous LPA rounds, pinned
+    * (the last round's `Rounds` pin). */
   private def lpaLabels(edges: DataFrame): DataFrame = {
     import edges.sparkSession.implicits._
-    var lab = edges.select($"src".as("v")).distinct()
+    val lab0 = edges.select($"src".as("v")).distinct()
       .withColumn("lbl", $"v")
       .localCheckpoint()
-    for (_ <- 1 to 3) {
+    Rounds.run(lab0, 3) { (lab, _) =>
       val votes = edges.join(lab.withColumnRenamed("v", "src"), "src")
         .select($"dst".as("v"), $"lbl")
         .unionByName(lab) // self-vote
-      lab = votes.groupBy($"v", $"lbl").agg(count(lit(1)).as("cnt"))
+      votes.groupBy($"v", $"lbl").agg(count(lit(1)).as("cnt"))
         .groupBy($"v")
         .agg(max(struct($"cnt", (-$"lbl").as("neg"))).as("m"))
         .select($"v", (-$"m.neg").as("lbl"))
-        .localCheckpoint()
-    }
-    lab
+    }.state
   }
 
   private def graphLabelProp(s: SparkSession, dir: String): DataFrame = {
@@ -769,7 +761,7 @@ object Graph {
     import s.implicits._
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val edges = coPurchaseEdges(s, dir)
-    val lab = lpaLabels(edges).localCheckpoint() // 3 consumers below
+    val lab = lpaLabels(edges) // pinned already: 3 consumers below
     val labeled = edges
       .join(lab.select($"v".as("src"), $"lbl".as("lsrc")), "src")
       .join(lab.select($"v".as("dst"), $"lbl".as("ldst")), "dst")
@@ -852,7 +844,11 @@ object Graph {
     * Scale shape: the data-sized work is the one shared `tradeEdges`
     * derivation (bounded ≤N² output); each iteration then joins the
     * ≤N²-row edge list against an N-row score table — broadcast-sized
-    * at any corpus scale where the dimension stays a dimension. */
+    * at any corpus scale where the dimension stays a dimension.
+    *
+    * Rounds: one `Rounds` round per half-step over one (id, hn, an)
+    * state, authorities on odd rounds and hubs on even rounds, so each
+    * half-step is pinned and the one it supersedes freed. */
   private def graphHits(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val edges = tradeEdges(s, dir)
@@ -860,25 +856,23 @@ object Graph {
     // init pre-normalized (1e9 div |V|, the pagerank pattern): scores
     // then SUM to ≤1e9 after every rescale, so raw·10^9 stays < 2^63
     val n = nodes.count() // bounded scalar (dimension cardinality)
-    var h = nodes.select($"id", lit(1000000000L / n).as("hn"))
-    var a: DataFrame = null
-    for (_ <- 1 to HitsIters) {
-      val ar = edges.join(h.select($"id".as("src"), $"hn"), "src")
-        .groupBy($"dst").agg(sum($"hn").as("raw"))
-      val asum = ar.agg(sum($"raw").as("s"))
-      a = nodes.join(ar, $"id" === $"dst", "left").crossJoin(broadcast(asum))
-        .select($"id",
-          coalesce(expr("(raw * 1000000000L) div s"), lit(0L)).as("an"))
-        .localCheckpoint()
-      val hr = edges.join(a.select($"id".as("dst2"), $"an"), $"dst" === $"dst2")
-        .groupBy($"src").agg(sum($"an").as("raw"))
-      val hsum = hr.agg(sum($"raw").as("s"))
-      h = nodes.join(hr, $"id" === $"src", "left").crossJoin(broadcast(hsum))
-        .select($"id",
-          coalesce(expr("(raw * 1000000000L) div s"), lit(0L)).as("hn"))
-        .localCheckpoint()
-    }
-    h.join(a.select($"id".as("id2"), $"an"), $"id" === $"id2")
+    val rescaled = coalesce(expr("(raw * 1000000000L) div s"), lit(0L))
+    val h0 = nodes.select($"id", lit(1000000000L / n).as("hn"))
+    Rounds.run(h0, 2 * HitsIters) { (st, round) =>
+      if (round % 2 == 1) {
+        val ar = edges.join(st.select($"id".as("src"), $"hn"), "src")
+          .groupBy($"dst").agg(sum($"hn").as("raw"))
+        val asum = ar.agg(sum($"raw").as("s"))
+        st.join(ar, $"id" === $"dst", "left").crossJoin(broadcast(asum))
+          .select($"id", $"hn", rescaled.as("an"))
+      } else {
+        val hr = edges.join(st.select($"id".as("dst2"), $"an"), $"dst" === $"dst2")
+          .groupBy($"src").agg(sum($"an").as("raw"))
+        val hsum = hr.agg(sum($"raw").as("s"))
+        st.join(hr, $"id" === $"src", "left").crossJoin(broadcast(hsum))
+          .select($"id", rescaled.as("hn"), $"an")
+      }
+    }.state
       .join(broadcast(Tables.nation(s, dir)), $"id" === $"n_nationkey")
       .select($"n_name".as("nation"),
         $"hn".as("hub_nano"), $"an".as("auth_nano"),
@@ -933,31 +927,16 @@ object Graph {
     * with the restart term `150000000` credited only to the seed row,
     * so ten iterations are bit-identical BIGINT on both engines.
     *
-    * Scale shape: identical to pagerank (one contribution shuffle per
-    * iteration over the shared checkpointed edge list; rank state is
-    * node-sized). Personalization changes WHERE teleport mass lands,
-    * not the plan. */
+    * Scale shape: identical to pagerank — the same [[rankRounds]] with
+    * the seed's init and restart columns. Personalization changes WHERE
+    * teleport mass lands, not the plan. */
   private def graphPpr(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val seed = 0L
-    val edges = tradeEdges(s, dir)
-    val nodes = Tables.nation(s, dir).select($"n_nationkey".as("id"))
-    val outdeg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-    var ranks = nodes.select($"id",
-      when($"id" === seed, 1000000000L).otherwise(0L).as("rank_n"))
-    for (_ <- 1 to Iters) {
-      val contribs = edges
-        .join(outdeg, "src")
-        .join(ranks.select($"id".as("src"), $"rank_n"), "src")
-        .select($"dst", expr("rank_n div deg").as("contrib"))
-        .groupBy($"dst").agg(sum($"contrib").as("s"))
-      ranks = nodes.join(contribs, $"id" === $"dst", "left")
-        .select($"id",
-          (when($"id" === seed, 150000000L).otherwise(0L) +
-            expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("rank_n"))
-        .localCheckpoint()
-    }
-    ranks.join(broadcast(Tables.nation(s, dir)), $"id" === $"n_nationkey")
+    rankRounds(tradeEdges(s, dir), Tables.nation(s, dir).select($"n_nationkey".as("id")),
+        init = when($"id" === seed, 1000000000L).otherwise(0L),
+        restart = when($"id" === seed, 150000000L).otherwise(0L))
+      .join(broadcast(Tables.nation(s, dir)), $"id" === $"n_nationkey")
       .select($"n_name".as("nation"), $"rank_n".as("ppr_nano"),
         ($"rank_n".cast("double") / 1000000000.0).as("ppr_score"))
       .orderBy($"ppr_score".desc, $"nation")
@@ -994,56 +973,24 @@ object Graph {
     * pivot approximation for closeness on large graphs).
     *
     * Multi-source BFS: distance state keyed (root, id) — |pivots|·|V|
-    * rows — relaxed to fixpoint exactly like graph_bfs (monotone min,
-    * scalar convergence count, |V|-bounded). Directed reachability.
+    * rows — relaxed to fixpoint by the same [[shortestPaths]] as
+    * graph_bfs (monotone min, scalar convergence count, |V|-bounded).
+    * Directed reachability.
     *
     * Closeness is the Wasserman–Faust normalized form, emitted as an
     * exact integer ppb — ((r−1)²·10⁹) div ((n−1)·Σd) where r = nodes
     * reached and Σd their hop sum — so the ranking carries no float;
     * eccentricity is the max finite hop (−1 for isolated roots). */
-  private val BfsInf = 1000000L
-
-  /** Multi-source BFS from every node (the shared pivot-distance
-    * engine under graph_closeness and graph_betweenness): (root, id, d)
-    * with d = BfsInf for unreachable, relaxed to fixpoint. */
-  private def pivotDistances(s: SparkSession, edges: DataFrame,
-                             nodes: DataFrame, maxIters: Long): DataFrame = {
-    import s.implicits._
-    val Inf = BfsInf
-    var dist = nodes.select($"id".as("root")).crossJoin(nodes)
-      .select($"root", $"id",
-        when($"root" === $"id", 0L).otherwise(Inf).as("d"))
-      .localCheckpoint()
-    var changed = 1L
-    var iter = 0L
-    while (changed > 0 && iter < maxIters) {
-      val relaxed = dist.filter($"d" < Inf)
-        .join(edges, dist("id") === edges("src"))
-        .groupBy($"root", $"dst").agg(min($"d" + 1L).as("dr"))
-        .select($"root".as("rroot"), $"dst", $"dr")
-      val next = dist.join(relaxed,
-          $"root" === $"rroot" && $"id" === $"dst", "left")
-        .select($"root", $"id",
-          least($"d", coalesce($"dr", lit(Inf))).as("d"), $"d".as("old"))
-        .localCheckpoint()
-      changed = next.filter($"d" =!= $"old").count()
-      dist = next.select($"root", $"id", $"d")
-      iter += 1
-    }
-    dist
-  }
-
   private def graphCloseness(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val edges = tradeEdges(s, dir)
+    val edges = tradeEdges(s, dir).withColumn("w", lit(1L))
     val nodes = Tables.nation(s, dir).select($"n_nationkey".as("id"))
     val maxIters = nodes.count() // dim-table scalar: diameter ≤ |V| - 1
-    val Inf = BfsInf
-    val dist = pivotDistances(s, edges, nodes, maxIters)
+    val dist = shortestPaths(None, nodes, edges, maxIters)
     dist.groupBy($"root")
-      .agg(sum(when($"d" < Inf, 1L).otherwise(0L)).as("reached"),
-        sum(when($"d" < Inf, $"d").otherwise(0L)).as("sum_hops"),
-        max(when(($"d" < Inf) && ($"d" > 0L), $"d").otherwise(0L)).as("maxfin"))
+      .agg(sum(when($"d" < Unreached, 1L).otherwise(0L)).as("reached"),
+        sum(when($"d" < Unreached, $"d").otherwise(0L)).as("sum_hops"),
+        max(when(($"d" < Unreached) && ($"d" > 0L), $"d").otherwise(0L)).as("maxfin"))
       .join(broadcast(Tables.nation(s, dir)), $"root" === $"n_nationkey")
       .select($"n_name".as("nation"), $"reached", $"sum_hops",
         when($"sum_hops" > 0L,
@@ -1100,8 +1047,8 @@ object Graph {
     val edges = tradeEdges(s, dir)
     val nodes = Tables.nation(s, dir).select($"n_nationkey".as("id"))
     val maxIters = nodes.count()
-    val fin = pivotDistances(s, edges, nodes, maxIters)
-      .filter($"d" < BfsInf).localCheckpoint()
+    val fin = shortestPaths(None, nodes, edges.withColumn("w", lit(1L)), maxIters)
+      .filter($"d" < Unreached).select($"root", $"id", $"d").localCheckpoint()
     val maxd = fin.agg(max($"d")).head.getLong(0) // bounded scalar
     var level = fin.filter($"d" === 0L)
       .select($"root", $"id", lit(1L).as("sigma"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import graft.operators.Rounds
 import graft.operators.{Similarity => Sim}
 import graft.functions.Fns
 
@@ -800,7 +801,7 @@ object Similarity {
     * table against the vector stream + two map-side-combinable
     * aggregates — no collect, no driver loop over data; the vector
     * table is localCheckpoint'd once and re-read by all 2·KmIters+1
-    * passes, and per-step lineage is truncated exactly as in pagerank.
+    * passes, and each step's centroids are a `Rounds` pin.
     *
     * Representation (r10 VERDICT #7): vectors stay ARRAYS end to end —
     * the quantization q = round(v·1e6) is computed inline per pass and
@@ -828,20 +829,19 @@ object Similarity {
 
   /** KmIters Lloyd steps over a (vec_id, embedding) training frame:
     * deterministic first-k init, integer kmAssign, exact-integer
-    * centroid updates, per-step lineage truncation. One copy of the
-    * training recurrence — kmeansFit (k = 8, full corpus) and the
-    * self-kNN coarse quantizer (k = √(2n), subsampled) both run it, so
-    * their oracles replay the SAME loop with different qq/init inputs.
+    * centroid updates, one `Rounds` pin per step. kmeansFit (k = 8,
+    * full corpus) is its one caller; the self-kNN coarse quantizer
+    * (`selfKnnEdges`) runs one cosine Lloyd step of its own instead.
     * Returns the (cell, cvv: array<long>) centroid table. */
   private def kmeansLoop(qa: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.functions.{col => c}
-    var cent = qa.orderBy(c("vec_id")).limit(k)
+    val cent0 = qa.orderBy(c("vec_id")).limit(k)
       .select(row_number().over(Window.orderBy(c("vec_id"))).as("rn"), c("embedding"))
       .select((c("rn") - 1).cast("long").as("cell"),
         expr(s"transform(embedding, v -> ${QuantExpr.format("v")})").as("cvv"))
-    for (_ <- 1 to KmIters) {
+    Rounds.run(cent0, KmIters) { (cent, _) =>
       val a = kmAssign(qa, cent)
-      cent = qa.join(a.select(c("vec_id"), c("cell")), "vec_id")
+      qa.join(a.select(c("vec_id"), c("cell")), "vec_id")
         .select(c("cell"), posexplode(c("embedding")).as(Seq("pos", "v")))
         .groupBy(c("cell"), c("pos"))
         .agg(round(sum(expr(QuantExpr.format("v"))).cast("double") / count(lit(1)))
@@ -849,9 +849,7 @@ object Similarity {
         .groupBy(c("cell"))
         .agg(array_sort(collect_list(struct(c("pos"), c("cv")))).as("ps"))
         .select(c("cell"), expr("transform(ps, p -> p.cv)").as("cvv"))
-        .localCheckpoint()
-    }
-    cent
+    }.state
   }
 
   /** Runs the KmIters Lloyd steps; returns the checkpointed vector
@@ -2227,7 +2225,8 @@ object Similarity {
 
   /** The search state after T best-first rounds at beam width `b`,
     * over a pre-built symmetrized edge table: every visited node with
-    * its exact score. Shared by the search, recall and curve keys. */
+    * its exact score and an `x` flag marking the nodes already
+    * expanded. Shared by the search, recall and curve keys. */
   private def beamVisited(s: SparkSession, dir: String, edges: DataFrame,
                           b: Int, t: Int): DataFrame = {
     import s.implicits._
@@ -2245,22 +2244,24 @@ object Similarity {
     // not-yet-expanded beam member at once, so a round can never be a
     // no-op until the whole top-B is expanded (the naive
     // beam∪neighbors(beam) iteration fixed-points the moment the beam
-    // stabilizes, wasting any further rounds).
-    var visited = score(q.select($"query_id",
-      when($"query_id" === 0L, 1L).otherwise(0L).as("node_id"))).localCheckpoint()
-    var expanded = visited.select($"query_id", $"node_id").limit(0).localCheckpoint()
-    for (_ <- 1 to t) {
-      val beam = visited.withColumn("rk", row_number().over(w))
-        .filter($"rk" <= b).select($"query_id", $"node_id")
-      val frontier = beam.join(expanded, Seq("query_id", "node_id"), "left_anti")
+    // stabilizes, wasting any further rounds). The expanded set is the
+    // `x` flag on the visited rows (every expanded node was in a beam,
+    // so it is visited), which keeps the search one `Rounds` state:
+    // frontier = beam rows not yet flagged, and a round flags its beam.
+    val visited0 = score(q.select($"query_id",
+        when($"query_id" === 0L, 1L).otherwise(0L).as("node_id")))
+      .withColumn("x", lit(false))
+      .localCheckpoint()
+    Rounds.run(visited0, t) { (visited, _) =>
+      val ranked = visited.withColumn("rk", row_number().over(w))
+      val frontier = ranked.filter($"rk" <= b && !$"x").select($"query_id", $"node_id")
       val fresh = frontier.join(edges, $"node_id" === $"a")
         .select($"query_id", $"b".as("node_id")).distinct()
         .join(visited.select($"query_id", $"node_id"),
           Seq("query_id", "node_id"), "left_anti")
-      visited = visited.union(score(fresh)).localCheckpoint()
-      expanded = expanded.union(frontier).localCheckpoint()
-    }
-    visited
+      ranked.select($"query_id", $"node_id", $"cos_sim", ($"x" || $"rk" <= b).as("x"))
+        .unionByName(score(fresh).withColumn("x", lit(false)))
+    }.state
   }
 
   /** Symmetrized occlusion-pruned edge table (HNSW keeps reverse links

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import graft.operators.Rounds
 import graft.operators.{TextAnalysis => TA}
 
 /** SURVEY.md §2-E: text analysis query surface over `documents`. */
@@ -795,8 +796,8 @@ object TextAnalysis {
     * Scale shape: the corpus is touched ONCE (the word-count
     * aggregate); all 10 iterations run over the VOCABULARY-sized
     * sequence table — exactly how production BPE trainers work — with
-    * one bounded argmax row to the driver per step and localCheckpoint
-    * truncating per-step lineage. The sequence rewrite is a literal
+    * one bounded argmax row to the driver per step and each step's
+    * sequences a `Rounds` pin. The sequence rewrite is a literal
     * left-to-right non-overlapping string replace, whose adjacency
     * semantics (a consumed separator can't serve the next overlapping
     * occurrence) match BPE's greedy merge and are identical in Spark's
@@ -812,10 +813,10 @@ object TextAnalysis {
       .select(explode(split($"text", " ")).as("w"))
       .filter(length($"w") > 0)
       .groupBy($"w").agg(count(lit(1)).as("c"))
-    var seqs = wc.select($"w", concat_ws(" ", split($"w", "")).as("seq"), $"c")
+    val seqs0 = wc.select($"w", concat_ws(" ", split($"w", "")).as("seq"), $"c")
       .localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    for (step <- 1 to steps) {
+    val seqs = Rounds.run(seqs0, steps) { (seqs, step) =>
       // bounded driver round-trip: ONE (pa, pb, cnt) row per step
       val top = seqs.select(split($"seq", " ").as("ws"), $"c")
         .filter(size($"ws") >= 2)
@@ -826,12 +827,12 @@ object TextAnalysis {
         .orderBy($"cnt".desc, $"pa", $"pb").limit(1).head()
       val (pa, pb, cnt) = (top.getString(0), top.getString(1), top.getLong(2))
       merges += ((step.toLong, pa, pb, cnt))
-      seqs = seqs.select($"w",
+      seqs.select($"w",
         trim(regexp_replace(concat(lit(" "), $"seq", lit(" ")),
           java.util.regex.Pattern.quote(s" $pa $pb "),
           java.util.regex.Matcher.quoteReplacement(s" $pa~$pb ")), " ").as("seq"),
-        $"c").localCheckpoint()
-    }
+        $"c")
+    }.state
     (seqs, merges.toSeq)
   }
 

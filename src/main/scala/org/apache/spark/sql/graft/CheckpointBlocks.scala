@@ -13,7 +13,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * blocks linger until ContextCleaner happens to GC the RDD (r12
   * ADVICE). This helper reaches the RDD through the LogicalRDD leaf
   * and unpersists it directly, which is the release the iterative
-  * operators (Dedup.clusters' superseded rounds) actually need.
+  * operators' superseded rounds need. `graft.operators.Rounds` is its
+  * one caller.
   *
   * Lives under `org.apache.spark.sql` for access to the internal
   * execution package, mirroring the existing

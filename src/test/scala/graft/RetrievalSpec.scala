@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 
 /** Round-5 query surface: BM25, perplexity, CMS, decontamination,
-  * MinHash LSH pairs, BFS, binary dedup. Planted-data tests write a
+  * MinHash LSH pairs, binary dedup (graph_bfs is in GraphSpec). Planted-data tests write a
   * temp documents.parquet so the table-bound queries run against
   * known content. */
 class RetrievalSpec extends AnyFunSuite {
@@ -118,21 +118,6 @@ class RetrievalSpec extends AnyFunSuite {
     assert(top.getAs[Long]("doc_a") == 1L && top.getAs[Long]("doc_b") == 2L)
     assert(top.getAs[Long]("matches") == 32L)
     assert(top.getAs[Double]("est_jaccard") == 1.0)
-  }
-
-  test("graph_bfs: fixpoint — source at 0, reachable hop levels contiguous") {
-    val rows = run("graph_bfs").collect()
-    assert(rows.length == 25) // all nations reported
-    val hops = rows.map(_.getAs[Long]("hops"))
-    assert(hops.count(_ == 0L) == 1, "exactly the source nation at hop 0")
-    assert(hops.forall(_ >= -1L))
-    // BFS at fixpoint: every level h>0 is reached FROM level h-1, so the
-    // reachable hop values form a contiguous 0..max range — a fixed
-    // too-small iteration bound would instead leave a gap (far nodes
-    // stuck at -1). This replaces the old tautological h<=4 assertion.
-    val reached = hops.filter(_ >= 0L).toSet
-    assert(reached == (0L to reached.max).toSet,
-      s"hop levels must be contiguous, got ${reached.toSeq.sorted}")
   }
 
   test("mm_hash_dedup collapses byte-identical blobs to the min doc_id") {

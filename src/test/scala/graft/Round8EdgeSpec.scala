@@ -93,22 +93,6 @@ class Round8EdgeSpec extends AnyFunSuite {
       (0L, 10L, 0L, 0.0, 0.0, 1.0)), got.toString)
   }
 
-  test("graph_label_prop: bridged triangles resolve to two communities") {
-    // orders (keys % 10 == 0 to pass the sample filter) define cliques:
-    // triangle {1,2,3}, triangle {4,5,6}, bridge edge {3,4}.
-    val li = Seq((10L, 1L), (10L, 2L), (10L, 3L),
-      (20L, 4L), (20L, 5L), (20L, 6L), (30L, 3L), (30L, 4L))
-    val dir = Files.createTempDirectory("lpa").toString
-    li.toDF("l_orderkey", "l_partkey").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val got = SparkEntry.queries("graph_label_prop")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    // hand-traced 3 synchronous rounds (min-label tie-break): the
-    // bridge briefly pulls node 4 toward label 3, the triangle majority
-    // pulls it back — final communities {1,2,3}->1 and {4,5,6}->4.
-    assert(got == Seq((1L, 3L), (4L, 3L)), got.toString)
-  }
-
   test("q_graph_modularity: bridged triangles score Q = 5/14 exactly") {
     val li = Seq((10L, 1L), (10L, 2L), (10L, 3L),
       (20L, 4L), (20L, 5L), (20L, 6L), (30L, 3L), (30L, 4L))
