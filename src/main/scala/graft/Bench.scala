@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline queries (QueryDef.bench) against
@@ -95,10 +95,14 @@ object Bench {
     * ctr_referrer) is then diagnosable from the artifact alone: CPU
     * blip (same bytes, more time) vs plan change (different bytes).
     * `tools.RunOne` attaches the same listener, so its per-run counters
-    * and the sidecar's come from one class. */
+    * and the sidecar's come from one class. `jobsStarted` is a running
+    * count outside the snapshot: `RunOne` takes its plan-build jobs as
+    * the difference across a query's build. */
   private[graft] final class StageMetrics extends SparkListener {
-    private var stages, tasks = 0L
+    private var stages, tasks, jobs = 0L
     private var shufRead, shufWrite, spillMem, spillDisk, inBytes = 0L
+    override def onJobStart(js: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
+    def jobsStarted: Long = synchronized(jobs)
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
       synchronized {
         val m = sc.stageInfo.taskMetrics

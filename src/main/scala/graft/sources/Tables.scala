@@ -1,8 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Typed access to the test corpus (TESTDATA.md): one parquet per table.
   *
@@ -20,10 +21,60 @@ object Tables {
     * that collects as LocalDateTime. The session tz is pinned to UTC, so
     * the cast is value-preserving and epoch math agrees with DuckDB's
     * naive-timestamp epoch_ms(). */
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    normalized(read(spark, s"$dir/$name.parquet")._1)
+
+  private def normalized(raw: DataFrame): DataFrame =
     raw.schema.fields.collect { case f if f.dataType == TimestampNTZType => f.name }
       .foldLeft(raw)((df, c) => df.withColumn(c, col(c).cast(TimestampType)))
+
+  /** One table's parquet schema and row count, valid only for the exact
+    * file set (path, size and mtime of each file) it was resolved from:
+    * a table rewritten at the same path resolves again. */
+  private final class Resolved(val files: Set[(String, Long, Long)], val schema: StructType) {
+    @volatile private var n = -1L
+    /** Footer-metadata count, run once per file set (two racing first
+      * reads may both run it; they agree). */
+    def rows(df: DataFrame): Long = { if (n < 0) n = df.count(); n }
+  }
+
+  /** Session settings that change what parquet schema inference returns. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.fieldId.read.enabled", "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema", "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled")
+
+  private val resolved =
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[String]), Resolved]()
+
+  /** The files the read's relation listed, with size and mtime. */
+  private def fileSet(df: DataFrame): Set[(String, Long, Long)] =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
+        r.location.listFiles(Nil, Nil).flatMap(_.files)
+          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
+    }.getOrElse(sys.error(s"not a file relation: ${df.queryExecution.analyzed}"))
+
+  /** Reads a parquet table with its schema resolved once per file set.
+    * Parquet schema inference is a Spark job that re-reads a footer, and
+    * it would run while the caller builds its plan. A known table is read
+    * with its resolved schema, which starts no job, and the file set that
+    * read lists decides whether the entry still holds; only a new or
+    * rewritten table runs the inference. */
+  private def read(spark: SparkSession, path: String): (DataFrame, Resolved) = {
+    val key = (path, InferenceConfs.map(k => spark.conf.getOption(k).orNull))
+    Option(resolved.get(key))
+      .map(r => (spark.read.schema(r.schema).parquet(path), r))
+      .filter { case (df, r) => fileSet(df) == r.files }
+      .getOrElse {
+        val df = spark.read.parquet(path)
+        val r = new Resolved(fileSet(df), df.schema)
+        resolved.put(key, r)
+        (df, r)
+      }
   }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
@@ -69,23 +120,17 @@ object Tables {
     * vectors compress ~15× harder than text, so any byte cutoff that
     * spreads 200k documents (12 MB) skips 200k embeddings (3.5 MB).
     * The row count is parquet-footer metadata — the gate job reads no
-    * data — and is cached per path for the session. */
+    * data — and is kept with the table's schema, per file set. */
   private[graft] val SpreadMinRows: Long = 50000L
 
-  private val rowCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private[graft] def spread(df: DataFrame, path: String): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= par) df
-    else {
-      val n = rowCountCache.computeIfAbsent(path, _ => df.count()).longValue()
-      if (n < SpreadMinRows) df else df.repartition(par)
-    }
+  private def spread(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val (raw, r) = read(spark, s"$dir/$name.parquet")
+    val df = normalized(raw)
+    val par = spark.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions >= par || r.rows(raw) < SpreadMinRows) df
+    else df.repartition(par)
   }
 
-  def documents(spark: SparkSession, dir: String): DataFrame =
-    spread(apply(spark, dir, "documents"), s"$dir/documents.parquet")
-  def embeddings(spark: SparkSession, dir: String): DataFrame =
-    spread(apply(spark, dir, "embeddings"), s"$dir/embeddings.parquet")
+  def documents(spark: SparkSession, dir: String): DataFrame = spread(spark, dir, "documents")
+  def embeddings(spark: SparkSession, dir: String): DataFrame = spread(spark, dir, "embeddings")
 }

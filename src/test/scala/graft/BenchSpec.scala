@@ -24,8 +24,11 @@ class BenchSpec extends AnyFunSuite {
       assert(c("tasks") >= c("stages"), s"every stage runs at least one task: $c")
       assert(c("shuffle_write") > 0, s"the group-by exchange writes shuffle: $c")
       assert(c("shuffle_read") > 0, s"the reduce side reads it back: $c")
+      val jobs = m.jobsStarted
+      assert(jobs >= 1 && jobs <= c("stages"), s"$jobs jobs for $c")
       val again = m.snapshotAndReset()
       assert(again.forall(_._2 == 0L), s"snapshotAndReset did not reset: $again")
+      assert(m.jobsStarted == jobs, "jobsStarted is a running count outside the snapshot")
     } finally sc.removeSparkListener(m)
   }
 

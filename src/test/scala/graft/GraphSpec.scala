@@ -230,4 +230,52 @@ class GraphSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == Seq((1L, 3L), (2L, 3L), (3L, 3L), (4L, 3L)), got.toString)
   }
+
+  test("q_graph_modularity: bridged triangles score Q = 5/14 exactly") {
+    val li = Seq((10L, 1L), (10L, 2L), (10L, 3L),
+      (20L, 4L), (20L, 5L), (20L, 6L), (30L, 3L), (30L, 4L))
+    val dir = coPurchaseDir(li)
+    val r = SparkEntry.queries("q_graph_modularity")(spark, dir).collect().head
+    // LPA communities {1,2,3} and {4,5,6}; m2=14 directed edges, 12
+    // intra-community, d_c = 7 each: Q = (12*14 - 2*49)/14^2 = 5/14
+    assert(r.getAs[Long]("n_communities") == 2L)
+    assert(r.getAs[Long]("n_edges") == 7L)
+    assert(r.getAs[Long]("l_in") == 6L)
+    assert(math.abs(r.getAs[Double]("modularity") - 5.0 / 14.0) < 1e-12)
+  }
+
+  test("graph_wcc: two chains label every node with its component minimum") {
+    // orders (% 10 == 0 to pass the sample filter) define cliques:
+    // edge {1,2} and path {3,4},{4,5} -> components {1,2} and {3,4,5}
+    val dir = coPurchaseDir(Seq((10L, 1L), (10L, 2L),
+      (20L, 3L), (20L, 4L), (30L, 4L), (30L, 5L)))
+    val got = SparkEntry.queries("graph_wcc")(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(got == Seq((1L, 1L), (2L, 1L), (3L, 3L), (4L, 3L), (5L, 3L)), got.toString)
+  }
+
+  test("graph_clustering_coeff: every triangle corner is credited, deg-1 nodes drop") {
+    // triangle {1,2,3} (order 10) + pendant edge {3,4} (order 20):
+    // lcc(1)=lcc(2)=1 (their whole neighborhood is closed),
+    // lcc(3)=2*1/(3*2)=1/3, node 4 has deg 1 -> excluded.
+    val dir = coPurchaseDir(Seq((10L, 1L), (10L, 2L), (10L, 3L), (20L, 3L), (20L, 4L)))
+    val got = SparkEntry.queries("graph_clustering_coeff")(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(got == Seq(
+      (1L, 2L, 1L, 1000000000L),
+      (2L, 2L, 1L, 1000000000L),
+      (3L, 3L, 1L, 333333333L)), got.toString)
+  }
+
+  test("graph_assortativity: hub-to-leaf pendant drives r negative") {
+    // triangle {1,2,3} + pendant {3,4}: degrees 2,2,3,1 over 8 edge
+    // rows -> Σjk=38, Σj=18, Σj²=44, r = (8·38−18²)/(8·44−18²) = −20/28
+    val dir = coPurchaseDir(Seq((10L, 1L), (10L, 2L), (10L, 3L), (20L, 3L), (20L, 4L)))
+    val got = SparkEntry.queries("graph_assortativity")(spark, dir).collect()
+    assert(got.length == 1)
+    val r = got.head
+    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) ==
+      ((4L, 38L, 18L, 44L)), r.toString)
+    assert(math.abs(r.getDouble(4) - (-20.0 / 28.0)) < 1e-15, r.toString)
+  }
 }

@@ -93,21 +93,6 @@ class Round8EdgeSpec extends AnyFunSuite {
       (0L, 10L, 0L, 0.0, 0.0, 1.0)), got.toString)
   }
 
-  test("q_graph_modularity: bridged triangles score Q = 5/14 exactly") {
-    val li = Seq((10L, 1L), (10L, 2L), (10L, 3L),
-      (20L, 4L), (20L, 5L), (20L, 6L), (30L, 3L), (30L, 4L))
-    val dir = Files.createTempDirectory("mod").toString
-    li.toDF("l_orderkey", "l_partkey").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val r = SparkEntry.queries("q_graph_modularity")(spark, dir).collect().head
-    // LPA communities {1,2,3} and {4,5,6}; m2=14 directed edges, 12
-    // intra-community, d_c = 7 each: Q = (12*14 - 2*49)/14^2 = 5/14
-    assert(r.getAs[Long]("n_communities") == 2L)
-    assert(r.getAs[Long]("n_edges") == 7L)
-    assert(r.getAs[Long]("l_in") == 6L)
-    assert(math.abs(r.getAs[Double]("modularity") - 5.0 / 14.0) < 1e-12)
-  }
-
   test("q_kmv_setops: under-k audiences make every estimate exact") {
     // a: users 1..40, b: users 21..60 -> inter 20, union 60, jacc 1/3.
     // All distinct counts < k=64, so the sketches are complete and the

@@ -6,54 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Handcrafted-input semantics for the round-9 keys: the oracle
   * hash-compare proves Spark == DuckDB; these prove both match the
-  * DEFINITION (component minima in WCC, per-corner triangle
-  * attribution in the clustering coefficient, train/held-out vocab
-  * split in OOV) on inputs small enough to verify by hand. */
+  * DEFINITION (train/held-out vocab split in OOV, majority vote in
+  * kNN classification) on inputs small enough to verify by hand. The
+  * round-9 graph keys are in `GraphSpec`. */
 class Round9EdgeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def liDir(rows: Seq[(Long, Long)]): String = {
-    val dir = Files.createTempDirectory("r9edge").toString
-    rows.toDF("l_orderkey", "l_partkey").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    dir
-  }
-
-  test("graph_wcc: two chains label every node with its component minimum") {
-    // orders (% 10 == 0 to pass the sample filter) define cliques:
-    // edge {1,2} and path {3,4},{4,5} -> components {1,2} and {3,4,5}
-    val dir = liDir(Seq((10L, 1L), (10L, 2L),
-      (20L, 3L), (20L, 4L), (30L, 4L), (30L, 5L)))
-    val got = SparkEntry.queries("graph_wcc")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(got == Seq((1L, 1L), (2L, 1L), (3L, 3L), (4L, 3L), (5L, 3L)), got.toString)
-  }
-
-  test("graph_clustering_coeff: every triangle corner is credited, deg-1 nodes drop") {
-    // triangle {1,2,3} (order 10) + pendant edge {3,4} (order 20):
-    // lcc(1)=lcc(2)=1 (their whole neighborhood is closed),
-    // lcc(3)=2*1/(3*2)=1/3, node 4 has deg 1 -> excluded.
-    val dir = liDir(Seq((10L, 1L), (10L, 2L), (10L, 3L), (20L, 3L), (20L, 4L)))
-    val got = SparkEntry.queries("graph_clustering_coeff")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    assert(got == Seq(
-      (1L, 2L, 1L, 1000000000L),
-      (2L, 2L, 1L, 1000000000L),
-      (3L, 3L, 1L, 333333333L)), got.toString)
-  }
-
-  test("graph_assortativity: hub-to-leaf pendant drives r negative") {
-    // triangle {1,2,3} + pendant {3,4}: degrees 2,2,3,1 over 8 edge
-    // rows -> Σjk=38, Σj=18, Σj²=44, r = (8·38−18²)/(8·44−18²) = −20/28
-    val dir = liDir(Seq((10L, 1L), (10L, 2L), (10L, 3L), (20L, 3L), (20L, 4L)))
-    val got = SparkEntry.queries("graph_assortativity")(spark, dir).collect()
-    assert(got.length == 1)
-    val r = got.head
-    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) ==
-      ((4L, 38L, 18L, 44L)), r.toString)
-    assert(math.abs(r.getDouble(4) - (-20.0 / 28.0)) < 1e-15, r.toString)
-  }
 
   test("corpus_ppl_buckets: value-threshold tertiles split head/middle/tail") {
     // c(a)=4, others 1, N=7 -> rarities a:1, b/x/y:7; scores
