@@ -50,7 +50,8 @@ import java.util.UUID
   * crashed-writer orphans alike).
   *
   * Log format (line-oriented, no parser dependencies): line 1
-  * `version=<N>`, then per line `add=<data-relative path>`,
+  * `version=<N>`, then per line `add=<entry>` (a data-relative path
+  * plus metadata segments, see [[ManifestEntry]]),
   * `remove=<data-relative path>` (drops that file from the folded
   * set — the O(affected) half of copy-on-write DELETE/MERGE),
   * `dv=<data-relative path>|<positions>` (a DELETION VECTOR — the
@@ -168,8 +169,9 @@ object ManifestTable {
     * file — what every parquet read/write call receives. */
   private def dataPath(dir: String, rel: String): String = io(dir).dataPath(rel)
 
-  /** Recursively drop a staged txn dir (abandoned rewrite). */
-  private def deleteStaged(dir: String, txn: String): Unit = {
+  /** Recursively drop a staged txn dir — an abandoned rewrite, or the
+    * DSv2 write's abort path. */
+  private[graft] def dropStagedDir(dir: String, txn: String): Unit = {
     val o = io(dir)
     o.delete(new HPath(o.data, txn), recursive = true): Unit
   }
@@ -196,7 +198,7 @@ object ManifestTable {
       .sorted.lastOption
   }
 
-  private case class State(files: Vector[String], txns: Set[String],
+  private case class State(files: Vector[ManifestEntry], txns: Set[String],
                            schema: Option[String],
                            dvs: Map[String, String] = Map.empty,
                            colmap: Option[String] = None)
@@ -244,43 +246,61 @@ object ManifestTable {
     lines.tail
   }
 
-  /** Fold the log into the snapshot state at `target`: newest
-    * checkpoint ≤ target, then each manifest up to target. Every
-    * version in (checkpoint, target] must exist — [[vacuum]] preserves
-    * this invariant by checkpointing before it drops history. */
+  /** Action lines of committed manifest `v` — the one place a missing
+    * version is reported (vacuumed history, or a log with a hole). */
+  private def manifestLines(o: Io, dir: String, v: Long): Seq[String] = {
+    val mf = new HPath(o.manifest, s"v$v.manifest")
+    if (!o.exists(mf))
+      throw new IllegalStateException(
+        s"version $v missing from the log of $dir (vacuumed past it?)")
+    readLog(o, mf, v)
+  }
+
+  /** `dv=<rel>|<positions>` → (rel, positions). */
+  private def splitDv(l: String): (String, String) = {
+    val body = l.stripPrefix("dv=")
+    val cut = body.indexOf('|')
+    require(cut > 0, s"corrupt dv action: $l")
+    (body.take(cut), body.drop(cut + 1))
+  }
+
+  private def dvAction(rel: String, spec: String): String = s"dv=$rel|$spec"
+
   /** Log folds performed — the metadata-read cost meter. Each fold is
     * O(checkpoint + interval) file reads, which on an object store is
     * remote LIST + GETs; the per-operation fold budget is spec-pinned
     * (MetadataCostSpec) so a refactor can't quietly multiply it. */
   private[graft] val foldCount = new java.util.concurrent.atomic.AtomicLong
 
+  /** Fold the log into the snapshot state at `target`: newest
+    * checkpoint ≤ target, then each manifest up to target. Every
+    * version in (checkpoint, target] must exist — [[vacuum]] preserves
+    * this invariant by checkpointing before it drops history. Each
+    * `add=` entry is parsed once here ([[ManifestEntry]]). */
   private def fold(dir: String, target: Long): State = {
     foldCount.incrementAndGet()
     val o = io(dir)
     val ckpt = o.list(o.manifest)
       .flatMap(f => versionOf(f.getPath.getName, ".checkpoint"))
       .filter(_ <= target).sorted.lastOption
-    var files = Vector.empty[String]
+    var files = Vector.empty[ManifestEntry]
     var txns = Set.empty[String]
     var schema = Option.empty[String]
     var dvs = Map.empty[String, String]
     var colmap = Option.empty[String]
     def apply(lines: Seq[String]): Unit = lines.foreach {
       case "reset" => files = Vector.empty; dvs = Map.empty
-      case l if l.startsWith("add=") => files :+= l.stripPrefix("add=")
+      case l if l.startsWith("add=") => files :+= ManifestEntry.parse(l.stripPrefix("add="))
       case l if l.startsWith("remove=") =>
         // match on the bare path: the live entry may carry a stats suffix
         val rel = l.stripPrefix("remove=")
-        files = files.filterNot(_.takeWhile(_ != '|') == rel)
+        files = files.filterNot(_.rel == rel)
         dvs -= rel // a rewrite of the file materializes its mask away
       case l if l.startsWith("dv=") =>
         // merge-on-read deletion vector: `dv=<rel>|<positions>` REPLACES
         // the file's mask (writers merge prior positions before
         // committing, so the latest action is always cumulative)
-        val body = l.stripPrefix("dv=")
-        val cut = body.indexOf('|')
-        require(cut > 0, s"corrupt dv action: $l")
-        dvs += body.take(cut) -> body.drop(cut + 1)
+        dvs += splitDv(l)
       case l if l.startsWith("txn=") => txns += l.stripPrefix("txn=")
       case l if l.startsWith("schema=") => schema = Some(l.stripPrefix("schema="))
       case "colmap=-" => colmap = None // explicit clear (RESTORE to pre-mapping)
@@ -293,13 +313,7 @@ object ManifestTable {
       apply(readLog(o, new HPath(o.manifest, s"v$c.checkpoint"), c))
     }
     val from = ckpt.map(_ + 1).getOrElse(0L)
-    (from to target).foreach { v =>
-      val mf = new HPath(o.manifest, s"v$v.manifest")
-      if (!o.exists(mf))
-        throw new IllegalStateException(
-          s"version $v missing from the log of $dir (vacuumed past it?)")
-      apply(readLog(o, mf, v))
-    }
+    (from to target).foreach(v => apply(manifestLines(o, dir, v)))
     State(files, txns, schema, dvs, colmap)
   }
 
@@ -326,61 +340,19 @@ object ManifestTable {
   private def mappingOf(st: State): Option[Seq[(String, String)]] =
     st.colmap.map(decodeMapping)
 
-  /** Reader pinned to the state's PHYSICAL schema (recorded logical
-    * schema with the mapping applied) — the State-threaded twin of
-    * [[pinnedReader]]. */
-  private def pinnedReaderSt(spark: SparkSession, st: State)
-      : org.apache.spark.sql.DataFrameReader =
-    schemaOf(st) match {
-      case Some(lo) =>
-        val physical = mappingOf(st) match {
-          case None => lo
-          case Some(m) =>
-            val byLogical = m.toMap
-            org.apache.spark.sql.types.StructType(lo.fields.map(f =>
-              f.copy(name = byLogical.getOrElse(f.name, f.name))))
-        }
-        spark.read.schema(physical)
-      case None => spark.read
+  /** The state's PHYSICAL schema: the recorded logical schema with the
+    * mapping applied (None when the table never recorded one). */
+  private def physicalSchema(st: State): Option[org.apache.spark.sql.types.StructType] =
+    schemaOf(st).map { lo =>
+      val byLogical = mappingOf(st).getOrElse(Nil).toMap
+      org.apache.spark.sql.types.StructType(lo.fields.map(f =>
+        f.copy(name = byLogical.getOrElse(f.name, f.name))))
     }
 
   /** Live file list of a snapshot (latest unless `version` given).
-    * Paths only — any `|stat=..` stats suffix is stripped. */
+    * Paths only — the entries' metadata segments are dropped. */
   def snapshotFiles(dir: String, version: Option[Long] = None): Seq[String] =
-    fold(dir, resolved(dir, version)).files.map(_.takeWhile(_ != '|'))
-
-  /** Live files with their per-column (min, max) stats recorded at
-    * [[appendWithStats]] time (Iceberg-style per-column bounds; empty
-    * map for files committed without stats). Entry format:
-    * `<rel>` followed by metadata segments in any order:
-    * `|rows=<n>` (exact row count), `|stat=<col>:<min>:<max>`,
-    * `|bloom=<col>:<m>:<k>:<hex>` (a per-file Bloom filter for
-    * point-lookup skipping — see [[BloomIndex]]). Unknown segments are
-    * ignored by every reader, so the format is forward-extensible. */
-  private def parseStatsEntry(entry: String): (String, Map[String, (Long, Long)]) = {
-    val parts = entry.split('|')
-    val stats = parts.iterator.drop(1).collect {
-      case p if p.startsWith("stat=") =>
-        p.stripPrefix("stat=").split(':') match {
-          case Array(c, mn, mx) => c -> ((mn.toLong, mx.toLong))
-          case bad => throw new IllegalStateException(
-            s"corrupt stat segment '${bad.mkString(":")}' in $entry")
-        }
-    }.toMap
-    (parts(0), stats)
-  }
-
-  /** (rel, exact row count) per live file — Some only for entries that
-    * recorded `rows=` at commit time ([[appendWithStats]] /
-    * [[appendEvolving]]-with-stats / stats-carrying rewrites). */
-  def snapshotRowCounts(dir: String, version: Option[Long] = None)
-      : Seq[(String, Option[Long])] =
-    fold(dir, resolved(dir, version)).files.map { e =>
-      val parts = e.split('|')
-      val rows = parts.iterator.drop(1)
-        .find(_.startsWith("rows=")).map(_.stripPrefix("rows=").toLong)
-      (parts(0), rows)
-    }
+    fold(dir, resolved(dir, version)).files.map(_.rel)
 
   /** COUNT(*) answered purely from manifest metadata — zero data-file
     * reads (the Iceberg/Delta metadata-only aggregate): the sum of the
@@ -392,11 +364,7 @@ object ManifestTable {
     * never mutate a counted file in place. */
   def countMeta(dir: String, version: Option[Long] = None): Option[Long] = {
     val st = fold(dir, resolved(dir, version))
-    val counts = st.files.map { e =>
-      val parts = e.split('|')
-      parts.iterator.drop(1)
-        .find(_.startsWith("rows=")).map(_.stripPrefix("rows=").toLong)
-    }
+    val counts = st.files.map(_.rows)
     if (counts.forall(_.isDefined))
       // deletion vectors mask rows in place: COUNT(*) is the recorded
       // per-file counts minus each live mask's exact cardinality —
@@ -414,16 +382,20 @@ object ManifestTable {
     * None also for the zero-file snapshot (no rows → no extrema). */
   def rangeMeta(dir: String, statCol: String,
                 version: Option[Long] = None): Option[(Long, Long)] = {
-    val phys = physicalOf(dir, version, statCol)
-    val statted = snapshotFilesWithStats(dir, version)
-    if (statted.isEmpty || !statted.forall(_._2.contains(phys))) None
-    else Some((statted.iterator.map(_._2(phys)._1).min,
-      statted.iterator.map(_._2(phys)._2).max))
+    val st = snapshotAt(dir, version)._2
+    val phys = physicalIn(st, statCol)
+    val statted = st.files.map(_.stats)
+    if (statted.isEmpty || !statted.forall(_.contains(phys))) None
+    else Some((statted.iterator.map(_(phys)._1).min,
+      statted.iterator.map(_(phys)._2).max))
   }
 
+  /** Live files with their per-column (min, max) stats recorded at
+    * [[appendWithStats]] time (Iceberg-style per-column bounds; empty
+    * map for files committed without stats). */
   def snapshotFilesWithStats(dir: String, version: Option[Long] = None)
       : Seq[(String, Map[String, (Long, Long)])] =
-    fold(dir, resolved(dir, version)).files.map(parseStatsEntry)
+    fold(dir, resolved(dir, version)).files.map(e => (e.rel, e.stats))
 
   /** Batch ids a writer has already committed (latest snapshot). */
   def committedBatches(dir: String, writer: String): Set[Long] =
@@ -445,11 +417,7 @@ object ManifestTable {
     * surface as 0. */
   def tableSchema(dir: String, version: Option[Long] = None)
       : Option[org.apache.spark.sql.types.StructType] =
-    fold(dir, resolved(dir, version)).schema.map(j =>
-      org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-          .fields.map(_.copy(nullable = true))))
+    schemaOf(fold(dir, resolved(dir, version)))
 
   // ── column mapping (rename/drop without rewrites) ───────────────
   // The Delta column-mapping shape: data files store PHYSICAL column
@@ -489,12 +457,13 @@ object ManifestTable {
     m.map { case (l, p) => s"$l:$p" }.mkString(",")
   }
 
-  /** Physical name of a logical column under the snapshot's mapping —
-    * identity when the table never mapped. */
-  private def physicalOf(dir: String, version: Option[Long],
-                         logical: String): String =
-    columnMapping(dir, version)
-      .flatMap(_.find(_._1 == logical).map(_._2)).getOrElse(logical)
+  /** Physical name of a logical column under a mapping — identity
+    * when the table never mapped. */
+  private def physicalName(mapping: Option[Seq[(String, String)]], logical: String): String =
+    mapping.flatMap(_.find(_._1 == logical).map(_._2)).getOrElse(logical)
+
+  private def physicalIn(st: State, logical: String): String =
+    physicalName(mappingOf(st), logical)
 
   /** Rename physical columns back to their logical names (and DROP
     * columns the mapping no longer carries); extra columns a frame
@@ -552,28 +521,16 @@ object ManifestTable {
       "schema=" + newSchema.json, s"op=DROP($name)")).get
   }
 
-  /** Parquet reader pinned to the PHYSICAL schema at `version` (the
-    * recorded logical schema with mapping applied), plain reader when
-    * none — EVERY path that reads committed data files (snapshot
-    * read, change feed, delete/merge rewrites) must come through
-    * here: an unpinned read of files spanning a schema evolution
-    * takes whichever footer parquet samples first, silently dropping
-    * (or crashing on) the evolved column. Callers then [[logicalize]]
-    * the frame back to logical names. */
-  private def pinnedReader(spark: SparkSession, dir: String,
-                           version: Option[Long]): org.apache.spark.sql.DataFrameReader =
-    tableSchema(dir, version) match {
-      case Some(st) =>
-        val physical = columnMapping(dir, version) match {
-          case None => st
-          case Some(m) =>
-            val byLogical = m.toMap
-            org.apache.spark.sql.types.StructType(st.fields.map(f =>
-              f.copy(name = byLogical.getOrElse(f.name, f.name))))
-        }
-        spark.read.schema(physical)
-      case None => spark.read
-    }
+  /** Parquet reader pinned to the snapshot's PHYSICAL schema, plain
+    * reader when none — EVERY path that reads committed data files
+    * (snapshot read, change feed, delete/merge rewrites) must come
+    * through here: an unpinned read of files spanning a schema
+    * evolution takes whichever footer parquet samples first, silently
+    * dropping (or crashing on) the evolved column. Callers then
+    * [[logicalize]] the frame back to logical names. */
+  private def pinnedReader(spark: SparkSession, st: State)
+      : org.apache.spark.sql.DataFrameReader =
+    physicalSchema(st).fold(spark.read)(spark.read.schema(_))
 
   /** Live deletion vectors of a snapshot: data-relative file →
     * masked-out row positions (ascending). Empty for tables whose DML
@@ -594,7 +551,7 @@ object ManifestTable {
   private def keyedRead(spark: SparkSession, dir: String,
                         st: State, rels: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{col, concat_ws, element_at, split => fsplit}
-    logicalize(pinnedReaderSt(spark, st)
+    logicalize(pinnedReader(spark, st)
         .parquet(rels.map(rel => dataPath(dir, rel)): _*),
         mappingOf(st))
       .withColumn("_m_rel", concat_ws("/",
@@ -630,7 +587,7 @@ object ManifestTable {
   private def maskedRead(spark: SparkSession, dir: String,
                          st: State, rels: Seq[String]): DataFrame = {
     if (st.dvs.view.filterKeys(rels.toSet).isEmpty)
-      return logicalize(pinnedReaderSt(spark, st)
+      return logicalize(pinnedReader(spark, st)
           .parquet(rels.map(rel => dataPath(dir, rel)): _*),
         mappingOf(st))
     applyMask(spark, keyedRead(spark, dir, st, rels), st.dvs, rels)
@@ -643,15 +600,6 @@ object ManifestTable {
                                  version: Option[Long], rels: Seq[String]): DataFrame =
     maskedRead(spark, dir, snapshotAt(dir, version)._2, rels)
 
-  /** Resolve a wall-clock timestamp to a version — Delta's
-    * `timestampAsOf` rule: the LATEST version whose commit time is ≤
-    * `tsMillis`. Commit time is the manifest file's mtime (what Delta
-    * itself uses), repaired to be non-decreasing the way Delta's
-    * history reconstruction does (clock skew between writers can
-    * stamp v5 older than v4 — the later VERSION still wins, so a
-    * non-monotonic mtime is lifted to its predecessor's + 1 ms).
-    * Throws when `tsMillis` predates the first commit (no snapshot
-    * existed yet — silently serving v0 would fabricate history). */
   /** Every surviving version with its REPAIRED commit timestamp —
     * manifest mtimes lifted to be non-decreasing in version order
     * (writer clock skew can stamp v5 older than v4; the later VERSION
@@ -672,6 +620,15 @@ object ManifestTable {
     }
   }
 
+  /** Resolve a wall-clock timestamp to a version — Delta's
+    * `timestampAsOf` rule: the LATEST version whose commit time is ≤
+    * `tsMillis`. Commit time is the manifest file's mtime (what Delta
+    * itself uses), repaired to be non-decreasing the way Delta's
+    * history reconstruction does (clock skew between writers can
+    * stamp v5 older than v4 — the later VERSION still wins, so a
+    * non-monotonic mtime is lifted to its predecessor's + 1 ms).
+    * Throws when `tsMillis` predates the first commit (no snapshot
+    * existed yet — silently serving v0 would fabricate history). */
   def versionAtTimestamp(dir: String, tsMillis: Long): Long = {
     val adjusted = repairedCommitTimes(dir)
     if (adjusted.isEmpty)
@@ -736,7 +693,7 @@ object ManifestTable {
   def read(spark: SparkSession, dir: String,
            version: Option[Long] = None): DataFrame = {
     val st = snapshotAt(dir, version)._2
-    maskedRead(spark, dir, st, st.files.map(_.takeWhile(_ != '|')))
+    maskedRead(spark, dir, st, st.files.map(_.rel))
   }
 
   /** Stage `df` as parquet under a fresh txn dir; returns the
@@ -774,13 +731,6 @@ object ManifestTable {
   def append(spark: SparkSession, df: DataFrame, dir: String): Long =
     commit(dir, stageFiles(df, dir).map("add=" + _) :+ "op=APPEND").get
 
-  /** Compute `add=` actions for freshly staged files, recording
-    * per-file per-column (min, max) of the given long columns —
-    * Iceberg-style multi-column bounds. One aggregation pass over the
-    * staged batch (grouped by input file), O(batch) like the commit.
-    * Zero-row part files are DROPPED from the actions: they carry no
-    * data, and a stats-less entry would never be pruned out of any
-    * future plan. */
   /** Legal stats-column names: anything else could collide with the
     * log's own `|` / `:` delimiters and write an entry that only
     * fails at snapshot-read time as "corrupt stat segment". */
@@ -830,10 +780,21 @@ object ManifestTable {
   private[graft] def unhex(s: String): Array[Byte] =
     s.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
 
+  /** Compute `add=` actions for freshly staged files, recording each
+    * file's exact row count and per-column (min, max) of the given
+    * long/int/string columns — Iceberg-style multi-column bounds. One
+    * aggregation pass over the staged batch (grouped by input file),
+    * O(batch) like the commit. Zero-row part files are DROPPED from
+    * the actions: they carry no data, and a stats-less entry would
+    * never be pruned out of any future plan. `bloomsOf` gives a file
+    * name's Bloom segments ([[appendWithBloom]]). */
   private def statAddActions(spark: SparkSession, dir: String,
-                             rels: Seq[String], statCols: Seq[String]): Seq[String] = {
+                             rels: Seq[String], statCols: Seq[String],
+                             bloomsOf: String => Seq[(String, String)] = _ => Nil)
+      : Seq[String] = {
     import org.apache.spark.sql.functions.{col, input_file_name, max, min}
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    import ManifestEntry.{LongBounds, StringBounds}
     if (rels.isEmpty) return Nil
     statCols.foreach { c =>
       require(StatColName.matches(c),
@@ -849,8 +810,7 @@ object ManifestTable {
     // physical columns) — which is what lets pruning survive a rename.
     // Resolve the mapping ONCE (one fold), not once per column.
     val mapping = columnMapping(dir)
-    val statPhys = statCols.map(c =>
-      mapping.flatMap(_.find(_._1 == c).map(_._2)).getOrElse(c))
+    val statPhys = statCols.map(physicalName(mapping, _))
     val typeOf: Map[String, org.apache.spark.sql.types.DataType] =
       statPhys.map { c =>
         val f = staged.schema.find(_.name == c).getOrElse(
@@ -878,56 +838,56 @@ object ManifestTable {
         val name = new HPath(r.getString(0)).getName
         // an all-NULL column in a part file has null bounds — record
         // no stat for that (file, column); unknown ranges never prune
-        val stats = statPhys.zipWithIndex.collect {
+        val bounds = statPhys.zipWithIndex.collect {
           case (c, i) if !r.isNullAt(2 + 2 * i) && !r.isNullAt(3 + 2 * i) =>
-            typeOf(c) match {
-              case LongType =>
-                Some(s"stat=$c:${r.getLong(2 + 2 * i)}:${r.getLong(3 + 2 * i)}")
+            c -> (typeOf(c) match {
+              case LongType => LongBounds(r.getLong(2 + 2 * i), r.getLong(3 + 2 * i))
               case IntegerType =>
-                Some(s"stat=$c:${r.getInt(2 + 2 * i).toLong}:${r.getInt(3 + 2 * i).toLong}")
-              case _ =>
-                val mn = hex(truncMinUtf8(r.getString(2 + 2 * i)))
-                truncMaxUtf8(r.getString(3 + 2 * i))
-                  .map(mx => s"sstat=$c:$mn:${hex(mx)}")
-            }
-        }.flatten
-        name -> (s"rows=${r.getLong(1)}" +: stats).mkString("|")
+                LongBounds(r.getInt(2 + 2 * i).toLong, r.getInt(3 + 2 * i).toLong)
+              case _ => StringBounds(r.getString(2 + 2 * i), r.getString(3 + 2 * i))
+            })
+        }
+        name -> ((r.getLong(1), bounds))
       }.toMap
     rels.flatMap { rel =>
       // absent from byFile ⇒ the part file holds zero rows: skip it
-      byFile.get(rel.split('/').last).map(meta => s"add=$rel|$meta")
+      val name = rel.split('/').last
+      byFile.get(name).map { case (rows, bounds) =>
+        "add=" + ManifestEntry.render(rel, rows, bounds, bloomsOf(name))
+      }
     }
   }
+
+  /** `add=` actions for freshly staged files: with stats when
+    * `statCols` are given ([[statAddActions]]), bare paths otherwise. */
+  private def addActions(spark: SparkSession, dir: String,
+                         staged: Seq[String], statCols: Seq[String]): Seq[String] =
+    if (statCols.nonEmpty) statAddActions(spark, dir, staged, statCols)
+    else staged.map("add=" + _)
 
   /** Live files with their per-column TRUNCATED string bounds (min
     * bytes, bumped max bytes) recorded by string `statCols`; empty map
     * for files without string stats. */
   def snapshotFilesWithStringStats(dir: String, version: Option[Long] = None)
       : Seq[(String, Map[String, (Array[Byte], Array[Byte])])] =
-    fold(dir, resolved(dir, version)).files.map { e =>
-      val parts = e.split('|')
-      val stats = parts.iterator.drop(1).collect {
-        case p if p.startsWith("sstat=") =>
-          p.stripPrefix("sstat=").split(':') match {
-            case Array(c, mn, mx) => c -> ((unhex(mn), unhex(mx)))
-            case bad => throw new IllegalStateException(
-              s"corrupt sstat segment '${bad.mkString(":")}' in $e")
-          }
-      }.toMap
-      (parts(0), stats)
-    }
+    fold(dir, resolved(dir, version)).files.map(e => (e.rel, e.stringStats))
+
+  /** May `e` hold a `phys` value in the UTF-8 byte range `[lo, hi]`?
+    * Yes unless its recorded truncated bounds say otherwise. */
+  private def overlapsString(e: ManifestEntry, phys: String,
+                             lo: Array[Byte], hi: Array[Byte]): Boolean =
+    e.stringStats.get(phys).forall { case (mn, mx) =>
+      utf8Lex(mx, lo) >= 0 && utf8Lex(mn, hi) <= 0 }
 
   /** Files the latest snapshot plans for a string range `[lo, hi]` on
     * `statCol`: recorded truncated bounds overlap in UTF-8 byte order,
     * plus every file without string stats for the column. */
   def plannedFilesForStringRange(dir: String, statCol: String,
                                  lo: String, hi: String): Seq[String] = {
-    val phys = physicalOf(dir, None, statCol)
-    val (kLo, kHi) = (lo.getBytes("UTF-8"), hi.getBytes("UTF-8"))
-    snapshotFilesWithStringStats(dir).collect {
-      case (f, stats) if stats.get(phys).forall { case (mn, mx) =>
-        utf8Lex(mx, kLo) >= 0 && utf8Lex(mn, kHi) <= 0 } => f
-    }
+    val st = snapshotAt(dir, None)._2
+    val phys = physicalIn(st, statCol)
+    st.files.filter(overlapsString(_, phys, lo.getBytes("UTF-8"), hi.getBytes("UTF-8")))
+      .map(_.rel)
   }
 
   /** String-range read with file skipping — [[readRange]]'s string
@@ -937,15 +897,9 @@ object ManifestTable {
                       lo: String, hi: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val planned = plannedFilesForStringRange(dir, statCol, lo, hi)
-    if (planned.nonEmpty)
-      return maskedSnapshotRead(spark, dir, None, planned)
-        .filter(col(statCol) >= lo && col(statCol) <= hi)
-    val all = snapshotFiles(dir)
-    if (all.isEmpty)
-      throw new IllegalStateException(
-        s"readRangeString on $dir: snapshot holds no data files at all")
-    maskedSnapshotRead(spark, dir, None, Seq(all.head))
-      .filter(org.apache.spark.sql.functions.lit(false))
+    if (planned.isEmpty) emptyRead(spark, dir, None, "readRangeString")
+    else maskedSnapshotRead(spark, dir, None, planned)
+      .filter(col(statCol) >= lo && col(statCol) <= hi)
   }
 
   /** [[append]] that also records the batch's schema as the table's
@@ -996,12 +950,8 @@ object ManifestTable {
         (physicalize(df, Some(extended)),
           Seq("colmap=" + encodeMapping(extended)))
     }
-    val staged = stageFilesRaw(stagedDf, dir)
-    val adds =
-      if (statCols.nonEmpty) statAddActions(spark, dir, staged, statCols)
-      else staged.map("add=" + _)
-    commit(dir, adds ++ mapActions ++
-      Seq("schema=" + df.schema.json, "op=APPEND")).get
+    commit(dir, addActions(spark, dir, stageFilesRaw(stagedDf, dir), statCols) ++
+      mapActions ++ Seq("schema=" + df.schema.json, "op=APPEND")).get
   }
 
   /** [[append]] that also records per-file (min, max) of one or more
@@ -1021,12 +971,15 @@ object ManifestTable {
     * never skipped). */
   def plannedFilesForRange(dir: String, statCol: String,
                            lo: Long, hi: Long): Seq[String] = {
-    val phys = physicalOf(dir, None, statCol)
-    snapshotFilesWithStats(dir).collect {
-      case (f, stats) if stats.get(phys)
-        .forall { case (mn, mx) => mx >= lo && mn <= hi } => f
-    }
+    val st = snapshotAt(dir, None)._2
+    val phys = physicalIn(st, statCol)
+    st.files.filter(overlapsLong(_, phys, lo, hi)).map(_.rel)
   }
+
+  /** May `e` hold a `phys` value in `[lo, hi]`? Yes unless its
+    * recorded bounds say otherwise. */
+  private def overlapsLong(e: ManifestEntry, phys: String, lo: Long, hi: Long): Boolean =
+    e.stats.get(phys).forall { case (mn, mx) => mx >= lo && mn <= hi }
 
   /** Range read with file skipping: plan only [[plannedFilesForRange]]
     * and apply the residual row filter (file pruning is a superset —
@@ -1035,17 +988,22 @@ object ManifestTable {
                 lo: Long, hi: Long): DataFrame = {
     import org.apache.spark.sql.functions.col
     val planned = plannedFilesForRange(dir, statCol, lo, hi)
-    if (planned.nonEmpty)
-      return maskedSnapshotRead(spark, dir, None, planned)
-        .filter(col(statCol) >= lo && col(statCol) <= hi)
-    // every file pruned out: an empty frame in the table's schema.
-    // A zero-file snapshot has no schema to offer — fail loudly
-    // rather than let parquet throw an opaque path error.
-    val all = snapshotFiles(dir)
-    if (all.isEmpty)
+    if (planned.isEmpty) emptyRead(spark, dir, None, "readRange")
+    else maskedSnapshotRead(spark, dir, None, planned)
+      .filter(col(statCol) >= lo && col(statCol) <= hi)
+  }
+
+  /** What a read returns when its plan kept no file: an empty frame in
+    * the table's schema at `version`. A zero-file snapshot has no
+    * schema to offer — fail loudly rather than let parquet throw an
+    * opaque path error. */
+  private def emptyRead(spark: SparkSession, dir: String,
+                        version: Option[Long], what: String): DataFrame = {
+    val st = snapshotAt(dir, version)._2
+    if (st.files.isEmpty)
       throw new IllegalStateException(
-        s"readRange on $dir: snapshot holds no data files at all")
-    maskedSnapshotRead(spark, dir, None, Seq(all.head))
+        s"$what on $dir: snapshot holds no data files at all")
+    maskedRead(spark, dir, st, Seq(st.files.head.rel))
       .filter(org.apache.spark.sql.functions.lit(false))
   }
 
@@ -1053,18 +1011,7 @@ object ManifestTable {
     * hex)), empty map for files committed without a bloom. */
   def snapshotFilesWithBloom(dir: String, version: Option[Long] = None)
       : Seq[(String, Map[String, (Int, Int, String)])] =
-    fold(dir, resolved(dir, version)).files.map { e =>
-      val parts = e.split('|')
-      val blooms = parts.iterator.drop(1).collect {
-        case p if p.startsWith("bloom=") =>
-          p.stripPrefix("bloom=").split(':') match {
-            case Array(c, m, k, hex) => c -> ((m.toInt, k.toInt, hex))
-            case bad => throw new IllegalStateException(
-              s"corrupt bloom segment '${bad.mkString(":")}' in $e")
-          }
-      }.toMap
-      (parts(0), blooms)
-    }
+    fold(dir, resolved(dir, version)).files.map(e => (e.rel, e.blooms))
 
   /** [[appendWithStats]] that ALSO records a per-file Bloom filter on
     * `bloomCol` (see [[BloomIndex]]) — the point-lookup index for keys
@@ -1088,21 +1035,15 @@ object ManifestTable {
       s"bloom column '$bloomCol' must be long or string, " +
         s"found ${f.dataType.simpleString}")
     val staged = stageFiles(df, dir)
-    val adds = statAddActions(spark, dir, staged, statCols)
     // staged files carry PHYSICAL names; the bloom segment is keyed by
     // the physical name too (plannedFilesForPoint translates)
-    val physBloom = physicalOf(dir, None, bloomCol)
+    val physBloom = physicalName(columnMapping(dir), bloomCol)
     val blooms = BloomIndex.buildPerFile(
       spark.read.parquet(staged.map(r => dataPath(dir, r)): _*),
       physBloom)
-    val withBloom = adds.map { a =>
-      val rel = a.stripPrefix("add=").takeWhile(_ != '|')
-      blooms.get(rel.split('/').last) match {
-        case Some(spec) => s"$a|bloom=$physBloom:$spec"
-        case None => a // all-NULL key in this file: no bloom, never skipped
-      }
-    }
-    commit(dir, withBloom :+ "op=APPEND").get
+    // a file with no bloom (all-NULL key) is never skipped
+    commit(dir, statAddActions(spark, dir, staged, statCols,
+      name => blooms.get(name).map(physBloom -> _).toSeq) :+ "op=APPEND").get
   }
 
   /** Files the snapshot plans for an equality lookup `col = value`:
@@ -1125,12 +1066,11 @@ object ManifestTable {
 
   private def plannedFilesForPointAny(dir: String, colName: String, value: Any,
                                       version: Option[Long]): Seq[String] = {
-    val phys = physicalOf(dir, version, colName)
-    snapshotFilesWithBloom(dir, version).collect {
-      case (f, blooms) if blooms.get(phys).forall {
-        case (m, _, hex) => BloomIndex.maybeContains(hex, m, value)
-      } => f
-    }
+    val st = snapshotAt(dir, version)._2
+    val phys = physicalIn(st, colName)
+    st.files.filter(_.blooms.get(phys).forall {
+      case (m, _, hex) => BloomIndex.maybeContains(hex, m, value)
+    }).map(_.rel)
   }
 
   /** Point-lookup read with Bloom file skipping: plan only
@@ -1141,10 +1081,9 @@ object ManifestTable {
                 value: Long): DataFrame = {
     import org.apache.spark.sql.functions.col
     val planned = plannedFilesForPoint(dir, colName, value)
-    if (planned.nonEmpty)
-      return maskedSnapshotRead(spark, dir, None, planned)
-        .filter(col(colName) === value)
-    pointMiss(spark, dir, "readPoint")
+    if (planned.isEmpty) emptyRead(spark, dir, None, "readPoint")
+    else maskedSnapshotRead(spark, dir, None, planned)
+      .filter(col(colName) === value)
   }
 
   /** [[readPoint]] for a STRING key: bloom-planned files + the
@@ -1153,22 +1092,9 @@ object ManifestTable {
                       value: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val planned = plannedFilesForPointString(dir, colName, value)
-    if (planned.nonEmpty)
-      return maskedSnapshotRead(spark, dir, None, planned)
-        .filter(col(colName) === value)
-    pointMiss(spark, dir, "readPointString")
-  }
-
-  /** Every file bloom-pruned out: an empty frame in the table's
-    * schema (loud error for the zero-file snapshot). */
-  private def pointMiss(spark: SparkSession, dir: String,
-                        what: String): DataFrame = {
-    val all = snapshotFiles(dir)
-    if (all.isEmpty)
-      throw new IllegalStateException(
-        s"$what on $dir: snapshot holds no data files at all")
-    maskedSnapshotRead(spark, dir, None, Seq(all.head))
-      .filter(org.apache.spark.sql.functions.lit(false))
+    if (planned.isEmpty) emptyRead(spark, dir, None, "readPointString")
+    else maskedSnapshotRead(spark, dir, None, planned)
+      .filter(col(colName) === value)
   }
 
   /** Exactly-once streaming append (the Delta `txn` appId/version
@@ -1210,44 +1136,25 @@ object ManifestTable {
   def compactClustered(spark: SparkSession, dir: String, targetFiles: Int,
                        statCols: Seq[String]): Long = {
     import org.apache.spark.sql.functions.col
-    var attempts = 0
-    while (attempts < 20) {
-      attempts += 1
+    retrying(dir, "compacting") {
       val parent = latestVersion(dir).getOrElse(
         throw new IllegalStateException(s"nothing to compact in $dir"))
-      val o = io(dir)
-      val stage = new HPath(o.data, s"txn-${UUID.randomUUID()}")
       val snap = read(spark, dir, Some(parent))
       val clustered =
         if (statCols.isEmpty) snap.repartition(targetFiles)
         else snap.repartitionByRange(targetFiles, statCols.map(col): _*)
           .sortWithinPartitions(statCols.map(col): _*)
-      physicalize(clustered, columnMapping(dir, Some(parent)))
-        .write.parquet(stage.toString)
-      val mine = o.list(stage).map(_.getPath.getName)
-        .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-        .map(n => s"${stage.getName}/$n").sorted
-      val adds =
-        if (statCols.isEmpty) mine.map("add=" + _)
-        else statAddActions(spark, dir, mine, statCols)
-      tryCommitAt(dir, parent + 1L, ("reset" +: adds) :+ "op=COMPACT") match {
-        case Some(v) => return v
-        case None =>
-          // someone committed on top of `parent` — replacing now would
-          // erase their rows; drop the stale rewrite, restart from the
-          // new latest
-          o.delete(stage, recursive = true)
-      }
+      val staged =
+        stageFilesRaw(physicalize(clustered, columnMapping(dir, Some(parent))), dir)
+      // a commit on top of `parent` beats us: replacing now would erase
+      // its rows — the stale rewrite is dropped and restarts from the
+      // new latest
+      tryCommitAt(dir, parent + 1L,
+        ("reset" +: addActions(spark, dir, staged, statCols)) :+ "op=COMPACT")
+        .toRight(staged)
     }
-    throw new IllegalStateException(s"gave up compacting $dir after 20 conflicts")
   }
 
-  /** True iff every committed manifest in `[from, to]` holds only
-    * `add=`/`txn=` lines — the commits COMMUTE with a copy-on-write
-    * rewrite of files that predate them (they can't have touched
-    * those files), so a conflicted delete/merge may re-commit its own
-    * actions on top instead of redoing the scan+rewrite (Delta's
-    * append/delete conflict-resolution rule). */
   /** INCREMENTAL compaction — the real Delta/Iceberg OPTIMIZE shape:
     * bin-pack ONLY the live files smaller than `minBytes` into
     * `targetFiles` outputs and commit per-file `remove=` + `add=`
@@ -1269,10 +1176,8 @@ object ManifestTable {
     * bounds on the packed output so pruning survives. */
   def compactSmall(spark: SparkSession, dir: String, minBytes: Long,
                    targetFiles: Int = 1,
-                   statCols: Seq[String] = Nil): Option[Long] = {
-    var attempts = 0
-    while (attempts < 20) {
-      attempts += 1
+                   statCols: Seq[String] = Nil): Option[Long] =
+    retrying(dir, "bin-packing") {
       val parent = resolved(dir, None)
       val o = io(dir)
       val stDv = fold(dir, parent)
@@ -1280,8 +1185,7 @@ object ManifestTable {
       // OPTIMIZE is the op that materializes deletion vectors away
       // (the rewrite drops masked rows; the remove= drops the mask) —
       // Delta's PURGE semantics ride its OPTIMIZE the same way.
-      val small = stDv.files
-        .map(_.takeWhile(_ != '|'))
+      val small = stDv.files.map(_.rel)
         .filter { rel =>
           stDv.dvs.contains(rel) || {
             try o.fs.getFileStatus(new HPath(o.data, rel)).getLen < minBytes
@@ -1291,23 +1195,14 @@ object ManifestTable {
       // pack when ≥2 files qualify, OR a single file needs its mask
       // materialized — but never advance the log for nothing
       if (small.isEmpty ||
-        (small.size < 2 && !small.exists(stDv.dvs.contains))) return None
-      val packed = maskedRead(spark, dir, stDv, small)
-        .repartition(targetFiles)
-      val staged = stageFiles(packed, dir)
-      val adds =
-        if (statCols.nonEmpty) statAddActions(spark, dir, staged, statCols)
-        else staged.map("add=" + _)
-      val actions = small.sorted.map("remove=" + _) ++ adds :+ "op=OPTIMIZE"
-      commitRewriteRebasing(dir, parent, actions) match {
-        case RewriteCommitted(v) => return Some(v)
-        case _ =>
-          staged.map(_.takeWhile(_ != '/')).distinct
-            .foreach(t => deleteStaged(dir, t))
+        (small.size < 2 && !small.exists(stDv.dvs.contains))) Right(None)
+      else {
+        val staged = stageFiles(
+          maskedRead(spark, dir, stDv, small).repartition(targetFiles), dir)
+        commitRewrite(dir, parent, small.sorted.map("remove=" + _) ++
+          addActions(spark, dir, staged, statCols) :+ "op=OPTIMIZE", staged)
       }
     }
-    throw new IllegalStateException(s"gave up bin-packing $dir after 20 conflicts")
-  }
 
   /** True iff every commit in `[from, to]` COMMUTES with a rewrite
     * that touches exactly `touched` files — the Delta disjoint-file-
@@ -1330,7 +1225,7 @@ object ManifestTable {
         else if (l.startsWith("remove="))
           !touched.contains(l.stripPrefix("remove="))
         else if (l.startsWith("dv="))
-          !touched.contains(l.stripPrefix("dv=").takeWhile(_ != '|'))
+          !touched.contains(splitDv(l)._1)
         else false // reset / schema= / colmap= / unknown: re-plan
       }
     }
@@ -1361,7 +1256,7 @@ object ManifestTable {
     // survivors; anything else commutes
     val touched: Set[String] = actions.collect {
       case l if l.startsWith("remove=") => l.stripPrefix("remove=")
-      case l if l.startsWith("dv=") => l.stripPrefix("dv=").takeWhile(_ != '|')
+      case l if l.startsWith("dv=") => splitDv(l)._1
     }.toSet
     var at = parent + 1L
     while (true) {
@@ -1379,6 +1274,46 @@ object ManifestTable {
     }
     RewriteConflict // unreachable
   }
+
+  /** [[commitRewriteRebasing]] as one [[retrying]] attempt: Some(v)
+    * once committed, None when `skipIfTxn` says the batch already
+    * landed (its staged files are dropped), Left(staged) when a
+    * non-commuting commit forces a re-plan. */
+  private def commitRewrite(dir: String, parent: Long, actions: Seq[String],
+                            staged: Seq[String],
+                            skipIfTxn: Option[(String, Long)] = None)
+      : Either[Seq[String], Option[Long]] =
+    commitRewriteRebasing(dir, parent, actions, skipIfTxn) match {
+      case RewriteCommitted(v) => Right(Some(v))
+      case RewriteSkippedTxn => dropStaged(dir, staged); Right(None)
+      case RewriteConflict => Left(staged)
+    }
+
+  /** The retry loop of every operation that plans against a pinned
+    * snapshot and may lose its commit: `attempt` plans, stages and
+    * commits under the operation's own commit rule ([[tryCommitAt]] at
+    * `parent + 1`, or [[commitRewrite]]), answering Right(result) when
+    * the operation is over — committed, or nothing to do — or
+    * Left(staged rels) when a conflicting commit beat it. Those staged
+    * files can never commit (they may hold rows the winner removed):
+    * their txn dirs go, and the next attempt re-plans from the new
+    * latest. */
+  private def retrying[T](dir: String, what: String)
+                         (attempt: => Either[Seq[String], T]): T = {
+    var attempts = 0
+    while (attempts < 20) {
+      attempts += 1
+      attempt match {
+        case Right(result) => return result
+        case Left(staged) => dropStaged(dir, staged)
+      }
+    }
+    throw new IllegalStateException(s"gave up $what $dir after 20 conflicts")
+  }
+
+  /** Drop the txn dirs of staged data-relative files. */
+  private def dropStaged(dir: String, staged: Seq[String]): Unit =
+    staged.map(_.takeWhile(_ != '/')).distinct.foreach(dropStagedDir(dir, _))
 
   /** [[compact]] that Z-ORDER clusters the rewrite — the Delta
     * OPTIMIZE ZORDER maintenance op on a LIVE table (the layout
@@ -1401,9 +1336,7 @@ object ManifestTable {
                     colA: String, colB: String): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, max, min}
     val zCols = Seq(colA, colB)
-    var attempts = 0
-    while (attempts < 20) {
-      attempts += 1
+    retrying(dir, "z-ordering") {
       val parent = latestVersion(dir).getOrElse(
         throw new IllegalStateException(s"nothing to compact in $dir"))
       val snap = read(spark, dir, Some(parent))
@@ -1414,14 +1347,14 @@ object ManifestTable {
       // global bounds come from the MANIFEST when every live file
       // carries stats for both columns (zero Spark jobs — and retries
       // under contention stay metadata-only); one scan otherwise
-      val statted = fold(dir, parent).files.map(parseStatsEntry)
-      val (physA, physB) = (physicalOf(dir, Some(parent), colA),
-        physicalOf(dir, Some(parent), colB))
+      val st = fold(dir, parent)
+      val statted = st.files.map(_.stats)
+      val (physA, physB) = (physicalIn(st, colA), physicalIn(st, colB))
       val bounds: Option[(Long, Long, Long, Long)] =
         if (statted.nonEmpty &&
-            statted.forall(e => Seq(physA, physB).forall(e._2.contains))) Some((
-          statted.map(_._2(physA)._1).min, statted.map(_._2(physA)._2).max,
-          statted.map(_._2(physB)._1).min, statted.map(_._2(physB)._2).max))
+            statted.forall(e => Seq(physA, physB).forall(e.contains))) Some((
+          statted.map(_(physA)._1).min, statted.map(_(physA)._2).max,
+          statted.map(_(physB)._1).min, statted.map(_(physB)._2).max))
         else {
           val b = snap.agg(min(col(colA)), max(col(colA)),
             min(col(colB)), max(col(colB))).head()
@@ -1444,21 +1377,12 @@ object ManifestTable {
             .drop(zName)
         case None => snap.repartition(targetFiles) // degenerate: no usable axis
       }
-      val o = io(dir)
-      val stage = new HPath(o.data, s"txn-${UUID.randomUUID()}")
-      physicalize(clustered, columnMapping(dir, Some(parent)))
-        .write.parquet(stage.toString)
-      val mine = o.list(stage).map(_.getPath.getName)
-        .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-        .map(n => s"${stage.getName}/$n").sorted
-      val adds = statAddActions(spark, dir, mine, zCols)
-      tryCommitAt(dir, parent + 1L, ("reset" +: adds) :+ "op=ZORDER") match {
-        case Some(v) => return v
-        // a commit beat us: re-cluster the new latest
-        case None => o.delete(stage, recursive = true)
-      }
+      val staged = stageFilesRaw(physicalize(clustered, mappingOf(st)), dir)
+      // a commit beat us: re-cluster the new latest
+      tryCommitAt(dir, parent + 1L,
+        ("reset" +: statAddActions(spark, dir, staged, zCols)) :+ "op=ZORDER")
+        .toRight(staged)
     }
-    throw new IllegalStateException(s"gave up z-ordering $dir after 20 conflicts")
   }
 
   /** RESTORE the table to the state it had at `toVersion` — the Delta
@@ -1492,49 +1416,43 @@ object ManifestTable {
     * metadata-only every time. Metadata is O(target snapshot) — the
     * checkpoint cost, inherent to a replacing commit. Restoring to
     * the current version is a no-op and commits nothing. */
-  def restore(spark: SparkSession, dir: String, toVersion: Long): Long = {
-    var attempts = 0
-    while (attempts < 20) {
-      attempts += 1
+  def restore(spark: SparkSession, dir: String, toVersion: Long): Long =
+    retrying(dir, "restoring") {
       val parent = resolved(dir, None)
       require(toVersion >= 0 && toVersion <= parent,
         s"restore target v$toVersion is outside the committed log (latest v$parent)")
-      if (toVersion == parent) return parent
-      val target = fold(dir, toVersion)
-      val current = fold(dir, parent)
-      val schemaAction: Seq[String] = target.schema match {
-        case Some(j) => Seq("schema=" + j)
-        case None if current.schema.isDefined =>
-          // the evolution happened after the target: pin the target's
-          // effective (file) schema so post-restore reads don't resolve
-          // against the later evolution's surviving schema= action
-          if (target.files.isEmpty)
-            throw new IllegalStateException(
-              s"restore of $dir to v$toVersion: the target snapshot holds no " +
-                "files and recorded no schema, but the table evolved later — " +
-                "the restored schema is undefined")
-          Seq("schema=" + spark.read.parquet(
-            target.files.map(e =>
-              dataPath(dir, e.takeWhile(_ != '|'))): _*)
-            .schema.json)
-        case None => Nil
-      }
-      val colmapAction: Seq[String] = (target.colmap, current.colmap) match {
-        case (Some(m), _) => Seq("colmap=" + m)
-        case (None, Some(_)) => Seq("colmap=-") // target predates mapping
-        case _ => Nil
-      }
-      val actions = ("reset" +: (schemaAction ++ colmapAction ++
-        target.files.map("add=" + _) ++
-        target.dvs.toSeq.sortBy(_._1).map { case (r, sp) => s"dv=$r|$sp" })) :+
-        s"op=RESTORE(v$toVersion)"
-      tryCommitAt(dir, parent + 1L, actions) match {
-        case Some(v) => return v
-        case None => // a commit beat us: re-pin against the new latest
+      if (toVersion == parent) Right(parent)
+      else {
+        val target = fold(dir, toVersion)
+        val current = fold(dir, parent)
+        val schemaAction: Seq[String] = target.schema match {
+          case Some(j) => Seq("schema=" + j)
+          case None if current.schema.isDefined =>
+            // the evolution happened after the target: pin the target's
+            // effective (file) schema so post-restore reads don't resolve
+            // against the later evolution's surviving schema= action
+            if (target.files.isEmpty)
+              throw new IllegalStateException(
+                s"restore of $dir to v$toVersion: the target snapshot holds no " +
+                  "files and recorded no schema, but the table evolved later — " +
+                  "the restored schema is undefined")
+            Seq("schema=" + spark.read.parquet(
+              target.files.map(e => dataPath(dir, e.rel)): _*).schema.json)
+          case None => Nil
+        }
+        val colmapAction: Seq[String] = (target.colmap, current.colmap) match {
+          case (Some(m), _) => Seq("colmap=" + m)
+          case (None, Some(_)) => Seq("colmap=-") // target predates mapping
+          case _ => Nil
+        }
+        val actions = ("reset" +: (schemaAction ++ colmapAction ++
+          target.files.map("add=" + _.raw) ++
+          target.dvs.toSeq.sortBy(_._1).map((dvAction _).tupled))) :+
+          s"op=RESTORE(v$toVersion)"
+        // a commit beat us: re-pin against the new latest (nothing staged)
+        tryCommitAt(dir, parent + 1L, actions).toRight(Nil)
       }
     }
-    throw new IllegalStateException(s"gave up restoring $dir after 20 conflicts")
-  }
 
   /** Row-level DELETE, copy-on-write (the Delta/Iceberg shape — the
     * GDPR/takedown primitive a training-data warehouse cannot ship
@@ -1579,110 +1497,97 @@ object ManifestTable {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     require(dvFraction >= 0.0 && dvFraction <= 1.0,
       s"dvFraction must be in [0, 1], got $dvFraction")
-    var attempts = 0
-    while (attempts < 20) {
-      attempts += 1
+    retrying(dir, "deleting from") {
       val parent = resolved(dir, None)
       val st = fold(dir, parent)
-      val entries = st.files // raw, stats suffix intact
-      val rels: Seq[String] = entries.map(_.takeWhile(_ != '|'))
-      if (rels.isEmpty) return None
-      val rowsOf: Map[String, Long] = entries.flatMap { e =>
-        e.split('|').iterator.drop(1).find(_.startsWith("rows="))
-          .map(r => e.takeWhile(_ != '|') -> r.stripPrefix("rows=").toLong)
-      }.toMap
+      val rels: Seq[String] = st.files.map(_.rel)
+      val rowsOf: Map[String, Long] = st.files.flatMap(e => e.rows.map(e.rel -> _)).toMap
       val hit = coalesce(predicate, lit(false))
       // one predicate-pushed MASKED scan finds the affected files AND
       // their matched-row counts — result bounded by the file count.
       // Already-masked rows can never re-match.
       val census: Seq[(String, Long)] =
-        applyMask(spark, keyedRead(spark, dir, st, rels), st.dvs, rels)
+        if (rels.isEmpty) Nil
+        else applyMask(spark, keyedRead(spark, dir, st, rels), st.dvs, rels)
           .filter(hit).groupBy(col("_m_rel")).count().collect()
           .map(r => (r.getString(0), r.getLong(1))).toSeq
       census.foreach { case (rel, _) =>
         if (!rels.contains(rel)) throw new IllegalStateException(
           s"matched file $rel is not in the snapshot")
       }
-      if (census.isEmpty) return None
-      val affected = census.map(_._1).toSet
-      // MERGE-ON-READ split (Delta deletion-vector shape): a file whose
-      // matched fraction is ≤ dvFraction gets a `dv=` position mask —
-      // O(matched rows) bytes committed instead of a full-file rewrite
-      // (the 1-row GDPR delete on a 1 GB file stops costing 1 GB of
-      // write amplification). Files above the threshold — or without a
-      // recorded `rows=` count to judge the fraction by — take the
-      // copy-on-write rewrite as before. dvFraction=0 (default)
-      // disables DVs entirely: exact legacy behavior.
-      // a file takes the DV path only when BOTH the matched fraction
-      // is under the threshold AND the absolute mask stays small: the
-      // positions of DV-eligible files are collected to the driver
-      // and broadcast at read time, so a hard per-file cap
-      // ([[DvMaxPositionsPerFile]]) bounds driver memory and broadcast
-      // size no matter how large the file — a 1 B-row file at
-      // fraction 0.01 would otherwise mask 10 M rows. Files over
-      // either limit take the copy-on-write rewrite.
-      val (dvSide, rwSide) = census.partition { case (rel, matched) =>
-        dvFraction > 0 && matched <= DvMaxPositionsPerFile &&
-          rowsOf.get(rel).exists(n =>
-            n > 0 && matched.toDouble / n <= dvFraction)
-      }
-      val dvActions: Seq[String] =
-        if (dvSide.isEmpty) Nil
-        else {
-          val dvRels = dvSide.map(_._1)
-          // positions of the matched rows in ONLY the DV-eligible
-          // files: collect is bounded by dvFraction × those files' rows
-          val posByRel: Map[String, Seq[Long]] =
-            applyMask(spark, keyedRead(spark, dir, st, dvRels),
-                st.dvs, dvRels)
-              .filter(hit).select(col("_m_rel"), col("_m_pos")).collect()
-              .groupBy(_.getString(0))
-              .map { case (r, rws) => r -> rws.map(_.getLong(1)).toSeq }
-          dvSide.map { case (rel, _) =>
-            // cumulative: the new mask carries the file's prior
-            // positions too (the latest dv= action REPLACES in the fold)
-            val prior = st.dvs.get(rel).map(decodePositions).getOrElse(Nil)
-            s"dv=$rel|${encodePositions(prior ++ posByRel(rel))}"
-          }.sorted
+      if (census.isEmpty) Right(None)
+      else {
+        val affected = census.map(_._1).toSet
+        // MERGE-ON-READ split (Delta deletion-vector shape): a file whose
+        // matched fraction is ≤ dvFraction gets a `dv=` position mask —
+        // O(matched rows) bytes committed instead of a full-file rewrite
+        // (the 1-row GDPR delete on a 1 GB file stops costing 1 GB of
+        // write amplification). Files above the threshold — or without a
+        // recorded `rows=` count to judge the fraction by — take the
+        // copy-on-write rewrite as before. dvFraction=0 (default)
+        // disables DVs entirely: exact legacy behavior.
+        // a file takes the DV path only when BOTH the matched fraction
+        // is under the threshold AND the absolute mask stays small: the
+        // positions of DV-eligible files are collected to the driver
+        // and broadcast at read time, so a hard per-file cap
+        // ([[DvMaxPositionsPerFile]]) bounds driver memory and broadcast
+        // size no matter how large the file — a 1 B-row file at
+        // fraction 0.01 would otherwise mask 10 M rows. Files over
+        // either limit take the copy-on-write rewrite.
+        val (dvSide, rwSide) = census.partition { case (rel, matched) =>
+          dvFraction > 0 && matched <= DvMaxPositionsPerFile &&
+            rowsOf.get(rel).exists(n =>
+              n > 0 && matched.toDouble / n <= dvFraction)
         }
-      // rewrite the copy-on-write files' survivors into fresh staged
-      // files. DELETE semantics: only predicate-IS-TRUE rows go; a NULL
-      // predicate keeps the row (so !pred alone would over-delete).
-      // Masked read: prior DV rows must not resurrect in the rewrite;
-      // pinned: affected files may span a schema evolution.
-      val rwRels = rwSide.map(_._1)
-      val staged: Seq[String] =
-        if (rwRels.isEmpty) Nil
-        else stageFiles(
-          maskedRead(spark, dir, st, rwRels).filter(!hit), dir)
-      // change-data feed (opt-in, the Delta enableChangeDataFeed
-      // shape): the DELETED rows are written at commit time with a
-      // baked-in `_change_type` — O(changed rows), one more
-      // predicate-pushed pass over the SAME affected files; read-time
-      // diffing of removed-vs-added files would pay an anti-join per
-      // feed poll instead
-      val cdfStaged: Seq[String] =
-        if (!cdf) Nil
-        else stageFiles(
-          maskedRead(spark, dir, st, affected.toSeq)
-            .filter(hit)
-            .withColumn("_change_type", lit("delete")),
-          dir)
-      val adds =
-        if (statCols.nonEmpty) statAddActions(spark, dir, staged, statCols)
-        else staged.map("add=" + _)
-      val actions = rwRels.sorted.map("remove=" + _) ++ adds ++ dvActions ++
-        cdfStaged.map("cdf=" + _) :+ "op=DELETE"
-      commitRewriteRebasing(dir, parent, actions) match {
-        case RewriteCommitted(v) => return Some(v)
-        case _ =>
-          // a non-commuting commit landed; the rewrite may have read
-          // rows that commit removed — drop it and re-plan
-          (staged ++ cdfStaged).map(_.takeWhile(_ != '/')).distinct
-            .foreach(t => deleteStaged(dir, t))
+        val dvActions: Seq[String] =
+          if (dvSide.isEmpty) Nil
+          else {
+            val dvRels = dvSide.map(_._1)
+            // positions of the matched rows in ONLY the DV-eligible
+            // files: collect is bounded by dvFraction × those files' rows
+            val posByRel: Map[String, Seq[Long]] =
+              applyMask(spark, keyedRead(spark, dir, st, dvRels),
+                  st.dvs, dvRels)
+                .filter(hit).select(col("_m_rel"), col("_m_pos")).collect()
+                .groupBy(_.getString(0))
+                .map { case (r, rws) => r -> rws.map(_.getLong(1)).toSeq }
+            dvSide.map { case (rel, _) =>
+              // cumulative: the new mask carries the file's prior
+              // positions too (the latest dv= action REPLACES in the fold)
+              val prior = st.dvs.get(rel).map(decodePositions).getOrElse(Nil)
+              dvAction(rel, encodePositions(prior ++ posByRel(rel)))
+            }.sorted
+          }
+        // rewrite the copy-on-write files' survivors into fresh staged
+        // files. DELETE semantics: only predicate-IS-TRUE rows go; a NULL
+        // predicate keeps the row (so !pred alone would over-delete).
+        // Masked read: prior DV rows must not resurrect in the rewrite;
+        // pinned: affected files may span a schema evolution.
+        val rwRels = rwSide.map(_._1)
+        val staged: Seq[String] =
+          if (rwRels.isEmpty) Nil
+          else stageFiles(
+            maskedRead(spark, dir, st, rwRels).filter(!hit), dir)
+        // change-data feed (opt-in, the Delta enableChangeDataFeed
+        // shape): the DELETED rows are written at commit time with a
+        // baked-in `_change_type` — O(changed rows), one more
+        // predicate-pushed pass over the SAME affected files; read-time
+        // diffing of removed-vs-added files would pay an anti-join per
+        // feed poll instead
+        val cdfStaged: Seq[String] =
+          if (!cdf) Nil
+          else stageFiles(
+            maskedRead(spark, dir, st, affected.toSeq)
+              .filter(hit)
+              .withColumn("_change_type", lit("delete")),
+            dir)
+        // a non-commuting commit that lands first may have removed rows
+        // the rewrite read: the staged files are dropped and re-planned
+        commitRewrite(dir, parent, rwRels.sorted.map("remove=" + _) ++
+          addActions(spark, dir, staged, statCols) ++ dvActions ++
+          cdfStaged.map("cdf=" + _) :+ "op=DELETE", staged ++ cdfStaged)
       }
     }
-    throw new IllegalStateException(s"gave up deleting from $dir after 20 conflicts")
   }
 
   /** Files of snapshot `parent` that may hold rows whose `key` is in
@@ -1697,61 +1602,29 @@ object ManifestTable {
                              st: State,
                              keys: DataFrame, key: String,
                              keyType: org.apache.spark.sql.types.DataType): Set[String] = {
-    import org.apache.spark.sql.functions.col
-    if (parent < 0) return Set.empty
-    val entries = st.files
-    val rels: Set[String] = entries.map(_.takeWhile(_ != '|')).toSet
-    val statted = entries.map(parseStatsEntry)
+    import org.apache.spark.sql.functions.{col, max, min}
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    if (parent < 0) return Set.empty
+    val rels: Set[String] = st.files.map(_.rel).toSet
     // stats are keyed by PHYSICAL name; the batch key is LOGICAL
-    val physKey = mappingOf(st)
-      .flatMap(_.find(_._1 == key).map(_._2)).getOrElse(key)
+    val physKey = physicalIn(st, key)
     // pruning path per key type: long/int keys prune on `stat=`
     // bounds, string keys on the truncated `sstat=` byte bounds —
     // anything else (or a stats-less table) scans all files
-    val hasLongStats = statted.exists(_._2.contains(physKey)) &&
-      (keyType == LongType || keyType == IntegerType)
-    lazy val sstatted = entries.map { e =>
-      val parts = e.split('|')
-      val stats = parts.iterator.drop(1).collect {
-        case pp if pp.startsWith("sstat=") =>
-          pp.stripPrefix("sstat=").split(':') match {
-            case Array(c, mn, mx) => c -> ((unhex(mn), unhex(mx)))
-            case bad => throw new IllegalStateException(
-              s"corrupt sstat segment '${bad.mkString(":")}' in $e")
-          }
-      }.toMap
-      (parts(0), stats)
-    }
-    val hasStringStats = keyType == StringType &&
-      sstatted.exists(_._2.contains(physKey))
     val scanRels: Seq[String] =
-      if (hasLongStats) {
-        val bounds = keys.agg(
-          org.apache.spark.sql.functions.min(col(key).cast(LongType)),
-          org.apache.spark.sql.functions.max(col(key).cast(LongType))).head()
+      if ((keyType == LongType || keyType == IntegerType) &&
+          st.files.exists(_.stats.contains(physKey))) {
+        val bounds = keys.agg(min(col(key).cast(LongType)), max(col(key).cast(LongType))).head()
         if (bounds.isNullAt(0)) Seq.empty // all-NULL keys match nothing
-        else {
-          val (bMin, bMax) = (bounds.getLong(0), bounds.getLong(1))
-          statted.collect {
-            case (rel, stats) if stats.get(physKey)
-              .forall { case (mn, mx) => mx >= bMin && mn <= bMax } => rel
-          }
-        }
-      } else if (hasStringStats) {
-        val bounds = keys.agg(
-          org.apache.spark.sql.functions.min(col(key)),
-          org.apache.spark.sql.functions.max(col(key))).head()
+        else st.files.filter(overlapsLong(_, physKey, bounds.getLong(0), bounds.getLong(1)))
+          .map(_.rel)
+      } else if (keyType == StringType && st.files.exists(_.stringStats.contains(physKey))) {
+        val bounds = keys.agg(min(col(key)), max(col(key))).head()
         if (bounds.isNullAt(0)) Seq.empty
-        else {
-          val kLo = bounds.getString(0).getBytes("UTF-8")
-          val kHi = bounds.getString(1).getBytes("UTF-8")
-          sstatted.collect {
-            case (rel, stats) if stats.get(physKey).forall { case (mn, mx) =>
-              utf8Lex(mx, kLo) >= 0 && utf8Lex(mn, kHi) <= 0 } => rel
-          }
-        }
-      } else statted.map(_._1)
+        else st.files.filter(overlapsString(_, physKey,
+          bounds.getString(0).getBytes("UTF-8"), bounds.getString(1).getBytes("UTF-8")))
+          .map(_.rel)
+      } else st.files.map(_.rel)
     if (scanRels.isEmpty) Set.empty
     else
       // pinned reader (via keyedRead): the scanned files may span a
@@ -1787,70 +1660,61 @@ object ManifestTable {
                   cdf: Boolean = false): Option[Long] = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(set.nonEmpty, "updateWhere needs at least one SET column")
-    var attempts = 0
-    while (attempts < 20) {
-      attempts += 1
+    retrying(dir, "updating") {
       val parent = resolved(dir, None)
       val st = fold(dir, parent)
-      val rels: Seq[String] = st.files.map(_.takeWhile(_ != '|'))
-      if (rels.isEmpty) return None
+      val rels: Seq[String] = st.files.map(_.rel)
       // masked scan: DV'd rows can neither match nor resurrect; the
       // _m_rel helper survives the mask's join (input_file_name would
       // not resolve through it)
       val affected: Set[String] =
-        applyMask(spark, keyedRead(spark, dir, st, rels), st.dvs, rels)
+        if (rels.isEmpty) Set.empty
+        else applyMask(spark, keyedRead(spark, dir, st, rels), st.dvs, rels)
           .filter(predicate)
           .select(col("_m_rel")).distinct().collect()
           .map(_.getString(0))
           .map(rel => if (rels.contains(rel)) rel else throw new IllegalStateException(
             s"matched file $rel is not in the snapshot")).toSet
-      if (affected.isEmpty) return None
-      // masked + pinned: the rewrite drops any prior DV rows of the
-      // affected files for good (the remove= action drops their masks)
-      val base = maskedRead(spark, dir, st, affected.toSeq)
-      set.keys.foreach { c =>
-        require(base.columns.contains(c),
-          s"UPDATE SET column '$c' is not in the table (schema evolution is appendEvolving's job)")
-      }
-      // matched rows take the SET expressions, others pass verbatim;
-      // NULL predicate = unchanged (SQL UPDATE), hence the coalesce.
-      // ONE projection, every RHS evaluated against the OLD row — a
-      // sequential withColumn fold would let `SET a = b, b = a` read
-      // a's NEW value, which SQL UPDATE forbids
-      val hit = coalesce(predicate, lit(false))
-      def applied(df: DataFrame, conditional: Boolean): DataFrame =
-        df.select(df.columns.map { c =>
-          set.get(c) match {
-            case Some(expr) if conditional => when(hit, expr).otherwise(df(c)).as(c)
-            case Some(expr) => expr.as(c)
-            case None => df(c)
-          }
-        }.toSeq: _*)
-      val rewritten = applied(base, conditional = true)
-      val staged = stageFiles(rewritten, dir)
-      val cdfStaged: Seq[String] =
-        if (!cdf) Nil
-        else {
-          val matched = base.filter(hit)
-          stageFiles(
-            matched.withColumn("_change_type", lit("update_preimage"))
-              .unionByName(applied(matched, conditional = false)
-                .withColumn("_change_type", lit("update_postimage"))),
-            dir)
+      if (affected.isEmpty) Right(None)
+      else {
+        // masked + pinned: the rewrite drops any prior DV rows of the
+        // affected files for good (the remove= action drops their masks)
+        val base = maskedRead(spark, dir, st, affected.toSeq)
+        set.keys.foreach { c =>
+          require(base.columns.contains(c),
+            s"UPDATE SET column '$c' is not in the table (schema evolution is appendEvolving's job)")
         }
-      val adds =
-        if (statCols.nonEmpty) statAddActions(spark, dir, staged, statCols)
-        else staged.map("add=" + _)
-      val actions = affected.toSeq.sorted.map("remove=" + _) ++ adds ++
-        cdfStaged.map("cdf=" + _) :+ "op=UPDATE"
-      commitRewriteRebasing(dir, parent, actions) match {
-        case RewriteCommitted(v) => return Some(v)
-        case _ =>
-          (staged ++ cdfStaged).map(_.takeWhile(_ != '/')).distinct
-            .foreach(t => deleteStaged(dir, t))
+        // matched rows take the SET expressions, others pass verbatim;
+        // NULL predicate = unchanged (SQL UPDATE), hence the coalesce.
+        // ONE projection, every RHS evaluated against the OLD row — a
+        // sequential withColumn fold would let `SET a = b, b = a` read
+        // a's NEW value, which SQL UPDATE forbids
+        val hit = coalesce(predicate, lit(false))
+        def applied(df: DataFrame, conditional: Boolean): DataFrame =
+          df.select(df.columns.map { c =>
+            set.get(c) match {
+              case Some(expr) if conditional => when(hit, expr).otherwise(df(c)).as(c)
+              case Some(expr) => expr.as(c)
+              case None => df(c)
+            }
+          }.toSeq: _*)
+        val rewritten = applied(base, conditional = true)
+        val staged = stageFiles(rewritten, dir)
+        val cdfStaged: Seq[String] =
+          if (!cdf) Nil
+          else {
+            val matched = base.filter(hit)
+            stageFiles(
+              matched.withColumn("_change_type", lit("update_preimage"))
+                .unionByName(applied(matched, conditional = false)
+                  .withColumn("_change_type", lit("update_postimage"))),
+              dir)
+          }
+        commitRewrite(dir, parent, affected.toSeq.sorted.map("remove=" + _) ++
+          addActions(spark, dir, staged, statCols) ++
+          cdfStaged.map("cdf=" + _) :+ "op=UPDATE", staged ++ cdfStaged)
       }
     }
-    throw new IllegalStateException(s"gave up updating $dir after 20 conflicts")
   }
 
   /** MERGE INTO (keyed upsert), copy-on-write — the Delta MERGE shape
@@ -1879,98 +1743,14 @@ object ManifestTable {
     * also records its row changes (`update_preimage` /
     * `update_postimage` / `insert`) as change-data files for
     * [[readChanges]]. Returns the committed version, or None when
-    * `txn` says this batch already landed. */
+    * `txn` says this batch already landed. An empty batch commits
+    * nothing (None) unless a `txn` marker must be recorded. The body
+    * is [[mergeIntoCdc]]'s, with every batch row an upsert. */
   def mergeInto(spark: SparkSession, dir: String, batch: DataFrame, key: String,
                 statCols: Seq[String] = Nil,
                 txn: Option[(String, Long)] = None,
-                cdf: Boolean = false): Option[Long] = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, raise_error, when}
-    // the duplicate-batch-key guard rides the key column itself, so it
-    // cannot be pruned away before the staged write evaluates it
-    val guarded = batch
-      .withColumn("_m_n", count(lit(1)).over(Window.partitionBy(col(key))))
-      .withColumn(key,
-        when(col("_m_n") > 1,
-          raise_error(lit(s"mergeInto: multiple batch rows share one $key"))
-            .cast(batch.schema(key).dataType))
-          .otherwise(col(key)))
-      .drop("_m_n")
-    val keys = batch.select(col(key)).distinct()
-    var attempts = 0
-    while (attempts < 20) {
-      attempts += 1
-      // a retried streaming batch that already landed must be a no-op
-      txn.foreach { case (w, b) =>
-        if (committedBatches(dir, w).contains(b)) return None
-      }
-      val parent = latestVersion(dir).getOrElse(-1L)
-      // ONE fold serves planning and every affected-file read below
-      val stM = if (parent < 0) State(Vector.empty, Set.empty, None)
-        else fold(dir, parent)
-      val affected: Set[String] =
-        affectedByKeys(spark, dir, parent, stM, keys, key, batch.schema(key).dataType)
-      // one staged write: affected files' NON-matched survivors, then
-      // every batch row (update and insert alike land as fresh files)
-      val rewritten =
-        if (affected.isEmpty) guarded
-        else maskedRead(spark, dir, stM, affected.toSeq)
-          .join(keys, Seq(key), "left_anti")
-          // strict by-name union: the pinned read gives pre-evolution
-          // survivors the full recorded schema (NULL backfill), so a
-          // column mismatch here means the BATCH doesn't carry the
-          // table's current schema — an error, not something to pad
-          .unionByName(guarded)
-      val staged = stageFiles(rewritten, dir)
-      // change-data feed (opt-in): MERGE's row changes recorded at
-      // commit time — matched old rows as `update_preimage`, their
-      // batch replacements as `update_postimage`, unmatched batch rows
-      // as `insert`. One staged write of O(batch + matched) rows; the
-      // feed then carries the exact signed delta an incremental view
-      // needs (postimage − preimage), which added-files-only feeds
-      // cannot express for an upsert.
-      val cdfStaged: Seq[String] =
-        if (!cdf) Nil
-        else {
-          val typed =
-            if (affected.isEmpty)
-              guarded.withColumn("_change_type",
-                org.apache.spark.sql.functions.lit("insert"))
-            else {
-              val oldMatched =
-                maskedRead(spark, dir, stM, affected.toSeq)
-                  .join(keys, Seq(key), "left_semi")
-              val matchedKeys = oldMatched.select(col(key)).distinct()
-              oldMatched
-                .withColumn("_change_type",
-                  org.apache.spark.sql.functions.lit("update_preimage"))
-                .unionByName(guarded.join(matchedKeys, Seq(key), "left_semi")
-                  .withColumn("_change_type",
-                    org.apache.spark.sql.functions.lit("update_postimage")))
-                .unionByName(guarded.join(matchedKeys, Seq(key), "left_anti")
-                  .withColumn("_change_type",
-                    org.apache.spark.sql.functions.lit("insert")))
-            }
-          stageFiles(typed, dir)
-        }
-      val adds =
-        if (statCols.nonEmpty) statAddActions(spark, dir, staged, statCols)
-        else staged.map("add=" + _)
-      val actions = affected.toSeq.sorted.map("remove=" + _) ++ adds ++
-        cdfStaged.map("cdf=" + _) ++
-        txn.map { case (w, b) => s"txn=$w:$b" } :+ "op=MERGE"
-      commitRewriteRebasing(dir, parent, actions, skipIfTxn = txn) match {
-        case RewriteCommitted(v) => return Some(v)
-        case other =>
-          (staged ++ cdfStaged).map(_.takeWhile(_ != '/')).distinct
-            .foreach(t => deleteStaged(dir, t))
-          if (other == RewriteSkippedTxn) return None
-        // RewriteConflict: a reset/remove landed — re-plan from the
-        // new snapshot
-      }
-    }
-    throw new IllegalStateException(s"gave up merging into $dir after 20 conflicts")
-  }
+                cdf: Boolean = false): Option[Long] =
+    merge(spark, dir, batch, key, None, statCols, txn, cdf)
 
   /** MERGE with a DELETE clause — the FULL Delta MERGE shape a CDC
     * stream needs (`WHEN MATCHED AND op='D' THEN DELETE / WHEN
@@ -1994,85 +1774,114 @@ object ManifestTable {
                    statCols: Seq[String] = Nil,
                    txn: Option[(String, Long)] = None,
                    cdf: Boolean = false): Option[Long] = {
+    require(batch.columns.contains(opCol), s"CDC batch needs an '$opCol' column")
+    merge(spark, dir, batch, key, Some(opCol), statCols, txn, cdf)
+  }
+
+  /** The one MERGE body: [[mergeIntoCdc]] with the batch's `opCol`, or
+    * [[mergeInto]] (`opCol` None), whose rows are all upserts — tagged
+    * 'U' in an op column of their own, under a name no batch column
+    * takes, dropped before staging. Errors name the method called. */
+  private def merge(spark: SparkSession, dir: String, batch: DataFrame,
+                    key: String, opCol: Option[String], statCols: Seq[String],
+                    txn: Option[(String, Long)], cdf: Boolean): Option[Long] = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{col, count, lit, raise_error, when}
-    require(batch.columns.contains(opCol), s"CDC batch needs an '$opCol' column")
-    val guarded = batch
+    val caller = if (opCol.isDefined) "mergeIntoCdc" else "mergeInto"
+    val (tagged, op) = opCol match {
+      case Some(c) => (batch, c)
+      case None =>
+        val c = Iterator.iterate("_m_op")(_ + "_").find(!batch.columns.contains(_)).get
+        (batch.withColumn(c, lit("U")), c)
+    }
+    // the duplicate-batch-key guard rides the key column itself, so it
+    // cannot be pruned away before the staged write evaluates it
+    val guarded = tagged
       .withColumn("_m_n", count(lit(1)).over(Window.partitionBy(col(key))))
       .withColumn(key,
         when(col("_m_n") > 1,
-          raise_error(lit(s"mergeIntoCdc: multiple batch rows share one $key"))
+          raise_error(lit(s"$caller: multiple batch rows share one $key"))
             .cast(batch.schema(key).dataType))
           .otherwise(col(key)))
-      .withColumn(opCol,
-        when(!col(opCol).isin("I", "U", "D"),
-          raise_error(lit(s"mergeIntoCdc: $opCol must be I, U or D")))
-          .otherwise(col(opCol)))
+      .withColumn(op,
+        when(!col(op).isin("I", "U", "D"),
+          raise_error(lit(s"$caller: $op must be I, U or D")))
+          .otherwise(col(op)))
       .drop("_m_n")
-    val upserts = guarded.filter(col(opCol) =!= "D").drop(opCol)
+    val upserts = guarded.filter(col(op) =!= "D").drop(op)
     // key sets derive from `guarded`, NOT the raw batch: the
     // duplicate-key raise_error guard rides the key column, and a
     // batch whose duplicates are all op='D' rows would otherwise never
     // evaluate it (the upserts side alone catches only U/I collisions)
-    val delKeys = guarded.filter(col(opCol) === "D").select(col(key)).distinct()
+    val delKeys = guarded.filter(col(op) === "D").select(col(key)).distinct()
     val allKeys = guarded.select(col(key)).distinct()
-    var attempts = 0
-    while (attempts < 20) {
-      attempts += 1
-      txn.foreach { case (w, b) =>
-        if (committedBatches(dir, w).contains(b)) return None
-      }
-      val parent = latestVersion(dir).getOrElse(-1L)
-      val stM = if (parent < 0) State(Vector.empty, Set.empty, None)
-        else fold(dir, parent)
-      val affected: Set[String] =
-        affectedByKeys(spark, dir, parent, stM, allKeys, key, batch.schema(key).dataType)
-      if (affected.isEmpty && upserts.isEmpty)
-        // nothing matched, nothing to insert: only a txn marker may
-        // need recording (a retried empty CDC batch must stay no-op)
-        return txn.flatMap { case (w, b) =>
-          commit(dir, Seq(s"txn=$w:$b", "op=MERGE"), skipIfTxn = txn)
-        }
-      def affectedRead: DataFrame =
-        maskedRead(spark, dir, stM, affected.toSeq)
-      val rewritten =
-        if (affected.isEmpty) upserts
-        else affectedRead.join(allKeys, Seq(key), "left_anti").unionByName(upserts)
-      val staged = stageFiles(rewritten, dir)
-      val cdfStaged: Seq[String] =
-        if (!cdf) Nil
+    retrying(dir, if (opCol.isDefined) "CDC-merging into" else "merging into") {
+      // a retried streaming batch that already landed must be a no-op
+      if (txn.exists { case (w, b) => committedBatches(dir, w).contains(b) }) Right(None)
+      else {
+        val parent = latestVersion(dir).getOrElse(-1L)
+        // ONE fold serves planning and every affected-file read below
+        val stM = if (parent < 0) State(Vector.empty, Set.empty, None)
+          else fold(dir, parent)
+        val affected: Set[String] =
+          affectedByKeys(spark, dir, parent, stM, allKeys, key, batch.schema(key).dataType)
+        if (affected.isEmpty && upserts.isEmpty)
+          // nothing matched, nothing to insert: only a txn marker may
+          // need recording (a retried empty batch must stay a no-op)
+          Right(txn.flatMap { case (w, b) =>
+            commit(dir, Seq(s"txn=$w:$b", "op=MERGE"), skipIfTxn = txn)
+          })
         else {
-          val typed =
-            if (affected.isEmpty) upserts.withColumn("_change_type", lit("insert"))
+          def affectedRead: DataFrame =
+            maskedRead(spark, dir, stM, affected.toSeq)
+          // one staged write: affected files' NON-matched survivors,
+          // then every upsert (update and insert alike land as fresh
+          // files). Strict by-name union: the pinned read gives
+          // pre-evolution survivors the full recorded schema (NULL
+          // backfill), so a column mismatch here means the BATCH
+          // doesn't carry the table's current schema — an error, not
+          // something to pad
+          val rewritten =
+            if (affected.isEmpty) upserts
+            else affectedRead.join(allKeys, Seq(key), "left_anti").unionByName(upserts)
+          val staged = stageFiles(rewritten, dir)
+          // change-data feed (opt-in): MERGE's row changes recorded at
+          // commit time — matched old rows as `update_preimage`, their
+          // batch replacements as `update_postimage`, unmatched upserts
+          // as `insert`, matched deletes as `delete`. One staged write
+          // of O(batch + matched) rows; the feed then carries the exact
+          // signed delta an incremental view needs (postimage −
+          // preimage), which added-files-only feeds cannot express for
+          // an upsert.
+          val cdfStaged: Seq[String] =
+            if (!cdf) Nil
             else {
-              val upsertKeys = upserts.select(col(key)).distinct()
-              val oldUpMatched = affectedRead.join(upsertKeys, Seq(key), "left_semi")
-              val matchedKeys = oldUpMatched.select(col(key)).distinct()
-              oldUpMatched.withColumn("_change_type", lit("update_preimage"))
-                .unionByName(upserts.join(matchedKeys, Seq(key), "left_semi")
-                  .withColumn("_change_type", lit("update_postimage")))
-                .unionByName(upserts.join(matchedKeys, Seq(key), "left_anti")
-                  .withColumn("_change_type", lit("insert")))
-                .unionByName(affectedRead.join(delKeys, Seq(key), "left_semi")
-                  .withColumn("_change_type", lit("delete")))
+              val typed =
+                if (affected.isEmpty) upserts.withColumn("_change_type", lit("insert"))
+                else {
+                  val upsertKeys = upserts.select(col(key)).distinct()
+                  val oldUpMatched = affectedRead.join(upsertKeys, Seq(key), "left_semi")
+                  val matchedKeys = oldUpMatched.select(col(key)).distinct()
+                  oldUpMatched.withColumn("_change_type", lit("update_preimage"))
+                    .unionByName(upserts.join(matchedKeys, Seq(key), "left_semi")
+                      .withColumn("_change_type", lit("update_postimage")))
+                    .unionByName(upserts.join(matchedKeys, Seq(key), "left_anti")
+                      .withColumn("_change_type", lit("insert")))
+                    .unionByName(affectedRead.join(delKeys, Seq(key), "left_semi")
+                      .withColumn("_change_type", lit("delete")))
+                }
+              stageFiles(typed, dir)
             }
-          stageFiles(typed, dir)
+          // RewriteConflict: a reset/remove landed — re-plan from the
+          // new snapshot
+          commitRewrite(dir, parent, affected.toSeq.sorted.map("remove=" + _) ++
+            addActions(spark, dir, staged, statCols) ++
+            cdfStaged.map("cdf=" + _) ++
+            txn.map { case (w, b) => s"txn=$w:$b" } :+ "op=MERGE",
+            staged ++ cdfStaged, skipIfTxn = txn)
         }
-      val adds =
-        if (statCols.nonEmpty) statAddActions(spark, dir, staged, statCols)
-        else staged.map("add=" + _)
-      val actions = affected.toSeq.sorted.map("remove=" + _) ++ adds ++
-        cdfStaged.map("cdf=" + _) ++
-        txn.map { case (w, b) => s"txn=$w:$b" } :+ "op=MERGE"
-      commitRewriteRebasing(dir, parent, actions, skipIfTxn = txn) match {
-        case RewriteCommitted(v) => return Some(v)
-        case other =>
-          (staged ++ cdfStaged).map(_.takeWhile(_ != '/')).distinct
-            .foreach(t => deleteStaged(dir, t))
-          if (other == RewriteSkippedTxn) return None
       }
     }
-    throw new IllegalStateException(s"gave up CDC-merging into $dir after 20 conflicts")
   }
 
   /** The change feed (Delta CDF shape, append-only): data files ADDED
@@ -2088,22 +1897,8 @@ object ManifestTable {
                       toVersion: Option[Long] = None): Seq[String] = {
     val to = resolved(dir, toVersion)
     require(to >= sinceVersion, s"change feed interval ($sinceVersion, $to] is negative")
-    val o = io(dir)
-    (sinceVersion + 1 to to).flatMap { v =>
-      val mf = new HPath(o.manifest, s"v$v.manifest")
-      if (!o.exists(mf))
-        throw new IllegalStateException(
-          s"version $v missing from the log of $dir (vacuumed past it?)")
-      val lines = readLog(o, mf, v)
-      if (lines.contains("reset") || lines.exists(_.startsWith("remove=")) ||
-          lines.exists(_.startsWith("dv=")))
-        throw new IllegalStateException(
-          s"change feed ($sinceVersion, $to] crosses a row-removing commit at v$v; " +
-            "re-read the snapshot instead")
-      lines.collect { case l if l.startsWith("add=") =>
-        l.stripPrefix("add=").takeWhile(_ != '|')
-      }
-    }
+    (sinceVersion + 1 to to).flatMap(v =>
+      commitFeedFiles(dir, v, changeFeed = false, s" ($sinceVersion, $to]").map(_._1))
   }
 
   /** Read the rows appended in `(sinceVersion, toVersion]` — the
@@ -2119,16 +1914,43 @@ object ManifestTable {
     // footer parquet sampled first — this applies equally to the
     // empty-interval fallback, whose frame must carry the CURRENT
     // schema, not a sampled pre-evolution one
-    if (rels.nonEmpty)
-      return logicalize(pinnedReader(spark, dir, toVersion).parquet(
-        rels.map(rel => dataPath(dir, rel)): _*), columnMapping(dir, toVersion))
-    val all = snapshotFiles(dir, toVersion)
-    if (all.isEmpty)
+    if (rels.isEmpty) emptyRead(spark, dir, toVersion, "readSince")
+    else {
+      val st = snapshotAt(dir, toVersion)._2
+      logicalize(pinnedReader(spark, st).parquet(
+        rels.map(rel => dataPath(dir, rel)): _*), mappingOf(st))
+    }
+  }
+
+  /** One commit's streamable files in PLAN ORDER with their recorded
+    * per-file row counts — the one reader of a commit's manifest for
+    * the change feeds ([[addedFilesSince]], [[readChanges]] and the
+    * DSv2 streaming source). Tuple: (rel, rows if the entry recorded
+    * `rows=`, isChangeFile).
+    * `changeFeed=false`: the commit's `add=` files; throws on a
+    * row-removing commit (reset/remove/dv — not expressible as
+    * appended rows). `changeFeed=true`: a cdf-carrying commit serves
+    * ONLY its change files (the rewritten survivor files it also adds
+    * are NOT row changes); a row-removing commit without change data
+    * throws — the consumer falls back to a snapshot re-read.
+    * `interval` (e.g. " (3, 7]") names the polled range in that error. */
+  private[graft] def commitFeedFiles(dir: String, v: Long, changeFeed: Boolean,
+                                     interval: String = "")
+      : Seq[(String, Option[Long], Boolean)] = {
+    val lines = manifestLines(io(dir), dir, v)
+    val cdfRels = lines.collect { case l if l.startsWith("cdf=") =>
+      l.stripPrefix("cdf=") }
+    if (changeFeed && cdfRels.nonEmpty)
+      cdfRels.map((_, None: Option[Long], true))
+    else if (lines.exists(l => l == "reset" || l.startsWith("remove=") || l.startsWith("dv=")))
       throw new IllegalStateException(
-        s"readSince on $dir: nothing added and the snapshot holds no files")
-    logicalize(pinnedReader(spark, dir, toVersion)
-        .parquet(dataPath(dir, all.head)), columnMapping(dir, toVersion))
-      .filter(org.apache.spark.sql.functions.lit(false))
+        s"change feed$interval crosses a row-removing commit at v$v" +
+          (if (changeFeed) " written without change data" else "") +
+          "; re-read the snapshot instead")
+    else lines.collect { case l if l.startsWith("add=") =>
+      val e = ManifestEntry.parse(l.stripPrefix("add="))
+      (e.rel, e.rows, false)
+    }
   }
 
   /** The ROW-LEVEL change feed over `(sinceVersion, toVersion]` — the
@@ -2136,7 +1958,8 @@ object ManifestTable {
     * interval may contain deletes or merges: every row change in the
     * interval comes back tagged `_change_type` ∈ {insert,
     * update_preimage, update_postimage, delete} and `_commit_version`.
-    * Per commit the classification is pure log metadata:
+    * Per commit the classification is pure log metadata
+    * ([[commitFeedFiles]]):
     *
     *  - a pure-append commit's `add=` files ARE its inserted rows —
     *    served directly, no change files needed (Delta does the same);
@@ -2153,68 +1976,6 @@ object ManifestTable {
     * downstream copy reconstructs the upstream snapshot exactly —
     * incremental view maintenance rides this (see
     * `sink_manifest_cdf_propagate`). */
-  /** One commit's feed classification: (insert add= rels, cdf= rels).
-    * A cdf-carrying commit serves ONLY its change files; a
-    * row-removing commit without change data throws (not expressible
-    * as a row feed). Shared by [[readChanges]] and the streaming
-    * source's change-feed mode. */
-  private[graft] def classifyChangeCommit(dir: String, v: Long,
-                                          intervalDesc: String): (Seq[String], Seq[String]) = {
-    val o = io(dir)
-    val mf = new HPath(o.manifest, s"v$v.manifest")
-    if (!o.exists(mf))
-      throw new IllegalStateException(
-        s"version $v missing from the log of $dir (vacuumed past it?)")
-    val lines = readLog(o, mf, v)
-    val cdfRels = lines.collect { case l if l.startsWith("cdf=") => l.stripPrefix("cdf=") }
-    if (cdfRels.nonEmpty) (Nil, cdfRels)
-    else if (lines.contains("reset") || lines.exists(_.startsWith("remove=")) ||
-        lines.exists(_.startsWith("dv=")))
-      throw new IllegalStateException(
-        s"change feed $intervalDesc crosses a row-removing commit at v$v " +
-          "written without change data; re-read the snapshot instead")
-    else (lines.collect { case l if l.startsWith("add=") =>
-      l.stripPrefix("add=").takeWhile(_ != '|')
-    }, Nil)
-  }
-
-  /** One commit's streamable files in PLAN ORDER with their recorded
-    * per-file row counts — the admission-control and partition-
-    * planning primitive of the DSv2 streaming source. Tuple: (rel,
-    * rows if the entry recorded `rows=`, isChangeFile).
-    * `changeFeed=false`: the commit's `add=` files; throws on a
-    * row-removing commit (reset/remove/dv — not expressible as
-    * appended rows). `changeFeed=true`: a cdf-carrying commit serves
-    * ONLY its change files; a row-removing commit without change data
-    * throws, exactly like [[classifyChangeCommit]]. */
-  private[graft] def commitFeedFiles(dir: String, v: Long, changeFeed: Boolean)
-      : Seq[(String, Option[Long], Boolean)] = {
-    val o = io(dir)
-    val mf = new HPath(o.manifest, s"v$v.manifest")
-    if (!o.exists(mf))
-      throw new IllegalStateException(
-        s"version $v missing from the log of $dir (vacuumed past it?)")
-    val lines = readLog(o, mf, v)
-    val removing = lines.contains("reset") ||
-      lines.exists(_.startsWith("remove=")) || lines.exists(_.startsWith("dv="))
-    val cdfRels = lines.collect { case l if l.startsWith("cdf=") =>
-      l.stripPrefix("cdf=") }
-    def adds: Seq[(String, Option[Long], Boolean)] =
-      lines.collect { case l if l.startsWith("add=") =>
-        val parts = l.stripPrefix("add=").split('|')
-        (parts(0), parts.iterator.drop(1).find(_.startsWith("rows="))
-          .map(_.stripPrefix("rows=").toLong), false)
-      }
-    if (changeFeed && cdfRels.nonEmpty)
-      cdfRels.map((_, None: Option[Long], true))
-    else if (removing)
-      throw new IllegalStateException(
-        s"change feed crosses a row-removing commit at v$v" +
-          (if (changeFeed) " written without change data" else "") +
-          "; re-read the snapshot instead")
-    else adds
-  }
-
   def readChanges(spark: SparkSession, dir: String, sinceVersion: Long,
                   toVersion: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.lit
@@ -2223,46 +1984,28 @@ object ManifestTable {
     // change files carry the table schema AS OF their commit plus the
     // baked-in type column; pin to the target version's schema (when
     // the table evolved) so pre-evolution change files NULL-backfill
-    val mappingAtTo = columnMapping(dir, Some(to))
-    val cdfReader = tableSchema(dir, Some(to)) match {
-      case Some(st) =>
-        // physical pin (mapping applied) + the baked type column
-        val phys = mappingAtTo match {
-          case None => st
-          case Some(m) =>
-            val byLogical = m.toMap
-            org.apache.spark.sql.types.StructType(st.fields.map(f =>
-              f.copy(name = byLogical.getOrElse(f.name, f.name))))
-        }
-        spark.read.schema(phys.add(
-          org.apache.spark.sql.types.StructField("_change_type",
-            org.apache.spark.sql.types.StringType, nullable = true)))
-      case None => spark.read
-    }
+    val st = fold(dir, to)
+    val cdfReader = physicalSchema(st).fold(spark.read)(phys =>
+      spark.read.schema(phys.add(
+        org.apache.spark.sql.types.StructField("_change_type",
+          org.apache.spark.sql.types.StringType, nullable = true))))
+    def logicalRead(reader: org.apache.spark.sql.DataFrameReader,
+                    files: Seq[(String, Option[Long], Boolean)]): DataFrame =
+      logicalize(reader.parquet(files.map(f => dataPath(dir, f._1)): _*), mappingOf(st))
     val frames: Seq[DataFrame] = (sinceVersion + 1 to to).flatMap { v =>
-      val (adds, cdfRels) = classifyChangeCommit(dir, v, s"($sinceVersion, $to]")
-      if (cdfRels.nonEmpty)
-        Some(logicalize(cdfReader.parquet(
-            cdfRels.map(rel => dataPath(dir, rel)): _*), mappingAtTo)
-          .withColumn("_commit_version", lit(v)))
-      else if (adds.isEmpty) None // markers-only commit: no row changes
-      else Some(logicalize(pinnedReader(spark, dir, Some(to)).parquet(
-          adds.map(rel => dataPath(dir, rel)): _*), mappingAtTo)
+      val files = commitFeedFiles(dir, v, changeFeed = true, s" ($sinceVersion, $to]")
+      if (files.isEmpty) None // markers-only commit: no row changes
+      else if (files.head._3)
+        Some(logicalRead(cdfReader, files).withColumn("_commit_version", lit(v)))
+      else Some(logicalRead(pinnedReader(spark, st), files)
         .withColumn("_change_type", lit("insert"))
         .withColumn("_commit_version", lit(v)))
     }
-    if (frames.nonEmpty)
-      return frames.reduce(_.unionByName(_))
-    // empty interval: an empty frame in the feed's schema
-    val all = snapshotFiles(dir, Some(to))
-    if (all.isEmpty)
-      throw new IllegalStateException(
-        s"readChanges on $dir: no changes and the snapshot holds no files")
-    logicalize(pinnedReader(spark, dir, Some(to))
-        .parquet(dataPath(dir, all.head)), mappingAtTo)
-      .withColumn("_change_type", lit("insert"))
-      .withColumn("_commit_version", lit(-1L))
-      .filter(org.apache.spark.sql.functions.lit(false))
+    if (frames.nonEmpty) frames.reduce(_.unionByName(_))
+    else // empty interval: an empty frame in the feed's schema
+      emptyRead(spark, dir, Some(to), "readChanges")
+        .withColumn("_change_type", lit("insert"))
+        .withColumn("_commit_version", lit(-1L))
   }
 
   /** Hard cap on a single file's deletion-vector cardinality: above
@@ -2300,15 +2043,15 @@ object ManifestTable {
     val (drop, keep) = manifests.splitAt(math.max(0, manifests.length - keepVersions))
     val oldestKept = keep.head._1
     writeCheckpoint(dir, oldestKept) // folds BEFORE history is dropped
-    // live = surviving versions' files, stats suffix STRIPPED — the
-    // raw fold entries carry `|stat=..` for stats-commits and would
-    // never string-match an on-disk relative path. Change-data files
+    // live = surviving versions' files by bare path (never the raw
+    // entry, whose segments would never string-match an on-disk
+    // relative path). Change-data files
     // named by a SURVIVING manifest stay too ([[readChanges]] over the
     // kept interval must still serve them); cdf files referenced only
     // by dropped history go with it — CDF retention = time-travel
     // retention, Delta's rule.
     val live: Set[String] =
-      keep.flatMap { case (v, _) => fold(dir, v).files.map(_.takeWhile(_ != '|')) }.toSet ++
+      keep.flatMap { case (v, _) => fold(dir, v).files.map(_.rel) }.toSet ++
         keep.flatMap { case (v, f) => readLog(o, f.getPath, v).collect {
           case l if l.startsWith("cdf=") => l.stripPrefix("cdf=") } }
     drop.foreach { case (_, f) => o.delete(f.getPath): Unit }
@@ -2364,8 +2107,8 @@ object ManifestTable {
     val body = (s"version=$v" +:
       (st.schema.map("schema=" + _).toSeq ++
         st.colmap.map("colmap=" + _).toSeq ++
-        st.files.map("add=" + _) ++
-        st.dvs.toSeq.sortBy(_._1).map { case (r, sp) => s"dv=$r|$sp" } ++
+        st.files.map("add=" + _.raw) ++
+        st.dvs.toSeq.sortBy(_._1).map((dvAction _).tupled) ++
         st.txns.toSeq.sorted.map("txn=" + _)))
       .mkString("\n") + "\n"
     o.putIfAbsent(target, body.getBytes("UTF-8")): Unit
@@ -2379,10 +2122,6 @@ object ManifestTable {
                                    txn: Option[(String, Long)]): Option[Long] =
     commit(dir, actions ++ txn.map { case (w, b) => s"txn=$w:$b" },
       skipIfTxn = txn)
-
-  /** DSv2-write abort path: drop an aborted write's staging dir. */
-  private[graft] def dropStagedDir(dir: String, txnDir: String): Unit =
-    deleteStaged(dir, txnDir)
 
   /** Commit `actions` on top of the current snapshot, retrying past
     * concurrent committers. */

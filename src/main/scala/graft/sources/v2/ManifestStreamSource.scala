@@ -45,8 +45,8 @@ final class SerializableHadoopConf(@transient var value: Configuration)
   *
   * Offsets ARE manifest versions: a micro-batch (start, end] plans
   * exactly the data files that the interval's commits added
-  * ([[graft.sources.ManifestTable.addedFilesSince]] — an O(versions
-  * polled) log fold, never O(history)), one input partition per
+  * (`ManifestTable.commitFeedFiles` per commit — an O(versions
+  * polled) log read, never O(history)), one input partition per
   * added file, read executor-side with the parquet-hadoop column
   * reader. Exactly-once falls out of the offset contract: Spark
   * checkpoints the version watermark, and replanning any (start, end]

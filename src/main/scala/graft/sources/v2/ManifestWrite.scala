@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types._
 
-import graft.sources.ManifestTable
+import graft.sources.{ManifestEntry, ManifestTable}
 
 /** DSv2 WRITE side of the `graft-manifest` source — the manifest
   * table writable through the STANDARD Spark APIs:
@@ -207,20 +207,13 @@ final class ManifestDataWriter(schema: StructType, dir: String,
       filePath.getFileSystem(conf).delete(filePath, false)
       return ManifestWriteMessage(None, rel)
     }
-    val stats = schema.fields.zipWithIndex.flatMap { case (f, i) =>
-      if (!seen(i)) None
-      else f.dataType match {
-        case LongType | IntegerType =>
-          Some(s"stat=${phys(f.name)}:${loMin(i)}:${loMax(i)}")
-        case StringType =>
-          val mn = ManifestTable.hex(ManifestTable.truncMinUtf8(sMin(i)))
-          ManifestTable.truncMaxUtf8(sMax(i)).map(mx =>
-            s"sstat=${phys(f.name)}:$mn:${ManifestTable.hex(mx)}")
-        case _ => None
-      }
+    val bounds = schema.fields.toSeq.zipWithIndex.collect {
+      case (f, i) if seen(i) && (f.dataType == LongType || f.dataType == IntegerType) =>
+        phys(f.name) -> ManifestEntry.LongBounds(loMin(i), loMax(i))
+      case (f, i) if seen(i) && f.dataType == StringType =>
+        phys(f.name) -> ManifestEntry.StringBounds(sMin(i), sMax(i))
     }
-    ManifestWriteMessage(
-      Some((s"add=$rel" +: s"rows=$rows" +: stats.toSeq).mkString("|")), rel)
+    ManifestWriteMessage(Some("add=" + ManifestEntry.render(rel, rows, bounds)), rel)
   }
 
   override def abort(): Unit = {

@@ -636,4 +636,125 @@ class ManifestSinkSpec extends AnyFunSuite {
     assert(back.select($"id").distinct().count() == 60)
     assert(ManifestTable.latestVersion(dir).contains(5L), "versions not dense 0..5")
   }
+
+  test("an empty MERGE batch does not advance the log; with a txn only the marker commits") {
+    val dir = freshDir()
+    ManifestTable.appendWithStats(spark, Seq((1L, "a")).toDF("k", "v"), dir, "k")
+    val files = ManifestTable.snapshotFiles(dir)
+    val empty = Seq.empty[(Long, String)].toDF("k", "v")
+    assert(ManifestTable.mergeInto(spark, dir, empty, "k").isEmpty)
+    assert(ManifestTable.mergeInto(spark, dir, empty, "k", statCols = Seq("k")).isEmpty)
+    assert(ManifestTable.latestVersion(dir).contains(0L), "an empty MERGE advanced the log")
+    assert(ManifestTable.snapshotFiles(dir) == files)
+    assert(ManifestTable.countMeta(dir).contains(1L))
+    // with a txn: the marker alone commits, and a replay is a no-op
+    val v = ManifestTable.mergeInto(spark, dir, empty, "k", txn = Some(("w", 7L)))
+    assert(v.contains(1L))
+    val body = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "_manifest", "v1.manifest")), "UTF-8")
+    assert(body == "version=1\ntxn=w:7\nop=MERGE\n")
+    assert(ManifestTable.snapshotFiles(dir) == files)
+    assert(ManifestTable.mergeInto(spark, dir, empty, "k", txn = Some(("w", 7L))).isEmpty)
+    assert(ManifestTable.latestVersion(dir).contains(1L))
+    assert(ManifestTable.countMeta(dir).contains(1L))
+  }
+
+  test("deleteWhere on an evolved table preserves the evolved column in rewritten survivors") {
+    val dir = freshDir()
+    ManifestTable.appendEvolving(spark,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").coalesce(1), dir)
+    ManifestTable.appendEvolving(spark,
+      Seq((4L, "d", 40L), (5L, "e", 50L)).toDF("k", "v", "extra").coalesce(1), dir)
+    // the predicate matches rows in BOTH generations' files: the
+    // rewrite must read them pinned, or parquet's sampled footer
+    // decides whether 'extra' survives
+    assert(ManifestTable.deleteWhere(spark, dir, $"k" === 2L || $"k" === 4L).isDefined)
+    val back = ManifestTable.read(spark, dir).orderBy($"k")
+    assert(back.columns.sameElements(Array("k", "v", "extra")))
+    assert(back.count() == 3)
+    // the evolved value survived the copy-on-write rewrite
+    assert(back.filter($"k" === 5L).select($"extra").as[Long].head() == 50L)
+    // pre-evolution survivors still NULL-backfill
+    assert(back.filter($"k" === 1L && $"extra".isNull).count() == 1)
+  }
+
+  test("mergeInto on an evolved table: old-file survivors NULL-backfill, batch carries the current schema") {
+    val dir = freshDir()
+    ManifestTable.appendEvolving(spark,
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1), dir)
+    ManifestTable.appendEvolving(spark,
+      Seq((3L, "c", 30L)).toDF("k", "v", "extra").coalesce(1), dir)
+    // the merge key matches a PRE-evolution row: its file is rewritten
+    // through the pinned schema, and the update lands with 'extra'
+    val mv = ManifestTable.mergeInto(spark, dir,
+      Seq((2L, "b2", 20L), (9L, "i9", 90L)).toDF("k", "v", "extra"), "k")
+    assert(mv.isDefined)
+    val back = ManifestTable.read(spark, dir).orderBy($"k")
+    assert(back.count() == 4)
+    assert(back.filter($"k" === 2L).select($"extra").as[Long].head() == 20L)
+    assert(back.filter($"k" === 9L).select($"v").as[String].head() == "i9")
+    // the untouched pre-evolution survivor still reads as NULL
+    assert(back.filter($"k" === 1L && $"extra".isNull).count() == 1)
+  }
+
+  test("delete-everything leaves a zero-file snapshot that appendEvolving treats as schema-fresh") {
+    val dir = freshDir()
+    ManifestTable.appendWithStats(spark,
+      Seq((1L, 10L), (2L, 20L)).toDF("k", "n").coalesce(1), dir, "k")
+    assert(ManifestTable.deleteWhere(spark, dir, lit(true), Seq("k")).isDefined)
+    assert(ManifestTable.snapshotFiles(dir).isEmpty, "table should be empty")
+    // a fresh (different) schema lands cleanly instead of an opaque
+    // parquet inference error
+    val v = ManifestTable.appendEvolving(spark,
+      Seq((1L, "x", 1L)).toDF("k", "v", "extra").coalesce(1), dir)
+    assert(v > 0)
+    assert(ManifestTable.read(spark, dir).columns.sameElements(Array("k", "v", "extra")))
+  }
+
+  test("readSince across an evolution commit pins the feed schema; empty interval carries it too") {
+    val dir = freshDir()
+    ManifestTable.appendEvolving(spark,
+      Seq((1L, "a")).toDF("k", "v").coalesce(1), dir)
+    ManifestTable.appendEvolving(spark,
+      Seq((2L, "b", 20L)).toDF("k", "v", "extra").coalesce(1), dir)
+    // interval spans BOTH file shapes
+    val feed = ManifestTable.readSince(spark, dir, -1L)
+    assert(feed.columns.sameElements(Array("k", "v", "extra")))
+    assert(feed.filter($"extra".isNull).count() == 1)
+    // empty interval: the empty frame still presents the CURRENT schema
+    val empty = ManifestTable.readSince(spark, dir, 1L)
+    assert(empty.count() == 0)
+    assert(empty.columns.sameElements(Array("k", "v", "extra")),
+      "empty-interval fallback leaked a pre-evolution schema")
+  }
+
+  test("compactZorder with a constant dimension degrades to the other axis, data intact") {
+    val dir = freshDir()
+    val rows = (0 until 64).map(i => (i.toLong, 7L, s"r$i")) // y constant
+    ManifestTable.appendWithStats(spark,
+      rows.toDF("k", "y", "v").coalesce(1), dir, "k", "y")
+    val v = ManifestTable.compactZorder(spark, dir, targetFiles = 4, "k", "y")
+    assert(ManifestTable.latestVersion(dir).contains(v))
+    val back = ManifestTable.read(spark, dir)
+      .select($"k", $"y", $"v").as[(Long, Long, String)].collect().sorted
+    assert(back.sameElements(rows.sorted))
+    // norm16's hi==lo guard: the constant axis contributes 0 bits and
+    // k alone still clusters — a k range prunes
+    val live = ManifestTable.snapshotFiles(dir).size
+    val planned = ManifestTable.plannedFilesForRange(dir, "k", 0, 15).size
+    assert(live > 1 && planned < live, s"$planned of $live planned")
+  }
+
+  test("mergeInto with a single NULL-key batch row inserts it (SQL equality never matches NULL)") {
+    val dir = freshDir()
+    ManifestTable.append(spark,
+      Seq((Some(1L), "a"), (Some(2L), "b")).toDF("k", "v").coalesce(1), dir)
+    val batch = Seq((Option.empty[Long], "nullrow")).toDF("k", "v")
+    val mv = ManifestTable.mergeInto(spark, dir, batch, "k")
+    assert(mv.isDefined)
+    val back = ManifestTable.read(spark, dir)
+    assert(back.count() == 3, "NULL-key row should insert, never match")
+    assert(back.filter($"k".isNull).count() == 1)
+    assert(back.filter($"v" === "a").count() == 1)
+  }
 }
