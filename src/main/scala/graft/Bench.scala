@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.annotation.nowarn
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
@@ -67,6 +69,9 @@ object Bench {
   def calibDrift(start: Double, groups: Seq[Double]): Boolean =
     groups.exists(_ > 1.25 * start)
 
+  // write-only on purpose: the calibration loop stores its result here
+  // so the JIT cannot eliminate the loop as dead code
+  @nowarn("cat=unused-privates")
   @volatile private var calibSink: Long = 0L
 
   /** Fixed single-thread CPU calibration: 100 M xorshift64 steps,

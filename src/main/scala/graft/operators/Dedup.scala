@@ -526,17 +526,4 @@ object Dedup {
       .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
     pairs.unionByName(star)
   }
-
-  /** Embedding-cosine duplicate candidates among ALL pairs — an O(n²)
-    * nested-loop plan, kept only as the exact recall baseline for specs
-    * and bounded inputs. No registered query runs this at corpus size:
-    * dedup_embedding routes through Similarity.cellPairs (equi-join on
-    * cell id) and the LSH/IVF paths are the at-scale variants. */
-  def embeddingPairs(spark: SparkSession, emb: DataFrame): DataFrame = {
-    import spark.implicits._
-    val a = emb.select($"vec_id".as("vec_a"), $"embedding".as("ea"))
-    val b = emb.select($"vec_id".as("vec_b"), $"embedding".as("eb"))
-    a.join(b, $"vec_a" < $"vec_b")
-      .select($"vec_a", $"vec_b", round(Fns.cosine_sim($"ea", $"eb"), 9).as("cos_sim"))
-  }
 }

@@ -215,50 +215,38 @@ object Ctr {
     * The temp-dir write is replay harness, not pipeline: in production
     * the streams arrive from a log bus and windows close as real time
     * advances. */
-  private def ctrStreamingReplay(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    val ev = Tables.events(s, dir)
-    val maxTs = ev.agg(max($"ts")).head.getTimestamp(0)
-    val far = new java.sql.Timestamp(maxTs.getTime + 30L * 24 * 3600 * 1000)
-    val imps = ev.select(
-      $"event_id".cast("string").as("impressionId"),
-      concat(lit("r"), ($"user_id" % 7).cast("string")).as("referrer"),
-      concat(lit("ad"), ($"event_id" % 13).cast("string")).as("adId"),
-      $"ts")
-      .unionByName(Seq(("__sentinel", "zz", "zz", far))
-        .toDF("impressionId", "referrer", "adId", "ts"))
-    val clks = ev.filter($"event_type" === "click")
-      .select($"event_id".cast("string").as("impressionId"), $"ts".as("click_ts"))
-      .unionByName(Seq(("__sentinel", far)).toDF("impressionId", "click_ts"))
-    val root = java.nio.file.Files.createTempDirectory("graft-ctr-replay").toString
-    imps.write.mode("overwrite").parquet(s"$root/imps")
-    clks.write.mode("overwrite").parquet(s"$root/clicks")
+  private def ctrStreamingReplay(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-ctr-replay") { root =>
+      import s.implicits._
+      val ev = Tables.events(s, dir)
+      val maxTs = ev.agg(max($"ts")).head.getTimestamp(0)
+      val far = new java.sql.Timestamp(maxTs.getTime + 30L * 24 * 3600 * 1000)
+      val imps = ev.select(
+        $"event_id".cast("string").as("impressionId"),
+        concat(lit("r"), ($"user_id" % 7).cast("string")).as("referrer"),
+        concat(lit("ad"), ($"event_id" % 13).cast("string")).as("adId"),
+        $"ts")
+        .unionByName(Seq(("__sentinel", "zz", "zz", far))
+          .toDF("impressionId", "referrer", "adId", "ts"))
+      val clks = ev.filter($"event_type" === "click")
+        .select($"event_id".cast("string").as("impressionId"), $"ts".as("click_ts"))
+        .unionByName(Seq(("__sentinel", far)).toDF("impressionId", "click_ts"))
+      imps.write.mode("overwrite").parquet(s"$root/imps")
+      clks.write.mode("overwrite").parquet(s"$root/clicks")
 
-    val impStream = s.readStream
-      .schema(impSchema.add("ts", TimestampType)).parquet(s"$root/imps")
-    val clkStream = s.readStream
-      .schema(clkSchema.add("click_ts", TimestampType)).parquet(s"$root/clicks")
-    val qname = s"ctr_replay_${System.nanoTime()}"
-    val query = graft.streaming.EventStream.streamingCtr(impStream, clkStream)
-      .writeStream.format("memory").queryName(qname)
-      .outputMode("append")
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    if (!query.awaitTermination(300000)) {
-      query.stop()
-      throw new IllegalStateException("ctr_streaming_replay: stream did not drain in 300s")
-    }
-    StreamReplay.finish(s, qname, root)(
-      s.table(qname)
+      val impStream = s.readStream
+        .schema(impSchema.add("ts", TimestampType)).parquet(s"$root/imps")
+      val clkStream = s.readStream
+        .schema(clkSchema.add("click_ts", TimestampType)).parquet(s"$root/clicks")
+      StreamReplay.toMemory("ctr_streaming_replay", root)(
+        graft.streaming.EventStream.streamingCtr(impStream, clkStream))
         .filter($"referrer" =!= "zz")
         .groupBy($"referrer", $"adId")
         .agg(sum($"impressions").as("impressions"), sum($"clicks").as("clicks"))
         .select($"referrer", $"adId".as("ad_id"), $"impressions", $"clicks",
           ($"clicks".cast("double") / $"impressions").as("ctr"))
-        .orderBy($"referrer", $"ad_id"))
-  }
+        .orderBy($"referrer", $"ad_id")
+    }
 
   /** Streaming as-of attribution, driver-verified against the SAME
     * oracle as the batch ctr_attribution: the events table replays
@@ -271,47 +259,15 @@ object Ctr {
     * match the batch AsOf join does. Sentinels are watermark carriers
     * (event_type "zz_wm" — neither view nor click), so they leave no
     * state and need no output filter. */
-  private def attributionStreamingReplay(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.EventStream
-    val ev = Tables.events(s, dir)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-    val maxTs = ev.agg(max($"ts")).head.getTimestamp(0)
-    def sentinel(id: Long, offsetMs: Long) = Seq(
-      (id, new java.sql.Timestamp(maxTs.getTime + offsetMs), -1L, "zz_wm", 0.0))
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val root = java.nio.file.Files.createTempDirectory("graft-attr-replay").toString
-    ev.write.mode("overwrite").parquet(s"$root/src")
-
-    def drain(): Unit = {
-      val q = s.readStream.schema(ev.schema).parquet(s"$root/src")
-        .as[EventStream.Event]
-        .transform(d => EventStream.streamingAttribution(s, d).toDF())
-        .writeStream.format("parquet")
-        .option("path", s"$root/out")
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("attribution_streaming_replay: stream stalled")
-      }
-    }
-    drain()
-    sentinel(-1L, 30L * 24 * 3600 * 1000).write.mode("append").parquet(s"$root/src")
-    drain()
-    sentinel(-2L, 30L * 24 * 3600 * 1000 + 60000).write.mode("append").parquet(s"$root/src")
-    drain()
-
-    // file sink, no memory-sink view to drop — but the temp dir still
-    // leaks per invocation without the finish
-    StreamReplay.finish(s, qname = "", root)(
-      s.read.parquet(s"$root/out")
+  private def attributionStreamingReplay(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-attr-replay") { root =>
+      import s.implicits._
+      import graft.streaming.EventStream
+      StreamReplay.events(s, dir, "attribution_streaming_replay", root, "zz_wm")(d =>
+        EventStream.streamingAttribution(s, d).toDF())
         .select($"user_id", $"click_id", $"attributed_view")
-        .orderBy($"user_id", $"click_id"))
-  }
+        .orderBy($"user_id", $"click_id")
+    }
 
   /** Position-based (U-shaped) MULTI-TOUCH attribution — the model
     * the single-touch as-of join (ctr_attribution) graduates into:

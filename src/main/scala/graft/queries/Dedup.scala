@@ -294,10 +294,9 @@ object Dedup {
   /** Embedding-cosine near-dup, CELL-BLOCKED (VERDICT r5 #4): top-100
     * intra-cell pairs by cosine. The registered plan's only corpus-sized
     * join is the equi-join on cell id — no O(n²) nested-loop join ships
-    * (plan-asserted in DedupSpec). The exact all-pairs form survives as
-    * DedupOps.embeddingPairs for bounded/oracle use; blocking trades the
-    * cross-cell pairs away, and the oracle replays the same blocking so
-    * the result stays hash-verified. */
+    * (plan-asserted in DedupSpec). Blocking trades the cross-cell
+    * pairs away, and the oracle replays the same blocking so the
+    * result stays hash-verified. */
   private def dedupEmbedding(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.operators.Similarity.cellPairs(s, Tables.embeddings(s, dir),
@@ -873,30 +872,18 @@ object Dedup {
     * unbounded production stream would use dropDuplicatesWithinWatermark
     * so state evicts once the watermark passes the ingest-time skew
     * window. */
-  private def dedupStreamingReplay(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types.{StructType, StringType}
-    val root = java.nio.file.Files.createTempDirectory("graft-dedup-replay").toString
-    Tables.documents(s, dir).select(md5($"text").as("th"))
-      .write.mode("overwrite").parquet(s"$root/docs")
-    val stream = s.readStream
-      .schema(new StructType().add("th", StringType))
-      .parquet(s"$root/docs")
-    val qname = s"dedup_replay_${System.nanoTime()}"
-    val query = stream.dropDuplicates("th")
-      .writeStream.format("memory").queryName(qname)
-      .outputMode("append")
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    if (!query.awaitTermination(300000)) {
-      query.stop()
-      throw new IllegalStateException("dedup_streaming_replay: stream did not drain in 300s")
+  private def dedupStreamingReplay(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-dedup-replay") { root =>
+      import s.implicits._
+      import org.apache.spark.sql.types.{StructType, StringType}
+      Tables.documents(s, dir).select(md5($"text").as("th"))
+        .write.mode("overwrite").parquet(s"$root/docs")
+      val stream = s.readStream
+        .schema(new StructType().add("th", StringType))
+        .parquet(s"$root/docs")
+      StreamReplay.toMemory("dedup_streaming_replay", root)(stream.dropDuplicates("th"))
+        .select($"th").orderBy($"th")
     }
-    StreamReplay.finish(s, qname, root)(
-      s.table(qname).select($"th").orderBy($"th"))
-  }
 
   private val dedupStreamingReplaySql =
     "SELECT DISTINCT md5(text) AS th FROM documents ORDER BY th"
@@ -944,35 +931,24 @@ object Dedup {
     * Production note: complete-mode output here is the replay
     * harness; a production maintainer upserts update-mode deltas into
     * the bucketed index table instead. */
-  private def dedupIndexStreamingReplay(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types.{StructType, LongType}
-    val root = java.nio.file.Files.createTempDirectory("graft-lshindex-replay").toString
-    banded48(s, dir).repartition(8)
-      .write.mode("overwrite").parquet(s"$root/bands")
-    val stream = s.readStream
-      .schema(new StructType()
-        .add("doc_id", LongType).add("band", LongType).add("bkey", LongType))
-      .option("maxFilesPerTrigger", 2) // several micro-batches: real state folding
-      .parquet(s"$root/bands")
-    val qname = s"lsh_index_replay_${System.nanoTime()}"
-    val query = stream.groupBy($"band", $"bkey")
-      .agg(count(lit(1)).as("width"), min($"doc_id").as("min_doc"))
-      .filter($"width" >= 2)
-      .writeStream.format("memory").queryName(qname)
-      .outputMode("complete")
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    if (!query.awaitTermination(300000)) {
-      query.stop()
-      throw new IllegalStateException("dedup_index_streaming_replay: stream did not drain in 300s")
+  private def dedupIndexStreamingReplay(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-lshindex-replay") { root =>
+      import s.implicits._
+      import org.apache.spark.sql.types.{StructType, LongType}
+      banded48(s, dir).repartition(8)
+        .write.mode("overwrite").parquet(s"$root/bands")
+      val stream = s.readStream
+        .schema(new StructType()
+          .add("doc_id", LongType).add("band", LongType).add("bkey", LongType))
+        .option("maxFilesPerTrigger", 2) // several micro-batches: real state folding
+        .parquet(s"$root/bands")
+      StreamReplay.toMemory("dedup_index_streaming_replay", root, mode = "complete")(
+        stream.groupBy($"band", $"bkey")
+          .agg(count(lit(1)).as("width"), min($"doc_id").as("min_doc"))
+          .filter($"width" >= 2))
+        .select($"band", $"bkey", $"width", $"min_doc")
+        .orderBy($"band", $"bkey")
     }
-    StreamReplay.finish(s, qname, root)(
-      s.table(qname).select($"band", $"bkey", $"width", $"min_doc")
-        .orderBy($"band", $"bkey"))
-  }
 
   private val dedupIndexStreamingReplaySql =
     s"""WITH $minhashSigCtes,
@@ -998,45 +974,33 @@ object Dedup {
     * buckets still alive at stream end. State-curve numbers (with vs
     * without TTL) are recorded by `tools.StreamAudit lshindex` in
     * PERFORMANCE.md. */
-  private def dedupIndexStreamingTtl(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types.{StructType, LongType, TimestampType}
-    import graft.streaming.EventStream
-    val epochMs = 1767225600000L // 2026-01-01T00:00:00Z
-    val horizonMin = 120L
-    val root = java.nio.file.Files.createTempDirectory("graft-lshttl-replay").toString
-    // chronological replay: range-partition by ts so the file source
-    // (same-mtime files ordered by path) advances the watermark
-    // monotonically — the StreamAudit discipline
-    banded48(s, dir)
-      .withColumn("ts", expr(s"timestamp_millis(${epochMs}L + doc_id * 60000L)"))
-      .repartitionByRange(8, $"ts").sortWithinPartitions($"ts")
-      .write.mode("overwrite").parquet(s"$root/bands")
-    StreamReplay.stampChronological(s"$root/bands")
-    val stream = s.readStream
-      .schema(new StructType()
-        .add("doc_id", LongType).add("band", LongType).add("bkey", LongType)
-        .add("ts", TimestampType))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/bands")
-      .as[EventStream.BandRow]
-    val qname = s"lsh_index_ttl_${System.nanoTime()}"
-    val query = EventStream.streamingLshIndex(s, stream, horizonMin * 60000L)
-      .toDF()
-      .writeStream.format("memory").queryName(qname)
-      .outputMode("append")
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    if (!query.awaitTermination(300000)) {
-      query.stop()
-      throw new IllegalStateException("dedup_index_streaming_ttl: stream did not drain in 300s")
-    }
-    val maxDoc = Tables.documents(s, dir).agg(max($"doc_id")).head.getLong(0)
-    val aliveMs = epochMs + (maxDoc - horizonMin) * 60000L
-    StreamReplay.finish(s, qname, root)(
-      s.table(qname)
+  private def dedupIndexStreamingTtl(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-lshttl-replay") { root =>
+      import s.implicits._
+      import org.apache.spark.sql.types.{StructType, LongType, TimestampType}
+      import graft.streaming.EventStream
+      val epochMs = 1767225600000L // 2026-01-01T00:00:00Z
+      val horizonMin = 120L
+      // chronological replay: range-partition by ts so the file source
+      // (same-mtime files ordered by path) advances the watermark
+      // monotonically — the StreamAudit discipline
+      banded48(s, dir)
+        .withColumn("ts", expr(s"timestamp_millis(${epochMs}L + doc_id * 60000L)"))
+        .repartitionByRange(8, $"ts").sortWithinPartitions($"ts")
+        .write.mode("overwrite").parquet(s"$root/bands")
+      StreamReplay.stampChronological(s"$root/bands")
+      val stream = s.readStream
+        .schema(new StructType()
+          .add("doc_id", LongType).add("band", LongType).add("bkey", LongType)
+          .add("ts", TimestampType))
+        .option("maxFilesPerTrigger", 1)
+        .parquet(s"$root/bands")
+        .as[EventStream.BandRow]
+      val out = StreamReplay.toMemory("dedup_index_streaming_ttl", root)(
+        EventStream.streamingLshIndex(s, stream, horizonMin * 60000L).toDF())
+      val maxDoc = Tables.documents(s, dir).agg(max($"doc_id")).head.getLong(0)
+      val aliveMs = epochMs + (maxDoc - horizonMin) * 60000L
+      out
         // latest emission per bucket = its final summary (last_seen
         // strictly increases per emission)
         .groupBy($"band", $"bkey")
@@ -1045,8 +1009,8 @@ object Dedup {
           $"m.min_doc".as("min_doc"), $"m.last_seen_ms".as("last_seen_ms"))
         .filter($"width" >= 2 && $"last_seen_ms" >= aliveMs)
         .select($"band", $"bkey", $"width", $"min_doc")
-        .orderBy($"band", $"bkey"))
-  }
+        .orderBy($"band", $"bkey")
+    }
 
   private val dedupIndexStreamingTtlSql =
     s"""WITH $minhashSigCtes,

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, concat, conv, floor, lit, md5, shiftleft, substring, when}
+import org.apache.spark.sql.functions.{col, concat, conv, floor, lit, md5, substring, when}
 import graft.sources.Tables
 import graft.operators.{Multimodal => MM}
 

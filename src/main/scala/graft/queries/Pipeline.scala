@@ -29,26 +29,24 @@ object Pipeline {
     * Scale shape: commits are O(live files) metadata, row-count
     * independent; readers never LIST the data directory (the
     * object-store eventual-consistency trap). */
-  private def sinkManifestRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-rt").toFile.getPath
-    val en = Tables.documents(s, dir)
-      .filter($"lang" === "en")
-      .select($"doc_id", $"source", $"n_chars")
-    ManifestTable.append(s, en.filter($"doc_id" % 2 === 0), root)
-    ManifestTable.append(s, en.filter($"doc_id" % 2 =!= 0), root)
-    // crashed writer: real data file on disk, named by NO manifest
-    Tables.documents(s, dir).filter($"lang" =!= "en")
-      .select($"doc_id", $"source", $"n_chars")
-      .write.parquet(s"$root/data/txn-orphan-crashed")
-    val result = ManifestTable.read(s, root)
-      .groupBy($"source")
-      .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
-      .orderBy($"source")
-    StreamReplay.finish(s, "unused_no_view", root)(result)
-  }
+  private def sinkManifestRoundtrip(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-rt") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val en = Tables.documents(s, dir)
+        .filter($"lang" === "en")
+        .select($"doc_id", $"source", $"n_chars")
+      ManifestTable.append(s, en.filter($"doc_id" % 2 === 0), root)
+      ManifestTable.append(s, en.filter($"doc_id" % 2 =!= 0), root)
+      // crashed writer: real data file on disk, named by NO manifest
+      Tables.documents(s, dir).filter($"lang" =!= "en")
+        .select($"doc_id", $"source", $"n_chars")
+        .write.parquet(s"$root/data/txn-orphan-crashed")
+      ManifestTable.read(s, root)
+        .groupBy($"source")
+        .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
+        .orderBy($"source")
+    }
 
   private val sinkManifestRoundtripSql =
     """SELECT source, COUNT(*) AS n_docs,
@@ -67,41 +65,32 @@ object Pipeline {
     * hash-matches the plain batch oracle IFF no batch was lost AND no
     * batch was double-counted. maxFilesPerTrigger=2 over a 8-file
     * source forces a genuinely multi-batch replay. */
-  private def sinkManifestStreaming(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.sources.ManifestTable
-    val ev = Tables.events(s, dir)
-      .select($"event_id", $"event_type", QueryDef.cents($"value").as("value_cents"))
-    val root = java.nio.file.Files.createTempDirectory("graft-manifest-stream").toString
-    ev.repartition(8).write.mode("overwrite").parquet(s"$root/src")
-    val table = s"$root/table"
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 2)
-      .parquet(s"$root/src")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        val first = ManifestTable.appendIdempotent(s, batch.toDF(), table, "ev", batchId)
-        require(first.isDefined, s"batch $batchId skipped on first delivery")
-        // the post-commit-crash retry: same batch, same id, again
-        val dup = ManifestTable.appendIdempotent(s, batch.toDF(), table, "ev", batchId)
-        require(dup.isEmpty, s"duplicate batch $batchId committed twice")
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    if (!q.awaitTermination(300000)) {
-      q.stop()
-      throw new IllegalStateException("sink_manifest_streaming: stream stalled")
-    }
-    StreamReplay.finish(s, qname = "", root)(
+  private def sinkManifestStreaming(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-stream") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val ev = Tables.events(s, dir)
+        .select($"event_id", $"event_type", QueryDef.cents($"value").as("value_cents"))
+      ev.repartition(8).write.mode("overwrite").parquet(s"$root/src")
+      val table = s"$root/table"
+      StreamReplay.drain("sink_manifest_streaming", root)(s.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(s"$root/src")
+        .writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+                         batchId: Long) =>
+          val first = ManifestTable.appendIdempotent(s, batch.toDF(), table, "ev", batchId)
+          require(first.isDefined, s"batch $batchId skipped on first delivery")
+          // the post-commit-crash retry: same batch, same id, again
+          val dup = ManifestTable.appendIdempotent(s, batch.toDF(), table, "ev", batchId)
+          require(dup.isEmpty, s"duplicate batch $batchId committed twice")
+          ()
+        })
       ManifestTable.read(s, table)
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n_events"), sum($"value_cents").as("sum_cents"))
-        .orderBy($"event_type"))
-  }
+        .orderBy($"event_type")
+    }
 
   private val sinkManifestStreamingSql =
     """SELECT event_type, COUNT(*) AS n_events,
@@ -120,54 +109,52 @@ object Pipeline {
     * break it the other way). Scale shape: stats are O(batch) at
     * append time; the range read never opens non-overlapping files —
     * the manifest IS the index. */
-  private def sinkManifestPruned(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-prune").toFile.getPath
-    // skey: a zero-padded STRING shadow of doc_id, so the slices carry
-    // disjoint truncated-string bounds (sstat=) alongside the long
-    // bounds — the string-pruning half of the census
-    val docs = Tables.documents(s, dir).select($"doc_id", $"n_chars")
-      .withColumn("skey", format_string("k%09d", $"doc_id"))
-    val n = docs.count()
-    val w = (n + 7) / 8
-    for (i <- 0L until 8L)
-      ManifestTable.appendWithStats(s,
-        docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w).coalesce(1),
-        root, "doc_id", "n_chars", "skey")
-    val lo = w + 3; val hi = 2 * w + 5 // overlaps slices 1 and 2 only
-    val planned = ManifestTable.plannedFilesForRange(root, "doc_id", lo, hi).size
-    // second stated column: an n_chars range census. The expected
-    // planned count is recomputed by the oracle from the same slice
-    // layout (doc_id // w), so wrong per-column bounds or a broken
-    // overlap test on EITHER column breaks the hash.
-    val (cMin, cMax) = docs.agg(min($"n_chars"), max($"n_chars"))
-      .as[(Long, Long)].head()
-    val cHi = cMin + (cMax - cMin) / 8
-    val plannedChars =
-      ManifestTable.plannedFilesForRange(root, "n_chars", cMin, cHi).size
-    val charsSum = ManifestTable.readRange(s, root, "n_chars", cMin, cHi)
-      .agg(coalesce(sum($"doc_id"), lit(0L))).as[Long].head()
-    // string-keyed census: the same 2-slice window addressed through
-    // the string shadow key — recorded sstat bounds must plan exactly
-    // the slices the oracle re-derives, and the residual-filtered
-    // read must sum the same ids
-    val sLo = f"k$lo%09d"; val sHi = f"k$hi%09d"
-    val plannedStr =
-      ManifestTable.plannedFilesForStringRange(root, "skey", sLo, sHi).size
-    val strSum = ManifestTable.readRangeString(s, root, "skey", sLo, sHi)
-      .agg(coalesce(sum($"doc_id"), lit(0L))).as[Long].head()
-    val res = ManifestTable.readRange(s, root, "doc_id", lo, hi)
-      .agg(count(lit(1)).as("n_rows"), sum($"n_chars").as("sum_chars"))
-      .select(lit(8L).as("n_files"), lit(planned.toLong).as("n_planned"),
-        $"n_rows", $"sum_chars",
-        lit(plannedChars.toLong).as("n_planned_chars"),
-        lit(charsSum).as("sum_ids_chars"),
-        lit(plannedStr.toLong).as("n_planned_str"),
-        lit(strSum).as("sum_ids_str"))
-    StreamReplay.finish(s, qname = "", root)(res)
-  }
+  private def sinkManifestPruned(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-prune") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      // skey: a zero-padded STRING shadow of doc_id, so the slices carry
+      // disjoint truncated-string bounds (sstat=) alongside the long
+      // bounds — the string-pruning half of the census
+      val docs = Tables.documents(s, dir).select($"doc_id", $"n_chars")
+        .withColumn("skey", format_string("k%09d", $"doc_id"))
+      val n = docs.count()
+      val w = (n + 7) / 8
+      for (i <- 0L until 8L)
+        ManifestTable.appendWithStats(s,
+          docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w).coalesce(1),
+          root, "doc_id", "n_chars", "skey")
+      val lo = w + 3; val hi = 2 * w + 5 // overlaps slices 1 and 2 only
+      val planned = ManifestTable.plannedFilesForRange(root, "doc_id", lo, hi).size
+      // second stated column: an n_chars range census. The expected
+      // planned count is recomputed by the oracle from the same slice
+      // layout (doc_id // w), so wrong per-column bounds or a broken
+      // overlap test on EITHER column breaks the hash.
+      val (cMin, cMax) = docs.agg(min($"n_chars"), max($"n_chars"))
+        .as[(Long, Long)].head()
+      val cHi = cMin + (cMax - cMin) / 8
+      val plannedChars =
+        ManifestTable.plannedFilesForRange(root, "n_chars", cMin, cHi).size
+      val charsSum = ManifestTable.readRange(s, root, "n_chars", cMin, cHi)
+        .agg(coalesce(sum($"doc_id"), lit(0L))).as[Long].head()
+      // string-keyed census: the same 2-slice window addressed through
+      // the string shadow key — recorded sstat bounds must plan exactly
+      // the slices the oracle re-derives, and the residual-filtered
+      // read must sum the same ids
+      val sLo = f"k$lo%09d"; val sHi = f"k$hi%09d"
+      val plannedStr =
+        ManifestTable.plannedFilesForStringRange(root, "skey", sLo, sHi).size
+      val strSum = ManifestTable.readRangeString(s, root, "skey", sLo, sHi)
+        .agg(coalesce(sum($"doc_id"), lit(0L))).as[Long].head()
+      ManifestTable.readRange(s, root, "doc_id", lo, hi)
+        .agg(count(lit(1)).as("n_rows"), sum($"n_chars").as("sum_chars"))
+        .select(lit(8L).as("n_files"), lit(planned.toLong).as("n_planned"),
+          $"n_rows", $"sum_chars",
+          lit(plannedChars.toLong).as("n_planned_chars"),
+          lit(charsSum).as("sum_ids_chars"),
+          lit(plannedStr.toLong).as("n_planned_str"),
+          lit(strSum).as("sum_ids_str"))
+    }
 
   private val sinkManifestPrunedSql =
     """WITH w AS (SELECT (COUNT(*) + 7) // 8 AS w FROM documents),
@@ -214,34 +201,32 @@ object Pipeline {
     * nothing. Scale shape: one predicate-pushed scan plans the
     * affected files, the rewrite touches only their rows, commit
     * metadata is O(live files). */
-  private def sinkManifestDelete(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-del").toFile.getPath
-    val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
-    val n = docs.count()
-    val w = (n + 3) / 4
-    for (i <- 0L until 4L)
-      ManifestTable.appendWithStats(s,
-        docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w).coalesce(1),
-        root, "doc_id")
-    val preV = ManifestTable.latestVersion(root).get
-    val dv = ManifestTable.deleteWhere(s, root,
-      $"doc_id" >= 2 * w && $"doc_id" % 2 === 0, statCols = Seq("doc_id"))
-    require(dv.contains(preV + 1), s"delete must commit exactly version ${preV + 1}")
-    require(ManifestTable.plannedFilesForRange(root, "doc_id", 0, 1).size == 1,
-      "delete rewrote (or dropped the stats of) a file it did not touch")
-    require(ManifestTable.deleteWhere(s, root, $"doc_id" < 0).isEmpty,
-      "a delete matching nothing must not commit a version")
-    def aggOf(df: DataFrame, phase: String) =
-      df.agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
-        .select(lit(phase).as("phase"), $"n_docs", $"sum_chars")
-    val res = aggOf(ManifestTable.read(s, root, Some(preV)), "pre")
-      .unionAll(aggOf(ManifestTable.read(s, root), "post"))
-      .orderBy($"phase")
-    StreamReplay.finish(s, qname = "", root)(res)
-  }
+  private def sinkManifestDelete(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-del") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
+      val n = docs.count()
+      val w = (n + 3) / 4
+      for (i <- 0L until 4L)
+        ManifestTable.appendWithStats(s,
+          docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w).coalesce(1),
+          root, "doc_id")
+      val preV = ManifestTable.latestVersion(root).get
+      val dv = ManifestTable.deleteWhere(s, root,
+        $"doc_id" >= 2 * w && $"doc_id" % 2 === 0, statCols = Seq("doc_id"))
+      require(dv.contains(preV + 1), s"delete must commit exactly version ${preV + 1}")
+      require(ManifestTable.plannedFilesForRange(root, "doc_id", 0, 1).size == 1,
+        "delete rewrote (or dropped the stats of) a file it did not touch")
+      require(ManifestTable.deleteWhere(s, root, $"doc_id" < 0).isEmpty,
+        "a delete matching nothing must not commit a version")
+      def aggOf(df: DataFrame, phase: String) =
+        df.agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
+          .select(lit(phase).as("phase"), $"n_docs", $"sum_chars")
+      aggOf(ManifestTable.read(s, root, Some(preV)), "pre")
+        .unionAll(aggOf(ManifestTable.read(s, root), "post"))
+        .orderBy($"phase")
+    }
 
   private val sinkManifestDeleteSql =
     """WITH w AS (SELECT (COUNT(*) + 3) // 4 AS w FROM documents)
@@ -271,43 +256,41 @@ object Pipeline {
     * the predicate. Scale shape: the mask is a broadcast anti-join on
     * (file, row position) applied in-scan — no shuffle, no rewrite,
     * O(deleted) state. */
-  private def sinkManifestDv(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-dv").toFile.getPath
-    val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
-    val n = docs.count()
-    val w = (n + 3) / 4
-    for (i <- 0L until 4L)
-      ManifestTable.appendWithStats(s,
-        docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w).coalesce(1),
-        root, "doc_id")
-    val preV = ManifestTable.latestVersion(root).get
-    val v = ManifestTable.deleteWhere(s, root, $"doc_id" % 97 === 0,
-      statCols = Seq("doc_id"), dvFraction = 0.10)
-    require(v.contains(preV + 1), s"DV delete must commit exactly version ${preV + 1}")
-    val lines = scala.jdk.CollectionConverters.ListHasAsScala(
-      java.nio.file.Files.readAllLines(java.nio.file.Paths.get(
-        root, "_manifest", s"v${preV + 1}.manifest"))).asScala.toSeq
-    require(lines.exists(_.startsWith("dv=")),
-      "sparse delete must commit deletion-vector masks")
-    require(!lines.exists(l => l.startsWith("add=") || l.startsWith("remove=")),
-      "a DV delete must stage no data files and rewrite none — " +
-        "committed bytes must be O(matched rows)")
-    val expectGone = (0L until n).count(_ % 97 == 0)
-    require(ManifestTable.countMeta(root).contains(n - expectGone),
-      "metadata-only COUNT(*) must subtract the mask cardinality")
-    require(ManifestTable.plannedFilesForRange(root, "doc_id", 0, 1).size == 1,
-      "DV delete must leave every file's column stats prunable")
-    def aggOf(df: DataFrame, phase: String) =
-      df.agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
-        .select(lit(phase).as("phase"), $"n_docs", $"sum_chars")
-    val res = aggOf(ManifestTable.read(s, root, Some(preV)), "pre")
-      .unionAll(aggOf(ManifestTable.read(s, root), "post"))
-      .orderBy($"phase")
-    StreamReplay.finish(s, qname = "", root)(res)
-  }
+  private def sinkManifestDv(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-dv") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
+      val n = docs.count()
+      val w = (n + 3) / 4
+      for (i <- 0L until 4L)
+        ManifestTable.appendWithStats(s,
+          docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w).coalesce(1),
+          root, "doc_id")
+      val preV = ManifestTable.latestVersion(root).get
+      val v = ManifestTable.deleteWhere(s, root, $"doc_id" % 97 === 0,
+        statCols = Seq("doc_id"), dvFraction = 0.10)
+      require(v.contains(preV + 1), s"DV delete must commit exactly version ${preV + 1}")
+      val lines = scala.jdk.CollectionConverters.ListHasAsScala(
+        java.nio.file.Files.readAllLines(java.nio.file.Paths.get(
+          root, "_manifest", s"v${preV + 1}.manifest"))).asScala.toSeq
+      require(lines.exists(_.startsWith("dv=")),
+        "sparse delete must commit deletion-vector masks")
+      require(!lines.exists(l => l.startsWith("add=") || l.startsWith("remove=")),
+        "a DV delete must stage no data files and rewrite none — " +
+          "committed bytes must be O(matched rows)")
+      val expectGone = (0L until n).count(_ % 97 == 0)
+      require(ManifestTable.countMeta(root).contains(n - expectGone),
+        "metadata-only COUNT(*) must subtract the mask cardinality")
+      require(ManifestTable.plannedFilesForRange(root, "doc_id", 0, 1).size == 1,
+        "DV delete must leave every file's column stats prunable")
+      def aggOf(df: DataFrame, phase: String) =
+        df.agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
+          .select(lit(phase).as("phase"), $"n_docs", $"sum_chars")
+      aggOf(ManifestTable.read(s, root, Some(preV)), "pre")
+        .unionAll(aggOf(ManifestTable.read(s, root), "post"))
+        .orderBy($"phase")
+    }
 
   private val sinkManifestDvSql =
     """SELECT 'pre' AS phase, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -332,52 +315,50 @@ object Pipeline {
     * Scale shape: executors write straight into the staging dir
     * (zero driver data movement), the driver commits O(files)
     * metadata once. */
-  private def sinkManifestDsv2Write(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-w").toFile.getPath
-    val docs = Tables.documents(s, dir).select($"doc_id", $"n_chars")
-    val n = docs.count()
-    docs.repartitionByRange(4, $"doc_id")
-      .write.format("graft-manifest")
-      .option("writeSchema", "doc_id BIGINT, n_chars BIGINT")
-      .mode("append").save(root)
-    require(ManifestTable.latestVersion(root).contains(0L),
-      "v2 batch write must land as ONE atomic commit")
-    require(ManifestTable.countMeta(root).contains(n),
-      "write-side rows= stats must make COUNT(*) metadata-only")
-    val w = (n + 3) / 4
-    require(ManifestTable.plannedFilesForRange(root, "doc_id", 0, w / 2).size == 1,
-      "write-side bounds must prune a 1-slice range to 1 of 4 files")
-    // second append (schema inferred from the table), then the pruned
-    // DSv2 read: pushed range filter plans the stats census only
-    docs.filter($"doc_id" < 3).select($"doc_id" + n as "doc_id", $"n_chars")
-      .coalesce(1)
-      .write.format("graft-manifest").mode("append").save(root)
-    val scan = s.read.format("graft-manifest")
-      .schema(ManifestTable.read(s, root).schema).load(root)
-      .filter($"doc_id" >= 0L && $"doc_id" < w)
-    require(scan.rdd.getNumPartitions == 1,
-      "pushed range filter must plan only the overlapping file")
-    // materialize the ranged census NOW: the scan plans lazily against
-    // the LATEST snapshot, and the overwrite below is about to reset it
-    val (rangedN, rangedSum) = scan
-      .agg(count(lit(1)), sum($"n_chars")).as[(Long, Long)].head()
-    // overwrite = forward reset commit; the pre-overwrite snapshot
-    // still time-travels
-    docs.limit(0).write.format("graft-manifest").mode("overwrite").save(root)
-    require(ManifestTable.snapshotFiles(root).isEmpty, "overwrite must reset")
-    require(ManifestTable.read(s, root, Some(1L)).count() == n + 3,
-      "pre-overwrite snapshot must still time-travel")
-    val res = ManifestTable.read(s, root, Some(1L))
-      .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
-      .select(lit("full").as("phase"), $"n_docs", $"sum_chars")
-      .unionAll(Seq(("ranged", rangedN, rangedSum))
-        .toDF("phase", "n_docs", "sum_chars"))
-      .orderBy($"phase")
-    StreamReplay.finish(s, qname = "", root)(res)
-  }
+  private def sinkManifestDsv2Write(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-w") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val docs = Tables.documents(s, dir).select($"doc_id", $"n_chars")
+      val n = docs.count()
+      docs.repartitionByRange(4, $"doc_id")
+        .write.format("graft-manifest")
+        .option("writeSchema", "doc_id BIGINT, n_chars BIGINT")
+        .mode("append").save(root)
+      require(ManifestTable.latestVersion(root).contains(0L),
+        "v2 batch write must land as ONE atomic commit")
+      require(ManifestTable.countMeta(root).contains(n),
+        "write-side rows= stats must make COUNT(*) metadata-only")
+      val w = (n + 3) / 4
+      require(ManifestTable.plannedFilesForRange(root, "doc_id", 0, w / 2).size == 1,
+        "write-side bounds must prune a 1-slice range to 1 of 4 files")
+      // second append (schema inferred from the table), then the pruned
+      // DSv2 read: pushed range filter plans the stats census only
+      docs.filter($"doc_id" < 3).select($"doc_id" + n as "doc_id", $"n_chars")
+        .coalesce(1)
+        .write.format("graft-manifest").mode("append").save(root)
+      val scan = s.read.format("graft-manifest")
+        .schema(ManifestTable.read(s, root).schema).load(root)
+        .filter($"doc_id" >= 0L && $"doc_id" < w)
+      require(scan.rdd.getNumPartitions == 1,
+        "pushed range filter must plan only the overlapping file")
+      // materialize the ranged census NOW: the scan plans lazily against
+      // the LATEST snapshot, and the overwrite below is about to reset it
+      val (rangedN, rangedSum) = scan
+        .agg(count(lit(1)), sum($"n_chars")).as[(Long, Long)].head()
+      // overwrite = forward reset commit; the pre-overwrite snapshot
+      // still time-travels
+      docs.limit(0).write.format("graft-manifest").mode("overwrite").save(root)
+      require(ManifestTable.snapshotFiles(root).isEmpty, "overwrite must reset")
+      require(ManifestTable.read(s, root, Some(1L)).count() == n + 3,
+        "pre-overwrite snapshot must still time-travel")
+      ManifestTable.read(s, root, Some(1L))
+        .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
+        .select(lit("full").as("phase"), $"n_docs", $"sum_chars")
+        .unionAll(Seq(("ranged", rangedN, rangedSum))
+          .toDF("phase", "n_docs", "sum_chars"))
+        .orderBy($"phase")
+    }
 
   private val sinkManifestDsv2WriteSql =
     """WITH w AS (SELECT (COUNT(*) + 3) // 4 AS w FROM documents)
@@ -402,48 +383,46 @@ object Pipeline {
     * the logical→physical indirection, and time travel BEFORE the
     * rename presents the old name. Emitted pre/post aggregates
     * hash-match DuckDB replaying both snapshots. */
-  private def sinkManifestRename(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-ren").toFile.getPath
-    val docs = Tables.documents(s, dir).select($"doc_id", $"n_chars")
-    val n = docs.count()
-    val w = (n + 3) / 4
-    for (i <- 0L until 4L)
+  private def sinkManifestRename(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-ren") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val docs = Tables.documents(s, dir).select($"doc_id", $"n_chars")
+      val n = docs.count()
+      val w = (n + 3) / 4
+      for (i <- 0L until 4L)
+        ManifestTable.appendWithStats(s,
+          docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w).coalesce(1),
+          root, "doc_id")
+      val preV = ManifestTable.latestVersion(root).get
+      val filesBefore = ManifestTable.snapshotFiles(root).sorted
+      val rv = ManifestTable.renameColumn(s, root, "doc_id", "document_id")
+      require(rv == preV + 1, "rename must commit exactly one version")
+      require(ManifestTable.snapshotFiles(root).sorted == filesBefore,
+        "rename must be metadata-only: the live file set changed")
+      require(ManifestTable.read(s, root).columns.toSeq ==
+        Seq("document_id", "n_chars"), "rename did not surface in reads")
+      // post-rename append through the logical name (3 shifted echo rows)
       ManifestTable.appendWithStats(s,
-        docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w).coalesce(1),
-        root, "doc_id")
-    val preV = ManifestTable.latestVersion(root).get
-    val filesBefore = ManifestTable.snapshotFiles(root).sorted
-    val rv = ManifestTable.renameColumn(s, root, "doc_id", "document_id")
-    require(rv == preV + 1, "rename must commit exactly one version")
-    require(ManifestTable.snapshotFiles(root).sorted == filesBefore,
-      "rename must be metadata-only: the live file set changed")
-    require(ManifestTable.read(s, root).columns.toSeq ==
-      Seq("document_id", "n_chars"), "rename did not surface in reads")
-    // post-rename append through the logical name (3 shifted echo rows)
-    ManifestTable.appendWithStats(s,
-      docs.filter($"doc_id" < 3).select(
-        ($"doc_id" + n).as("document_id"), $"n_chars").coalesce(1),
-      root, "document_id")
-    // stats pruning is live on the RENAMED column: a low range plans
-    // exactly slice 0 (the appended file's ids start at n)
-    require(ManifestTable.plannedFilesForRange(root, "document_id", 0, 10).size == 1,
-      "stats pruning must survive the rename (physical-keyed bounds)")
-    // time travel across the rename presents the OLD name
-    val pre = ManifestTable.read(s, root, Some(preV))
-    require(pre.columns.toSeq == Seq("doc_id", "n_chars"),
-      "time travel must present the pre-rename schema")
-    val res = pre
-      .agg(count(lit(1)).as("n_docs"), sum($"doc_id").as("sum_ids"))
-      .select(lit("pre").as("phase"), $"n_docs", $"sum_ids")
-      .unionAll(ManifestTable.read(s, root)
-        .agg(count(lit(1)).as("n_docs"), sum($"document_id").as("sum_ids"))
-        .select(lit("post").as("phase"), $"n_docs", $"sum_ids"))
-      .orderBy($"phase")
-    StreamReplay.finish(s, qname = "", root)(res)
-  }
+        docs.filter($"doc_id" < 3).select(
+          ($"doc_id" + n).as("document_id"), $"n_chars").coalesce(1),
+        root, "document_id")
+      // stats pruning is live on the RENAMED column: a low range plans
+      // exactly slice 0 (the appended file's ids start at n)
+      require(ManifestTable.plannedFilesForRange(root, "document_id", 0, 10).size == 1,
+        "stats pruning must survive the rename (physical-keyed bounds)")
+      // time travel across the rename presents the OLD name
+      val pre = ManifestTable.read(s, root, Some(preV))
+      require(pre.columns.toSeq == Seq("doc_id", "n_chars"),
+        "time travel must present the pre-rename schema")
+      pre
+        .agg(count(lit(1)).as("n_docs"), sum($"doc_id").as("sum_ids"))
+        .select(lit("pre").as("phase"), $"n_docs", $"sum_ids")
+        .unionAll(ManifestTable.read(s, root)
+          .agg(count(lit(1)).as("n_docs"), sum($"document_id").as("sum_ids"))
+          .select(lit("post").as("phase"), $"n_docs", $"sum_ids"))
+        .orderBy($"phase")
+    }
 
   private val sinkManifestRenameSql =
     """SELECT 'pre' AS phase, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -467,54 +446,44 @@ object Pipeline {
     * dropped interval, a double-consumed version, or a feed that
     * leaked the duplicate deliveries all break the hash. Feed cost is
     * O(versions polled) manifest lines, never O(history). */
-  private def sinkManifestChangefeed(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.sources.ManifestTable
-    val ev = Tables.events(s, dir)
-      .select($"event_id", $"event_type", QueryDef.cents($"value").as("value_cents"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-cdf").toString
-    ev.repartition(8).write.mode("overwrite").parquet(s"$root/src")
-    val table = s"$root/table"
-    val mirror = s"$root/mirror"
-    var cursor = -1L
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 2)
-      .parquet(s"$root/src")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        val first = ManifestTable.appendIdempotent(s, batch.toDF(), table, "ev", batchId)
-        require(first.isDefined, s"batch $batchId skipped on first delivery")
-        // the post-commit-crash retry: a no-op upstream…
-        val dup = ManifestTable.appendIdempotent(s, batch.toDF(), table, "ev", batchId)
-        require(dup.isEmpty, s"duplicate batch $batchId committed twice")
-        // …and the consumer drains the feed up to the latest version
-        val latest = ManifestTable.latestVersion(table).get
-        if (latest > cursor) {
-          ManifestTable.append(s,
-            ManifestTable.readSince(s, table, cursor, Some(latest)), mirror)
-          cursor = latest
-        }
-        // the duplicate delivery must have added NOTHING to the feed
-        require(ManifestTable.addedFilesSince(table, cursor).isEmpty,
-          s"feed not drained after batch $batchId")
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    if (!q.awaitTermination(300000)) {
-      q.stop()
-      throw new IllegalStateException("sink_manifest_changefeed: stream stalled")
-    }
-    StreamReplay.finish(s, qname = "", root)(
+  private def sinkManifestChangefeed(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-cdf") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val ev = Tables.events(s, dir)
+        .select($"event_id", $"event_type", QueryDef.cents($"value").as("value_cents"))
+      ev.repartition(8).write.mode("overwrite").parquet(s"$root/src")
+      val table = s"$root/table"
+      val mirror = s"$root/mirror"
+      var cursor = -1L
+      StreamReplay.drain("sink_manifest_changefeed", root)(s.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(s"$root/src")
+        .writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+                         batchId: Long) =>
+          val first = ManifestTable.appendIdempotent(s, batch.toDF(), table, "ev", batchId)
+          require(first.isDefined, s"batch $batchId skipped on first delivery")
+          // the post-commit-crash retry: a no-op upstream…
+          val dup = ManifestTable.appendIdempotent(s, batch.toDF(), table, "ev", batchId)
+          require(dup.isEmpty, s"duplicate batch $batchId committed twice")
+          // …and the consumer drains the feed up to the latest version
+          val latest = ManifestTable.latestVersion(table).get
+          if (latest > cursor) {
+            ManifestTable.append(s,
+              ManifestTable.readSince(s, table, cursor, Some(latest)), mirror)
+            cursor = latest
+          }
+          // the duplicate delivery must have added NOTHING to the feed
+          require(ManifestTable.addedFilesSince(table, cursor).isEmpty,
+            s"feed not drained after batch $batchId")
+          ()
+        })
       ManifestTable.read(s, mirror)
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n_events"), sum($"value_cents").as("sum_cents"))
-        .orderBy($"event_type"))
-  }
+        .orderBy($"event_type")
+    }
 
   private val sinkManifestChangefeedSql =
     """SELECT event_type, COUNT(*) AS n_events,
@@ -537,48 +506,46 @@ object Pipeline {
     * does the emitted dropped-count census. Scale shape: per commit
     * the consumer touches O(feed) rows + one hash equi-join against
     * the curated table; nothing rescans the staging history. */
-  private def dedupChangefeedE2e(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-cdf-dedup").toFile.getPath
-    val staging = s"$root/staging"
-    val curated = s"$root/curated"
-    val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars", $"text")
-    val n = docs.count()
-    var cursor = -1L
-    for (i <- 0 until 4) {
-      val fresh = docs.filter($"doc_id" % 4 === i)
-      val batch =
-        if (i == 0) fresh
-        else fresh.unionAll(docs.filter($"doc_id" % 4 === i - 1)
-          .withColumn("doc_id", $"doc_id" + 10L * n)) // re-crawl: same text, new id
-      ManifestTable.append(s, batch, staging)
-      val latest = ManifestTable.latestVersion(staging).get
-      val feed = ManifestTable.readSince(s, staging, cursor, Some(latest))
-        .withColumn("h", md5($"text"))
-      val firstInBatch = feed
-        .withColumn("rk", row_number().over(
-          Window.partitionBy($"h").orderBy($"doc_id")))
-        .filter($"rk" === 1).drop("rk")
-      val novel =
-        if (ManifestTable.latestVersion(curated).isEmpty) firstInBatch
-        else firstInBatch.join(
-          ManifestTable.read(s, curated).select(md5($"text").as("h")).distinct(),
-          Seq("h"), "left_anti")
-      ManifestTable.append(s, novel.drop("h"), curated)
-      cursor = latest
-    }
-    val dropped = ManifestTable.read(s, staging).count() -
-      ManifestTable.read(s, curated).count()
-    StreamReplay.finish(s, qname = "", root)(
+  private def dedupChangefeedE2e(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-cdf-dedup") { root =>
+      import s.implicits._
+      import org.apache.spark.sql.expressions.Window
+      import graft.sources.ManifestTable
+      val staging = s"$root/staging"
+      val curated = s"$root/curated"
+      val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars", $"text")
+      val n = docs.count()
+      var cursor = -1L
+      for (i <- 0 until 4) {
+        val fresh = docs.filter($"doc_id" % 4 === i)
+        val batch =
+          if (i == 0) fresh
+          else fresh.unionAll(docs.filter($"doc_id" % 4 === i - 1)
+            .withColumn("doc_id", $"doc_id" + 10L * n)) // re-crawl: same text, new id
+        ManifestTable.append(s, batch, staging)
+        val latest = ManifestTable.latestVersion(staging).get
+        val feed = ManifestTable.readSince(s, staging, cursor, Some(latest))
+          .withColumn("h", md5($"text"))
+        val firstInBatch = feed
+          .withColumn("rk", row_number().over(
+            Window.partitionBy($"h").orderBy($"doc_id")))
+          .filter($"rk" === 1).drop("rk")
+        val novel =
+          if (ManifestTable.latestVersion(curated).isEmpty) firstInBatch
+          else firstInBatch.join(
+            ManifestTable.read(s, curated).select(md5($"text").as("h")).distinct(),
+            Seq("h"), "left_anti")
+        ManifestTable.append(s, novel.drop("h"), curated)
+        cursor = latest
+      }
+      val dropped = ManifestTable.read(s, staging).count() -
+        ManifestTable.read(s, curated).count()
       ManifestTable.read(s, curated)
         .groupBy($"source")
         .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
         .withColumn("n_dropped", lit(dropped))
-        .orderBy($"source"))
-  }
+        .orderBy($"source")
+    }
 
   // Full delivery-ledger replay: originals arrive in batch doc_id%4,
   // re-crawled copies (same text, id+10n) one batch later. Keep the
@@ -618,43 +585,41 @@ object Pipeline {
     * that the pipeline actually removes them. The emitted per-source
     * aggregate is over the post-erasure table and hash-matches the
     * oracle's filtered scan. */
-  private def sinkManifestGdprE2e(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-gdpr").toFile.getPath
-    val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
-    val n = docs.count()
-    val w = (n + 3) / 4
-    for (i <- 0L until 4L)
-      ManifestTable.append(s,
-        docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w), root)
-    val victim = "src7"
-    val preV = ManifestTable.latestVersion(root).get
-    require(ManifestTable.deleteWhere(s, root, $"source" === victim).isDefined,
-      "nothing deleted — victim source missing from the corpus?")
-    ManifestTable.vacuum(root, keepVersions = 1, minAgeMs = 0)
-    // physical erasure: read EVERY remaining data file directly off
-    // disk — no manifest in the path — and the victim must be gone
-    val diskFiles = Option(new java.io.File(root, "data").listFiles())
-      .getOrElse(Array.empty).filter(_.isDirectory)
-      .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
-      .filter(f => f.getName.endsWith(".parquet")).map(_.getPath)
-    require(diskFiles.nonEmpty, "vacuum erased the whole table")
-    val raw = s.read.parquet(diskFiles.toIndexedSeq: _*)
-    require(raw.filter($"source" === victim).count() == 0,
-      s"GDPR FAILURE: $victim rows physically present after delete+vacuum")
-    // and history is bounded: the pre-delete snapshot no longer folds
-    val preGone =
-      try { ManifestTable.read(s, root, Some(preV)).count(); false }
-      catch { case _: IllegalStateException => true }
-    require(preGone, "pre-delete version still readable after vacuum")
-    StreamReplay.finish(s, qname = "", root)(
+  private def sinkManifestGdprE2e(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-gdpr") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
+      val n = docs.count()
+      val w = (n + 3) / 4
+      for (i <- 0L until 4L)
+        ManifestTable.append(s,
+          docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w), root)
+      val victim = "src7"
+      val preV = ManifestTable.latestVersion(root).get
+      require(ManifestTable.deleteWhere(s, root, $"source" === victim).isDefined,
+        "nothing deleted — victim source missing from the corpus?")
+      ManifestTable.vacuum(root, keepVersions = 1, minAgeMs = 0)
+      // physical erasure: read EVERY remaining data file directly off
+      // disk — no manifest in the path — and the victim must be gone
+      val diskFiles = Option(new java.io.File(root, "data").listFiles())
+        .getOrElse(Array.empty).filter(_.isDirectory)
+        .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
+        .filter(f => f.getName.endsWith(".parquet")).map(_.getPath)
+      require(diskFiles.nonEmpty, "vacuum erased the whole table")
+      val raw = s.read.parquet(diskFiles.toIndexedSeq: _*)
+      require(raw.filter($"source" === victim).count() == 0,
+        s"GDPR FAILURE: $victim rows physically present after delete+vacuum")
+      // and history is bounded: the pre-delete snapshot no longer folds
+      val preGone =
+        try { ManifestTable.read(s, root, Some(preV)).count(); false }
+        catch { case _: IllegalStateException => true }
+      require(preGone, "pre-delete version still readable after vacuum")
       ManifestTable.read(s, root)
         .groupBy($"source")
         .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
-        .orderBy($"source"))
-  }
+        .orderBy($"source")
+    }
 
   private val sinkManifestGdprE2eSql =
     """SELECT source, COUNT(*) AS n_docs,
@@ -680,54 +645,52 @@ object Pipeline {
     * NULL-backfill hit exactly the pre-evolution rows. Scale shape:
     * evolution is O(batch) — no rewrite of existing files, the schema
     * rides the log. */
-  private def sinkManifestSchemaEvo(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-evo").toFile.getPath
-    val docs = Tables.documents(s, dir).select($"doc_id", $"n_chars")
-    val n = docs.count()
-    val w = (n + 1) / 2
-    ManifestTable.appendEvolving(s,
-      docs.filter($"doc_id" < w).coalesce(1), root, "doc_id")
-    val preV = ManifestTable.latestVersion(root).get
-    val evolved = docs.filter($"doc_id" >= w)
-      .withColumn("n_tokens", expr("n_chars div 5")).coalesce(1)
-    val evoV = ManifestTable.appendEvolving(s, evolved, root, "doc_id", "n_tokens")
-    require(evoV == preV + 1, "evolution must be ONE commit")
-    // latest: three columns, legacy rows NULL-backfilled, nothing rewritten
-    val latest = ManifestTable.read(s, root)
-    require(latest.columns.sameElements(Array("doc_id", "n_chars", "n_tokens")),
-      s"evolved read lost columns: ${latest.columns.mkString(",")}")
-    // time travel: the pre-evolution snapshot presents the OLD schema
-    val pre = ManifestTable.read(s, root, Some(preV))
-    require(pre.columns.sameElements(Array("doc_id", "n_chars")),
-      s"time travel leaked the evolved schema: ${pre.columns.mkString(",")}")
-    // doc_id pruning still works across the evolution commit…
-    require(ManifestTable.plannedFilesForRange(root, "doc_id", 0, 1).size == 1,
-      "evolution broke file pruning on the original column")
-    // …and the new column's stats exist ONLY from the evolution commit:
-    // a beyond-max range plans exactly the stat-less pre-evolution file
-    val maxTok = evolved.agg(max($"n_tokens")).as[Long].head()
-    require(ManifestTable.plannedFilesForRange(
-        root, "n_tokens", maxTok + 1, maxTok + 100).size == 1,
-      "pre-evolution file (no n_tokens stats) must never be skipped")
-    // an incompatible evolution (type change) must fail BEFORE committing
-    val bad = try {
+  private def sinkManifestSchemaEvo(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-evo") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val docs = Tables.documents(s, dir).select($"doc_id", $"n_chars")
+      val n = docs.count()
+      val w = (n + 1) / 2
       ManifestTable.appendEvolving(s,
-        docs.limit(1).withColumn("n_chars", $"n_chars".cast("string")), root)
-      false
-    } catch { case _: IllegalArgumentException => true }
-    require(bad, "type-changing evolution was accepted")
-    require(ManifestTable.latestVersion(root).contains(evoV),
-      "rejected evolution advanced the log")
-    StreamReplay.finish(s, qname = "", root)(
+        docs.filter($"doc_id" < w).coalesce(1), root, "doc_id")
+      val preV = ManifestTable.latestVersion(root).get
+      val evolved = docs.filter($"doc_id" >= w)
+        .withColumn("n_tokens", expr("n_chars div 5")).coalesce(1)
+      val evoV = ManifestTable.appendEvolving(s, evolved, root, "doc_id", "n_tokens")
+      require(evoV == preV + 1, "evolution must be ONE commit")
+      // latest: three columns, legacy rows NULL-backfilled, nothing rewritten
+      val latest = ManifestTable.read(s, root)
+      require(latest.columns.sameElements(Array("doc_id", "n_chars", "n_tokens")),
+        s"evolved read lost columns: ${latest.columns.mkString(",")}")
+      // time travel: the pre-evolution snapshot presents the OLD schema
+      val pre = ManifestTable.read(s, root, Some(preV))
+      require(pre.columns.sameElements(Array("doc_id", "n_chars")),
+        s"time travel leaked the evolved schema: ${pre.columns.mkString(",")}")
+      // doc_id pruning still works across the evolution commit…
+      require(ManifestTable.plannedFilesForRange(root, "doc_id", 0, 1).size == 1,
+        "evolution broke file pruning on the original column")
+      // …and the new column's stats exist ONLY from the evolution commit:
+      // a beyond-max range plans exactly the stat-less pre-evolution file
+      val maxTok = evolved.agg(max($"n_tokens")).as[Long].head()
+      require(ManifestTable.plannedFilesForRange(
+          root, "n_tokens", maxTok + 1, maxTok + 100).size == 1,
+        "pre-evolution file (no n_tokens stats) must never be skipped")
+      // an incompatible evolution (type change) must fail BEFORE committing
+      val bad = try {
+        ManifestTable.appendEvolving(s,
+          docs.limit(1).withColumn("n_chars", $"n_chars".cast("string")), root)
+        false
+      } catch { case _: IllegalArgumentException => true }
+      require(bad, "type-changing evolution was accepted")
+      require(ManifestTable.latestVersion(root).contains(evoV),
+        "rejected evolution advanced the log")
       latest
         .groupBy(when($"n_tokens".isNull, "v1").otherwise("v2").as("gen"))
         .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"),
           sum(coalesce($"n_tokens", lit(0L))).as("sum_tokens"))
-        .orderBy($"gen"))
-  }
+        .orderBy($"gen")
+    }
 
   private val sinkManifestSchemaEvoSql =
     """WITH w AS (SELECT (COUNT(*) + 1) // 2 AS w FROM documents)
@@ -756,64 +719,62 @@ object Pipeline {
     * per-cell bound, and overlap decision from the raw table. Scale
     * shape: each layout is ONE shuffle + ONE stats-carrying commit
     * (the IVF build path); planning is metadata-only. */
-  private def sinkManifestZorder(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-manifest-zorder").toFile.getPath
-    val zroot = s"$base/z"; val lroot = s"$base/linear"
-    val docs = Tables.documents(s, dir).select($"doc_id", $"n_chars")
-    val (n, cMin, cMax) = docs
-      .agg(count(lit(1)), min($"n_chars"), max($"n_chars"))
-      .as[(Long, Long, Long)].head()
-    val w4 = (n + 3) / 4; val w16 = (n + 15) / 16; val rng = cMax - cMin + 1
-    val bucketed = docs
-      .withColumn("x", expr(s"doc_id div $w4"))
-      .withColumn("y", expr(s"((n_chars - $cMin) * 4) div $rng"))
-    val zRows = bucketed.withColumn("cell",
-      expr("(x % 2) + 2 * (y % 2) + 4 * ((x div 2) % 2) + 8 * ((y div 2) % 2)"))
-      .select($"cell", $"doc_id", $"n_chars")
-    val linRows = bucketed.withColumn("cell", expr(s"doc_id div $w16"))
-      .select($"cell", $"doc_id", $"n_chars")
-    graft.operators.Similarity.buildIvfManifestIndex(s, zRows,
-      (0L until 16L).toArray, zroot, sortCol = "doc_id",
-      statCols = Seq("doc_id", "n_chars"))
-    graft.operators.Similarity.buildIvfManifestIndex(s, linRows,
-      (0L until 16L).toArray, lroot, sortCol = "doc_id",
-      statCols = Seq("doc_id", "n_chars"))
-    // the 2-D rectangle: doc_id buckets 1-2 × n_chars buckets 1-2
-    val xLo = w4; val xHi = 3 * w4 - 1
-    val yLo = cMin + (rng + 3) / 4; val yHi = cMin + (3 * rng - 1) / 4
-    // ONE overlap computation per layout: the census counts and the
-    // files the aggregate reads through must be the same set by
-    // construction, not two copies of the predicate that can drift
-    def plannedFiles(root: String): Seq[String] =
-      ManifestTable.snapshotFilesWithStats(root).collect {
-        case (f, st)
-          if st.get("doc_id").forall { case (mn, mx) => mx >= xLo && mn <= xHi } &&
-            st.get("n_chars").forall { case (mn, mx) => mx >= yLo && mn <= yHi } => f
-      }
-    def live(root: String): Long = ManifestTable.snapshotFiles(root).size.toLong
-    val plannedZ = plannedFiles(zroot)
-    val (pZ, pLin) = (plannedZ.size.toLong, plannedFiles(lroot).size.toLong)
-    require(pZ < pLin,
-      s"Z layout planned $pZ files vs linear $pLin — no 2-D pruning win")
-    // the rectangle aggregate, read THROUGH the planned Z files only
-    // (an all-pruned plan degrades to an empty frame, mirroring the
-    // oracle's COUNT-over-nothing row, not a parquet path error)
-    val rectSrc =
-      if (plannedZ.nonEmpty) s.read.parquet(
-        plannedZ.map(f => new java.io.File(s"$zroot/data", f).getPath): _*)
-      else ManifestTable.read(s, zroot).filter(lit(false))
-    val rect = rectSrc
-      .filter($"doc_id" >= xLo && $"doc_id" <= xHi &&
-        $"n_chars" >= yLo && $"n_chars" <= yHi)
-      .agg(count(lit(1)).as("n_rows"), sum($"n_chars").as("sum_chars"))
-      .select(lit(live(zroot)).as("n_live_z"), lit(pZ).as("n_planned_z"),
-        lit(live(lroot)).as("n_live_linear"), lit(pLin).as("n_planned_linear"),
-        $"n_rows", $"sum_chars")
-    StreamReplay.finish(s, qname = "", base)(rect)
-  }
+  private def sinkManifestZorder(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-zorder") { base =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val zroot = s"$base/z"; val lroot = s"$base/linear"
+      val docs = Tables.documents(s, dir).select($"doc_id", $"n_chars")
+      val (n, cMin, cMax) = docs
+        .agg(count(lit(1)), min($"n_chars"), max($"n_chars"))
+        .as[(Long, Long, Long)].head()
+      val w4 = (n + 3) / 4; val w16 = (n + 15) / 16; val rng = cMax - cMin + 1
+      val bucketed = docs
+        .withColumn("x", expr(s"doc_id div $w4"))
+        .withColumn("y", expr(s"((n_chars - $cMin) * 4) div $rng"))
+      val zRows = bucketed.withColumn("cell",
+        expr("(x % 2) + 2 * (y % 2) + 4 * ((x div 2) % 2) + 8 * ((y div 2) % 2)"))
+        .select($"cell", $"doc_id", $"n_chars")
+      val linRows = bucketed.withColumn("cell", expr(s"doc_id div $w16"))
+        .select($"cell", $"doc_id", $"n_chars")
+      graft.operators.Similarity.buildIvfManifestIndex(s, zRows,
+        (0L until 16L).toArray, zroot, sortCol = "doc_id",
+        statCols = Seq("doc_id", "n_chars"))
+      graft.operators.Similarity.buildIvfManifestIndex(s, linRows,
+        (0L until 16L).toArray, lroot, sortCol = "doc_id",
+        statCols = Seq("doc_id", "n_chars"))
+      // the 2-D rectangle: doc_id buckets 1-2 × n_chars buckets 1-2
+      val xLo = w4; val xHi = 3 * w4 - 1
+      val yLo = cMin + (rng + 3) / 4; val yHi = cMin + (3 * rng - 1) / 4
+      // ONE overlap computation per layout: the census counts and the
+      // files the aggregate reads through must be the same set by
+      // construction, not two copies of the predicate that can drift
+      def plannedFiles(root: String): Seq[String] =
+        ManifestTable.snapshotFilesWithStats(root).collect {
+          case (f, st)
+            if st.get("doc_id").forall { case (mn, mx) => mx >= xLo && mn <= xHi } &&
+              st.get("n_chars").forall { case (mn, mx) => mx >= yLo && mn <= yHi } => f
+        }
+      def live(root: String): Long = ManifestTable.snapshotFiles(root).size.toLong
+      val plannedZ = plannedFiles(zroot)
+      val (pZ, pLin) = (plannedZ.size.toLong, plannedFiles(lroot).size.toLong)
+      require(pZ < pLin,
+        s"Z layout planned $pZ files vs linear $pLin — no 2-D pruning win")
+      // the rectangle aggregate, read THROUGH the planned Z files only
+      // (an all-pruned plan degrades to an empty frame, mirroring the
+      // oracle's COUNT-over-nothing row, not a parquet path error)
+      val rectSrc =
+        if (plannedZ.nonEmpty) s.read.parquet(
+          plannedZ.map(f => new java.io.File(s"$zroot/data", f).getPath): _*)
+        else ManifestTable.read(s, zroot).filter(lit(false))
+      rectSrc
+        .filter($"doc_id" >= xLo && $"doc_id" <= xHi &&
+          $"n_chars" >= yLo && $"n_chars" <= yHi)
+        .agg(count(lit(1)).as("n_rows"), sum($"n_chars").as("sum_chars"))
+        .select(lit(live(zroot)).as("n_live_z"), lit(pZ).as("n_planned_z"),
+          lit(live(lroot)).as("n_live_linear"), lit(pLin).as("n_planned_linear"),
+          $"n_rows", $"sum_chars")
+    }
 
   private val sinkManifestZorderSql =
     """WITH p AS (SELECT COUNT(*) AS n, MIN(n_chars) AS cmin, MAX(n_chars) AS cmax
@@ -866,44 +827,42 @@ object Pipeline {
     * Scale shape: restore is metadata-only — O(target snapshot)
     * manifest lines, zero file copies, pinned-version optimistic
     * concurrency. */
-  private def sinkManifestRestore(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-restore").toFile.getPath
-    val docs = Tables.documents(s, dir).select($"doc_id", $"n_chars")
-    val n = docs.count()
-    val w = (n + 3) / 4
-    for (i <- 0L until 4L)
+  private def sinkManifestRestore(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-restore") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val docs = Tables.documents(s, dir).select($"doc_id", $"n_chars")
+      val n = docs.count()
+      val w = (n + 3) / 4
+      for (i <- 0L until 4L)
+        ManifestTable.appendWithStats(s,
+          docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w).coalesce(1),
+          root, "doc_id", "n_chars")
+      val goodV = ManifestTable.latestVersion(root).get
+      val badV = ManifestTable.deleteWhere(s, root, $"doc_id" % 3 === 0,
+        statCols = Seq("doc_id", "n_chars")).get
+      def aggOf(df: DataFrame, phase: String) =
+        df.agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
+          .select(lit(phase).as("phase"), $"n_docs", $"sum_chars")
+      val bad = aggOf(ManifestTable.read(s, root), "bad")
+      val rv = ManifestTable.restore(s, root, goodV)
+      require(rv == badV + 1, "restore must be exactly ONE new commit")
+      require(ManifestTable.restore(s, root, rv) == rv,
+        "restore to the current version must be a no-op")
+      require(ManifestTable.latestVersion(root).contains(rv),
+        "no-op restore advanced the log")
+      // restored entries verbatim ⇒ stats still prune: slice 0 alone
+      require(ManifestTable.plannedFilesForRange(root, "doc_id", 0, 1).size == 1,
+        "restore dropped the per-file stats")
+      // forward-only log: the mistake is still auditable by time travel
+      require(ManifestTable.read(s, root, Some(badV)).count() < n,
+        "the bad version no longer folds")
+      val restored = aggOf(ManifestTable.read(s, root), "restored")
       ManifestTable.appendWithStats(s,
-        docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w).coalesce(1),
-        root, "doc_id", "n_chars")
-    val goodV = ManifestTable.latestVersion(root).get
-    val badV = ManifestTable.deleteWhere(s, root, $"doc_id" % 3 === 0,
-      statCols = Seq("doc_id", "n_chars")).get
-    def aggOf(df: DataFrame, phase: String) =
-      df.agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
-        .select(lit(phase).as("phase"), $"n_docs", $"sum_chars")
-    val bad = aggOf(ManifestTable.read(s, root), "bad")
-    val rv = ManifestTable.restore(s, root, goodV)
-    require(rv == badV + 1, "restore must be exactly ONE new commit")
-    require(ManifestTable.restore(s, root, rv) == rv,
-      "restore to the current version must be a no-op")
-    require(ManifestTable.latestVersion(root).contains(rv),
-      "no-op restore advanced the log")
-    // restored entries verbatim ⇒ stats still prune: slice 0 alone
-    require(ManifestTable.plannedFilesForRange(root, "doc_id", 0, 1).size == 1,
-      "restore dropped the per-file stats")
-    // forward-only log: the mistake is still auditable by time travel
-    require(ManifestTable.read(s, root, Some(badV)).count() < n,
-      "the bad version no longer folds")
-    val restored = aggOf(ManifestTable.read(s, root), "restored")
-    ManifestTable.appendWithStats(s,
-      docs.filter($"doc_id" < 10).coalesce(1), root, "doc_id", "n_chars")
-    val fin = aggOf(ManifestTable.read(s, root), "zfinal")
-    StreamReplay.finish(s, qname = "", root)(
-      bad.unionAll(restored).unionAll(fin).orderBy($"phase"))
-  }
+        docs.filter($"doc_id" < 10).coalesce(1), root, "doc_id", "n_chars")
+      val fin = aggOf(ManifestTable.read(s, root), "zfinal")
+      bad.unionAll(restored).unionAll(fin).orderBy($"phase")
+    }
 
   private val sinkManifestRestoreSql =
     """SELECT 'bad' AS phase, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -934,47 +893,40 @@ object Pipeline {
     * aggregate is unknowable ⇒ None, caller must scan). The emitted
     * row is built ENTIRELY from the metadata answers; the oracle
     * recomputes each from raw rows + the delete predicate. */
-  private def sinkManifestCountMeta(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-countmeta").toFile.getPath
-    val docs = Tables.documents(s, dir).select($"doc_id", $"n_chars")
-    val n = docs.count()
-    val w = (n + 3) / 4
-    for (i <- 0L until 4L)
-      ManifestTable.appendWithStats(s,
-        docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w).coalesce(1),
-        root, "doc_id", "n_chars")
-    ManifestTable.deleteWhere(s, root,
-      $"doc_id" >= 2 * w && $"doc_id" % 2 === 0,
-      statCols = Seq("doc_id", "n_chars"))
-    val cnt = ManifestTable.countMeta(root).getOrElse(
-      throw new IllegalStateException("countMeta undefined on a stats-only table"))
-    val (idLo, idHi) = ManifestTable.rangeMeta(root, "doc_id").get
-    val (chLo, chHi) = ManifestTable.rangeMeta(root, "n_chars").get
-    // pin exactness against one real read (the zero-read proof — data
-    // dir withheld — lives in the spec, where a read must still fail)
-    require(cnt == ManifestTable.read(s, root).count(),
-      "metadata row count drifted from the data")
-    // fallback contract: one stats-less append ⇒ unknowable ⇒ None
-    val scratch = root + "-scratch"
-    ManifestTable.append(s, docs.limit(5), scratch)
-    require(ManifestTable.countMeta(scratch).isEmpty,
-      "countMeta invented a count for a stats-less commit")
-    require(ManifestTable.rangeMeta(scratch, "doc_id").isEmpty,
-      "rangeMeta invented bounds for a stats-less commit")
-    // release the scratch table; `root` is released by finish below
-    def delRec(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(delRec))
-      f.delete(): Unit
-    }
-    delRec(new java.io.File(scratch))
-    StreamReplay.finish(s, qname = "", root)(
+  private def sinkManifestCountMeta(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-countmeta") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val docs = Tables.documents(s, dir).select($"doc_id", $"n_chars")
+      val n = docs.count()
+      val w = (n + 3) / 4
+      for (i <- 0L until 4L)
+        ManifestTable.appendWithStats(s,
+          docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w).coalesce(1),
+          root, "doc_id", "n_chars")
+      ManifestTable.deleteWhere(s, root,
+        $"doc_id" >= 2 * w && $"doc_id" % 2 === 0,
+        statCols = Seq("doc_id", "n_chars"))
+      val cnt = ManifestTable.countMeta(root).getOrElse(
+        throw new IllegalStateException("countMeta undefined on a stats-only table"))
+      val (idLo, idHi) = ManifestTable.rangeMeta(root, "doc_id").get
+      val (chLo, chHi) = ManifestTable.rangeMeta(root, "n_chars").get
+      // pin exactness against one real read (the zero-read proof — data
+      // dir withheld — lives in the spec, where a read must still fail)
+      require(cnt == ManifestTable.read(s, root).count(),
+        "metadata row count drifted from the data")
+      // fallback contract: one stats-less append ⇒ unknowable ⇒ None
+      // (nested in the replay dir, so the harness releases it with root)
+      val scratch = s"$root/scratch"
+      ManifestTable.append(s, docs.limit(5), scratch)
+      require(ManifestTable.countMeta(scratch).isEmpty,
+        "countMeta invented a count for a stats-less commit")
+      require(ManifestTable.rangeMeta(scratch, "doc_id").isEmpty,
+        "rangeMeta invented bounds for a stats-less commit")
       s.range(1).select(lit(cnt).as("n_rows"),
         lit(idLo).as("min_id"), lit(idHi).as("max_id"),
-        lit(chLo).as("min_chars"), lit(chHi).as("max_chars")))
-  }
+        lit(chLo).as("min_chars"), lit(chHi).as("max_chars"))
+    }
 
   private val sinkManifestCountMetaSql =
     """WITH w AS (SELECT (COUNT(*) + 3) // 4 AS w FROM documents),
@@ -1001,45 +953,43 @@ object Pipeline {
     * from raw rows. Scale shape: build is one codegen'd pass + a
     * metadata-sized (file × word) aggregation; planning is a manifest
     * fold with zero data reads. */
-  private def sinkManifestBloomSkip(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-bloom").toFile.getPath
-    val docs = Tables.documents(s, dir).select($"doc_id", $"n_chars")
-    val n = docs.count()
-    // quality layout in ONE pass + ONE commit (the compactClustered /
-    // IVF-build shape — never a filter+write loop per bucket): range-
-    // partition on n_chars, so each file spans ~the whole doc_id range
-    // — the worst case for min/max bounds and the case blooms fix
-    ManifestTable.appendWithBloom(s,
-      docs.repartitionByRange(8, $"n_chars"), root, "doc_id", "n_chars")
-    val probes = Seq(0L, n / 2, n - 1, n + 7777)
-    val liveFiles = ManifestTable.snapshotFiles(root).size
-    var plannedTotal = 0
-    val rows = probes.map { p =>
-      val planned = ManifestTable.plannedFilesForPoint(root, "doc_id", p).size
-      plannedTotal += planned
-      val hit = ManifestTable.readPoint(s, root, "doc_id", p)
-        .agg(count(lit(1)).as("n"), coalesce(sum($"n_chars"), lit(0L)).as("c"))
-        .as[(Long, Long)].head()
-      val present = if (p < n) 1 else 0
-      require(hit._1 == present,
-        s"bloom lookup of doc $p returned ${hit._1} rows, expected $present " +
-          "(a false NEGATIVE lost a row, or a residual filter is missing)")
-      require(planned >= present && planned <= present + 1,
-        s"doc $p planned $planned of $liveFiles files (present=$present) — " +
-          "the bloom is not pruning (or FP rate blew its budget)")
-      (p, hit._1, hit._2)
+  private def sinkManifestBloomSkip(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-bloom") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val docs = Tables.documents(s, dir).select($"doc_id", $"n_chars")
+      val n = docs.count()
+      // quality layout in ONE pass + ONE commit (the compactClustered /
+      // IVF-build shape — never a filter+write loop per bucket): range-
+      // partition on n_chars, so each file spans ~the whole doc_id range
+      // — the worst case for min/max bounds and the case blooms fix
+      ManifestTable.appendWithBloom(s,
+        docs.repartitionByRange(8, $"n_chars"), root, "doc_id", "n_chars")
+      val probes = Seq(0L, n / 2, n - 1, n + 7777)
+      val liveFiles = ManifestTable.snapshotFiles(root).size
+      var plannedTotal = 0
+      val rows = probes.map { p =>
+        val planned = ManifestTable.plannedFilesForPoint(root, "doc_id", p).size
+        plannedTotal += planned
+        val hit = ManifestTable.readPoint(s, root, "doc_id", p)
+          .agg(count(lit(1)).as("n"), coalesce(sum($"n_chars"), lit(0L)).as("c"))
+          .as[(Long, Long)].head()
+        val present = if (p < n) 1 else 0
+        require(hit._1 == present,
+          s"bloom lookup of doc $p returned ${hit._1} rows, expected $present " +
+            "(a false NEGATIVE lost a row, or a residual filter is missing)")
+        require(planned >= present && planned <= present + 1,
+          s"doc $p planned $planned of $liveFiles files (present=$present) — " +
+            "the bloom is not pruning (or FP rate blew its budget)")
+        (p, hit._1, hit._2)
+      }
+      // the win over a full scan — meaningful once the layout has
+      // enough files that probes cannot trivially cover them
+      if (liveFiles > 4)
+        require(plannedTotal < liveFiles,
+          s"all probes together planned $plannedTotal files — no win over one full scan")
+      rows.toDF("probe_id", "n_rows", "sum_chars").orderBy($"probe_id")
     }
-    // the win over a full scan — meaningful once the layout has
-    // enough files that probes cannot trivially cover them
-    if (liveFiles > 4)
-      require(plannedTotal < liveFiles,
-        s"all probes together planned $plannedTotal files — no win over one full scan")
-    StreamReplay.finish(s, qname = "", root)(
-      rows.toDF("probe_id", "n_rows", "sum_chars").orderBy($"probe_id"))
-  }
 
   private val sinkManifestBloomSkipSql =
     """WITH p AS (SELECT COUNT(*) AS n FROM documents),
@@ -1067,36 +1017,34 @@ object Pipeline {
     * (versions dense 0..4) and the no-op retries. Scale shape: per
     * batch one stats-prunable semi-join plan + O(affected+batch)
     * rewrite; nothing rescans history. */
-  private def sinkManifestMergeStreaming(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-cdc-merge").toFile.getPath
-    val ev = Tables.events(s, dir)
-      .select($"event_id", $"user_id", $"event_type",
-        QueryDef.cents($"value").as("value_cents"))
-    val n = ev.count()
-    val w = (n + 4) / 5
-    for (b <- 0L until 5L) {
-      val batch = ev.filter($"event_id" >= b * w && $"event_id" < (b + 1) * w)
-        .withColumn("rk", row_number().over(
-          Window.partitionBy($"user_id").orderBy($"event_id".desc)))
-        .filter($"rk" === 1).drop("rk")
-      val v = ManifestTable.mergeInto(s, root, batch, "user_id",
-        statCols = Seq("user_id"), txn = Some(("cdc", b)))
-      require(v.contains(b), s"CDC batch $b must commit exactly version $b")
-      // the post-commit-crash retry: same batch, same marker — no-op
-      require(ManifestTable.mergeInto(s, root, batch, "user_id",
-          statCols = Seq("user_id"), txn = Some(("cdc", b))).isEmpty,
-        s"retried CDC batch $b applied twice")
-    }
-    StreamReplay.finish(s, qname = "", root)(
+  private def sinkManifestMergeStreaming(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-cdc-merge") { root =>
+      import s.implicits._
+      import org.apache.spark.sql.expressions.Window
+      import graft.sources.ManifestTable
+      val ev = Tables.events(s, dir)
+        .select($"event_id", $"user_id", $"event_type",
+          QueryDef.cents($"value").as("value_cents"))
+      val n = ev.count()
+      val w = (n + 4) / 5
+      for (b <- 0L until 5L) {
+        val batch = ev.filter($"event_id" >= b * w && $"event_id" < (b + 1) * w)
+          .withColumn("rk", row_number().over(
+            Window.partitionBy($"user_id").orderBy($"event_id".desc)))
+          .filter($"rk" === 1).drop("rk")
+        val v = ManifestTable.mergeInto(s, root, batch, "user_id",
+          statCols = Seq("user_id"), txn = Some(("cdc", b)))
+        require(v.contains(b), s"CDC batch $b must commit exactly version $b")
+        // the post-commit-crash retry: same batch, same marker — no-op
+        require(ManifestTable.mergeInto(s, root, batch, "user_id",
+            statCols = Seq("user_id"), txn = Some(("cdc", b))).isEmpty,
+          s"retried CDC batch $b applied twice")
+      }
       ManifestTable.read(s, root)
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n_users"), sum($"value_cents").as("sum_cents"))
-        .orderBy($"event_type"))
-  }
+        .orderBy($"event_type")
+    }
 
   private val sinkManifestMergeStreamingSql =
     """WITH lastev AS (
@@ -1126,45 +1074,43 @@ object Pipeline {
     * insert all break the hash. Scale shape: one semi-join scan plans
     * the affected files, the rewrite touches only their rows + the
     * batch, commit metadata is O(affected + batch). */
-  private def sinkManifestMerge(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-merge").toFile.getPath
-    val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
-    val n = docs.count()
-    val w = (n + 3) / 4
-    for (i <- 0L until 4L)
-      ManifestTable.appendWithStats(s,
-        docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w).coalesce(1),
-        root, "doc_id")
-    val updates = docs.filter($"doc_id" % 3 === 0 && $"doc_id" >= 2 * w)
-      .select($"doc_id", lit("merged").as("source"), ($"n_chars" + 7L).as("n_chars"))
-    val inserts = docs.filter($"doc_id" % 5 === 0)
-      .select(($"doc_id" + 10L * n).as("doc_id"), lit("fresh").as("source"),
-        $"n_chars")
-    val batch = updates.unionAll(inserts)
-    val preV = ManifestTable.latestVersion(root).get
-    val mv = ManifestTable.mergeInto(s, root, batch, "doc_id",
-      statCols = Seq("doc_id"), txn = Some(("mrg", 1L)))
-    require(mv.contains(preV + 1), "merge must land as exactly one commit")
-    val lines = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(root, "_manifest", s"v${preV + 1}.manifest"))
-    require(!lines.contains("reset"), "merge wrote a replacing commit")
-    val nRemoves = (0 until lines.size).count(i => lines.get(i).startsWith("remove="))
-    require(nRemoves == 2,
-      s"merge rewrote $nRemoves files; only the 2 upper slices hold matches")
-    require(ManifestTable.plannedFilesForRange(root, "doc_id", 0, 1).size == 1,
-      "merge rewrote (or dropped the stats of) a file it did not touch")
-    require(ManifestTable.mergeInto(s, root, batch, "doc_id",
-        statCols = Seq("doc_id"), txn = Some(("mrg", 1L))).isEmpty,
-      "retried MERGE batch applied twice")
-    StreamReplay.finish(s, qname = "", root)(
+  private def sinkManifestMerge(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-merge") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
+      val n = docs.count()
+      val w = (n + 3) / 4
+      for (i <- 0L until 4L)
+        ManifestTable.appendWithStats(s,
+          docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w).coalesce(1),
+          root, "doc_id")
+      val updates = docs.filter($"doc_id" % 3 === 0 && $"doc_id" >= 2 * w)
+        .select($"doc_id", lit("merged").as("source"), ($"n_chars" + 7L).as("n_chars"))
+      val inserts = docs.filter($"doc_id" % 5 === 0)
+        .select(($"doc_id" + 10L * n).as("doc_id"), lit("fresh").as("source"),
+          $"n_chars")
+      val batch = updates.unionAll(inserts)
+      val preV = ManifestTable.latestVersion(root).get
+      val mv = ManifestTable.mergeInto(s, root, batch, "doc_id",
+        statCols = Seq("doc_id"), txn = Some(("mrg", 1L)))
+      require(mv.contains(preV + 1), "merge must land as exactly one commit")
+      val lines = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(root, "_manifest", s"v${preV + 1}.manifest"))
+      require(!lines.contains("reset"), "merge wrote a replacing commit")
+      val nRemoves = (0 until lines.size).count(i => lines.get(i).startsWith("remove="))
+      require(nRemoves == 2,
+        s"merge rewrote $nRemoves files; only the 2 upper slices hold matches")
+      require(ManifestTable.plannedFilesForRange(root, "doc_id", 0, 1).size == 1,
+        "merge rewrote (or dropped the stats of) a file it did not touch")
+      require(ManifestTable.mergeInto(s, root, batch, "doc_id",
+          statCols = Seq("doc_id"), txn = Some(("mrg", 1L))).isEmpty,
+        "retried MERGE batch applied twice")
       ManifestTable.read(s, root)
         .groupBy($"source")
         .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
-        .orderBy($"source"))
-  }
+        .orderBy($"source")
+    }
 
   private val sinkManifestMergeSql =
     """WITH nn AS (SELECT COUNT(*) AS n, (COUNT(*) + 3) // 4 AS w FROM documents),
@@ -1193,46 +1139,44 @@ object Pipeline {
     * matched-count preimage/postimage rows (census required in-key).
     * The emitted per-source aggregate hash-matches the oracle's CASE
     * replay. */
-  private def sinkManifestUpdate(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-upd").toFile.getPath
-    val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
-    val n = docs.count()
-    val w = (n + 3) / 4
-    for (i <- 0L until 4L)
-      ManifestTable.appendWithStats(s,
-        docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w).coalesce(1),
-        root, "doc_id")
-    val nHit = docs.filter($"doc_id" % 3 === 0 && $"doc_id" >= 2 * w).count()
-    val preV = ManifestTable.latestVersion(root).get
-    val uv = ManifestTable.updateWhere(s, root,
-      $"doc_id" % 3 === 0 && $"doc_id" >= 2 * w,
-      Map("n_chars" -> ($"n_chars" + 1000L), "source" -> lit("rescored")),
-      statCols = Seq("doc_id"), cdf = true)
-    require(uv.contains(preV + 1), "update must land as exactly one commit")
-    val lines = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(root, "_manifest", s"v${preV + 1}.manifest"))
-    require(!lines.contains("reset"), "update wrote a replacing commit")
-    require((0 until lines.size).count(i => lines.get(i).startsWith("remove=")) == 2,
-      "update rewrote files outside the 2 matched slices")
-    require(ManifestTable.plannedFilesForRange(root, "doc_id", 0, 1).size == 1,
-      "update rewrote (or dropped the stats of) a file it did not touch")
-    require(ManifestTable.updateWhere(s, root, $"doc_id" < 0,
-        Map("n_chars" -> lit(0L))).isEmpty,
-      "an update matching nothing must not commit")
-    val census = ManifestTable.readChanges(s, root, preV, uv)
-      .groupBy($"_change_type").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    require(census == Map("update_preimage" -> nHit, "update_postimage" -> nHit),
-      s"cdf census mismatch: $census vs hits=$nHit")
-    StreamReplay.finish(s, qname = "", root)(
+  private def sinkManifestUpdate(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-upd") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
+      val n = docs.count()
+      val w = (n + 3) / 4
+      for (i <- 0L until 4L)
+        ManifestTable.appendWithStats(s,
+          docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w).coalesce(1),
+          root, "doc_id")
+      val nHit = docs.filter($"doc_id" % 3 === 0 && $"doc_id" >= 2 * w).count()
+      val preV = ManifestTable.latestVersion(root).get
+      val uv = ManifestTable.updateWhere(s, root,
+        $"doc_id" % 3 === 0 && $"doc_id" >= 2 * w,
+        Map("n_chars" -> ($"n_chars" + 1000L), "source" -> lit("rescored")),
+        statCols = Seq("doc_id"), cdf = true)
+      require(uv.contains(preV + 1), "update must land as exactly one commit")
+      val lines = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(root, "_manifest", s"v${preV + 1}.manifest"))
+      require(!lines.contains("reset"), "update wrote a replacing commit")
+      require((0 until lines.size).count(i => lines.get(i).startsWith("remove=")) == 2,
+        "update rewrote files outside the 2 matched slices")
+      require(ManifestTable.plannedFilesForRange(root, "doc_id", 0, 1).size == 1,
+        "update rewrote (or dropped the stats of) a file it did not touch")
+      require(ManifestTable.updateWhere(s, root, $"doc_id" < 0,
+          Map("n_chars" -> lit(0L))).isEmpty,
+        "an update matching nothing must not commit")
+      val census = ManifestTable.readChanges(s, root, preV, uv)
+        .groupBy($"_change_type").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      require(census == Map("update_preimage" -> nHit, "update_postimage" -> nHit),
+        s"cdf census mismatch: $census vs hits=$nHit")
       ManifestTable.read(s, root)
         .groupBy($"source")
         .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
-        .orderBy($"source"))
-  }
+        .orderBy($"source")
+    }
 
   private val sinkManifestUpdateSql =
     """WITH nn AS (SELECT (COUNT(*) + 3) // 4 AS w FROM documents),
@@ -1258,50 +1202,48 @@ object Pipeline {
     * range-prunable, and a second call finds nothing to pack and
     * commits NOTHING. The emitted aggregate hash-matches the plain
     * corpus oracle: compaction moved every row and lost none. */
-  private def sinkManifestCompactSmall(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-pack").toFile.getPath
-    val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
-    val n = docs.count()
-    val h = n / 2
-    ManifestTable.appendWithStats(s,
-      docs.filter($"doc_id" < h).coalesce(1), root, "doc_id")
-    val w = (n - h + 5) / 6
-    for (i <- 0L until 6L)
+  private def sinkManifestCompactSmall(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-pack") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
+      val n = docs.count()
+      val h = n / 2
       ManifestTable.appendWithStats(s,
-        docs.filter($"doc_id" >= h + i * w && $"doc_id" < h + (i + 1) * w)
-          .coalesce(1), root, "doc_id")
-    val entriesBefore = ManifestTable.snapshotFilesWithStats(root)
-    require(entriesBefore.size == 7, "expected 1 big + 6 small files")
-    val bigRel = entriesBefore.head._1 // first commit's file
-    val bigLen = new java.io.File(s"$root/data/$bigRel").length()
-    val preV = ManifestTable.latestVersion(root).get
-    val cv = ManifestTable.compactSmall(s, root, minBytes = bigLen,
-      targetFiles = 1, statCols = Seq("doc_id"))
-    require(cv.contains(preV + 1), "bin-pack must land as exactly one commit")
-    val lines = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(root, "_manifest", s"v${preV + 1}.manifest"))
-    require(!lines.contains("reset"), "bin-pack wrote a replacing commit")
-    require((0 until lines.size).count(i => lines.get(i).startsWith("remove=")) == 6,
-      "bin-pack must remove exactly the 6 small files")
-    val after = ManifestTable.snapshotFilesWithStats(root)
-    require(after.size == 2, s"expected big + packed, got ${after.size}")
-    require(after.exists { case (rel, stats) =>
-        rel == bigRel && stats == entriesBefore.head._2 },
-      "the healthy file's entry (path + stats) must survive verbatim")
-    require(ManifestTable.plannedFilesForRange(root, "doc_id", 0, 1).size == 1 &&
-        ManifestTable.plannedFilesForRange(root, "doc_id", n - 1, n - 1).size == 1,
-      "both halves must stay range-prunable after the pack")
-    require(ManifestTable.compactSmall(s, root, minBytes = bigLen).isEmpty,
-      "a pack with nothing to pack must not advance the log")
-    StreamReplay.finish(s, qname = "", root)(
+        docs.filter($"doc_id" < h).coalesce(1), root, "doc_id")
+      val w = (n - h + 5) / 6
+      for (i <- 0L until 6L)
+        ManifestTable.appendWithStats(s,
+          docs.filter($"doc_id" >= h + i * w && $"doc_id" < h + (i + 1) * w)
+            .coalesce(1), root, "doc_id")
+      val entriesBefore = ManifestTable.snapshotFilesWithStats(root)
+      require(entriesBefore.size == 7, "expected 1 big + 6 small files")
+      val bigRel = entriesBefore.head._1 // first commit's file
+      val bigLen = new java.io.File(s"$root/data/$bigRel").length()
+      val preV = ManifestTable.latestVersion(root).get
+      val cv = ManifestTable.compactSmall(s, root, minBytes = bigLen,
+        targetFiles = 1, statCols = Seq("doc_id"))
+      require(cv.contains(preV + 1), "bin-pack must land as exactly one commit")
+      val lines = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(root, "_manifest", s"v${preV + 1}.manifest"))
+      require(!lines.contains("reset"), "bin-pack wrote a replacing commit")
+      require((0 until lines.size).count(i => lines.get(i).startsWith("remove=")) == 6,
+        "bin-pack must remove exactly the 6 small files")
+      val after = ManifestTable.snapshotFilesWithStats(root)
+      require(after.size == 2, s"expected big + packed, got ${after.size}")
+      require(after.exists { case (rel, stats) =>
+          rel == bigRel && stats == entriesBefore.head._2 },
+        "the healthy file's entry (path + stats) must survive verbatim")
+      require(ManifestTable.plannedFilesForRange(root, "doc_id", 0, 1).size == 1 &&
+          ManifestTable.plannedFilesForRange(root, "doc_id", n - 1, n - 1).size == 1,
+        "both halves must stay range-prunable after the pack")
+      require(ManifestTable.compactSmall(s, root, minBytes = bigLen).isEmpty,
+        "a pack with nothing to pack must not advance the log")
       ManifestTable.read(s, root)
         .groupBy($"source")
         .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
-        .orderBy($"source"))
-  }
+        .orderBy($"source")
+    }
 
   private val sinkManifestCompactSmallSql =
     """SELECT source, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars
@@ -1321,59 +1263,57 @@ object Pipeline {
     * `sink_manifest_cdf_propagate`'s consumer would need to drop an
     * emptied aggregate row). The emitted per-source aggregate
     * hash-matches the oracle's three-clause replay. */
-  private def sinkManifestMergeCdc(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-cdc").toFile.getPath
-    val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
-    val n = docs.count()
-    val w = (n + 3) / 4
-    for (i <- 0L until 4L)
-      ManifestTable.appendWithStats(s,
-        docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w).coalesce(1),
-        root, "doc_id")
-    val updates = docs.filter($"doc_id" % 3 === 0 && $"doc_id" >= 2 * w)
-      .select($"doc_id", lit("merged").as("source"), ($"n_chars" + 7L).as("n_chars"),
-        lit("U").as("op"))
-    val inserts = docs.filter($"doc_id" % 5 === 0)
-      .select(($"doc_id" + 10L * n).as("doc_id"), lit("fresh").as("source"),
-        $"n_chars", lit("I").as("op"))
-    val deletes = docs.filter($"doc_id" % 7 === 0 && $"doc_id" < 2 * w)
-      .select($"doc_id", $"source", $"n_chars", lit("D").as("op"))
-    val ghostDeletes = docs.filter($"doc_id" % 11 === 0)
-      .select(($"doc_id" + 20L * n).as("doc_id"), $"source", $"n_chars",
-        lit("D").as("op"))
-    val batch = updates.unionAll(inserts).unionAll(deletes).unionAll(ghostDeletes)
-    val nU = updates.count(); val nI = inserts.count(); val nD = deletes.count()
-    val preV = ManifestTable.latestVersion(root).get
-    val mv = ManifestTable.mergeIntoCdc(s, root, batch, "doc_id",
-      statCols = Seq("doc_id"), txn = Some(("cdc", 7L)), cdf = true)
-    require(mv.contains(preV + 1), "CDC merge must land as exactly one commit")
-    val lines = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(root, "_manifest", s"v${preV + 1}.manifest"))
-    require(!lines.contains("reset"), "CDC merge wrote a replacing commit")
-    // a batch of ONLY unmatched deletes must not commit (no txn)
-    require(ManifestTable.mergeIntoCdc(s, root,
-        ghostDeletes.withColumn("doc_id", $"doc_id" + n), "doc_id").isEmpty,
-      "unmatched-delete batch advanced the log")
-    // the post-commit-crash retry: same txn marker, no-op
-    require(ManifestTable.mergeIntoCdc(s, root, batch, "doc_id",
-        statCols = Seq("doc_id"), txn = Some(("cdc", 7L)), cdf = true).isEmpty,
-      "retried CDC batch applied twice")
-    // the feed carries the exact typed census, deletes included
-    val census = ManifestTable.readChanges(s, root, preV, mv)
-      .groupBy($"_change_type").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    require(census == Map("update_preimage" -> nU, "update_postimage" -> nU,
-        "insert" -> nI, "delete" -> nD),
-      s"cdf census mismatch: $census vs U=$nU I=$nI D=$nD")
-    StreamReplay.finish(s, qname = "", root)(
+  private def sinkManifestMergeCdc(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-cdc") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
+      val n = docs.count()
+      val w = (n + 3) / 4
+      for (i <- 0L until 4L)
+        ManifestTable.appendWithStats(s,
+          docs.filter($"doc_id" >= i * w && $"doc_id" < (i + 1) * w).coalesce(1),
+          root, "doc_id")
+      val updates = docs.filter($"doc_id" % 3 === 0 && $"doc_id" >= 2 * w)
+        .select($"doc_id", lit("merged").as("source"), ($"n_chars" + 7L).as("n_chars"),
+          lit("U").as("op"))
+      val inserts = docs.filter($"doc_id" % 5 === 0)
+        .select(($"doc_id" + 10L * n).as("doc_id"), lit("fresh").as("source"),
+          $"n_chars", lit("I").as("op"))
+      val deletes = docs.filter($"doc_id" % 7 === 0 && $"doc_id" < 2 * w)
+        .select($"doc_id", $"source", $"n_chars", lit("D").as("op"))
+      val ghostDeletes = docs.filter($"doc_id" % 11 === 0)
+        .select(($"doc_id" + 20L * n).as("doc_id"), $"source", $"n_chars",
+          lit("D").as("op"))
+      val batch = updates.unionAll(inserts).unionAll(deletes).unionAll(ghostDeletes)
+      val nU = updates.count(); val nI = inserts.count(); val nD = deletes.count()
+      val preV = ManifestTable.latestVersion(root).get
+      val mv = ManifestTable.mergeIntoCdc(s, root, batch, "doc_id",
+        statCols = Seq("doc_id"), txn = Some(("cdc", 7L)), cdf = true)
+      require(mv.contains(preV + 1), "CDC merge must land as exactly one commit")
+      val lines = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(root, "_manifest", s"v${preV + 1}.manifest"))
+      require(!lines.contains("reset"), "CDC merge wrote a replacing commit")
+      // a batch of ONLY unmatched deletes must not commit (no txn)
+      require(ManifestTable.mergeIntoCdc(s, root,
+          ghostDeletes.withColumn("doc_id", $"doc_id" + n), "doc_id").isEmpty,
+        "unmatched-delete batch advanced the log")
+      // the post-commit-crash retry: same txn marker, no-op
+      require(ManifestTable.mergeIntoCdc(s, root, batch, "doc_id",
+          statCols = Seq("doc_id"), txn = Some(("cdc", 7L)), cdf = true).isEmpty,
+        "retried CDC batch applied twice")
+      // the feed carries the exact typed census, deletes included
+      val census = ManifestTable.readChanges(s, root, preV, mv)
+        .groupBy($"_change_type").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      require(census == Map("update_preimage" -> nU, "update_postimage" -> nU,
+          "insert" -> nI, "delete" -> nD),
+        s"cdf census mismatch: $census vs U=$nU I=$nI D=$nD")
       ManifestTable.read(s, root)
         .groupBy($"source")
         .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
-        .orderBy($"source"))
-  }
+        .orderBy($"source")
+    }
 
   private val sinkManifestMergeCdcSql =
     """WITH nn AS (SELECT COUNT(*) AS n, (COUNT(*) + 3) // 4 AS w FROM documents),
@@ -1406,46 +1346,44 @@ object Pipeline {
     * (no reset, remove= lines only for matched slices). The
     * final_snapshot row ties feed and table together: the snapshot
     * must equal what the feed implies. */
-  private def sinkManifestCdf(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-rowcdf").toFile.getPath
-    val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
-    val n = docs.count()
-    val h = n / 2
-    val q = n / 4
-    // v0: base corpus as 2 slices in ONE commit — the insert feed
-    ManifestTable.append(s, docs.filter($"doc_id" < h).repartitionByRange(2, $"doc_id"), root)
-    // v1: CDC upsert — [q, h) exist (updates, +1000 chars), [h, q+h) are fresh (inserts)
-    val batch = docs.filter($"doc_id" >= q && $"doc_id" < q + h)
-      .select($"doc_id", $"source", ($"n_chars" + 1000L).as("n_chars"))
-    val mv = ManifestTable.mergeInto(s, root, batch, "doc_id",
-      txn = Some(("cdc", 1L)), cdf = true)
-    require(mv.contains(1L), "merge must commit exactly v1")
-    // the post-commit-crash retry: no new version AND nothing in the feed
-    require(ManifestTable.mergeInto(s, root, batch, "doc_id",
-        txn = Some(("cdc", 1L)), cdf = true).isEmpty,
-      "retried CDC batch applied twice")
-    // v2: GDPR delete with change capture
-    val dv = ManifestTable.deleteWhere(s, root, $"doc_id" % 3 === 0, cdf = true)
-    require(dv.contains(2L), "delete must commit exactly v2")
-    val lines = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(root, "_manifest", "v2.manifest"))
-    require(!lines.contains("reset"), "cdf delete wrote a replacing commit")
-    require((0 until lines.size).exists(i => lines.get(i).startsWith("cdf=")),
-      "cdf delete recorded no change files")
-    val feed = ManifestTable.readChanges(s, root, -1L)
-      .groupBy($"_commit_version".as("commit_version"),
-        $"_change_type".as("change_type"))
-      .agg(count(lit(1)).as("n_rows"), sum($"n_chars").as("sum_chars"))
-    val fin = ManifestTable.read(s, root)
-      .agg(count(lit(1)).as("n_rows"), sum($"n_chars").as("sum_chars"))
-      .select(lit(99L).as("commit_version"),
-        lit("final_snapshot").as("change_type"), $"n_rows", $"sum_chars")
-    StreamReplay.finish(s, qname = "", root)(
-      feed.unionByName(fin).orderBy($"commit_version", $"change_type"))
-  }
+  private def sinkManifestCdf(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-rowcdf") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
+      val n = docs.count()
+      val h = n / 2
+      val q = n / 4
+      // v0: base corpus as 2 slices in ONE commit — the insert feed
+      ManifestTable.append(s, docs.filter($"doc_id" < h).repartitionByRange(2, $"doc_id"), root)
+      // v1: CDC upsert — [q, h) exist (updates, +1000 chars), [h, q+h) are fresh (inserts)
+      val batch = docs.filter($"doc_id" >= q && $"doc_id" < q + h)
+        .select($"doc_id", $"source", ($"n_chars" + 1000L).as("n_chars"))
+      val mv = ManifestTable.mergeInto(s, root, batch, "doc_id",
+        txn = Some(("cdc", 1L)), cdf = true)
+      require(mv.contains(1L), "merge must commit exactly v1")
+      // the post-commit-crash retry: no new version AND nothing in the feed
+      require(ManifestTable.mergeInto(s, root, batch, "doc_id",
+          txn = Some(("cdc", 1L)), cdf = true).isEmpty,
+        "retried CDC batch applied twice")
+      // v2: GDPR delete with change capture
+      val dv = ManifestTable.deleteWhere(s, root, $"doc_id" % 3 === 0, cdf = true)
+      require(dv.contains(2L), "delete must commit exactly v2")
+      val lines = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(root, "_manifest", "v2.manifest"))
+      require(!lines.contains("reset"), "cdf delete wrote a replacing commit")
+      require((0 until lines.size).exists(i => lines.get(i).startsWith("cdf=")),
+        "cdf delete recorded no change files")
+      val feed = ManifestTable.readChanges(s, root, -1L)
+        .groupBy($"_commit_version".as("commit_version"),
+          $"_change_type".as("change_type"))
+        .agg(count(lit(1)).as("n_rows"), sum($"n_chars").as("sum_chars"))
+      val fin = ManifestTable.read(s, root)
+        .agg(count(lit(1)).as("n_rows"), sum($"n_chars").as("sum_chars"))
+        .select(lit(99L).as("commit_version"),
+          lit("final_snapshot").as("change_type"), $"n_rows", $"sum_chars")
+      feed.unionByName(fin).orderBy($"commit_version", $"change_type")
+    }
 
   private val sinkManifestCdfSql =
     """WITH p AS (SELECT COUNT(*) // 2 AS h, COUNT(*) // 4 AS q FROM documents),
@@ -1488,47 +1426,45 @@ object Pipeline {
     * from-scratch recompute of the final upstream state. This is the
     * GDPR-propagation story completed: the upstream erasure reaches
     * the derived table through the feed, not through a rebuild. */
-  private def sinkManifestCdfPropagate(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-cdf-ivm").toFile.getPath
-    val up = s"$root/up"
-    val agg = s"$root/agg"
-    val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
-    var cursor = -1L
-    def consume(): Unit = {
-      val latest = ManifestTable.latestVersion(up).get
-      if (latest <= cursor) return
-      val sign = when($"_change_type".isin("insert", "update_postimage"), 1L)
-        .otherwise(-1L)
-      val delta = ManifestTable.readChanges(s, up, cursor, Some(latest))
-        .groupBy($"source")
-        .agg(sum(sign).as("dn"), sum(sign * $"n_chars").as("dchars"))
-      val updated =
-        if (ManifestTable.latestVersion(agg).isEmpty)
-          delta.select($"source", $"dn".as("n_docs"), $"dchars".as("sum_chars"))
-        else delta.join(ManifestTable.read(s, agg), Seq("source"), "left")
-          .select($"source",
-            (coalesce($"n_docs", lit(0L)) + $"dn").as("n_docs"),
-            (coalesce($"sum_chars", lit(0L)) + $"dchars").as("sum_chars"))
-      // a source erased to zero docs would need MERGE's delete clause
-      // to leave the aggregate table; this scenario never empties one
-      require(updated.filter($"n_docs" <= 0L).isEmpty,
-        "a source emptied out — the aggregate row should be deleted, not zeroed")
-      ManifestTable.mergeInto(s, agg, updated, "source")
-      cursor = latest
+  private def sinkManifestCdfPropagate(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-cdf-ivm") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val up = s"$root/up"
+      val agg = s"$root/agg"
+      val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
+      var cursor = -1L
+      def consume(): Unit = {
+        val latest = ManifestTable.latestVersion(up).get
+        if (latest <= cursor) return
+        val sign = when($"_change_type".isin("insert", "update_postimage"), 1L)
+          .otherwise(-1L)
+        val delta = ManifestTable.readChanges(s, up, cursor, Some(latest))
+          .groupBy($"source")
+          .agg(sum(sign).as("dn"), sum(sign * $"n_chars").as("dchars"))
+        val updated =
+          if (ManifestTable.latestVersion(agg).isEmpty)
+            delta.select($"source", $"dn".as("n_docs"), $"dchars".as("sum_chars"))
+          else delta.join(ManifestTable.read(s, agg), Seq("source"), "left")
+            .select($"source",
+              (coalesce($"n_docs", lit(0L)) + $"dn").as("n_docs"),
+              (coalesce($"sum_chars", lit(0L)) + $"dchars").as("sum_chars"))
+        // a source erased to zero docs would need MERGE's delete clause
+        // to leave the aggregate table; this scenario never empties one
+        require(updated.filter($"n_docs" <= 0L).isEmpty,
+          "a source emptied out — the aggregate row should be deleted, not zeroed")
+        ManifestTable.mergeInto(s, agg, updated, "source")
+        cursor = latest
+      }
+      ManifestTable.append(s, docs.filter($"doc_id" % 2 === 0), up); consume()
+      ManifestTable.append(s, docs.filter($"doc_id" % 2 === 1), up); consume()
+      ManifestTable.mergeInto(s, up,
+        docs.filter($"doc_id" % 5 === 0)
+          .select($"doc_id", $"source", ($"n_chars" + 7L).as("n_chars")),
+        "doc_id", cdf = true); consume()
+      ManifestTable.deleteWhere(s, up, $"doc_id" % 3 === 0, cdf = true); consume()
+      ManifestTable.read(s, agg).orderBy($"source")
     }
-    ManifestTable.append(s, docs.filter($"doc_id" % 2 === 0), up); consume()
-    ManifestTable.append(s, docs.filter($"doc_id" % 2 === 1), up); consume()
-    ManifestTable.mergeInto(s, up,
-      docs.filter($"doc_id" % 5 === 0)
-        .select($"doc_id", $"source", ($"n_chars" + 7L).as("n_chars")),
-      "doc_id", cdf = true); consume()
-    ManifestTable.deleteWhere(s, up, $"doc_id" % 3 === 0, cdf = true); consume()
-    StreamReplay.finish(s, qname = "", root)(
-      ManifestTable.read(s, agg).orderBy($"source"))
-  }
 
   private val sinkManifestCdfPropagateSql =
     """SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1553,60 +1489,50 @@ object Pipeline {
     * version, a double-served file, or a mistyped row all break the
     * hash. The in-code require pins that admission control actually
     * split the drain into per-commit batches. */
-  private def sinkManifestCdfStream(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.sources.ManifestTable
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-cdf-stream").toFile.getPath
-    val up = s"$root/up"
-    val agg = s"$root/agg"
-    val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
-    ManifestTable.append(s, docs.filter($"doc_id" % 2 === 0), up)
-    ManifestTable.append(s, docs.filter($"doc_id" % 2 === 1), up)
-    ManifestTable.mergeInto(s, up,
-      docs.filter($"doc_id" % 5 === 0)
-        .select($"doc_id", $"source", ($"n_chars" + 7L).as("n_chars")),
-      "doc_id", cdf = true)
-    ManifestTable.deleteWhere(s, up, $"doc_id" % 3 === 0, cdf = true)
-    var nBatches = 0
-    val q = s.readStream.format("graft-manifest")
-      .schema(docs.schema)
-      .option("readChangeFeed", "true")
-      .option("maxVersionsPerTrigger", 1)
-      .load(up)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
-        if (!batch.isEmpty) {
-          nBatches += 1
-          val sign = when($"_change_type".isin("insert", "update_postimage"), 1L)
-            .otherwise(-1L)
-          val delta = batch.toDF()
-            .groupBy($"source")
-            .agg(sum(sign).as("dn"), sum(sign * $"n_chars").as("dchars"))
-          val updated =
-            if (ManifestTable.latestVersion(agg).isEmpty)
-              delta.select($"source", $"dn".as("n_docs"), $"dchars".as("sum_chars"))
-            else delta.join(ManifestTable.read(s, agg), Seq("source"), "left")
-              .select($"source",
-                (coalesce($"n_docs", lit(0L)) + $"dn").as("n_docs"),
-                (coalesce($"sum_chars", lit(0L)) + $"dchars").as("sum_chars"))
-          ManifestTable.mergeInto(s, agg, updated, "source"): Unit
-        }
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    if (!q.awaitTermination(300000)) {
-      q.stop()
-      throw new IllegalStateException("sink_manifest_cdf_stream: stream stalled")
+  private def sinkManifestCdfStream(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-cdf-stream") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val up = s"$root/up"
+      val agg = s"$root/agg"
+      val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"n_chars")
+      ManifestTable.append(s, docs.filter($"doc_id" % 2 === 0), up)
+      ManifestTable.append(s, docs.filter($"doc_id" % 2 === 1), up)
+      ManifestTable.mergeInto(s, up,
+        docs.filter($"doc_id" % 5 === 0)
+          .select($"doc_id", $"source", ($"n_chars" + 7L).as("n_chars")),
+        "doc_id", cdf = true)
+      ManifestTable.deleteWhere(s, up, $"doc_id" % 3 === 0, cdf = true)
+      var nBatches = 0
+      StreamReplay.drain("sink_manifest_cdf_stream", root)(s.readStream.format("graft-manifest")
+        .schema(docs.schema)
+        .option("readChangeFeed", "true")
+        .option("maxVersionsPerTrigger", 1)
+        .load(up)
+        .writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+                         _: Long) =>
+          if (!batch.isEmpty) {
+            nBatches += 1
+            val sign = when($"_change_type".isin("insert", "update_postimage"), 1L)
+              .otherwise(-1L)
+            val delta = batch.toDF()
+              .groupBy($"source")
+              .agg(sum(sign).as("dn"), sum(sign * $"n_chars").as("dchars"))
+            val updated =
+              if (ManifestTable.latestVersion(agg).isEmpty)
+                delta.select($"source", $"dn".as("n_docs"), $"dchars".as("sum_chars"))
+              else delta.join(ManifestTable.read(s, agg), Seq("source"), "left")
+                .select($"source",
+                  (coalesce($"n_docs", lit(0L)) + $"dn").as("n_docs"),
+                  (coalesce($"sum_chars", lit(0L)) + $"dchars").as("sum_chars"))
+            ManifestTable.mergeInto(s, agg, updated, "source"): Unit
+          }
+        })
+      require(nBatches >= 4,
+        s"admission control did not split the drain: $nBatches batches")
+      ManifestTable.read(s, agg).orderBy($"source")
     }
-    require(nBatches >= 4,
-      s"admission control did not split the drain: $nBatches batches")
-    StreamReplay.finish(s, qname = "", root)(
-      ManifestTable.read(s, agg).orderBy($"source"))
-  }
 
   /** The manifest table consumed through the REAL Structured Streaming
     * SOURCE (15th driver-verified streaming path —
@@ -1623,46 +1549,36 @@ object Pipeline {
     * the drain. Scale shape: each micro-batch plans O(interval)
     * manifest lines + its own files; the version watermark is the
     * only state. */
-  private def sinkManifestStreamSource(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.sources.ManifestTable
-    val ev = Tables.events(s, dir)
-      .select($"event_id", $"event_type", QueryDef.cents($"value").as("value_cents"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-manifest-src").toString
-    val table = s"$root/table"
-    val mirror = s"$root/mirror"
-    for (i <- 0L until 5L)
-      ManifestTable.append(s, ev.filter($"event_id" % 5 === i), table)
-    var nBatches = 0
-    val q = s.readStream.format("graft-manifest")
-      .schema(ev.schema)
-      .option("maxVersionsPerTrigger", 2)
-      .load(table)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
-        if (!batch.isEmpty) {
-          nBatches += 1
-          ManifestTable.append(s, batch.toDF(), mirror): Unit
-        }
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    if (!q.awaitTermination(300000)) {
-      q.stop()
-      throw new IllegalStateException("sink_manifest_stream_source: stream stalled")
-    }
-    require(nBatches >= 3,
-      s"admission control did not split the drain: $nBatches batches")
-    StreamReplay.finish(s, qname = "", root)(
+  private def sinkManifestStreamSource(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-manifest-src") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val ev = Tables.events(s, dir)
+        .select($"event_id", $"event_type", QueryDef.cents($"value").as("value_cents"))
+      val table = s"$root/table"
+      val mirror = s"$root/mirror"
+      for (i <- 0L until 5L)
+        ManifestTable.append(s, ev.filter($"event_id" % 5 === i), table)
+      var nBatches = 0
+      StreamReplay.drain("sink_manifest_stream_source", root)(s.readStream.format("graft-manifest")
+        .schema(ev.schema)
+        .option("maxVersionsPerTrigger", 2)
+        .load(table)
+        .writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+                         _: Long) =>
+          if (!batch.isEmpty) {
+            nBatches += 1
+            ManifestTable.append(s, batch.toDF(), mirror): Unit
+          }
+        })
+      require(nBatches >= 3,
+        s"admission control did not split the drain: $nBatches batches")
       ManifestTable.read(s, mirror)
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n_events"), sum($"value_cents").as("sum_cents"))
-        .orderBy($"event_type"))
-  }
+        .orderBy($"event_type")
+    }
 
   /** Lee-et-al-style duplicated-span statistics over 10-token windows. */
   private def dedupSubstring(s: SparkSession, dir: String): DataFrame = {
@@ -2524,44 +2440,31 @@ object Pipeline {
     * once and (b) not one late row leaked into a count. sum_value is
     * deliberately not emitted (per-window double sums are partition-
     * order dependent; counts are exact). */
-  private def hourlyLateReplay(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.EventStream
-    val ev = Tables.events(s, dir).select($"event_id", $"ts", $"event_type", $"value")
-    val maxTs = ev.agg(max($"ts")).head.getTimestamp(0)
-    val far = new java.sql.Timestamp(maxTs.getTime + 30L * 24 * 3600 * 1000)
-    val onTime = ev.filter($"event_id" % 5 =!= 0).select($"ts", $"event_type", $"value")
-      .unionByName(Seq((far, "zz", 0.0)).toDF("ts", "event_type", "value"))
-    val late = ev.filter($"event_id" % 5 === 0).select($"ts", $"event_type", $"value")
-    val root = java.nio.file.Files.createTempDirectory("graft-late-replay").toString
-    onTime.write.mode("overwrite").parquet(s"$root/src")
-
-    def drain(): Unit = {
-      val q = EventStream.windowedCounts(
-          s.readStream.schema(onTime.schema).parquet(s"$root/src"))
-        .select(date_format($"window.start", "yyyy-MM-dd HH:00:00").as("hour"),
-          $"event_type", $"n")
-        .writeStream.format("parquet")
-        .option("path", s"$root/out")
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("hourly_late_replay: stream stalled")
-      }
-    }
-    drain()
-    late.write.mode("append").parquet(s"$root/src")
-    drain()
-
-    StreamReplay.finish(s, qname = "", root)(
+  private def hourlyLateReplay(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-late-replay") { root =>
+      import s.implicits._
+      import graft.streaming.EventStream
+      val ev = Tables.events(s, dir).select($"event_id", $"ts", $"event_type", $"value")
+      val maxTs = ev.agg(max($"ts")).head.getTimestamp(0)
+      val far = new java.sql.Timestamp(maxTs.getTime + 30L * 24 * 3600 * 1000)
+      val onTime = ev.filter($"event_id" % 5 =!= 0).select($"ts", $"event_type", $"value")
+        .unionByName(Seq((far, "zz", 0.0)).toDF("ts", "event_type", "value"))
+      val late = ev.filter($"event_id" % 5 === 0).select($"ts", $"event_type", $"value")
+      onTime.write.mode("overwrite").parquet(s"$root/src")
+      def drain(): Unit = StreamReplay.drain("hourly_late_replay", root)(
+        EventStream.windowedCounts(
+            s.readStream.schema(onTime.schema).parquet(s"$root/src"))
+          .select(date_format($"window.start", "yyyy-MM-dd HH:00:00").as("hour"),
+            $"event_type", $"n")
+          .writeStream.format("parquet").option("path", s"$root/out")
+          .outputMode("append"))
+      drain()
+      late.write.mode("append").parquet(s"$root/src")
+      drain()
       s.read.parquet(s"$root/out")
         .filter($"event_type" =!= "zz")
-        .orderBy($"hour", $"event_type"))
-  }
+        .orderBy($"hour", $"event_type")
+    }
 
   private val hourlyLateReplaySql =
     """SELECT strftime(ts, '%Y-%m-%d %H:00:00') AS hour, event_type, COUNT(*) AS n
@@ -2575,47 +2478,17 @@ object Pipeline {
     * with the same three-drain sentinel protocol as the sessionizer
     * (the watermark advances one batch behind the data), then
     * hash-compared against the plain batch window/top-3 SQL. */
-  private def topkStreamingReplay(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.EventStream
-    val ev = Tables.events(s, dir)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-    val maxTs = ev.agg(max($"ts")).head.getTimestamp(0)
-    def sentinel(id: Long, offsetMs: Long) = Seq(
-      (id, new java.sql.Timestamp(maxTs.getTime + offsetMs), -1L, "zz_sentinel", 0.0))
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val root = java.nio.file.Files.createTempDirectory("graft-topk-replay").toString
-    ev.write.mode("overwrite").parquet(s"$root/src")
-
-    def drain(): Unit = {
-      val q = s.readStream.schema(ev.schema).parquet(s"$root/src")
-        .as[EventStream.Event]
-        .transform(d => EventStream.streamingTopK(s, d, windowMinutes = 60, k = 3).toDF())
-        .writeStream.format("parquet")
-        .option("path", s"$root/out")
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("topk_streaming_replay: stream stalled")
-      }
-    }
-    drain()
-    sentinel(-1L, 30L * 24 * 3600 * 1000).write.mode("append").parquet(s"$root/src")
-    drain()
-    sentinel(-2L, 30L * 24 * 3600 * 1000 + 60000).write.mode("append").parquet(s"$root/src")
-    drain()
-
-    StreamReplay.finish(s, qname = "", root)(
-      s.read.parquet(s"$root/out")
+  private def topkStreamingReplay(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-topk-replay") { root =>
+      import s.implicits._
+      import graft.streaming.EventStream
+      StreamReplay.events(s, dir, "topk_streaming_replay", root, "zz_sentinel")(d =>
+        EventStream.streamingTopK(s, d, windowMinutes = 60, k = 3).toDF())
         .filter($"dim" =!= "zz_sentinel")
         .select(unix_millis($"window_start").as("wstart_ms"), $"dim",
           $"n", $"rk".cast("long").as("rk"))
-        .orderBy($"wstart_ms", $"rk"))
-  }
+        .orderBy($"wstart_ms", $"rk")
+    }
 
   private val topkStreamingReplaySql =
     """WITH c AS (SELECT (epoch_ns(ts)//1000000)//3600000*3600000 AS wstart_ms,
@@ -2626,49 +2499,19 @@ object Pipeline {
       |SELECT wstart_ms, dim, CAST(n AS BIGINT) AS n, CAST(rk AS BIGINT) AS rk
       |FROM r WHERE rk <= 3 ORDER BY wstart_ms, rk""".stripMargin
 
-  private def sessionizeStreamingReplay(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.EventStream
-    val ev = Tables.events(s, dir)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-    val maxTs = ev.agg(max($"ts")).head.getTimestamp(0)
-    def sentinel(id: Long, offsetMs: Long) = Seq(
-      (id, new java.sql.Timestamp(maxTs.getTime + offsetMs), -1L, "x", 0.0))
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val root = java.nio.file.Files.createTempDirectory("graft-sess-replay").toString
-    ev.write.mode("overwrite").parquet(s"$root/src")
-
-    def drain(): Unit = {
-      val q = s.readStream.schema(ev.schema).parquet(s"$root/src")
-        .as[EventStream.Event]
-        .transform(d => EventStream.sessionize(s, d, gapMinutes = 30).toDF())
-        .writeStream.format("parquet")
-        .option("path", s"$root/out")
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("sessionize_streaming_replay: stream stalled")
-      }
-    }
-    drain()
-    sentinel(-1L, 30L * 24 * 3600 * 1000).write.mode("append").parquet(s"$root/src")
-    drain()
-    sentinel(-2L, 30L * 24 * 3600 * 1000 + 60000).write.mode("append").parquet(s"$root/src")
-    drain()
-
-    StreamReplay.finish(s, qname = "", root)(
-      s.read.parquet(s"$root/out")
+  private def sessionizeStreamingReplay(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-sess-replay") { root =>
+      import s.implicits._
+      import graft.streaming.EventStream
+      StreamReplay.events(s, dir, "sessionize_streaming_replay", root, "x")(d =>
+        EventStream.sessionize(s, d, gapMinutes = 30).toDF())
         .filter($"user_id" >= 0)
         .select($"user_id",
           unix_millis($"session_start").as("start_ms"),
           unix_millis($"session_end").as("end_ms"),
           $"n_events".cast("long").as("n_events"))
-        .orderBy($"user_id", $"start_ms"))
-  }
+        .orderBy($"user_id", $"start_ms")
+    }
 
   private val sessionizeStreamingReplaySql =
     """WITH e AS (
@@ -2922,47 +2765,17 @@ object Pipeline {
     * incremental inserts must land on exactly the 64 smallest distinct
     * hashes, so state-update bugs (lost inserts, merge drift) fail the
     * hash compare, not just a row count. */
-  private def kmvStreamingReplay(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.EventStream
-    val ev = Tables.events(s, dir)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-    val maxTs = ev.agg(max($"ts")).head.getTimestamp(0)
-    def sentinel(id: Long, offsetMs: Long) = Seq(
-      (id, new java.sql.Timestamp(maxTs.getTime + offsetMs), -1L, "zz_sentinel", 0.0))
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val root = java.nio.file.Files.createTempDirectory("graft-kmv-replay").toString
-    ev.write.mode("overwrite").parquet(s"$root/src")
-
-    def drain(): Unit = {
-      val q = s.readStream.schema(ev.schema).parquet(s"$root/src")
-        .as[EventStream.Event]
-        .transform(d => EventStream.streamingKmvDistinct(s, d, windowMinutes = 60).toDF())
-        .writeStream.format("parquet")
-        .option("path", s"$root/out")
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("kmv_streaming_replay: stream stalled")
-      }
-    }
-    drain()
-    sentinel(-1L, 30L * 24 * 3600 * 1000).write.mode("append").parquet(s"$root/src")
-    drain()
-    sentinel(-2L, 30L * 24 * 3600 * 1000 + 60000).write.mode("append").parquet(s"$root/src")
-    drain()
-
-    StreamReplay.finish(s, qname = "", root)(
-      s.read.parquet(s"$root/out")
+  private def kmvStreamingReplay(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-kmv-replay") { root =>
+      import s.implicits._
+      import graft.streaming.EventStream
+      StreamReplay.events(s, dir, "kmv_streaming_replay", root, "zz_sentinel")(d =>
+        EventStream.streamingKmvDistinct(s, d, windowMinutes = 60).toDF())
         .filter($"event_type" =!= "zz_sentinel")
         .select(unix_millis($"window_start").as("wstart_ms"), $"event_type",
           $"n_rows", $"n_est")
-        .orderBy($"wstart_ms", $"event_type"))
-  }
+        .orderBy($"wstart_ms", $"event_type")
+    }
 
   /** Streaming CEP replay — the ninth driver-verified streaming path:
     * `events_cep_match`'s three-step pattern with negation runs as
@@ -2975,45 +2788,15 @@ object Pipeline {
     * no-error-inside matches the batch array formulation does —
     * state-tail eviction bugs or premature finalization change the
     * match set and fail the compare. */
-  private def cepStreamingReplay(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.EventStream
-    val ev = Tables.events(s, dir)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-    val maxTs = ev.agg(max($"ts")).head.getTimestamp(0)
-    def sentinel(id: Long, offsetMs: Long) = Seq(
-      (id, new java.sql.Timestamp(maxTs.getTime + offsetMs), -1L, "zz_sentinel", 0.0))
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val root = java.nio.file.Files.createTempDirectory("graft-cep-replay").toString
-    ev.write.mode("overwrite").parquet(s"$root/src")
-
-    def drain(): Unit = {
-      val q = s.readStream.schema(ev.schema).parquet(s"$root/src")
-        .as[EventStream.Event]
-        .transform(d => EventStream.streamingCep(s, d).toDF())
-        .writeStream.format("parquet")
-        .option("path", s"$root/out")
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("cep_streaming_replay: stream stalled")
-      }
-    }
-    drain()
-    sentinel(-1L, 30L * 24 * 3600 * 1000).write.mode("append").parquet(s"$root/src")
-    drain()
-    sentinel(-2L, 30L * 24 * 3600 * 1000 + 60000).write.mode("append").parquet(s"$root/src")
-    drain()
-
-    StreamReplay.finish(s, qname = "", root)(
-      s.read.parquet(s"$root/out")
+  private def cepStreamingReplay(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-cep-replay") { root =>
+      import s.implicits._
+      import graft.streaming.EventStream
+      StreamReplay.events(s, dir, "cep_streaming_replay", root, "zz_sentinel")(d =>
+        EventStream.streamingCep(s, d).toDF())
         .select($"user_id", $"v_eid", $"c_eid", $"p_eid", $"span_ms")
-        .orderBy($"user_id", $"v_eid"))
-  }
+        .orderBy($"user_id", $"v_eid")
+    }
 
   /** Streaming EWMA anomaly replay — the TENTH driver-verified
     * streaming path: q_ewma_anomaly's exact integer recurrence runs as
@@ -3024,46 +2807,16 @@ object Pipeline {
     * recursive-CTE oracle. A day emitted twice, out of order, or with
     * a stale smoothed level changes the recurrence trajectory and
     * fails the hash. */
-  private def ewmaStreamingReplay(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.EventStream
-    val ev = Tables.events(s, dir)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-    val maxTs = ev.agg(max($"ts")).head.getTimestamp(0)
-    def sentinel(id: Long, offsetMs: Long) = Seq(
-      (id, new java.sql.Timestamp(maxTs.getTime + offsetMs), -1L, "zz_sentinel", 0.0))
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val root = java.nio.file.Files.createTempDirectory("graft-ewma-replay").toString
-    ev.write.mode("overwrite").parquet(s"$root/src")
-
-    def drain(): Unit = {
-      val q = s.readStream.schema(ev.schema).parquet(s"$root/src")
-        .as[EventStream.Event]
-        .transform(d => EventStream.streamingEwma(s, d).toDF())
-        .writeStream.format("parquet")
-        .option("path", s"$root/out")
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("ewma_streaming_replay: stream stalled")
-      }
-    }
-    drain()
-    sentinel(-1L, 30L * 24 * 3600 * 1000).write.mode("append").parquet(s"$root/src")
-    drain()
-    sentinel(-2L, 30L * 24 * 3600 * 1000 + 60000).write.mode("append").parquet(s"$root/src")
-    drain()
-
-    StreamReplay.finish(s, qname = "", root)(
-      s.read.parquet(s"$root/out")
+  private def ewmaStreamingReplay(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-ewma-replay") { root =>
+      import s.implicits._
+      import graft.streaming.EventStream
+      StreamReplay.events(s, dir, "ewma_streaming_replay", root, "zz_sentinel")(d =>
+        EventStream.streamingEwma(s, d).toDF())
         .filter($"event_type" =!= "zz_sentinel")
         .select($"event_type", $"day", $"rev_cents", $"ewma_cents", $"is_anomaly")
-        .orderBy($"event_type", $"day"))
-  }
+        .orderBy($"event_type", $"day")
+    }
 
   private val ewmaStreamingReplaySql =
     """WITH RECURSIVE rev AS (

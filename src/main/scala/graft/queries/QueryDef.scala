@@ -38,45 +38,3 @@ object QueryDef {
   /** Integer percent view of a 2-dp rate column (discount/tax). */
   def pct(c: Column): Column = round(c * 100).cast("long")
 }
-
-/** Shared teardown for the streaming replay keys. Every replay query
-  * materializes real data to a temp dir, drains a file-source stream
-  * into a uniquely-named memory-sink table, and reads the result back —
-  * leaving, per invocation, a temp dir on disk and a driver-memory
-  * temp view that were never released (bench loops run each query 4×;
-  * r12 ADVICE). `finish` pins the result rows into block storage
-  * (eager localCheckpoint — the returned frame no longer references
-  * the memory sink or the temp dir), then drops the temp view and
-  * deletes the replay dir. Replay results are the small end-of-stream
-  * aggregate/answer tables, so the checkpoint is a few blocks the
-  * ContextCleaner reclaims with the frame. */
-object StreamReplay {
-  def finish(s: SparkSession, qname: String, root: String)(result: DataFrame): DataFrame = {
-    val out = result.localCheckpoint() // eager: severs sink + temp-dir deps
-    try s.catalog.dropTempView(qname) catch { case _: Throwable => }
-    deleteRec(new java.io.File(root))
-    out
-  }
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete(): Unit
-  }
-
-  /** Force a range-partitioned replay dir to ACTUALLY stream in range
-    * order: FileStreamSource picks files oldest-modification-first, and
-    * the parallel tasks of one parquet write finish in random order —
-    * so part-00007 can carry an earlier mtime than part-00000, the
-    * watermark jumps to the end of event time on an early batch, and
-    * every earlier-range file is silently LATE-DROPPED (found in r13:
-    * the TTL'd LSH index lost 10 of 14 buckets this way). Stamping
-    * strictly ascending mtimes in part-file path order makes the
-    * chronological replay deterministic. */
-  def stampChronological(dirPath: String): Unit = {
-    val parts = Option(new java.io.File(dirPath).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    val base = (System.currentTimeMillis() / 1000L - parts.length) * 1000L
-    parts.zipWithIndex.foreach { case (f, i) =>
-      f.setLastModified(base + i * 1000L): Unit
-    }
-  }
-}

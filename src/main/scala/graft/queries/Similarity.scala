@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
@@ -1086,45 +1086,43 @@ object Similarity {
     * commit regardless of cell count
     * ([[graft.operators.Similarity.buildIvfManifestIndex]]); the probe
     * reads O(nProbe) files regardless of corpus size. */
-  private def annIvfManifest(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val emb = Tables.embeddings(s, dir)
-    val centroids = Sim.coarseCentroids(emb, 8, Some(trainedCentroids(s, dir)))
-    val assigned = Sim.nearestCells(centroids, emb, "vec_id", "embedding", 1)
-      .select($"cell", $"vec_id", $"embedding")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ivf-manifest").toFile.getPath
-    // the cell universe comes from the (tiny) centroid table, not a
-    // scan of the assignment: the whole build is ONE pass over the
-    // corpus — one shuffle, one file per nonempty cell, ONE commit,
-    // never a filter+write pass per cell. Empty cells stage zero-row
-    // files which the stats commit drops, so live files = nonempty cells.
-    val universe = centroids.select($"cell").as[Long].collect().sorted
-    Sim.buildIvfManifestIndex(s, assigned, universe, root)
-    val cells = ManifestTable.snapshotFiles(root)
-    // 3 probes × 2 cells ≤ 6 of the 8 live files: the census must
-    // show genuine skipping, not a full-table read in disguise
-    val probeCells = Sim.nearestCells(centroids,
-      emb.filter($"vec_id" < 3).select($"vec_id".as("query_id"), $"embedding".as("qe")),
-      "query_id", "qe", 2)
-    val needed = probeCells.select($"cell").distinct().as[Long].collect().sorted
-    val planned = needed.map(c =>
-      ManifestTable.plannedFilesForRange(root, "cell", c, c).size).sum
-    val candidates = needed.map(c => ManifestTable.readRange(s, root, "cell", c, c))
-      .reduce(_ unionAll _)
-    val scored = broadcast(probeCells).join(candidates, Seq("cell"))
-      .filter($"vec_id" =!= $"query_id")
-      .select($"query_id", $"vec_id".as("neighbor_id"),
-        round(Fns.cosine_sim($"qe", $"embedding"), 9).as("cos_sim"))
-    val w = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"neighbor_id")
-    val res = scored.withColumn("rk", row_number().over(w)).filter($"rk" <= 5)
-      .select($"query_id", $"neighbor_id", $"rk", $"cos_sim",
-        lit(planned.toLong).as("n_files_planned"),
-        lit(cells.length.toLong).as("n_files_live"))
-      .orderBy($"query_id", $"rk")
-    StreamReplay.finish(s, qname = "", root)(res)
-  }
+  private def annIvfManifest(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-ivf-manifest") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val emb = Tables.embeddings(s, dir)
+      val centroids = Sim.coarseCentroids(emb, 8, Some(trainedCentroids(s, dir)))
+      val assigned = Sim.nearestCells(centroids, emb, "vec_id", "embedding", 1)
+        .select($"cell", $"vec_id", $"embedding")
+      // the cell universe comes from the (tiny) centroid table, not a
+      // scan of the assignment: the whole build is ONE pass over the
+      // corpus — one shuffle, one file per nonempty cell, ONE commit,
+      // never a filter+write pass per cell. Empty cells stage zero-row
+      // files which the stats commit drops, so live files = nonempty cells.
+      val universe = centroids.select($"cell").as[Long].collect().sorted
+      Sim.buildIvfManifestIndex(s, assigned, universe, root)
+      val cells = ManifestTable.snapshotFiles(root)
+      // 3 probes × 2 cells ≤ 6 of the 8 live files: the census must
+      // show genuine skipping, not a full-table read in disguise
+      val probeCells = Sim.nearestCells(centroids,
+        emb.filter($"vec_id" < 3).select($"vec_id".as("query_id"), $"embedding".as("qe")),
+        "query_id", "qe", 2)
+      val needed = probeCells.select($"cell").distinct().as[Long].collect().sorted
+      val planned = needed.map(c =>
+        ManifestTable.plannedFilesForRange(root, "cell", c, c).size).sum
+      val candidates = needed.map(c => ManifestTable.readRange(s, root, "cell", c, c))
+        .reduce(_ unionAll _)
+      val scored = broadcast(probeCells).join(candidates, Seq("cell"))
+        .filter($"vec_id" =!= $"query_id")
+        .select($"query_id", $"vec_id".as("neighbor_id"),
+          round(Fns.cosine_sim($"qe", $"embedding"), 9).as("cos_sim"))
+      val w = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"neighbor_id")
+      scored.withColumn("rk", row_number().over(w)).filter($"rk" <= 5)
+        .select($"query_id", $"neighbor_id", $"rk", $"cos_sim",
+          lit(planned.toLong).as("n_files_planned"),
+          lit(cells.length.toLong).as("n_files_live"))
+        .orderBy($"query_id", $"rk")
+    }
 
   private val annIvfManifestSql =
     s"""WITH ${ivfScoredCtes("e.vec_id < 3", 2)},
@@ -1161,74 +1159,72 @@ object Similarity {
     * build is ONE shuffle + ONE commit ([[graft.operators.Similarity
     * .buildIvfManifestIndex]]); probes read O(nProbe) code files;
     * raw-vector IO is O(shortlist). */
-  private def annIvfPqManifest(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ManifestTable
-    val emb = Tables.embeddings(s, dir)
-    val centroids = Sim.coarseCentroids(emb, 8, Some(trainedCentroids(s, dir)))
-    val assigned = Sim.nearestCells(centroids, emb, "vec_id", "embedding", 1)
-      .select($"cell", $"vec_id")
-    val packed = Pipeline.pqCodes(s, dir)
-      .groupBy($"vec_id")
-      .agg(expr("sum(shiftleft(code, cast(2 * sub as int)))").as("pq_code"))
-    val indexRows = assigned.join(packed, "vec_id")
-      .select($"cell", $"vec_id", $"pq_code")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ivfpq-manifest").toFile.getPath
-    val universe = centroids.select($"cell").as[Long].collect().sorted
-    Sim.buildIvfManifestIndex(s, indexRows, universe, root)
-    val live = ManifestTable.snapshotFiles(root).size
-    val probeCells = Sim.nearestCells(centroids,
-      emb.filter($"vec_id" < 3)
-        .select($"vec_id".as("query_id"), $"embedding".as("qe")),
-      "query_id", "qe", 2)
-      .select($"query_id", $"cell".as("p_cell"))
-    val needed = probeCells.select($"p_cell").distinct().as[Long].collect().sorted
-    val planned = needed.map(c =>
-      ManifestTable.plannedFilesForRange(root, "cell", c, c).size).sum
-    val candidates = needed.map(c => ManifestTable.readRange(s, root, "cell", c, c))
-      .reduce(_ unionAll _)
-    // in-scan unpack: sub-code s = (pq_code >> 2s) & 3 — codes never
-    // round-trip through raw vectors
-    val unpacked = candidates.select($"cell", $"vec_id".as("cand_id"),
-      posexplode(expr("transform(sequence(0, 7), s -> (pq_code >> (2 * s)) & 3)"))
-        .as(Seq("c_sub", "code")))
-    // ≤ 3 queries × 2 cells × 32 LUT rows: broadcast by construction
-    val lutByCell = probeCells.join(Pipeline.pqLut(s, dir), "query_id")
-    val adc = unpacked
-      .join(broadcast(lutByCell),
-        $"cell" === $"p_cell" && $"c_sub" === $"sub" && $"code" === $"cid")
-      .filter($"cand_id" =!= $"query_id")
-      .groupBy($"query_id", $"cand_id")
-      .agg(sum($"d2q").as("adc"))
-    val w20 = Window.partitionBy($"query_id").orderBy($"adc", $"cand_id")
-    val shortlist = adc.withColumn("crk", row_number().over(w20)).filter($"crk" <= 20)
-    val exact = shortlist
-      .join(emb.select($"vec_id", $"embedding".as("qe")), $"query_id" === $"vec_id")
-      .drop("vec_id")
-      .join(emb.select($"vec_id", $"embedding"), $"cand_id" === $"vec_id")
-      .select($"query_id", $"cand_id".as("neighbor_id"),
-        round(Fns.cosine_sim($"qe", $"embedding"), 9).as("cos_sim"))
-    val w5 = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"neighbor_id")
-    val top5 = exact.withColumn("rk", row_number().over(w5)).filter($"rk" <= 5)
-    // recall@5 acceptance companion: hits against exact brute force.
-    // LEFT join + coalesce: a query whose shortlist misses ALL true
-    // neighbors has recall 0, not zero output rows (the oracle's
-    // LEFT JOIN + COUNT keeps them — an inner join here would drop
-    // the query entirely and diverge from the gate)
-    val brute5 = Sim.bruteForce(s, emb, emb.filter($"vec_id" < 3), 5)
-      .select($"query_id", $"neighbor_id")
-    val hits = top5.select($"query_id", $"neighbor_id")
-      .join(brute5, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy($"query_id").agg(count(lit(1)).as("n_hits"))
-    val res = top5.join(hits, Seq("query_id"), "left")
-      .withColumn("n_hits5", coalesce($"n_hits", lit(0L))).drop("n_hits")
-      .select($"query_id", $"neighbor_id", $"rk", $"cos_sim",
-        lit(planned.toLong).as("n_files_planned"),
-        lit(live.toLong).as("n_files_live"), $"n_hits5")
-      .orderBy($"query_id", $"rk")
-    StreamReplay.finish(s, qname = "", root)(res)
-  }
+  private def annIvfPqManifest(s: SparkSession, dir: String): DataFrame =
+    StreamReplay.run(s, "graft-ivfpq-manifest") { root =>
+      import s.implicits._
+      import graft.sources.ManifestTable
+      val emb = Tables.embeddings(s, dir)
+      val centroids = Sim.coarseCentroids(emb, 8, Some(trainedCentroids(s, dir)))
+      val assigned = Sim.nearestCells(centroids, emb, "vec_id", "embedding", 1)
+        .select($"cell", $"vec_id")
+      val packed = Pipeline.pqCodes(s, dir)
+        .groupBy($"vec_id")
+        .agg(expr("sum(shiftleft(code, cast(2 * sub as int)))").as("pq_code"))
+      val indexRows = assigned.join(packed, "vec_id")
+        .select($"cell", $"vec_id", $"pq_code")
+      val universe = centroids.select($"cell").as[Long].collect().sorted
+      Sim.buildIvfManifestIndex(s, indexRows, universe, root)
+      val live = ManifestTable.snapshotFiles(root).size
+      val probeCells = Sim.nearestCells(centroids,
+        emb.filter($"vec_id" < 3)
+          .select($"vec_id".as("query_id"), $"embedding".as("qe")),
+        "query_id", "qe", 2)
+        .select($"query_id", $"cell".as("p_cell"))
+      val needed = probeCells.select($"p_cell").distinct().as[Long].collect().sorted
+      val planned = needed.map(c =>
+        ManifestTable.plannedFilesForRange(root, "cell", c, c).size).sum
+      val candidates = needed.map(c => ManifestTable.readRange(s, root, "cell", c, c))
+        .reduce(_ unionAll _)
+      // in-scan unpack: sub-code s = (pq_code >> 2s) & 3 — codes never
+      // round-trip through raw vectors
+      val unpacked = candidates.select($"cell", $"vec_id".as("cand_id"),
+        posexplode(expr("transform(sequence(0, 7), s -> (pq_code >> (2 * s)) & 3)"))
+          .as(Seq("c_sub", "code")))
+      // ≤ 3 queries × 2 cells × 32 LUT rows: broadcast by construction
+      val lutByCell = probeCells.join(Pipeline.pqLut(s, dir), "query_id")
+      val adc = unpacked
+        .join(broadcast(lutByCell),
+          $"cell" === $"p_cell" && $"c_sub" === $"sub" && $"code" === $"cid")
+        .filter($"cand_id" =!= $"query_id")
+        .groupBy($"query_id", $"cand_id")
+        .agg(sum($"d2q").as("adc"))
+      val w20 = Window.partitionBy($"query_id").orderBy($"adc", $"cand_id")
+      val shortlist = adc.withColumn("crk", row_number().over(w20)).filter($"crk" <= 20)
+      val exact = shortlist
+        .join(emb.select($"vec_id", $"embedding".as("qe")), $"query_id" === $"vec_id")
+        .drop("vec_id")
+        .join(emb.select($"vec_id", $"embedding"), $"cand_id" === $"vec_id")
+        .select($"query_id", $"cand_id".as("neighbor_id"),
+          round(Fns.cosine_sim($"qe", $"embedding"), 9).as("cos_sim"))
+      val w5 = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"neighbor_id")
+      val top5 = exact.withColumn("rk", row_number().over(w5)).filter($"rk" <= 5)
+      // recall@5 acceptance companion: hits against exact brute force.
+      // LEFT join + coalesce: a query whose shortlist misses ALL true
+      // neighbors has recall 0, not zero output rows (the oracle's
+      // LEFT JOIN + COUNT keeps them — an inner join here would drop
+      // the query entirely and diverge from the gate)
+      val brute5 = Sim.bruteForce(s, emb, emb.filter($"vec_id" < 3), 5)
+        .select($"query_id", $"neighbor_id")
+      val hits = top5.select($"query_id", $"neighbor_id")
+        .join(brute5, Seq("query_id", "neighbor_id"), "left_semi")
+        .groupBy($"query_id").agg(count(lit(1)).as("n_hits"))
+      top5.join(hits, Seq("query_id"), "left")
+        .withColumn("n_hits5", coalesce($"n_hits", lit(0L))).drop("n_hits")
+        .select($"query_id", $"neighbor_id", $"rk", $"cos_sim",
+          lit(planned.toLong).as("n_files_planned"),
+          lit(live.toLong).as("n_files_live"), $"n_hits5")
+        .orderBy($"query_id", $"rk")
+    }
 
   private val annIvfPqManifestSql =
     s"""WITH ${ivfScoredCtes("e.vec_id < 3", 2)},

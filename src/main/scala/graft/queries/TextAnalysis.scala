@@ -457,7 +457,6 @@ object TextAnalysis {
     * the vocabulary grows; the scalar N rides a broadcast crossJoin. */
   private def textPmiBigrams(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val toks = Tables.documents(s, dir).select(split($"text", " ").as("ws"))
     val uni = toks.select(explode($"ws").as("w"))
       .groupBy($"w").agg(count(lit(1)).as("c"))

@@ -181,16 +181,6 @@ object ManifestTable {
       name.stripPrefix("v").stripSuffix(suffix).toLongOption
     else None
 
-  /** The `txnDir/fileName` data-relative path of an absolute scan URI
-    * (input_file_name output) — every data file lives exactly one txn
-    * dir below `data/`, so the last two segments ARE the rel path;
-    * scheme/authority/symlink differences can never break the match
-    * the way canonical-path string compares could. */
-  private def relOfUri(uri: String): String = {
-    val p = new HPath(uri)
-    s"${p.getParent.getName}/${p.getName}"
-  }
-
   /** Highest committed version, if any commit exists. */
   def latestVersion(dir: String): Option[Long] = {
     val o = io(dir)
@@ -543,8 +533,8 @@ object ManifestTable {
 
   /** Pinned read of `rels` carrying two physical-address helper
     * columns: `_m_rel` (data-relative path — the last two segments of
-    * the parquet reader's `_metadata.file_path`, the same addressing
-    * [[relOfUri]] uses) and `_m_pos` (`_metadata.row_index`, position
+    * the parquet reader's `_metadata.file_path`) and `_m_pos`
+    * (`_metadata.row_index`, position
     * within the file — the Delta/Iceberg DV addressing scheme). The
     * columns are bound to the scan itself, so they survive any join
     * stacked on top (input_file_name would not). */

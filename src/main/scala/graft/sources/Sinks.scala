@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Readers beyond parquet, and the write paths that matter at 100 TB
@@ -17,9 +17,6 @@ object Sinks {
 
   def readJsonLines(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
-
-  def readText(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
 
   def readOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)

@@ -475,7 +475,7 @@ object EventStream {
         else (BigInt(k - 1) * (BigInt(1) << 60) / BigInt(st.sketch(k - 1))).toLong
       Iterator.single(KmvOut(new Timestamp(key._1), key._2, st.rows, est))
     } else {
-      var st = state.getOption.getOrElse(KmvState(Array.emptyLongArray, 0L))
+      val st = state.getOption.getOrElse(KmvState(Array.emptyLongArray, 0L))
       var sk = st.sketch
       var n = st.rows
       events.foreach { case (_, _, uid) =>

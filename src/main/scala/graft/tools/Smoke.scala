@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
 /** Dev smoke: drives the driver-contract surfaces (entry, tolerant

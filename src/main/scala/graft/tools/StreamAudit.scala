@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Streaming-state audit (r8 VERDICT next #7): drive the
   * sessionize stateful stream over the real events table in MANY
@@ -73,10 +73,7 @@ object StreamAudit {
     // runs are the with/without-TTL comparison PERFORMANCE.md records.
     val lshMode = mode.startsWith("lshindex")
     if (lshMode) {
-      import org.apache.spark.sql.types.{StructType, LongType, TimestampType}
       val epochMs = 1767225600000L
-      val horizonMs =
-        if (mode == "lshindex_nottl") Long.MaxValue / 4 else 120L * 60000L
       graft.queries.Dedup.banded48(spark, dir)
         .withColumn("ts", expr(s"timestamp_millis(${epochMs}L + doc_id * 60000L)"))
         .repartitionByRange(chunks, $"ts").sortWithinPartitions($"ts")
@@ -94,7 +91,7 @@ object StreamAudit {
       .schema(if (lshMode) bandSchema else ev.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$root/src")
-    val q = {
+    val audited =
       if (lshMode) {
         val horizonMs =
           if (mode == "lshindex_nottl") Long.MaxValue / 4 else 120L * 60000L
@@ -105,13 +102,8 @@ object StreamAudit {
           if (mode == "ewma") graft.streaming.EventStream.streamingEwma(spark, d).toDF()
           else graft.streaming.EventStream.sessionize(spark, d, gapMinutes = 30).toDF()
         }
-    }
-      .writeStream.format("noop")
-      .option("checkpointLocation", s"$root/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    if (!q.awaitTermination(600000)) { q.stop(); sys.error("stream stalled") }
+    graft.queries.StreamReplay.drain(s"StreamAudit $mode", root, timeoutMs = 600000L)(
+      audited.writeStream.format("noop").outputMode("append"))
     // listener events are async: give the bus a moment before summarizing
     Thread.sleep(1500)
     println(f"STREAMAUDIT_SUMMARY mode=$mode sf=$dir chunks=$chunks " +
