@@ -311,6 +311,116 @@ object Kernels {
     UnsafeArrayData.fromPrimitiveArray(hs, Platform.LONG_ARRAY_OFFSET, m, 8)
   }
 
+  /** Open-addressing counter of byte ranges [start, end) of one text,
+    * keyed by a caller-supplied 64-bit hash and compared by bytes when
+    * two hashes are equal, so its counts are exact. Slots of earlier
+    * texts are told apart by a generation stamp, so `reset` is O(1) and
+    * one instance per thread serves every document; a table grown past
+    * 2^16 slots by a long text is dropped at the next reset. A slot is
+    * three longs: hash, start << 32 | end, generation << 32 | count. */
+  private[graft] final class RangeCounter {
+    private var slots = new Array[Long](3 * 64)
+    private var mask = 63
+    private var gen = 0L
+    var distinct = 0
+    var maxCount = 0
+
+    def reset(): Unit = {
+      distinct = 0; maxCount = 0
+      gen += 1
+      if (gen > Int.MaxValue) { java.util.Arrays.fill(slots, 0L); gen = 1 }
+      if (mask >= (1 << 16)) { slots = new Array[Long](3 * 64); mask = 63 }
+    }
+
+    def add(base: AnyRef, off: Long, h: Long, start: Int, end: Int): Unit = {
+      var s = (splitmix64(h) & mask).toInt
+      while ((slots(3 * s + 2) >>> 32) == gen) {
+        if (slots(3 * s) == h) {
+          val range = slots(3 * s + 1)
+          val st = (range >>> 32).toInt
+          val en = range.toInt
+          if (en - st == end - start && org.apache.spark.unsafe.array.ByteArrayMethods
+              .arrayEquals(base, off + st, base, off + start, end - start)) {
+            val c = (slots(3 * s + 2) & 0xffffffffL).toInt + 1
+            slots(3 * s + 2) = (gen << 32) | c
+            if (c > maxCount) maxCount = c
+            return
+          }
+        }
+        s = (s + 1) & mask
+      }
+      slots(3 * s) = h
+      slots(3 * s + 1) = (start.toLong << 32) | end
+      slots(3 * s + 2) = (gen << 32) | 1L
+      distinct += 1
+      if (maxCount == 0) maxCount = 1
+      if (2 * distinct > mask) grow()
+    }
+
+    private def grow(): Unit = {
+      val old = slots
+      slots = new Array[Long](2 * old.length)
+      mask = 2 * mask + 1
+      var i = 0
+      while (i < old.length) {
+        if ((old(i + 2) >>> 32) == gen) {
+          var s = (splitmix64(old(i)) & mask).toInt
+          while ((slots(3 * s + 2) >>> 32) == gen) s = (s + 1) & mask
+          System.arraycopy(old, i, slots, 3 * s, 3)
+        }
+        i += 3
+      }
+    }
+  }
+
+  private val repetitionCounters = new ThreadLocal[Array[RangeCounter]] {
+    override def initialValue(): Array[RangeCounter] = Array.fill(3)(new RangeCounter)
+  }
+
+  /** Token-repetition counts of `split(text, " ", -1)`'s tokens, as a
+    * [[TokenRepetition.schema]] row: `tokens`; `top_count`, the count of
+    * the most frequent token; and for n = 2, 3 `grams_n` =
+    * max(tokens − n + 1, 0) and `distinct_n`, the distinct n-token
+    * windows. One walk over the UTF-8 bytes: each token is hashed once
+    * (FNV-1a), a window's hash combines its tokens' hashes, and every
+    * window is a contiguous byte range of the text (tokens rejoined with
+    * ' '), counted in place with byte comparison on equal hashes — no
+    * String, no token array, exact counts. Empty tokens count; invalid
+    * UTF-8 is re-encoded first, as Spark's `split` does. */
+  def tokenRepetition(text0: UTF8String): InternalRow = {
+    val text = splitView(text0)
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    val len = text.numBytes
+    val cs = repetitionCounters.get()
+    val uni = cs(0); val bi = cs(1); val tri = cs(2)
+    uni.reset(); bi.reset(); tri.reset()
+    var toks = 0L
+    var h1 = 0L; var h2 = 0L // hashes of the previous two tokens
+    var s1 = 0; var s2 = 0   // and their starts
+    var start = 0
+    var h = FnvOffset
+    var i = 0
+    while (i <= len) {
+      val b = if (i < len) Platform.getByte(base, off + i) else ' '.toByte
+      if (b == ' ') {
+        uni.add(base, off, h, start, i)
+        if (toks >= 1) bi.add(base, off, h1 * FnvPrime + h, s1, i)
+        if (toks >= 2) tri.add(base, off, (h2 * FnvPrime + h1) * FnvPrime + h, s2, i)
+        toks += 1
+        h2 = h1; h1 = h
+        s2 = s1; s1 = start
+        start = i + 1
+        h = FnvOffset
+      } else { h ^= (b & 0xffL); h *= FnvPrime }
+      i += 1
+    }
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
+      toks, uni.maxCount.toLong,
+      math.max(toks - 1, 0L), bi.distinct.toLong,
+      math.max(toks - 2, 0L), tri.distinct.toLong))
+  }
+
   // splitmix64 permutation constants (a_j odd, b_j) depend only on j —
   // computed once per (process, numPerms), not per document
   private val minhashPermCache =
@@ -712,6 +822,28 @@ case class ShingleSet(child: Expression, w: Int) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
+/** Token-repetition counts of a text column as one struct (see
+  * Kernels.tokenRepetition): the Gopher top-word and duplicate-n-gram
+  * legs. Counts equal the split/array_distinct/`wordNgrams` SQL they
+  * replace, pinned by KernelsPropertySpec; null text → null struct. */
+case class TokenRepetition(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"token_repetition expects a string argument, got ${child.dataType.sql}")
+  override def dataType: DataType = TokenRepetition.schema
+  override def nullSafeEval(v: Any): Any = Kernels.tokenRepetition(v.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.tokenRepetition($c)")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+object TokenRepetition {
+  val schema: StructType = StructType(
+    Seq("tokens", "top_count", "grams_2", "distinct_2", "grams_3", "distinct_3")
+      .map(StructField(_, LongType, nullable = false)))
+}
+
 /** MinHash signature (array<bigint>) of a text column. */
 case class MinHashSig(child: Expression, numPerms: Int, shingleW: Int)
     extends UnaryExpression {
@@ -1011,6 +1143,7 @@ object Fns {
   def minhash_sig(c: Column, numPerms: Int = 128, shingleW: Int = 3): Column =
     column(MinHashSig(expression(c), numPerms, shingleW))
   def shingle_set(c: Column, w: Int = 3): Column = column(ShingleSet(expression(c), w))
+  def token_repetition(c: Column): Column = column(TokenRepetition(expression(c)))
   def rolling_hash(c: Column): Column = column(RollingHash(expression(c)))
   def simhash_md5(c: Column): Column = column(SimHashMd5(expression(c)))
   def nfc(c: Column): Column = column(NfcNormalize(expression(c)))
@@ -1055,6 +1188,7 @@ object Fns {
       case Seq(c, w) => ShingleSet(c, intArg(w, "w"))
       case es => throw new IllegalArgumentException(s"shingle_set takes 1-2 args, got ${es.length}")
     })
+    registerFunction(spark, "token_repetition", es => TokenRepetition(es.head))
     registerFunction(spark, "rolling_hash", es => RollingHash(es.head))
     registerFunction(spark, "text_scan", es => TextScanStats(es.head))
     registerFunction(spark, "lang_trigram_hits", es => LangTrigramHits(es.head))

@@ -184,39 +184,29 @@ object TextAnalysis {
       .agg(countDistinct(col("gram")).as("n_hits"))
   }
 
-  /** Gopher-style repetition signals, computed entirely in-scan (no
-    * shuffle — every metric is a pure function of one document):
-    *  - top_word_frac: occurrences of the most frequent token / tokens;
-    *  - dup_2gram_frac / dup_3gram_frac: fraction of n-gram occurrences
-    *    that are repeats beyond the first (1 − distinct/total).
-    * The mode count is O(distinct·n) per doc via filter-per-distinct —
-    * fine for web-scale docs (n ~ 10³); for book-length inputs swap in
-    * a sort-and-fold or the HeavyHitters sketch. */
   /** Gopher-style composite document filter (Rae et al. 2021 §A1.1
     * adapted to the synthetic corpus): each rule is a pure in-scan
     * predicate; `fail_mask` records which rules fired (bit k = rule k)
     * and `keep` is their conjunction. All ratios are single divisions
     * of exact integer counts, so threshold comparisons are
-    * bit-identical across engines. */
+    * bit-identical across engines. Every leg comes from two one-pass
+    * native kernels: `text_scan` (stopwords, word length, punctuation)
+    * and `token_repetition` (token count, top-word and 3-gram counts). */
   def gopherFilter(docs: DataFrame): DataFrame = {
-    val ws = whitespaceTokens(col("text"))
-    val nTok = size(ws)
-    // scalar legs from the single-scan native kernel (identical
-    // values: tokens = size(split) incl. empties, counts are exact);
-    // the n-gram legs below still need the token array
     val st = graft.functions.Fns.text_scan(col("text"))
+    val rep = graft.functions.Fns.token_repetition(col("text"))
+    val nTok = rep.getField("tokens")
     val stopRatio = st.getField("stop_hits").cast("double") /
       st.getField("tokens").cast("double")
     val mwl = st.getField("word_chars").cast("double") /
       st.getField("tokens").cast("double")
     val punct = st.getField("punct").cast("double") /
       st.getField("chars").cast("double")
-    val g3 = wordNgrams(col("text"), 3)
-    val dup3 = when(size(g3) > 0,
-      (size(g3) - size(array_distinct(g3))).cast("double") / size(g3).cast("double"))
+    val g3 = rep.getField("grams_3")
+    val dup3 = when(g3 > 0,
+      (g3 - rep.getField("distinct_3")).cast("double") / g3.cast("double"))
       .otherwise(lit(0.0))
-    val topWord = array_max(transform(array_distinct(ws),
-      x => size(filter(ws, y => y === x)))).cast("double") / nTok.cast("double")
+    val topWord = rep.getField("top_count").cast("double") / nTok.cast("double")
     val rules: Seq[(Int, Column)] = Seq(
       0 -> (nTok < 20),             // too short
       1 -> (stopRatio < 0.03),      // not natural-language-like
@@ -229,26 +219,31 @@ object TextAnalysis {
     }
     docs.select(
       col("doc_id"),
-      nTok.cast("long").as("n_tokens"),
+      nTok.as("n_tokens"),
       mask.as("fail_mask"))
       .withColumn("keep", col("fail_mask") === 0L)
   }
 
+  /** Gopher-style repetition signals, computed entirely in-scan (no
+    * shuffle — every metric is a pure function of one document):
+    *  - top_word_frac: occurrences of the most frequent token / tokens;
+    *  - dup_2gram_frac / dup_3gram_frac: fraction of n-gram occurrences
+    *    that are repeats beyond the first (1 − distinct/total).
+    * All counts come from one `token_repetition` pass over the bytes. */
   def repetitionStats(docs: DataFrame): DataFrame = {
-    val ws = whitespaceTokens(col("text"))
+    val rep = graft.functions.Fns.token_repetition(col("text"))
     def ppbFrac(num: Column, den: Column): Column =
       floor(num.cast("double") * 1e9 / den).cast("long").cast("double") / 1e9
-    def dupFrac(grams: Column): Column =
-      when(size(grams) > 0,
-        ppbFrac(size(grams) - size(array_distinct(grams)), size(grams)))
+    def dupFrac(n: Int): Column = {
+      val grams = rep.getField(s"grams_$n")
+      when(grams > 0, ppbFrac(grams - rep.getField(s"distinct_$n"), grams))
         .otherwise(lit(0.0))
-    val modeCount = array_max(transform(array_distinct(ws),
-      x => size(filter(ws, y => y === x))))
+    }
     docs.select(
       col("doc_id"),
-      ppbFrac(modeCount, size(ws)).as("top_word_frac"),
-      dupFrac(wordNgrams(col("text"), 2)).as("dup_2gram_frac"),
-      dupFrac(wordNgrams(col("text"), 3)).as("dup_3gram_frac"))
+      ppbFrac(rep.getField("top_count"), rep.getField("tokens")).as("top_word_frac"),
+      dupFrac(2).as("dup_2gram_frac"),
+      dupFrac(3).as("dup_3gram_frac"))
   }
 
   /** Result of [[htmlMainText]]: the extracted main text plus the

@@ -97,7 +97,8 @@ object StreamReplay {
     s.read.parquet(s"$root/out")
   }
 
-  private def deleteRec(f: File): Unit = {
+  /** Deletes `f` and, for a dir, everything under it. */
+  def deleteRec(f: File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
     f.delete(): Unit
   }

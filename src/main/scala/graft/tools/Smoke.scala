@@ -73,6 +73,7 @@ object Smoke {
       graft.sources.Tables.documents(spark, "/root/testdata/sf0.001"), s"$wh/docs", Seq("lang"))
     println("PARTITIONED_LANGS=" + new java.io.File(s"$wh/docs").listFiles()
       .count(_.getName.startsWith("lang=")))
+    graft.queries.StreamReplay.deleteRec(new java.io.File(wh))
 
     // 6. streaming CTR: the reference pipeline as a stream-stream join
     val impIn = MemoryStream[(String, String, String, java.sql.Timestamp)]

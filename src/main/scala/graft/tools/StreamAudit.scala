@@ -2,6 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -24,11 +25,18 @@ object StreamAudit {
     val chunks = sys.env.getOrElse("SPARK_GRAFT_CHUNKS", "16").toInt
     val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
+    val root = Files.createTempDirectory("graft-stream-audit").toString
+    // the source copy and the checkpoint go with the run, also when it fails
+    try audit(spark, mode, dir, chunks, root)
+    finally graft.queries.StreamReplay.deleteRec(new java.io.File(root))
+    spark.stop()
+  }
 
+  private def audit(spark: SparkSession, mode: String, dir: String, chunks: Int,
+      root: String): Unit = {
+    import spark.implicits._
     val ev = graft.sources.Tables.events(spark, dir)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-    val root = Files.createTempDirectory("graft-stream-audit").toString
     // one batch per file, CHRONOLOGICAL: range-partition by ts so
     // part-00000 holds the earliest span and FileStreamSource (which
     // orders same-mtime files by path) replays time in order — the
@@ -109,6 +117,5 @@ object StreamAudit {
     println(f"STREAMAUDIT_SUMMARY mode=$mode sf=$dir chunks=$chunks " +
       f"wall_s=${(System.nanoTime() - t0) / 1e9}%.1f " +
       f"peak_state_rows=$peakStateRows peak_state_mb=${peakStateBytes / 1e6}%.2f")
-    spark.stop()
   }
 }

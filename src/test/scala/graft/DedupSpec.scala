@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dedup
 
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   def docs(rows: Seq[(Long, String)]) = {
@@ -96,46 +96,12 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  /** Interpreted higher-order functions and lambdas in a plan. */
-  private def lambdas(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Seq[String] = {
-    import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction, LambdaFunction}
-    val pick: PartialFunction[Expression, String] = {
-      case e: HigherOrderFunction => e.prettyName
-      case e: LambdaFunction => e.sql
-    }
-    p.collectWithSubqueries { case n => n.expressions.flatMap(_.collect(pick)) }.flatten
-  }
-
-  /** The lambdas of every plan `run` executes, keyed by action name, plus
-    * those of the returned frame's own plan ("result"). Every plan counts,
-    * not just the returned one: the shingle sets are built in eager
-    * localCheckpoint jobs whose plans never reach the result's lineage. */
-  private def plannedLambdas(run: => org.apache.spark.sql.DataFrame): Seq[(String, Seq[String])] = {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    import scala.jdk.CollectionConverters._
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
-    val l = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        seen.add(f -> lambdas(qe.optimizedPlan))
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        seen.add(f -> lambdas(qe.optimizedPlan))
-    }
-    spark.listenerManager.register(l)
-    try {
-      val df = run
-      df.collect()
-      org.apache.spark.graft.ListenerBusWait.drain(spark.sparkContext)
-      seen.asScala.toSeq :+ ("result" -> lambdas(df.queryExecution.optimizedPlan))
-    } finally spark.listenerManager.unregister(l)
-  }
-
   test("shingle joins plan no lambda: jaccardJoin, ngramJaccardPairs, dedup_containment") {
     val d = docs(Seq((1L, base), (2L, nearDup), (3L, other)))
     for ((name, plans) <- Seq(
-        "jaccardJoin" -> plannedLambdas(Dedup.jaccardJoin(spark, d, 0.7)),
-        "ngramJaccardPairs" -> plannedLambdas(Dedup.ngramJaccardPairs(spark, d)),
-        "dedup_containment" -> plannedLambdas(
+        "jaccardJoin" -> SpecLint.plannedLambdas(spark)(Dedup.jaccardJoin(spark, d, 0.7)),
+        "ngramJaccardPairs" -> SpecLint.plannedLambdas(spark)(Dedup.ngramJaccardPairs(spark, d)),
+        "dedup_containment" -> SpecLint.plannedLambdas(spark)(
           SparkEntry.all("dedup_containment").fn(spark, TestSpark.sf)))) {
       assert(plans.exists(_._1 == "localCheckpoint"), s"$name: the shingle-set job was not seen")
       val bad = plans.filter(_._2.nonEmpty)
@@ -218,7 +184,7 @@ class DedupSpec extends AnyFunSuite {
     // agreement on 8 permutations at once, which unrelated docs don't have.
     val rows = (0L until 60L).map(i =>
       (i, s"aaa bbb ccc u${i}a u${i}b u${i}c u${i}d u${i}e"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-skew").toString
+    val dir = tempDir("graft-skew")
     rows.toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
@@ -240,7 +206,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("banded LSH recall: byte-identical docs collide in every band") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-banddup").toString
+    val dir = tempDir("graft-banddup")
     val text = "key agg row scan slow fast table value part hash merge batch"
     Seq((1L, text), (2L, text),
       (3L, "window spark order data column agg join small line customer query stream"))
@@ -254,7 +220,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("dedup_minhash_recall: planted near-dups caught, low-sim pairs missed (the S-curve)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mh-recall").toString
+    val dir = tempDir("mh-recall")
     // 3 near-dup pairs (1-word edits, jaccard ~0.9) + a low-sim pair
     // sharing exactly one 3-shingle run
     val lowA = "alpha beta gamma " + (1 to 20).map(i => s"ax$i").mkString(" ")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * on graphs small enough to walk the integer trajectories by hand.
   * The oracle hash-compare proves Spark == DuckDB; these prove both
   * match the DEFINITION. */
-class GraphSpec extends AnyFunSuite {
+class GraphSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -18,7 +16,7 @@ class GraphSpec extends AnyFunSuite {
 
   /** nations 0,1,2 with trade edges 0→1 and 1→2 (directed path). */
   private def pathDir(): String = {
-    val dir = Files.createTempDirectory("r10graph").toString
+    val dir = tempDir("r10graph")
     Seq((0L, "ALGERIA"), (1L, "BRAZIL"), (2L, "CANADA"))
       .toDF("n_nationkey", "n_name").coalesce(1)
       .write.parquet(s"$dir/nation.parquet")
@@ -37,7 +35,7 @@ class GraphSpec extends AnyFunSuite {
     * lineitem per weighted edge (src nation, dst nation, l_quantity):
     * customer 100+src buys from supplier 200+dst in order 10·(k+1). */
   private def tradeDir(names: Seq[String], edges: Seq[(Long, Long, Double)]): String = {
-    val dir = Files.createTempDirectory("graphspec").toString
+    val dir = tempDir("graphspec")
     names.zipWithIndex.map { case (n, i) => (i.toLong, n) }
       .toDF("n_nationkey", "n_name").coalesce(1)
       .write.parquet(s"$dir/nation.parquet")
@@ -60,7 +58,7 @@ class GraphSpec extends AnyFunSuite {
   /** A lineitem-only co-purchase graph: each order's parts form a
     * clique (order keys are multiples of 10 to pass the sample). */
   private def coPurchaseDir(li: Seq[(Long, Long)]): String = {
-    val dir = Files.createTempDirectory("graphspec").toString
+    val dir = tempDir("graphspec")
     li.toDF("l_orderkey", "l_partkey").coalesce(1)
       .write.parquet(s"$dir/lineitem.parquet")
     dir
@@ -102,7 +100,7 @@ class GraphSpec extends AnyFunSuite {
     // 150000000 restart after iteration 1 (its own mass left, nothing
     // returns), so from iteration 2 on r1 = 85·150000000÷100 =
     // 127500000 — stationary well before the 10th iteration.
-    val dir = Files.createTempDirectory("r10ppr").toString
+    val dir = tempDir("r10ppr")
     Seq((0L, "ALGERIA"), (1L, "BRAZIL"), (2L, "CANADA"))
       .toDF("n_nationkey", "n_name").coalesce(1)
       .write.parquet(s"$dir/nation.parquet")
@@ -127,7 +125,7 @@ class GraphSpec extends AnyFunSuite {
     // (auth_nano = 1e9), nations 0 and 2 are equal hubs (5e8 each).
     // Integer L1 trajectory: h0 = 333333333 each; a(1) = 1e9 from the
     // first rescale and the system is stationary from iteration 1.
-    val dir = Files.createTempDirectory("r9bhits").toString
+    val dir = tempDir("r9bhits")
     Seq((0L, "ALGERIA"), (1L, "BRAZIL"), (2L, "CANADA"))
       .toDF("n_nationkey", "n_name").coalesce(1)
       .write.parquet(s"$dir/nation.parquet")
@@ -177,7 +175,7 @@ class GraphSpec extends AnyFunSuite {
     // triangle {1,2,3}, triangle {4,5,6}, bridge edge {3,4}.
     val li = Seq((10L, 1L), (10L, 2L), (10L, 3L),
       (20L, 4L), (20L, 5L), (20L, 6L), (30L, 3L), (30L, 4L))
-    val dir = Files.createTempDirectory("lpa").toString
+    val dir = tempDir("lpa")
     li.toDF("l_orderkey", "l_partkey").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val got = SparkEntry.queries("graph_label_prop")(spark, dir)
@@ -192,7 +190,7 @@ class GraphSpec extends AnyFunSuite {
     // order 10 -> K4 on {1,2,3,4}; order 20 -> triangle {4,5,6}.
     // Triangle edges have support 1 (< 2) and peel in round 1; every
     // K4 edge sits in exactly 2 triangles and is stable.
-    val dir = Files.createTempDirectory("r9btruss").toString
+    val dir = tempDir("r9btruss")
     (Seq((10L, 1L), (10L, 2L), (10L, 3L), (10L, 4L),
       (20L, 4L), (20L, 5L), (20L, 6L)))
       .toDF("l_orderkey", "l_partkey").coalesce(1)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Hand-traced semantics for the hypothesis-test keys: the oracle
@@ -9,12 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * textbook DEFINITIONS (midrank ties in U, cross-multiplied CDFs in
   * KS, observed-vs-expected cells in chi-square) on inputs small
   * enough to verify by hand. */
-class HypothesisSpec extends AnyFunSuite {
+class HypothesisSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def liDir(rows: Seq[(String, String, Double)]): String = {
-    val dir = Files.createTempDirectory("hypedge").toString
+    val dir = tempDir("hypedge")
     rows.toDF("l_returnflag", "l_linestatus", "l_quantity").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     dir

@@ -20,7 +20,7 @@ import graft.sources.v2.{JsonLogPartitionReader, JsonLogScan}
   * parse semantics, PHYSICAL column pruning and filter pushdown
   * (asserted on the planned scan, not just results), and line-aligned
   * byte-range splits that neither lose nor duplicate rows. */
-class JsonLogSourceSpec extends AnyFunSuite {
+class JsonLogSourceSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -32,7 +32,7 @@ class JsonLogSourceSpec extends AnyFunSuite {
     writeBytes(lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
 
   private def writeBytes(bytes: Array[Byte]): String = {
-    val f = Files.createTempFile("jsonlog", ".log")
+    val f = tempFile("jsonlog", ".log")
     Files.write(f, bytes)
     f.toString
   }

@@ -266,6 +266,127 @@ class KernelsPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("token_repetition == the split / array_distinct / wordNgrams SQL legs through Spark") {
+    import org.apache.spark.sql.functions._
+    import graft.operators.TextAnalysis.wordNgrams
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val r = new scala.util.Random(19)
+    // a small pool, so tokens and windows repeat; the raw FF and C0 80
+    // tokens equal the valid U+FFFD ones beside them only once the text
+    // is re-encoded, as split does
+    val pool = Seq("a", "b", "the", "", "é", "\uFFFD", "\uFFFD\uFFFD").map(_.getBytes("UTF-8")) ++
+      Seq(Array(0xFF), Array(0xC0, 0x80), Array(0xED, 0xA0, 0x80), Array(0xF4, 0x90, 0x80, 0x80))
+        .map(_.map(_.toByte))
+    def repetitive(): Array[Byte] =
+      Seq.fill(1 + r.nextInt(30))(pool(r.nextInt(pool.size)))
+        .reduce((a, b) => a ++ Array(' '.toByte) ++ b)
+    val edge = Seq("", " ", "  ", "a", "a a", "a b", "a b a", "a b a b", "a b c a b c", " a",
+      "a ", "a  b", "  a  a  ", "x x x x", "é é ü", "😀 😀 😀 😀").map(_.getBytes("UTF-8"))
+    val inputs = (edge ++ malformed ++ Seq.fill(200)(noisyText(r)) ++ Seq.fill(300)(repetitive()))
+      .map(Option(_)) :+ Option.empty[Array[Byte]]
+    val df = inputs.zipWithIndex.map { case (b, i) => (i.toLong, b.orNull) }.toDF("doc_id", "bytes")
+      .select($"doc_id", $"bytes".cast("string").as("text"))
+    val fields = Seq("tokens", "top_count", "grams_2", "distinct_2", "grams_3", "distinct_3")
+    // the interpreted SQL legs the Gopher and repetition operators ran before the kernel
+    val ws = split($"text", " ")
+    val (g2, g3) = (wordNgrams($"text", 2), wordNgrams($"text", 3))
+    val old = Seq(size(ws), array_max(transform(array_distinct(ws), x => size(filter(ws, y => y === x)))),
+      size(g2), size(array_distinct(g2)), size(g3), size(array_distinct(g3))).map(_.cast("long"))
+    val rep = graft.functions.Fns.token_repetition($"text")
+    val rows = df.select($"doc_id" +: rep.as("got") +: old: _*).orderBy("doc_id").collect()
+    assert(rows.length == inputs.length)
+    var repeats = 0
+    rows.foreach { row =>
+      val id = row.getLong(0).toInt
+      val want = fields.indices.map(k => row.get(2 + k))
+      inputs(id) match {
+        case Some(bs) =>
+          val got = row.getStruct(1)
+          assert(got.schema.fieldNames.toSeq == fields)
+          assert(fields.indices.map(got.get) == want, s"id=$id text='${UTF8String.fromBytes(bs)}'")
+          // the same counts off the direct (non-codegen) kernel call
+          val direct = Kernels.tokenRepetition(UTF8String.fromBytes(bs))
+          assert(fields.indices.map(direct.getLong) == want, s"direct id=$id")
+          if (got.getLong(1) > 1 && got.getLong(5) < got.getLong(4)) repeats += 1
+        case None =>
+          assert(row.isNullAt(1), "null text → null struct")
+          assert(want.take(2) == Seq(null, null), "the old token and mode legs are null too")
+      }
+    }
+    assert(repeats > 100, s"only $repeats texts repeat a token and a 3-gram")
+  }
+
+  test("RangeCounter: equal hashes of different bytes stay distinct, through growth and reuse") {
+    val off = org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET.toLong
+    val c = new Kernels.RangeCounter
+    // 200 two-byte tokens, 100 distinct, all added under ONE hash: only the
+    // byte comparison tells them apart, and the table grows past 64 slots
+    val toks = (0 until 200).map(i => f"${i % 100}%02d")
+    val bytes = toks.mkString(" ").getBytes("UTF-8")
+    for (_ <- 1 to 3) {
+      c.reset()
+      toks.indices.foreach(i => c.add(bytes, off, 7L, 3 * i, 3 * i + 2))
+      assert(c.distinct == 100 && c.maxCount == 2)
+    }
+    // a text past 2^15 distinct windows, then small ones on the same thread
+    val big = (0 until 40000).mkString(" ")
+    val r = Kernels.tokenRepetition(u8(big))
+    assert((0 until 6).map(r.getLong) == Seq(40000L, 1L, 39999L, 39999L, 39998L, 39998L))
+    val s = Kernels.tokenRepetition(u8("a b a b a"))
+    assert((0 until 6).map(s.getLong) == Seq(5L, 3L, 4L, 2L, 3L, 2L))
+  }
+
+  test("gopherFilter and repetitionStats equal their pre-kernel SQL formulation, nulls included") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+    import graft.operators.TextAnalysis
+    import graft.operators.TextAnalysis.wordNgrams
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val r = new scala.util.Random(23)
+    val vocab = Seq("the", "a", "of", "x", "word", "boiler", "plate", "!!", "")
+    // "" is left out: its punctuation ratio divides by zero chars (rule 5)
+    val texts = Seq(None, Some(" "), Some("  "), Some("the")) ++
+      Seq.fill(300)(Seq.fill(r.nextInt(60))(vocab(r.nextInt(vocab.size))).mkString(" "))
+        .filter(_.nonEmpty).map(Some(_))
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t.orNull) }.toDF("doc_id", "text")
+    // the two operators as they were, lambdas and token arrays included
+    val ws = split($"text", " ")
+    val modeCount = array_max(transform(array_distinct(ws), x => size(filter(ws, y => y === x))))
+    val st = graft.functions.Fns.text_scan($"text")
+    val g3 = wordNgrams($"text", 3)
+    val dup3 = when(size(g3) > 0,
+      (size(g3) - size(array_distinct(g3))).cast("double") / size(g3).cast("double"))
+      .otherwise(lit(0.0))
+    val topWord = modeCount.cast("double") / size(ws).cast("double")
+    val stopRatio = st.getField("stop_hits").cast("double") / st.getField("tokens").cast("double")
+    val mwl = st.getField("word_chars").cast("double") / st.getField("tokens").cast("double")
+    val punct = st.getField("punct").cast("double") / st.getField("chars").cast("double")
+    val rules = Seq(size(ws) < 20, stopRatio < 0.03, mwl < 3.0 || mwl > 10.0,
+      topWord > 0.15, dup3 > 0.1, punct > 0.3)
+    val mask = rules.zipWithIndex.foldLeft(lit(0L)) { case (acc, (c, bit)) =>
+      acc + when(c, lit(1L << bit)).otherwise(lit(0L))
+    }
+    val oldGopher = docs.select($"doc_id", size(ws).cast("long").as("n_tokens"), mask.as("fail_mask"))
+      .withColumn("keep", $"fail_mask" === 0L)
+    def ppbFrac(num: Column, den: Column): Column =
+      floor(num.cast("double") * 1e9 / den).cast("long").cast("double") / 1e9
+    def dupFrac(g: Column): Column =
+      when(size(g) > 0, ppbFrac(size(g) - size(array_distinct(g)), size(g))).otherwise(lit(0.0))
+    val oldRep = docs.select($"doc_id", ppbFrac(modeCount, size(ws)).as("top_word_frac"),
+      dupFrac(wordNgrams($"text", 2)).as("dup_2gram_frac"), dupFrac(g3).as("dup_3gram_frac"))
+    for ((name, got, want) <- Seq(
+        ("gopherFilter", TextAnalysis.gopherFilter(docs), oldGopher),
+        ("repetitionStats", TextAnalysis.repetitionStats(docs), oldRep))) {
+      assert(got.schema == want.schema, name)
+      val (g, w) = (got.orderBy("doc_id").collect().toSeq, want.orderBy("doc_id").collect().toSeq)
+      assert(g == w, s"$name: ${g.zip(w).filter { case (a, b) => a != b }.take(5)}")
+    }
+    // rules other than "too short" fire on some rows: 3 and 4 are the kernel's
+    assert(oldGopher.filter($"fail_mask".bitwiseAND(8L + 16L) =!= 0L).count() > 10)
+  }
+
   test("textScan matches the definitional regex/split formulas on random unicode text") {
     val stop = Set("the", "a", "and", "of", "to")
     val pieces = Seq("the", "a", "and", "of", "to", "word", "W9x", "42", "7",

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 import graft.sources.Tables
 
-class KmeansSpec extends AnyFunSuite {
+class KmeansSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("kmeans returns k centroids of the right dimension, deterministically") {
@@ -28,7 +28,7 @@ class KmeansSpec extends AnyFunSuite {
     val rows = (0 until 8).map(i =>
       (i.toLong, Array.tabulate(dim)(j => if (j == i) 1f else 0f))) :+
       (8L, Array.tabulate(dim)(j => if (j < 2) 0.5f else 0f))
-    val dir = java.nio.file.Files.createTempDirectory("graft-km-tie").toString
+    val dir = tempDir("graft-km-tie")
     rows.toDF("vec_id", "embedding").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val got = SparkEntry.queries("emb_kmeans")(spark, dir).collect()

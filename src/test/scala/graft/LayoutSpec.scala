@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.Layout
 
-class LayoutSpec extends AnyFunSuite {
+class LayoutSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   /** Reference Morton interleave, bit by bit. */
@@ -33,7 +33,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("zorderWrite yields disjoint per-file z-ranges and tight per-file spans on BOTH dims") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = tempDir("zorder")
     val o = graft.sources.Tables.orders(spark, TestSpark.sf)
       .select($"o_orderkey", $"o_custkey",
         floor(unix_timestamp($"o_orderdate").cast("double") / 86400).cast("long").as("day"))

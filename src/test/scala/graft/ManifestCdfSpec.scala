@@ -15,13 +15,10 @@ import java.nio.file.Files
   * without change data, replacing rewrites), exactly-once under
   * txn-marked retries, and vacuum sparing exactly the change files
   * a surviving manifest still names. */
-class ManifestCdfSpec extends AnyFunSuite {
+class ManifestCdfSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def freshDir(): String =
-    Files.createTempDirectory("graft-cdf-spec").toFile.getPath
 
   private def feed(dir: String, since: Long = -1L): Seq[(Long, String, Int, String)] =
     ManifestTable.readChanges(spark, dir, since)
@@ -30,7 +27,7 @@ class ManifestCdfSpec extends AnyFunSuite {
       .toSeq.sorted
 
   test("pure appends are served as typed inserts, one _commit_version per commit") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     ManifestTable.append(spark, Seq((1, "a"), (2, "b")).toDF("id", "v"), dir)
     ManifestTable.append(spark, Seq((3, "c")).toDF("id", "v"), dir)
     assert(feed(dir) == Seq((0L, "insert", 1, "a"), (0L, "insert", 2, "b"),
@@ -44,7 +41,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("cdf-enabled MERGE records exact preimage/postimage/insert rows") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     ManifestTable.append(spark, Seq((1, "old1"), (2, "old2"), (3, "keep")).toDF("id", "v"), dir)
     val mv = ManifestTable.mergeInto(spark, dir,
       Seq((1, "new1"), (2, "new2"), (9, "fresh")).toDF("id", "v"), "id", cdf = true)
@@ -60,7 +57,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("insert-only MERGE into an empty/unmatched table feeds pure inserts") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     val mv = ManifestTable.mergeInto(spark, dir,
       Seq((7, "x")).toDF("id", "v"), "id", cdf = true)
     assert(mv.contains(0L))
@@ -68,7 +65,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("cdf-enabled DELETE records exactly the deleted rows") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     ManifestTable.append(spark, (1 to 6).map(i => (i, s"r$i")).toDF("id", "v"), dir)
     val dv = ManifestTable.deleteWhere(spark, dir, $"id" % 2 === 0, cdf = true)
     assert(dv.contains(1L))
@@ -78,7 +75,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("a row-removing commit WITHOUT change data refuses to feed") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     ManifestTable.append(spark, (1 to 4).map(i => (i, "x")).toDF("id", "v"), dir)
     ManifestTable.deleteWhere(spark, dir, $"id" === 1) // cdf = false
     val e = intercept[IllegalStateException] {
@@ -90,7 +87,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("a replacing rewrite (compact) in the interval refuses to feed") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     ManifestTable.append(spark, (1 to 4).map(i => (i, "x")).toDF("id", "v"), dir)
     ManifestTable.compact(spark, dir)
     val e = intercept[IllegalStateException] {
@@ -100,7 +97,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("retried txn-marked MERGE adds nothing to the feed") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     ManifestTable.append(spark, Seq((1, "a")).toDF("id", "v"), dir)
     val batch = Seq((1, "a2")).toDF("id", "v")
     assert(ManifestTable.mergeInto(spark, dir, batch, "id",
@@ -112,7 +109,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("empty interval returns an empty frame in the feed schema") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     ManifestTable.append(spark, Seq((1, "a")).toDF("id", "v"), dir)
     val empty = ManifestTable.readChanges(spark, dir, 0L)
     assert(empty.columns.toSeq ==
@@ -121,7 +118,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("updateWhere: every SET RHS reads the OLD row (swap is a real swap)") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     ManifestTable.append(spark,
       Seq((1, 10L, 20L), (2, 30L, 40L)).toDF("id", "a", "b"), dir)
     val uv = ManifestTable.updateWhere(spark, dir, $"id" === 1,
@@ -140,7 +137,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("updateWhere: NULL predicate leaves the row unchanged; unknown SET column refuses") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     ManifestTable.append(spark,
       Seq((1, "x"), (2, null.asInstanceOf[String])).toDF("id", "v"), dir)
     // v === "x" is NULL for the null row: only id 1 updates
@@ -157,7 +154,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("compactSmall packs only sub-threshold files; the feed refuses across it") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     // one healthy file, three tiny ones
     ManifestTable.append(spark,
       (0 until 5000).map(i => (i, s"row-$i-with-some-padding")).toDF("id", "v")
@@ -183,7 +180,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("mergeIntoCdc: all three clauses in one commit, unmatched D is a no-op") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     ManifestTable.append(spark,
       Seq((1, "a"), (2, "b"), (3, "c"), (4, "d")).toDF("id", "v"), dir)
     val batch = Seq(
@@ -204,7 +201,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("mergeIntoCdc: one key in two clauses is an error, nothing commits") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     ManifestTable.append(spark, Seq((1, "a")).toDF("id", "v"), dir)
     val bad = Seq((1, "a2", "U"), (1, "x", "D")).toDF("id", "v", "op")
     intercept[Exception] {
@@ -215,7 +212,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("mergeIntoCdc: no-effect batch commits nothing, txn marker still records") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     ManifestTable.append(spark, Seq((1, "a")).toDF("id", "v"), dir)
     val ghosts = Seq((50, "x", "D"), (51, "x", "D")).toDF("id", "v", "op")
     assert(ManifestTable.mergeIntoCdc(spark, dir, ghosts, "id").isEmpty)
@@ -230,7 +227,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("timestamp time travel: latest version at-or-before, non-monotonic mtimes repaired") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     ManifestTable.append(spark, Seq((1, "a")).toDF("id", "v"), dir) // v0
     ManifestTable.append(spark, Seq((2, "b")).toDF("id", "v"), dir) // v1
     ManifestTable.append(spark, Seq((3, "c")).toDF("id", "v"), dir) // v2
@@ -254,7 +251,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("CDF x schema evolution: change files on either side of the evolution NULL-backfill") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     ManifestTable.append(spark, Seq((1, "a"), (2, "b")).toDF("id", "v"), dir) // v0
     ManifestTable.deleteWhere(spark, dir, $"id" === 1, cdf = true)            // v1: pre-evolution cdf
     ManifestTable.appendEvolving(spark,
@@ -280,7 +277,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("updateWhere x schema evolution: a pre-evolution file updates without losing the new column") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     ManifestTable.append(spark, Seq((1, "a"), (2, "b")).toDF("id", "v"), dir)
     ManifestTable.appendEvolving(spark,
       Seq((3, "c", 30L)).toDF("id", "v", "extra"), dir)
@@ -301,7 +298,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("mergeIntoCdc: a disjoint-range delete-only batch against a key-statted table plans nothing") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     ManifestTable.appendWithStats(spark,
       (0L until 20L).map(i => (i, s"r$i")).toDF("k", "v").coalesce(1), dir, "k")
     // D keys far outside the recorded [0, 19] range: the stats pruning
@@ -312,7 +309,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("history (DESCRIBE HISTORY): writer-stamped ops, action census, legacy fallback") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     ManifestTable.append(spark, (1 to 6).map(i => (i, s"r$i")).toDF("id", "v"), dir)
     ManifestTable.deleteWhere(spark, dir, $"id" === 1, cdf = true)
     ManifestTable.updateWhere(spark, dir, $"id" === 2, Map("v" -> lit("u")))
@@ -340,7 +337,7 @@ class ManifestCdfSpec extends AnyFunSuite {
   }
 
   test("vacuum spares change files named by surviving manifests, sweeps dropped ones") {
-    val dir = freshDir()
+    val dir = tempDir("graft-cdf-spec")
     ManifestTable.append(spark, (1 to 6).map(i => (i, s"r$i")).toDF("id", "v"), dir)
     ManifestTable.deleteWhere(spark, dir, $"id" === 1, cdf = true) // v1: dropped below
     ManifestTable.deleteWhere(spark, dir, $"id" === 2, cdf = true) // v2: survives

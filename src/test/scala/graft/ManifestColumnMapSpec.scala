@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.ManifestTable
-import java.nio.file.Files
 
 /** Round-16 engine layer: COLUMN MAPPING — rename/drop as metadata-
   * only commits (the Delta column-mapping shape). Pins: rename moves
@@ -12,16 +11,13 @@ import java.nio.file.Files
   * without touching files; a re-added column maps to a FRESH physical
   * name so dropped values never resurrect; DML, compaction, CDF and
   * RESTORE all compose with an active mapping. */
-class ManifestColumnMapSpec extends AnyFunSuite {
+class ManifestColumnMapSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def freshDir(): String =
-    Files.createTempDirectory("graft-colmap-spec").toFile.getPath
-
   private def seeded(): String = {
-    val dir = freshDir()
+    val dir = tempDir("graft-colmap-spec")
     for (i <- 0 until 4)
       ManifestTable.appendWithStats(spark,
         (i * 25 until (i + 1) * 25).map(j => (j.toLong, s"v$j"))
@@ -72,7 +68,7 @@ class ManifestColumnMapSpec extends AnyFunSuite {
   }
 
   test("drop hides the column; a re-added namesake cannot resurrect old values") {
-    val dir = freshDir()
+    val dir = tempDir("graft-colmap-spec")
     ManifestTable.append(spark,
       (0L until 10L).map(i => (i, s"secret$i", i * 2)).toDF("id", "pii", "n"), dir)
     ManifestTable.dropColumn(spark, dir, "pii")

@@ -20,13 +20,10 @@ import scala.jdk.CollectionConverters._
   *  - CDF still serves the deleted rows when requested, and a DV
   *    commit without change data is refused by the feeds.
   */
-class ManifestDvSpec extends AnyFunSuite {
+class ManifestDvSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def freshDir(): String =
-    Files.createTempDirectory("graft-dv-spec").toFile.getPath
 
   /** All action lines of manifest v (minus the version header). */
   private def manifestLines(dir: String, v: Long): Seq[String] =
@@ -35,7 +32,7 @@ class ManifestDvSpec extends AnyFunSuite {
 
   /** Seed one 1000-row stats-carrying file; returns the table dir. */
   private def seeded(): String = {
-    val dir = freshDir()
+    val dir = tempDir("graft-dv-spec")
     ManifestTable.appendWithStats(spark,
       (0L until 1000L).map(i => (i, s"row$i")).toDF("id", "v").coalesce(1),
       dir, "id")

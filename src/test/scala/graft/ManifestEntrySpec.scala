@@ -12,13 +12,10 @@ import graft.sources.ManifestTable
   * checkpoints and RESTORE byte for byte (the forward-extensibility
   * promise); a corrupt known segment fails its reader loudly, naming
   * the entry; and the segment syntax is written down in one file. */
-class ManifestEntrySpec extends AnyFunSuite {
+class ManifestEntrySpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def freshDir(): String =
-    Files.createTempDirectory("graft-entry-spec").toFile.getPath
 
   private def logLines(dir: String, name: String): Seq[String] =
     Files.readAllLines(Paths.get(dir, "_manifest", name)).asScala.toSeq
@@ -32,7 +29,7 @@ class ManifestEntrySpec extends AnyFunSuite {
   }
 
   test("unknown entry segments are ignored by every reader and kept verbatim by checkpoint and restore") {
-    val dir = freshDir()
+    val dir = tempDir("graft-entry-spec")
     val add = bloomTable(dir)
     val cut = add.indexOf('|')
     val rel = add.substring("add=".length, cut)
@@ -61,7 +58,7 @@ class ManifestEntrySpec extends AnyFunSuite {
   }
 
   test("a corrupt stat, sstat or bloom segment fails its reader loudly, naming the entry") {
-    val dir = freshDir()
+    val dir = tempDir("graft-entry-spec")
     val add = bloomTable(dir)
     val rel = add.substring("add=".length, add.indexOf('|'))
     def corrupt(segment: String)(reads: (() => Any)*): Unit = {

@@ -32,7 +32,7 @@ class FauxAbstractFs(uri: URI, conf: Configuration)
   * DV, time travel) against a filesystem whose scheme is not "file",
   * where the commit primitive is the no-overwrite FileContext.rename
   * used on HDFS/ABFS. */
-class ManifestFsSpec extends AnyFunSuite {
+class ManifestFsSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = {
     val s = TestSpark.spark
@@ -44,8 +44,7 @@ class ManifestFsSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshDir(): String =
-    "fauxdfs:" + java.nio.file.Files
-      .createTempDirectory("graft-fauxdfs").toFile.getPath
+    "fauxdfs:" + tempDir("graft-fauxdfs")
 
   test("append + read + time travel round-trip on a foreign scheme") {
     val dir = freshDir()

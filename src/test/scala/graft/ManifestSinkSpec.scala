@@ -10,16 +10,13 @@ import java.nio.file.Files
   * properties the protocol exists for: atomic exactly-one-winner
   * version commits, append losing nothing across conflicts, orphan
   * (crashed-writer) file invisibility, and time travel. */
-class ManifestSinkSpec extends AnyFunSuite {
+class ManifestSinkSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def freshDir(): String =
-    Files.createTempDirectory("graft-mt-spec").toFile.getPath
-
   test("append + read round-trips across multiple commits") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     val v1 = ManifestTable.append(spark, (0 until 10).map(i => (i, s"a$i")).toDF("id", "v"), dir)
     val v2 = ManifestTable.append(spark, (10 until 25).map(i => (i, s"b$i")).toDF("id", "v"), dir)
     assert(v1 == 0 && v2 == 1)
@@ -29,7 +26,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("orphan data files from a crashed writer are invisible to readers") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.append(spark, (0 until 5).map(i => (i, "live")).toDF("id", "v"), dir)
     // a real parquet directory inside data/ that no manifest names
     (100 until 200).map(i => (i, "orphan")).toDF("id", "v")
@@ -40,7 +37,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("time travel: old versions stay readable and exact") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.append(spark, Seq((1, "x")).toDF("id", "v"), dir)
     ManifestTable.append(spark, Seq((2, "y"), (3, "z")).toDF("id", "v"), dir)
     assert(ManifestTable.read(spark, dir, Some(0L)).count() == 1)
@@ -49,7 +46,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("version conflict has exactly one winner; the loser re-sequences without losing data") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.append(spark, Seq((0, "base")).toDF("id", "v"), dir)
     // simulate two committers racing for v1: pre-create v1 by hand (the
     // "other" writer won), then append — our commit must land at v2
@@ -67,7 +64,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("idempotent batch append: a retried batch is a no-op, even after a conflict") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     val b0 = Seq((1, "b0")).toDF("id", "v")
     assert(ManifestTable.appendIdempotent(spark, b0, dir, "w", 0L).contains(0L))
     // post-commit-crash retry: same writer+batch → skipped, table unchanged
@@ -83,7 +80,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("compact rewrites the snapshot, keeps time travel, and carries txn markers") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.append(spark, (0 until 10).map(i => (i, "a")).toDF("id", "v"), dir)
     ManifestTable.append(spark, (10 until 20).map(i => (i, "b")).toDF("id", "v"), dir)
     assert(ManifestTable.appendIdempotent(spark,
@@ -102,7 +99,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("compact aborted by a concurrent append never erases the appended rows") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.append(spark, (0 until 8).map(i => (i, "a")).toDF("id", "v"), dir)
     // steal the version the compactor will want: simulate a concurrent
     // append landing between its read and its commit by pre-creating
@@ -123,7 +120,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("vacuum deletes compacted-away files and orphans but never live ones") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.append(spark, (0 until 10).map(i => (i, "a")).toDF("id", "v"), dir)
     ManifestTable.append(spark, (10 until 20).map(i => (i, "b")).toDF("id", "v"), dir)
     (100 until 110).map(i => (i, "orphan")).toDF("id", "v")
@@ -144,7 +141,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("commit metadata is O(batch), not O(table): manifests stay flat, checkpoints appear on schedule") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     for (i <- 0 until 25)
       ManifestTable.append(spark, Seq((i, s"r$i")).toDF("id", "v"), dir)
     val md = new java.io.File(dir, "_manifest")
@@ -166,7 +163,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("file skipping: stats prune non-overlapping files, stats-less files are never skipped") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.appendWithStats(spark,
       (0 until 10).map(i => (i.toLong, s"a$i")).toDF("k", "v").coalesce(1), dir, "k")
     ManifestTable.appendWithStats(spark,
@@ -191,7 +188,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   test("vacuum never deletes the live files of a stats-carrying table") {
     // regression: the live set must strip the |stat=.. suffix from
     // fold entries, or every appendWithStats file looks like an orphan
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.appendWithStats(spark,
       (0 until 10).map(i => (i.toLong, s"a$i")).toDF("k", "v").coalesce(1), dir, "k")
     ManifestTable.appendWithStats(spark,
@@ -206,7 +203,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("vacuum grace period: young unreferenced files survive (in-flight writer race), old ones die") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.append(spark, (0 until 5).map(i => (i, "live")).toDF("id", "v"), dir)
     // an in-flight writer's staged-but-uncommitted files (young mtime)
     val staged = new java.io.File(dir, "data/txn-inflight")
@@ -235,7 +232,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("multi-column stats: each stated column prunes independently") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     // file A: k in [0,9], m in [1000,1009]; file B: k in [100,109], m in [0,9]
     ManifestTable.appendWithStats(spark,
       (0 until 10).map(i => (i.toLong, 1000L + i, "a")).toDF("k", "m", "v").coalesce(1),
@@ -257,7 +254,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("clustered compaction preserves prunability: tight disjoint per-file bounds") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     // interleaved ranges: plain compaction would leave unknown ranges
     ManifestTable.appendWithStats(spark,
       Seq(0L, 100L, 7L, 103L, 2L).map(k => (k, s"v$k")).toDF("k", "v").coalesce(1), dir, "k")
@@ -281,7 +278,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("deleteWhere: copy-on-write delete, time travel intact, untouched stats preserved") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.appendWithStats(spark,
       (0 until 10).map(i => (i.toLong, s"a$i")).toDF("k", "v").coalesce(1), dir, "k")
     ManifestTable.appendWithStats(spark,
@@ -303,7 +300,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("deleteWhere: NULL-predicate rows survive (SQL DELETE semantics)") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.append(spark,
       Seq((1L, Some("x")), (2L, None), (3L, Some("kill"))).toDF("k", "v"), dir)
     ManifestTable.deleteWhere(spark, dir, $"v" === "kill")
@@ -312,7 +309,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("deleteWhere aborted by a concurrent append restarts and never erases the appended rows") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.append(spark, (0 until 8).map(i => (i, "a")).toDF("id", "v"), dir)
     // steal v1 with a hand-committed concurrent append (the compact-race recipe)
     val stagedDir = new java.io.File(dir, "data/txn-racer2")
@@ -331,7 +328,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("change feed: readSince returns exactly the interval's added rows; resets refuse") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.append(spark, (0 until 10).map(i => (i, "a")).toDF("id", "v"), dir)
     ManifestTable.append(spark, (10 until 15).map(i => (i, "b")).toDF("id", "v"), dir)
     ManifestTable.append(spark, (15 until 18).map(i => (i, "c")).toDF("id", "v"), dir)
@@ -361,7 +358,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("deleteWhere commit metadata is O(affected files), not O(live files)") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     // 8 live single-file commits; the predicate matches rows in exactly one
     for (s <- 0 until 8)
       ManifestTable.appendWithStats(spark,
@@ -382,7 +379,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("rewrite rebase: a concurrent pure append commutes — no re-plan, no lost rows") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.append(spark,
       (0 until 6).map(i => (i, "a")).toDF("id", "v").coalesce(1), dir)
     // plan a rewrite against v0: remove v0's (single) file, add a replacement
@@ -405,7 +402,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("rewrite rebase: DISJOINT concurrent removes commute; OVERLAPPING ones conflict") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.append(spark,
       (0 until 6).map(i => (i.toLong, "a")).toDF("k", "v").coalesce(1), dir)
     ManifestTable.append(spark,
@@ -425,7 +422,7 @@ class ManifestSinkSpec extends AnyFunSuite {
       actions = Seq(s"remove=${files(1)}"))
     assert(overlap == ManifestTable.RewriteConflict, s"got $overlap")
     // a DELETION-VECTOR mask counts as touching its file too
-    val dir2 = freshDir()
+    val dir2 = tempDir("graft-mt-spec")
     ManifestTable.appendWithStats(spark,
       (0L until 50L).map(i => (i, "x")).toDF("k", "v").coalesce(1), dir2, "k")
     val f2 = ManifestTable.snapshotFiles(dir2).head
@@ -436,7 +433,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("mergeInto: matched rows replaced, unmatched inserted, commit is O(affected)") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     for (s <- 0 until 4)
       ManifestTable.appendWithStats(spark,
         (s * 10 until s * 10 + 10).map(i => (i.toLong, s"old$i", 1L))
@@ -467,7 +464,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("mergeInto plans via key stats: disjoint batch inserts without touching a file") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.appendWithStats(spark,
       (0 until 10).map(i => (i.toLong, "a")).toDF("k", "v").coalesce(1), dir, "k")
     ManifestTable.appendWithStats(spark,
@@ -493,7 +490,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("mergeInto: txn marker makes the retried batch a no-op") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.append(spark,
       (0 until 10).map(i => (i.toLong, s"a$i")).toDF("k", "v"), dir)
     val batch = Seq((3L, "upd3"), (50L, "ins50")).toDF("k", "v")
@@ -509,7 +506,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("mergeInto: duplicate keys in the batch are an error, nothing commits") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.append(spark, Seq((1L, "a")).toDF("k", "v"), dir)
     val bad = Seq((2L, "x"), (2L, "y")).toDF("k", "v")
     val e = intercept[Exception](
@@ -521,7 +518,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("mergeInto aborted by a concurrent append rebases and never erases the appended rows") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.append(spark, (0 until 8).map(i => (i.toLong, "a")).toDF("k", "v"), dir)
     // steal v1 with a hand-committed concurrent append
     val stagedDir = new java.io.File(dir, "data/txn-mracer")
@@ -542,7 +539,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("change feed refuses an interval crossing a remove-carrying delete commit") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.append(spark, (0 until 10).map(i => (i.toLong, "a")).toDF("k", "v"), dir)
     ManifestTable.deleteWhere(spark, dir, $"k" >= 5)
     intercept[IllegalStateException](ManifestTable.readSince(spark, dir, -1L))
@@ -552,7 +549,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("compactZorder: live-table OPTIMIZE re-clusters for multi-dimension pruning, data intact") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     // k ascending, y deliberately uncorrelated with k — appended in 4
     // k-ordered slices, so pre-OPTIMIZE files are tight in k only
     val rows = (0 until 256).map(i => (i.toLong, ((i * 37) % 256).toLong, s"r$i"))
@@ -598,7 +595,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("schema evolution: NULL backfill, time travel to old schema, checkpoint carries schema") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.appendEvolving(spark,
       Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1), dir)
     ManifestTable.appendEvolving(spark,
@@ -623,7 +620,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("concurrent appends from many threads: every row survives, versions are dense") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     val threads = (0 until 6).map { t =>
       new Thread(() => {
         ManifestTable.append(spark,
@@ -638,7 +635,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("an empty MERGE batch does not advance the log; with a txn only the marker commits") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.appendWithStats(spark, Seq((1L, "a")).toDF("k", "v"), dir, "k")
     val files = ManifestTable.snapshotFiles(dir)
     val empty = Seq.empty[(Long, String)].toDF("k", "v")
@@ -660,7 +657,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("deleteWhere on an evolved table preserves the evolved column in rewritten survivors") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.appendEvolving(spark,
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").coalesce(1), dir)
     ManifestTable.appendEvolving(spark,
@@ -679,7 +676,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("mergeInto on an evolved table: old-file survivors NULL-backfill, batch carries the current schema") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.appendEvolving(spark,
       Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1), dir)
     ManifestTable.appendEvolving(spark,
@@ -698,7 +695,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("delete-everything leaves a zero-file snapshot that appendEvolving treats as schema-fresh") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.appendWithStats(spark,
       Seq((1L, 10L), (2L, 20L)).toDF("k", "n").coalesce(1), dir, "k")
     assert(ManifestTable.deleteWhere(spark, dir, lit(true), Seq("k")).isDefined)
@@ -712,7 +709,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("readSince across an evolution commit pins the feed schema; empty interval carries it too") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.appendEvolving(spark,
       Seq((1L, "a")).toDF("k", "v").coalesce(1), dir)
     ManifestTable.appendEvolving(spark,
@@ -729,7 +726,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("compactZorder with a constant dimension degrades to the other axis, data intact") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     val rows = (0 until 64).map(i => (i.toLong, 7L, s"r$i")) // y constant
     ManifestTable.appendWithStats(spark,
       rows.toDF("k", "y", "v").coalesce(1), dir, "k", "y")
@@ -746,7 +743,7 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("mergeInto with a single NULL-key batch row inserts it (SQL equality never matches NULL)") {
-    val dir = freshDir()
+    val dir = tempDir("graft-mt-spec")
     ManifestTable.append(spark,
       Seq((Some(1L), "a"), (Some(2L), "b")).toDF("k", "v").coalesce(1), dir)
     val batch = Seq((Option.empty[Long], "nullrow")).toDF("k", "v")

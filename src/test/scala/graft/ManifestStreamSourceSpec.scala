@@ -4,20 +4,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.sources.ManifestTable
-import java.nio.file.Files
 
 /** Round-14: the manifest table as a Structured Streaming SOURCE
   * (graft-manifest DataSourceV2 MicroBatchStream). Pins the offset
   * contract (versions), admission control, AvailableNow draining,
   * exactly-once across multi-batch plans, null round-trips, and the
   * replacing-commit refusal. */
-class ManifestStreamSourceSpec extends AnyFunSuite {
+class ManifestStreamSourceSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def freshDir(): String =
-    Files.createTempDirectory("graft-ms-spec").toFile.getPath
 
   private def drain(table: String, mirror: String,
                     maxVersionsPerTrigger: Int): Seq[Long] = {
@@ -33,7 +29,7 @@ class ManifestStreamSourceSpec extends AnyFunSuite {
         batches += b.count()
         ManifestTable.append(spark, b.toDF(), mirror): Unit
       }
-      .option("checkpointLocation", s"$mirror-ckpt-${java.util.UUID.randomUUID()}")
+      .option("checkpointLocation", tempDir("graft-ms-spec-ckpt"))
       .trigger(Trigger.AvailableNow())
       .start()
     assert(q.awaitTermination(300000), "stream stalled")
@@ -41,11 +37,11 @@ class ManifestStreamSourceSpec extends AnyFunSuite {
   }
 
   test("AvailableNow drain reads exactly the committed rows, in version order, multi-batch") {
-    val dir = freshDir()
+    val dir = tempDir("graft-ms-spec")
     for (i <- 0 until 5)
       ManifestTable.append(spark,
         (i * 10 until i * 10 + 10).map(j => (j.toLong, s"v$j")).toDF("id", "v"), dir)
-    val mirror = freshDir()
+    val mirror = tempDir("graft-ms-spec")
     val batches = drain(dir, mirror, maxVersionsPerTrigger = 2)
     // 5 versions at ≤2 per trigger: at least 3 non-trivial batches
     assert(batches.count(_ > 0) >= 3, s"admission control ignored: $batches")
@@ -54,10 +50,10 @@ class ManifestStreamSourceSpec extends AnyFunSuite {
   }
 
   test("a second drain from the same checkpoint re-reads NOTHING (offset contract)") {
-    val dir = freshDir()
+    val dir = tempDir("graft-ms-spec")
     ManifestTable.append(spark, Seq((1L, "a")).toDF("id", "v"), dir)
-    val mirror = freshDir()
-    val ckpt = s"${freshDir()}/ckpt"
+    val mirror = tempDir("graft-ms-spec")
+    val ckpt = s"${tempDir("graft-ms-spec")}/ckpt"
     def run(): Long = {
       var n = 0L
       val q = spark.readStream.format("graft-manifest")
@@ -79,13 +75,13 @@ class ManifestStreamSourceSpec extends AnyFunSuite {
   }
 
   test("nulls and all supported column types round-trip") {
-    val dir = freshDir()
+    val dir = tempDir("graft-ms-spec")
     val df = Seq(
       (1L, Some("x"), Some(1.5), Some(7), Some(true)),
       (2L, None: Option[String], None: Option[Double], None: Option[Int], None: Option[Boolean]))
       .toDF("id", "s", "d", "i", "b")
     ManifestTable.append(spark, df, dir)
-    val mirror = freshDir()
+    val mirror = tempDir("graft-ms-spec")
     drain(dir, mirror, 10)
     val back = ManifestTable.read(spark, mirror).orderBy($"id").collect()
     assert(back.length == 2)
@@ -96,14 +92,14 @@ class ManifestStreamSourceSpec extends AnyFunSuite {
   }
 
   test("a replacing commit in an unread interval fails the stream with a clear error") {
-    val dir = freshDir()
+    val dir = tempDir("graft-ms-spec")
     ManifestTable.append(spark, (0 until 10).map(i => (i, "a")).toDF("id", "v"), dir)
     ManifestTable.compact(spark, dir) // v1 = reset commit, never consumed
     val q = spark.readStream.format("graft-manifest")
       .schema(ManifestTable.read(spark, dir).schema)
       .load(dir)
       .writeStream.format("noop")
-      .option("checkpointLocation", s"${freshDir()}/ckpt")
+      .option("checkpointLocation", s"${tempDir("graft-ms-spec")}/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
     val failed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -116,7 +112,7 @@ class ManifestStreamSourceSpec extends AnyFunSuite {
   }
 
   test("batch read serves the snapshot; versionAsOf time-travels; compaction transparent") {
-    val dir = freshDir()
+    val dir = tempDir("graft-ms-spec")
     ManifestTable.append(spark, (0 until 10).map(i => (i.toLong, s"a$i")).toDF("id", "v"), dir)
     ManifestTable.append(spark, (10 until 15).map(i => (i.toLong, s"b$i")).toDF("id", "v"), dir)
     val schema = ManifestTable.read(spark, dir).schema
@@ -137,7 +133,7 @@ class ManifestStreamSourceSpec extends AnyFunSuite {
   }
 
   test("timestampAsOf time-travels the batch read through the repaired clock") {
-    val dir = freshDir()
+    val dir = tempDir("graft-ms-spec")
     ManifestTable.append(spark, Seq((1L, "a")).toDF("id", "v"), dir)
     val t0 = ManifestTable.history(dir).head.timestampMs
     Thread.sleep(1100) // local-FS mtime resolution: force distinct commit times
@@ -156,7 +152,7 @@ class ManifestStreamSourceSpec extends AnyFunSuite {
   }
 
   test("filter pushdown prunes the batch plan to the stats census") {
-    val dir = freshDir()
+    val dir = tempDir("graft-ms-spec")
     // 4 disjoint stats slices of 25 ids each
     for (i <- 0 until 4)
       ManifestTable.appendWithStats(spark,
@@ -183,16 +179,16 @@ class ManifestStreamSourceSpec extends AnyFunSuite {
   }
 
   test("maxRowsPerTrigger splits ONE fat commit across micro-batches") {
-    val dir = freshDir()
+    val dir = tempDir("graft-ms-spec")
     // one commit, 6 stats-carrying files of 20 rows each
     ManifestTable.appendWithStats(spark,
       (0L until 120L).map(i => (i, s"v$i")).toDF("id", "v").repartition(6),
       dir, "id")
     assert(ManifestTable.latestVersion(dir).contains(0L))
-    val mirror = freshDir()
+    val mirror = tempDir("graft-ms-spec")
     val schema = ManifestTable.read(spark, dir).schema
     val batches = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val ckpt = s"${freshDir()}/ckpt"
+    val ckpt = s"${tempDir("graft-ms-spec")}/ckpt"
     def drainRows(): Unit = {
       val q = spark.readStream.format("graft-manifest")
         .schema(schema)
@@ -223,7 +219,7 @@ class ManifestStreamSourceSpec extends AnyFunSuite {
   }
 
   test("column pruning is physical: scalar columns of a table holding arrays read fine") {
-    val dir = freshDir()
+    val dir = tempDir("graft-ms-spec")
     // a disk-backed ANN-index shape: ids + cells + embedding arrays
     ManifestTable.append(spark,
       (0L until 20L).map(i => (i, i % 4, Array.fill(8)(i.toFloat)))
@@ -244,7 +240,7 @@ class ManifestStreamSourceSpec extends AnyFunSuite {
     // than the file (the array column never decodes)
     val narrow = org.apache.spark.sql.types.StructType(
       schema.fields.filter(_.name != "embedding"))
-    val mirror = freshDir()
+    val mirror = tempDir("graft-ms-spec")
     var n = 0L
     val q = spark.readStream.format("graft-manifest").schema(narrow).load(dir)
       .writeStream
@@ -259,13 +255,13 @@ class ManifestStreamSourceSpec extends AnyFunSuite {
 
   test("missing schema is rejected with a clear message") {
     val e = intercept[Exception] {
-      spark.readStream.format("graft-manifest").load(freshDir())
+      spark.readStream.format("graft-manifest").load(tempDir("graft-ms-spec"))
     }
     assert(e.getMessage.contains("explicit .schema"))
   }
 
   test("an evolved table reads through the source: pre-evolution files NULL-backfill the new column") {
-    val dir = freshDir()
+    val dir = tempDir("graft-ms-spec")
     ManifestTable.appendEvolving(spark,
       Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1), dir)
     ManifestTable.appendEvolving(spark,
@@ -282,7 +278,7 @@ class ManifestStreamSourceSpec extends AnyFunSuite {
   }
 
   test("readChangeFeed streams typed change rows equal to batch readChanges") {
-    val dir = freshDir()
+    val dir = tempDir("graft-ms-spec")
     ManifestTable.append(spark,
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), dir)
     ManifestTable.mergeInto(spark,  dir,
@@ -306,7 +302,7 @@ class ManifestStreamSourceSpec extends AnyFunSuite {
         }
         ()
       }
-      .option("checkpointLocation", s"${freshDir()}/ckpt")
+      .option("checkpointLocation", s"${tempDir("graft-ms-spec")}/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
     assert(q.awaitTermination(300000), "stream stalled")
@@ -325,7 +321,7 @@ class ManifestStreamSourceSpec extends AnyFunSuite {
   }
 
   test("readChangeFeed fails the stream on a cdf-less row-removing commit") {
-    val dir = freshDir()
+    val dir = tempDir("graft-ms-spec")
     ManifestTable.append(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), dir)
     ManifestTable.deleteWhere(spark, dir, $"id" === 1L) // cdf = false
     val q = spark.readStream.format("graft-manifest")
@@ -335,7 +331,7 @@ class ManifestStreamSourceSpec extends AnyFunSuite {
       .writeStream
       .foreachBatch { (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                        _: Long) => () }
-      .option("checkpointLocation", s"${freshDir()}/ckpt")
+      .option("checkpointLocation", s"${tempDir("graft-ms-spec")}/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -346,7 +342,7 @@ class ManifestStreamSourceSpec extends AnyFunSuite {
   }
 
   test("readChangeFeed refuses the batch path (readChanges is the batch API)") {
-    val dir = freshDir()
+    val dir = tempDir("graft-ms-spec")
     ManifestTable.append(spark, Seq((1L, "a")).toDF("id", "v"), dir)
     val e = intercept[Exception] {
       spark.read.format("graft-manifest")

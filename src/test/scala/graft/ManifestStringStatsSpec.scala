@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.ManifestTable
-import java.nio.file.Files
 
 /** Round-16 engine layer: NON-LONG column stats — truncated string
   * bounds (the Iceberg truncate(16) + upper-bound-bump shape) in the
@@ -12,13 +11,10 @@ import java.nio.file.Files
   * everything it bounds, a bumped max is ≥ everything it bounds, in
   * UTF-8 byte order), the degenerate cases (shared >16-byte prefix,
   * all-0xFF prefix), and end-to-end pruning census correctness. */
-class ManifestStringStatsSpec extends AnyFunSuite {
+class ManifestStringStatsSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def freshDir(): String =
-    Files.createTempDirectory("graft-sstat-spec").toFile.getPath
 
   test("truncation codec: min prefix and bumped max bound every value") {
     val vals = Seq("alpha", "a" * 40, "zulu-very-long-string-tail", "Ω≤≥-unicode-suffix-padding-x",
@@ -46,7 +42,7 @@ class ManifestStringStatsSpec extends AnyFunSuite {
   }
 
   test("string-range read plans only overlapping files and stays exact") {
-    val dir = freshDir()
+    val dir = tempDir("graft-sstat-spec")
     // 4 disjoint alphabetic slices
     val slices = Seq("a" -> "c", "d" -> "f", "g" -> "m", "n" -> "z")
     slices.zipWithIndex.foreach { case ((lo, hi), i) =>
@@ -68,7 +64,7 @@ class ManifestStringStatsSpec extends AnyFunSuite {
   }
 
   test("a shared >16-byte prefix degrades pruning but never correctness") {
-    val dir = freshDir()
+    val dir = tempDir("graft-sstat-spec")
     val p = "shared-very-long-common-prefix-"
     ManifestTable.appendWithStats(spark,
       (0 until 20).map(i => (i.toLong, f"$p$i%03d")).toDF("id", "k").coalesce(1),
@@ -84,7 +80,7 @@ class ManifestStringStatsSpec extends AnyFunSuite {
   }
 
   test("string-keyed MERGE plans through sstat bounds") {
-    val dir = freshDir()
+    val dir = tempDir("graft-sstat-spec")
     for (i <- 0 until 4)
       ManifestTable.appendWithStats(spark,
         (0 until 25).map(j => (f"k${i * 25 + j}%05d", (i * 25 + j).toLong))
@@ -105,7 +101,7 @@ class ManifestStringStatsSpec extends AnyFunSuite {
   }
 
   test("mixed long + string stats ride one entry") {
-    val dir = freshDir()
+    val dir = tempDir("graft-sstat-spec")
     ManifestTable.appendWithStats(spark,
       (0L until 30L).map(i => (i, f"s$i%04d", i * 2)).toDF("id", "k", "v")
         .coalesce(1), dir, "id", "k", "v")

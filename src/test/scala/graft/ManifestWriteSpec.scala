@@ -4,7 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.sources.ManifestTable
-import java.nio.file.Files
 
 /** Round-16 engine layer: the DSv2 WRITE side of graft-manifest —
   * the manifest table writable through standard Spark APIs. Pins:
@@ -13,16 +12,13 @@ import java.nio.file.Files
   * passes); a fresh dir needs `writeSchema`; the streaming sink is
   * exactly-once per epoch via txn markers (a replayed epoch commits
   * nothing); writes compose with column mapping. */
-class ManifestWriteSpec extends AnyFunSuite {
+class ManifestWriteSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def freshDir(): String =
-    Files.createTempDirectory("graft-w-spec").toFile.getPath
-
   test("batch write to a NEW dir (writeSchema) commits atomically with stats") {
-    val dir = freshDir()
+    val dir = tempDir("graft-w-spec")
     (0L until 100L).map(i => (i, s"v$i")).toDF("id", "v")
       .repartition(4)
       .write.format("graft-manifest")
@@ -40,7 +36,7 @@ class ManifestWriteSpec extends AnyFunSuite {
   }
 
   test("append to an existing table infers the schema; overwrite resets") {
-    val dir = freshDir()
+    val dir = tempDir("graft-w-spec")
     ManifestTable.appendWithStats(spark,
       (0L until 50L).map(i => (i, s"a$i")).toDF("id", "v").coalesce(1), dir, "id")
     // no writeSchema needed: inferSchema resolves from the table
@@ -58,7 +54,7 @@ class ManifestWriteSpec extends AnyFunSuite {
   }
 
   test("DSv2-written stats prune range plans and the v2 batch read composes") {
-    val dir = freshDir()
+    val dir = tempDir("graft-w-spec")
     // 4 disjoint id slices via repartitionByRange: each part file gets
     // tight bounds from the write itself
     (0L until 100L).map(i => (i, s"v$i")).toDF("id", "v")
@@ -78,8 +74,8 @@ class ManifestWriteSpec extends AnyFunSuite {
   }
 
   test("streaming sink is exactly-once per epoch (replayed epoch commits nothing)") {
-    val dir = freshDir()
-    val src = freshDir()
+    val dir = tempDir("graft-w-spec")
+    val src = tempDir("graft-w-spec")
     (0L until 60L).map(i => (i, s"v$i")).toDF("id", "v")
       .repartition(6).write.parquet(s"$src/in")
     val q = spark.readStream
@@ -118,7 +114,7 @@ class ManifestWriteSpec extends AnyFunSuite {
   }
 
   test("writes compose with column mapping (physical names on disk)") {
-    val dir = freshDir()
+    val dir = tempDir("graft-w-spec")
     ManifestTable.appendWithStats(spark,
       (0L until 20L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1), dir, "id")
     ManifestTable.renameColumn(spark, dir, "id", "doc_id")
@@ -134,7 +130,7 @@ class ManifestWriteSpec extends AnyFunSuite {
   }
 
   test("zero-row tasks stage nothing; unsupported types refuse clearly") {
-    val dir = freshDir()
+    val dir = tempDir("graft-w-spec")
     (0L until 5L).map(i => (i, s"v$i")).toDF("id", "v")
       .repartition(8) // most tasks empty
       .write.format("graft-manifest")
@@ -146,7 +142,7 @@ class ManifestWriteSpec extends AnyFunSuite {
       Seq((1L, Array(1.0f, 2.0f))).toDF("id", "emb")
         .write.format("graft-manifest")
         .option("writeSchema", "id BIGINT, emb ARRAY<FLOAT>")
-        .mode("append").save(freshDir())
+        .mode("append").save(tempDir("graft-w-spec"))
     }
     assert(e.getMessage.contains("does not support") ||
       Option(e.getCause).exists(_.getMessage.contains("does not support")))

@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.ManifestTable
-import java.nio.file.Files
 
 /** Round-16 engine layer: the METADATA-READ budget. Every log fold is
   * O(checkpoint + interval) file reads — remote LIST + GETs on an
@@ -12,13 +11,10 @@ import java.nio.file.Files
   * threading refactor (one fold per operation for reads), so a future
   * change can't quietly multiply metadata round-trips the local FS
   * would never surface. */
-class MetadataCostSpec extends AnyFunSuite {
+class MetadataCostSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def freshDir(): String =
-    Files.createTempDirectory("graft-meta-cost").toFile.getPath
 
   private def folds[T](f: => T): (T, Long) = {
     val before = ManifestTable.foldCount.get()
@@ -27,7 +23,7 @@ class MetadataCostSpec extends AnyFunSuite {
   }
 
   test("snapshot read costs ONE fold — plain, mapped, and DV'd tables alike") {
-    val dir = freshDir()
+    val dir = tempDir("graft-meta-cost")
     ManifestTable.appendWithStats(spark,
       (0L until 100L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1), dir, "id")
     val (_, plainFolds) = folds { ManifestTable.read(spark, dir).count() }
@@ -42,7 +38,7 @@ class MetadataCostSpec extends AnyFunSuite {
   }
 
   test("metadata-only aggregates and time travel stay one fold") {
-    val dir = freshDir()
+    val dir = tempDir("graft-meta-cost")
     ManifestTable.appendWithStats(spark,
       (0L until 50L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1), dir, "id")
     ManifestTable.appendWithStats(spark,
@@ -54,7 +50,7 @@ class MetadataCostSpec extends AnyFunSuite {
   }
 
   test("a keyed merge stays within its fold budget") {
-    val dir = freshDir()
+    val dir = tempDir("graft-meta-cost")
     for (i <- 0 until 4)
       ManifestTable.appendWithStats(spark,
         (i * 25 until (i + 1) * 25).map(j => (j.toLong, s"v$j"))
@@ -70,7 +66,7 @@ class MetadataCostSpec extends AnyFunSuite {
   }
 
   test("a DV delete stays within its fold budget") {
-    val dir = freshDir()
+    val dir = tempDir("graft-meta-cost")
     ManifestTable.appendWithStats(spark,
       (0L until 200L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1), dir, "id")
     val (_, df) = folds {

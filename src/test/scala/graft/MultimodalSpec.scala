@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Multimodal
 import graft.sources.Tables
 
-class MultimodalSpec extends AnyFunSuite {
+class MultimodalSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("manifest + batched decode produce exact byte statistics") {
@@ -234,7 +234,7 @@ class MultimodalSpec extends AnyFunSuite {
     // frames [loud, quiet, loud, 10-byte quiet tail] → energies
     // 589824, 1024, 589824, 160; mean 295208 → actives f0 and f2,
     // NON-adjacent, so two single-frame segments.
-    val dir = java.nio.file.Files.createTempDirectory("vadspec").toString
+    val dir = tempDir("vadspec")
     Seq((7L, " " * 64 + "|" * 64 + " " * 64 + "|" * 10))
       .toDF("doc_id", "text").coalesce(1)
       .write.parquet(s"$dir/documents.parquet")
@@ -254,7 +254,7 @@ class MultimodalSpec extends AnyFunSuite {
     // hash = ((3·16+8)·8+5)·2 = 906.
     val f1 = "a" * 24 + " " * 8 + "a" * 32
     val f2 = "a" * 40 + " " * 8 + "a" * 16
-    val dir = java.nio.file.Files.createTempDirectory("peaksspec").toString
+    val dir = tempDir("peaksspec")
     Seq((1L, f1 + f2)).toDF("doc_id", "text").coalesce(1)
       .write.parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("mm_audio_peaks")(spark, dir)
@@ -269,7 +269,7 @@ class MultimodalSpec extends AnyFunSuite {
     // (peak band 0, hashes {16,17}) — no overlap with 1/2.
     def frame(band: Int) = "a" * (band * 8) + " " * 8 + "a" * (64 - band * 8 - 8)
     val sig = frame(1) + frame(2) + frame(1) + frame(2) + frame(1)
-    val dir = java.nio.file.Files.createTempDirectory("matchspec").toString
+    val dir = tempDir("matchspec")
     Seq((1L, sig), (2L, sig), (3L, "b" * 320))
       .toDF("doc_id", "text").coalesce(1)
       .write.parquet(s"$dir/documents.parquet")

@@ -18,7 +18,7 @@ import java.nio.file.{Files, Paths}
   * `CAST(... AS BIGINT)` (every repo ratio is ppb-scaled ≤ 1e9 and
   * every cents sum ≪ 2^63, so the cast is always safe).
   */
-class OracleTypeLintSpec extends AnyFunSuite {
+class OracleTypeLintSpec extends AnyFunSuite with TempDirs {
 
   private val sfDir = sys.env.getOrElse("GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -67,7 +67,7 @@ class OracleTypeLintSpec extends AnyFunSuite {
     } catch { case _: Throwable => false }
     assume(duckOk, "python3+duckdb not available on this box")
 
-    val dir = Files.createTempDirectory("oracle-type-lint")
+    val dir = Paths.get(tempDir("oracle-type-lint"))
     val sqlJson = dir.resolve("oracle_sql.json")
     val py = dir.resolve("lint.py")
     Files.writeString(sqlJson,

@@ -7,7 +7,7 @@ import graft.functions.GramMatrix
 
 /** Round-3 additions: span-level substring dedup, Gopher composite
   * filter, Gram-matrix aggregator. */
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def docs(rows: Seq[(Long, String)]) = {
@@ -99,7 +99,7 @@ class PipelineSpec extends AnyFunSuite {
     // → all of src0 survives; exactly ONE 10-token src1 doc fits under 15.
     val ids = Seq(0L, 5L) ++ (0 until 10).map(i => 1L + 5L * i)
     val rows = ids.map(id => (id, (1 to 10).map(w => s"w${w}d$id").mkString(" ")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-mix").toString
+    val dir = tempDir("graft-mix")
     rows.toDF("doc_id", "text")
       .select($"doc_id", $"text", lit("en").as("lang"),
         concat(lit("src"), ($"doc_id" % 5).cast("string")).as("source"),

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.plans.{GroupTopK, Sessionize}
 
-class PlanEdgeCaseSpec extends AnyFunSuite {
+class PlanEdgeCaseSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   // -----------------------------------------------------------------
@@ -23,7 +23,7 @@ class PlanEdgeCaseSpec extends AnyFunSuite {
     * Tables.SpreadMinRows=50k gate), planted once per suite. */
   private lazy val bigDir: String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-planguard").toString
+    val dir = tempDir("graft-planguard")
     spark.range(55000L).toDF("doc_id")
       .selectExpr("doc_id",
         "concat_ws(' ', transform(sequence(0, 14), j -> concat('w', (doc_id * 7 + j * 13) % 997))) AS text",

@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
   * MinHash LSH pairs, binary dedup (graph_bfs is in GraphSpec). Planted-data tests write a
   * temp documents.parquet so the table-bound queries run against
   * known content. */
-class RetrievalSpec extends AnyFunSuite {
+class RetrievalSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   private def run(name: String, dir: String = TestSpark.sf): DataFrame =
     SparkEntry.queries(name)(spark, dir)
@@ -16,7 +16,7 @@ class RetrievalSpec extends AnyFunSuite {
   private def plantDocs(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-docs").toString
+    val dir = tempDir("graft-docs")
     rows.toDF("doc_id", "text")
       .select($"doc_id", $"text", lit("en").as("lang"),
         concat(lit("src"), ($"doc_id" % 5).cast("string")).as("source"),

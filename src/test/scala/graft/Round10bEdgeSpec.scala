@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Date
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,14 +8,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * recurrence and funnel attrition traced by hand, DP noise mechanism
   * invariants, and the NN-descent dominance property (a refinement
   * over a candidate superset can never rank-wise worsen the graph). */
-class Round10bEdgeSpec extends AnyFunSuite {
+class Round10bEdgeSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   test("q_ewma_anomaly: flat level absorbs, a 10x spike trips the +30% band") {
     // daily revenue 100, 100, 100, 1000: s stays 10000 cents through
     // day 3; day 4 has 10·100000 > 13·10000 -> anomaly, s4 = 28000.
-    val dir = Files.createTempDirectory("r10ewma").toString
+    val dir = tempDir("r10ewma")
     Seq(
       (1L, Date.valueOf("1995-01-01"), 100.0),
       (2L, Date.valueOf("1995-01-02"), 100.0),
@@ -37,7 +36,7 @@ class Round10bEdgeSpec extends AnyFunSuite {
     // "" fails nonempty; "a b" fails min_words; "x x x x x" fails the
     // word-shape band (5 chars < 2·5); the duplicated 5-word doc is
     // collapsed by exact_dedup.
-    val dir = Files.createTempDirectory("r10funnel").toString
+    val dir = tempDir("r10funnel")
     Seq((1L, ""), (2L, "a b"), (3L, "aa bb cc dd ee"),
       (4L, "aa bb cc dd ee"), (5L, "x x x x x"))
       .toDF("doc_id", "text").coalesce(1)

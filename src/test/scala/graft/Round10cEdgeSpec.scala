@@ -1,14 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Definition-level checks for the third round-10 batch: shot
   * boundaries flag exactly the planted cut, and JSD drift is zero-ish
   * only for sources that match the corpus mix, positive and larger for
   * a divergent source. */
-class Round10cEdgeSpec extends AnyFunSuite {
+class Round10cEdgeSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -17,7 +15,7 @@ class Round10cEdgeSpec extends AnyFunSuite {
     // them): [0,0,0,588800,588800]; mean 235520 — the two transition
     // deltas are >=2x mean, the zero deltas are not.
     val text = "|" * 256 + " " * 64 + "|" * 64
-    val dir = Files.createTempDirectory("shotspec").toString
+    val dir = tempDir("shotspec")
     Seq((9L, text)).toDF("doc_id", "text").coalesce(1)
       .write.parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("mm_shot_boundaries")(spark, dir)
@@ -28,7 +26,7 @@ class Round10cEdgeSpec extends AnyFunSuite {
   }
 
   test("text_jsd_drift: symmetric sources tie, a divergent-vocab source drifts more") {
-    val dir = Files.createTempDirectory("jsdspec").toString
+    val dir = tempDir("jsdspec")
     Seq((1L, "x y x y", "a"), (2L, "x y x y", "b"), (3L, "z z z z", "c"))
       .toDF("doc_id", "text", "source").coalesce(1)
       .write.parquet(s"$dir/documents.parquet")
@@ -48,7 +46,7 @@ class Round10cEdgeSpec extends AnyFunSuite {
     // Remove view or click: conversion 0 (removal 5e8 each);
     // remove error: nothing changes (error already absorbs 0).
     def ts(msv: Long) = new java.sql.Timestamp(msv)
-    val dir = Files.createTempDirectory("markovspec").toString
+    val dir = tempDir("markovspec")
     Seq(
       (1L, ts(1000L), 1L, "view", 0.0, ""),
       (2L, ts(2000L), 1L, "click", 0.0, ""),
@@ -71,7 +69,7 @@ class Round10cEdgeSpec extends AnyFunSuite {
     // "u" once in all 21 docs -> Sc=21=Scc, VMR=(21*21-441)/(21*21)=0.
     // "s" 10x in doc 1, once in docs 2..20 -> df=20, Sc=29, Scc=119,
     // vmr_ppb = ((21*119-841)*1e9)//(21*29) = 1658e9//609.
-    val dir = Files.createTempDirectory("burstspec").toString
+    val dir = tempDir("burstspec")
     val docs = Seq((1L, "u " + Seq.fill(10)("s").mkString(" "))) ++
       (2L to 20L).map(i => (i, "u s")) :+ (21L, "u")
     docs.toDF("doc_id", "text").coalesce(1)
@@ -86,7 +84,7 @@ class Round10cEdgeSpec extends AnyFunSuite {
     // 100, 200, 300: l1=10000 b1=0; l2=(40000+80000)/10=12000,
     // b2=600, f2=10000, err2=10000; l3=(60000+100800)/10=16080,
     // b3=(3*4080+4200)/10=1644, f3=12600, err3=17400.
-    val dir = Files.createTempDirectory("holtspec").toString
+    val dir = tempDir("holtspec")
     Seq(
       (1L, java.sql.Date.valueOf("1995-01-01"), 100.0),
       (2L, java.sql.Date.valueOf("1995-01-02"), 200.0),
@@ -103,7 +101,7 @@ class Round10cEdgeSpec extends AnyFunSuite {
   }
 
   test("emb_split_drift: identical vectors in both hash halves score drift_cos 1.0") {
-    val dir = Files.createTempDirectory("driftspec").toString
+    val dir = tempDir("driftspec")
     val v = Seq(1.0f, 2.0f, 3.0f, 4.0f)
     (0 until 20).map(i => (i.toLong, v, 0))
       .toDF("vec_id", "embedding", "label").coalesce(1)

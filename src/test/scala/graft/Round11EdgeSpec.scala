@@ -16,13 +16,13 @@ import org.apache.spark.sql.functions._
   * survives, with the DuckDB oracle in lock-step. The wide
   * NEAR-identical family (the case the star exists for) is pinned in
   * Round12EdgeSpec. */
-class Round11EdgeSpec extends AnyFunSuite {
+class Round11EdgeSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def plant(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-megabucket").toString
+    val dir = tempDir("graft-megabucket")
     val boiler = "terms of service all rights reserved contact us privacy " +
       "policy cookie notice subscribe to the newsletter follow our page"
     val dup = "graft shuffles fixed width signature keys so document text " +
@@ -89,7 +89,7 @@ class Round11EdgeSpec extends AnyFunSuite {
     } catch { case _: Throwable => false }
     assume(duckOk, "python3+duckdb not available on this box")
     def oracleRows(key: String): Seq[String] = {
-      val tmp = java.nio.file.Files.createTempFile("oracle", ".sql")
+      val tmp = tempFile("oracle", ".sql")
       java.nio.file.Files.writeString(tmp, SparkEntry.oracleSql(key))
       val py =
         s"""import duckdb
@@ -98,7 +98,7 @@ class Round11EdgeSpec extends AnyFunSuite {
            |for row in con.sql(open('$tmp').read()).fetchall():
            |    print('|'.join(str(v) for v in row))
            |""".stripMargin
-      val pf = java.nio.file.Files.createTempFile("oracle", ".py")
+      val pf = tempFile("oracle", ".py")
       java.nio.file.Files.writeString(pf, py)
       val pb = new ProcessBuilder("python3", pf.toString)
       pb.redirectErrorStream(true)

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * take it from the doc's unique shingle (singleton bucket → nothing).
   * Buckets are therefore either family-wide or width-1: without the
   * star rule the family contributes ZERO candidate edges. */
-class Round12EdgeSpec extends AnyFunSuite {
+class Round12EdgeSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -33,7 +33,7 @@ class Round12EdgeSpec extends AnyFunSuite {
     "four five six seven eight nine ten eleven twelve"
 
   private def plant(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-widefamily").toString
+    val dir = tempDir("graft-widefamily")
     val rows = (0L until W.toLong).map(i => (i, s"$base tail$i", s"m${i % 3}"))
     rows.toDF("doc_id", "text", "source").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -8,7 +8,7 @@ import graft.operators.Classifier
   * distribution-independence (the property that makes the exact-
   * integer GD claim meaningful at cluster scale) and the
   * manifest-served IVF's genuine pruning. */
-class Round14EdgeSpec extends AnyFunSuite {
+class Round14EdgeSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -53,7 +53,7 @@ class Round14EdgeSpec extends AnyFunSuite {
     // direct-disk victim scan is nonzero (i.e. the assertion's subject
     // is real, not vacuously empty)
     import graft.sources.ManifestTable
-    val root = java.nio.file.Files.createTempDirectory("graft-gdpr-spec").toFile.getPath
+    val root = tempDir("graft-gdpr-spec")
     val docs = graft.sources.Tables.documents(spark, dir)
       .select($"doc_id", $"source", $"n_chars")
     ManifestTable.append(spark, docs, root)

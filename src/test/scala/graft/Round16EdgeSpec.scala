@@ -9,18 +9,15 @@ import java.nio.file.Files
   * metadata-only aggregates' zero-read and fallback contracts, and
   * the Bloom file-skipping index's two-sided hash + no-false-negative
   * guarantees. */
-class Round16EdgeSpec extends AnyFunSuite {
+class Round16EdgeSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def freshDir(): String =
-    Files.createTempDirectory("graft-r16-spec").toFile.getPath
-
   // ---------------------------------------------------------- restore
 
   test("restore across a schema evolution presents the target's schema") {
-    val dir = freshDir()
+    val dir = tempDir("graft-r16-spec")
     ManifestTable.appendEvolving(spark,
       Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1), dir)
     val v0 = ManifestTable.latestVersion(dir).get
@@ -38,7 +35,7 @@ class Round16EdgeSpec extends AnyFunSuite {
   }
 
   test("restore re-infers the schema when the target predates all schema records") {
-    val dir = freshDir()
+    val dir = tempDir("graft-r16-spec")
     // v0: PLAIN append — no schema= action recorded
     ManifestTable.append(spark, Seq((1L, "a")).toDF("k", "v").coalesce(1), dir)
     ManifestTable.appendEvolving(spark,
@@ -50,7 +47,7 @@ class Round16EdgeSpec extends AnyFunSuite {
   }
 
   test("restore to a zero-file pre-evolution target is ambiguous and throws") {
-    val dir = freshDir()
+    val dir = tempDir("graft-r16-spec")
     ManifestTable.append(spark, Seq((1L, "a")).toDF("k", "v").coalesce(1), dir)
     // stats-carrying delete: zero-row staged parts are dropped, so the
     // snapshot is genuinely zero-FILE (not one empty parquet)
@@ -63,7 +60,7 @@ class Round16EdgeSpec extends AnyFunSuite {
   }
 
   test("restore retries past a stolen version and still lands the target state") {
-    val dir = freshDir()
+    val dir = tempDir("graft-r16-spec")
     ManifestTable.append(spark, Seq((1L, "a")).toDF("k", "v").coalesce(1), dir)
     val v0 = ManifestTable.latestVersion(dir).get
     ManifestTable.append(spark, Seq((2L, "b")).toDF("k", "v").coalesce(1), dir)
@@ -77,7 +74,7 @@ class Round16EdgeSpec extends AnyFunSuite {
   }
 
   test("txn idempotence markers survive a restore (a replayed batch stays a no-op)") {
-    val dir = freshDir()
+    val dir = tempDir("graft-r16-spec")
     ManifestTable.append(spark, Seq((1L, "a")).toDF("k", "v").coalesce(1), dir)
     val v0 = ManifestTable.latestVersion(dir).get
     assert(ManifestTable.appendIdempotent(spark,
@@ -92,7 +89,7 @@ class Round16EdgeSpec extends AnyFunSuite {
   }
 
   test("restored entries keep stats verbatim: pruning and metadata aggregates survive") {
-    val dir = freshDir()
+    val dir = tempDir("graft-r16-spec")
     for (i <- 0 until 3)
       ManifestTable.appendWithStats(spark,
         (i * 10 until i * 10 + 10).map(x => (x.toLong, x * 2L)).toDF("k", "c")
@@ -108,7 +105,7 @@ class Round16EdgeSpec extends AnyFunSuite {
   // ----------------------------------------- metadata-only aggregates
 
   test("countMeta/rangeMeta answer with ZERO data reads (data dir withheld)") {
-    val dir = freshDir()
+    val dir = tempDir("graft-r16-spec")
     ManifestTable.appendWithStats(spark,
       (0 until 20).map(i => (i.toLong, i * 3L)).toDF("k", "c")
         .repartitionByRange(4, $"k"), dir, "k", "c")
@@ -127,7 +124,7 @@ class Round16EdgeSpec extends AnyFunSuite {
   }
 
   test("metadata aggregates stay EXACT through delete and merge rewrites") {
-    val dir = freshDir()
+    val dir = tempDir("graft-r16-spec")
     for (i <- 0 until 4)
       ManifestTable.appendWithStats(spark,
         (i * 10 until i * 10 + 10).map(x => (x.toLong, s"v$x")).toDF("k", "v")
@@ -144,7 +141,7 @@ class Round16EdgeSpec extends AnyFunSuite {
   }
 
   test("one stats-less commit makes the aggregates unknowable → None, a stats rewrite restores them") {
-    val dir = freshDir()
+    val dir = tempDir("graft-r16-spec")
     ManifestTable.appendWithStats(spark,
       (0 until 10).map(i => (i.toLong, s"x$i")).toDF("k", "v").coalesce(1), dir, "k")
     ManifestTable.append(spark,
@@ -158,7 +155,7 @@ class Round16EdgeSpec extends AnyFunSuite {
   }
 
   test("rangeMeta is None on a zero-file snapshot (no rows have no extrema)") {
-    val dir = freshDir()
+    val dir = tempDir("graft-r16-spec")
     ManifestTable.appendWithStats(spark,
       Seq((1L, "a")).toDF("k", "v").coalesce(1), dir, "k")
     assert(ManifestTable.deleteWhere(spark, dir, lit(true), Seq("k")).isDefined)
@@ -182,7 +179,7 @@ class Round16EdgeSpec extends AnyFunSuite {
   }
 
   test("bloom: no false negatives — every present key plans its file; absent keys mostly skip") {
-    val dir = freshDir()
+    val dir = tempDir("graft-r16-spec")
     val rows = (0 until 400).map(i => (i.toLong * 7, s"r$i"))
     ManifestTable.appendWithBloom(spark,
       rows.toDF("k", "v").repartition(4), dir, "k")
@@ -208,7 +205,7 @@ class Round16EdgeSpec extends AnyFunSuite {
   }
 
   test("a copy-on-write rewrite drops the bloom: the rewritten file is never skipped") {
-    val dir = freshDir()
+    val dir = tempDir("graft-r16-spec")
     ManifestTable.appendWithBloom(spark,
       (0 until 100).map(i => (i.toLong, s"r$i")).toDF("k", "v")
         .repartitionByRange(2, $"k"), dir, "k")
@@ -222,7 +219,7 @@ class Round16EdgeSpec extends AnyFunSuite {
   }
 
   test("bloom build: NULL keys set no bits and an all-NULL file is never skipped") {
-    val dir = freshDir()
+    val dir = tempDir("graft-r16-spec")
     ManifestTable.appendWithBloom(spark,
       spark.range(1).select(lit(null).cast("long").as("k"), lit("n").as("v"))
         .coalesce(1), dir, "k")
@@ -238,7 +235,7 @@ class Round16EdgeSpec extends AnyFunSuite {
   }
 
   test("appendWithBloom validates the column: unsupported type or absent fails before staging commits") {
-    val dir = freshDir()
+    val dir = tempDir("graft-r16-spec")
     // doubles have no equality-lookup semantics worth a bloom
     intercept[IllegalArgumentException](ManifestTable.appendWithBloom(spark,
       Seq((1.5, 1L)).toDF("d", "k"), dir, "d"))
@@ -257,7 +254,7 @@ class Round16EdgeSpec extends AnyFunSuite {
   }
 
   test("STRING-keyed bloom: URL-shaped point lookups skip files, no false negatives") {
-    val dir = freshDir()
+    val dir = tempDir("graft-r16-spec")
     // 4 files of high-cardinality string keys (the crawl-URL shape
     // min/max bounds cannot prune: hashes scatter across every range)
     for (i <- 0 until 4)
@@ -287,7 +284,7 @@ class Round16EdgeSpec extends AnyFunSuite {
     val pos = BloomIndex.positions("https://a.example/x", m)
     assert(pos.length == 4 && pos.forall(p => p >= 0 && p < m))
     // long-keyed blooms keep working through the same dispatch
-    val dir2 = freshDir()
+    val dir2 = tempDir("graft-r16-spec")
     ManifestTable.appendWithBloom(spark,
       (0L until 100L).map(i => (i * 7919L, i)).toDF("k", "n").coalesce(1),
       dir2, "k")

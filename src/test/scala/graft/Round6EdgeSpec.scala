@@ -8,12 +8,12 @@ import graft.operators.Layout
 
 /** Degenerate-input behavior of the round-6 operators: constant
   * dimensions, constant value columns, zero-MAD groups. */
-class Round6EdgeSpec extends AnyFunSuite {
+class Round6EdgeSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("zorderWrite survives a constant dimension (hi == lo) and still clusters the other") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("zorder-edge").toString
+    val dir = tempDir("zorder-edge")
     val df = (1 to 1000).map(i => (i.toLong, 7L)).toDF("a", "b")
     Layout.zorderWrite(df, "a", "b", s"$dir/z", numFiles = 4)
     val stats = spark.read.parquet(s"$dir/z")
@@ -29,7 +29,7 @@ class Round6EdgeSpec extends AnyFunSuite {
 
   test("zorderWrite on empty input writes an empty table instead of crashing") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("zorder-empty").toString
+    val dir = tempDir("zorder-empty")
     val df = Seq.empty[(Long, Long)].toDF("a", "b")
     Layout.zorderWrite(df, "a", "b", s"$dir/z", numFiles = 4)
     assert(spark.read.parquet(s"$dir/z").count() == 0)
@@ -47,7 +47,7 @@ class Round6EdgeSpec extends AnyFunSuite {
 
   test("q_equidepth degenerates to one bucket on a constant column, no crash") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("eq-edge").toString
+    val dir = tempDir("eq-edge")
     (1 to 100).map(_ => 42.0).toDF("l_extendedprice").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val got = SparkEntry.queries("q_equidepth")(spark, dir).collect()
@@ -57,7 +57,7 @@ class Round6EdgeSpec extends AnyFunSuite {
 
   test("q_mad_outliers: a zero-MAD group flags every off-median value") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mad-edge").toString
+    val dir = tempDir("mad-edge")
     def t(i: Int) = new Timestamp(i * 1000L)
     // "flat": 9 identical values + 1 different -> MAD 0, the 1 is an outlier
     // "spread": symmetric values -> nonzero MAD, no 3x outliers

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -10,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * oracle hash-compare proves Spark == DuckDB, these prove both match
   * the DEFINITION (censoring in KM, negation + first-match anchoring
   * in CEP) on inputs small enough to verify by hand. */
-class Round8EdgeSpec extends AnyFunSuite {
+class Round8EdgeSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -18,7 +17,7 @@ class Round8EdgeSpec extends AnyFunSuite {
 
   /** Write a tiny events table in the driver parquet layout. */
   private def eventsDir(rows: Seq[(Long, Timestamp, Long, String, Double, String)]): String = {
-    val dir = Files.createTempDirectory("r8edge").toString
+    val dir = tempDir("r8edge")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir

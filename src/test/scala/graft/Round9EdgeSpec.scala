@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Handcrafted-input semantics for the round-9 keys: the oracle
@@ -9,14 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * DEFINITION (train/held-out vocab split in OOV, majority vote in
   * kNN classification) on inputs small enough to verify by hand. The
   * round-9 graph keys are in `GraphSpec`. */
-class Round9EdgeSpec extends AnyFunSuite {
+class Round9EdgeSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   test("corpus_ppl_buckets: value-threshold tertiles split head/middle/tail") {
     // c(a)=4, others 1, N=7 -> rarities a:1, b/x/y:7; scores
     // d1("a a a")=1e6, d2("a b")=4e6, d3("x y")=7e6 -> one doc per bucket
-    val dir = Files.createTempDirectory("r9ppl").toString
+    val dir = tempDir("r9ppl")
     Seq(
       (1L, "a a a", "en", "s1", 5L),
       (2L, "a b", "en", "s1", 3L),
@@ -33,7 +31,7 @@ class Round9EdgeSpec extends AnyFunSuite {
   }
 
   test("text_oov_rate: vocab comes from the train split only, rate is exact ppb") {
-    val dir = Files.createTempDirectory("r9oov").toString
+    val dir = tempDir("r9oov")
     Seq(
       (1L, "a b c", "en", "s1", 5L),   // train: contributes {a,b,c}
       (2L, "b d", "en", "s1", 3L),     // train: contributes {b,d}
@@ -55,7 +53,7 @@ class Round9EdgeSpec extends AnyFunSuite {
     //  probe 0 sees five 1s vs five 2s -> TIE -> pred 1 (smallest);
     //  probes 1-5 (label 1) see 4x1 vs 5x2 -> pred 2;
     //  probes 6-9 (label 2) see 5x1 vs 4x2 -> pred 1. Nobody correct.
-    val dir = Files.createTempDirectory("r9knncls").toString
+    val dir = tempDir("r9knncls")
     (0L to 10L).map(i =>
       (i, Array(1.0f, 0.0f), if (i == 0) 0 else if (i <= 5) 1 else 2))
       .toDF("vec_id", "embedding", "label").coalesce(1)

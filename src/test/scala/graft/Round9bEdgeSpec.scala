@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * mining respects the strict-after / within-window / same-ms-excluded
   * boundaries. The batch's graph keys (graph_hits, q_ktruss) are
   * specified in GraphSpec. */
-class Round9bEdgeSpec extends AnyFunSuite {
+class Round9bEdgeSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -17,7 +16,7 @@ class Round9bEdgeSpec extends AnyFunSuite {
     // u1: a@0s, b@10s, c@2h  -> only (a,b); both *→c gaps exceed 1h
     // u2: b@0ms and a@0ms (same ms -> excluded), a@exactly+1h -> (a,a),(b,a)
     def ts(ms: Long) = new Timestamp(ms)
-    val dir = Files.createTempDirectory("r9bseq").toString
+    val dir = tempDir("r9bseq")
     Seq(
       (1L, ts(0L), 1L, "a", 0.0, ""),
       (2L, ts(10000L), 1L, "b", 0.0, ""),
@@ -39,7 +38,7 @@ class Round9bEdgeSpec extends AnyFunSuite {
     // doc1 "x y"×5 interleaved -> (x,y)=5, (y,x)=4 (below support);
     // doc2 "z"×6 -> (z,z)=5. Unigrams x:5 y:5 z:6, N=16.
     // lift(x,y) = 5·16·1e9/25 = 3200000000; lift(z,z) = 80e9//36 = 2222222222.
-    val dir = Files.createTempDirectory("r9bpmi").toString
+    val dir = tempDir("r9bpmi")
     Seq((1L, "x y x y x y x y x y"), (2L, "z z z z z z"))
       .toDF("doc_id", "text").coalesce(1)
       .write.parquet(s"$dir/documents.parquet")

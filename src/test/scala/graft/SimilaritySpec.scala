@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Similarity
 import graft.sources.Tables
 
-class SimilaritySpec extends AnyFunSuite {
+class SimilaritySpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   val sf = TestSpark.sf
 
@@ -57,7 +57,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("emb_label_noise flags exactly the planted mislabeled vector in clustered data") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("label-noise").toString
+    val dir = tempDir("label-noise")
     // 3 tight clusters of 5 vectors; all ids are multiples of 5 so every
     // vector is an anchor. One vector (id 10) carries the WRONG label.
     def v(axis: Int, jitter: Float) = {
@@ -171,8 +171,7 @@ class SimilaritySpec extends AnyFunSuite {
       (cell, i.toLong, Array(i.toFloat, 1.0f))
     }
     val assigned = rows.toDF("cell", "vec_id", "embedding")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ivf-build-spec").toFile.getPath
+    val root = tempDir("graft-ivf-build-spec")
     val v = Similarity.buildIvfManifestIndex(spark, assigned,
       cells = Array(0L, 1L, 2L, 3L, 4L), root)
     assert(v == 0L)

@@ -1,19 +1,15 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.{Sinks, Tables}
 
-class SourcesSinksSpec extends AnyFunSuite {
+class SourcesSinksSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
-
-  def tmp(): String = Files.createTempDirectory("graft-sink").toString
 
   test("csv and json-lines round-trip the documents table") {
     val docs = Tables.documents(spark, TestSpark.sf).select("doc_id", "lang", "n_chars")
-    val d1 = tmp(); val d2 = tmp()
+    val d1 = tempDir("graft-sink"); val d2 = tempDir("graft-sink")
     docs.write.mode("overwrite").option("header", "true").csv(d1)
     docs.write.mode("overwrite").json(d2)
     val csvBack = Sinks.readCsv(spark, d1, docs.schema)
@@ -24,7 +20,7 @@ class SourcesSinksSpec extends AnyFunSuite {
 
   test("orc round-trips with predicate pushdown in the scan") {
     val docs = Tables.documents(spark, TestSpark.sf).select("doc_id", "lang", "n_chars")
-    val dir = tmp()
+    val dir = tempDir("graft-sink")
     Sinks.writeOrc(docs, dir)
     val back = Sinks.readOrc(spark, dir)
     assert(back.exceptAll(docs).count() == 0 && docs.exceptAll(back).count() == 0)
@@ -57,7 +53,7 @@ class SourcesSinksSpec extends AnyFunSuite {
   }
 
   test("compact rewrites many small files into few") {
-    val src = tmp(); val dst = tmp()
+    val src = tempDir("graft-sink"); val dst = tempDir("graft-sink")
     val docs = Tables.documents(spark, TestSpark.sf)
     docs.repartition(40).write.mode("overwrite").parquet(src)
     assert(new java.io.File(src).listFiles().count(_.getName.endsWith(".parquet")) >= 40)
@@ -69,7 +65,7 @@ class SourcesSinksSpec extends AnyFunSuite {
 
   test("partitioned write prunes partitions at scan time") {
     val docs = Tables.documents(spark, TestSpark.sf)
-    val dir = tmp()
+    val dir = tempDir("graft-sink")
     Sinks.writePartitioned(docs, dir, Seq("lang"))
     val scan = spark.read.parquet(dir).filter(col("lang") === "en")
     val plan = scan.queryExecution.executedPlan.toString
@@ -80,7 +76,7 @@ class SourcesSinksSpec extends AnyFunSuite {
   }
 
   test("bucketed tables join without a shuffle") {
-    val wh = tmp()
+    val wh = tempDir("graft-sink")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val cust = Tables.customer(spark, TestSpark.sf)

@@ -1,9 +1,7 @@
 package graft
 
 import java.io.File
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.scalatest.funsuite.AnyFunSuite
@@ -85,21 +83,12 @@ class StreamReplaySpec extends AnyFunSuite {
   private val queries = Paths.get("src/main/scala/graft/queries")
   private val harness = queries.resolve("StreamReplay.scala")
 
-  /** Source text without block and line comments, lines kept in place. */
-  private def code(f: Path): String =
-    "(?s)/\\*.*?\\*/".r.replaceAllIn(new String(Files.readAllBytes(f), "UTF-8"),
-      m => "\n" * m.matched.count(_ == '\n')).replaceAll("//[^\n]*", "")
-
   test("temp dirs, AvailableNow triggers and awaits live only in StreamReplay") {
-    val files = {
-      val s = Files.list(queries)
-      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList.sorted
-      finally s.close()
-    }
+    val files = SpecLint.scalaFiles(queries)
     assert(files.contains(harness))
     val offenders = for {
       f <- files if f != harness
-      (line, i) <- code(f).split("\n").zipWithIndex
+      (line, i) <- SpecLint.code(f).split("\n").zipWithIndex
       word <- Seq("createTempDirectory", "Trigger.AvailableNow", "awaitTermination")
       if line.contains(word)
     } yield s"$f:${i + 1}: $word"

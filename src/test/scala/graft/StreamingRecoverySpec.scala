@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,14 +9,14 @@ import graft.streaming.EventStream.Event
 /** Durability: a checkpointed streaming query stopped mid-stream and
   * restarted resumes from its offsets — the file sink sees every
   * record exactly once. */
-class StreamingRecoverySpec extends AnyFunSuite {
+class StreamingRecoverySpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("checkpointed file-sink query restarts with exactly-once output") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    val out = Files.createTempDirectory("graft-out").toString
+    val ckpt = tempDir("graft-ckpt")
+    val out = tempDir("graft-out")
     def ev(id: Long, min: Long) =
       Event(id, new Timestamp(86400000L + min * 60000L), 1L, "view", 1.0)
 

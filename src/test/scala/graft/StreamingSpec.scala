@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.EventStream
 import graft.streaming.EventStream.Event
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   // base offset: epoch-0 events are exactly at the initial watermark and
@@ -194,7 +194,7 @@ class StreamingSpec extends AnyFunSuite {
   test("foreachBatch upsert sink lands a CDC stream as a keyed parquet table") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("upsert_sink").toString + "/tbl"
+    val dir = tempDir("upsert_sink") + "/tbl"
     val input = MemoryStream[(Long, String, Long)]
     val q = graft.streaming.EventStream.upsertSink(
       input.toDF.toDF("k", "v", "seq"), dir, "k", "seq")

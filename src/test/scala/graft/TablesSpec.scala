@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -11,7 +10,7 @@ import graft.sources.Tables
 /** `Tables` resolves a table's parquet schema and row count once per
   * file set: a known table is read without a schema-inference job, and
   * a table rewritten at the same path is resolved again. */
-class TablesSpec extends AnyFunSuite {
+class TablesSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def docs(n: Long, path: String): Unit =
@@ -21,7 +20,7 @@ class TablesSpec extends AnyFunSuite {
       .coalesce(1).write.mode("overwrite").parquet(path)
 
   test("a documents table rewritten at the same path past 50k rows plans a spread") {
-    val dir = Files.createTempDirectory("tables-rewrite").toString
+    val dir = tempDir("tables-rewrite")
     docs(10L, s"$dir/documents.parquet")
     assert(Tables.documents(spark, dir).rdd.getNumPartitions == 1)
     docs(Tables.SpreadMinRows + 5000L, s"$dir/documents.parquet")
@@ -34,7 +33,7 @@ class TablesSpec extends AnyFunSuite {
 
   test("an orders table rewritten at the same path with an extra column returns it") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("tables-schema").toString
+    val dir = tempDir("tables-schema")
     Seq((1L, 10L)).toDF("o_orderkey", "o_custkey").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     assert(Tables.orders(spark, dir).columns.toSeq == Seq("o_orderkey", "o_custkey"))

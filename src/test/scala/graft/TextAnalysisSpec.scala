@@ -28,6 +28,20 @@ class TextAnalysisSpec extends AnyFunSuite {
     }
   }
 
+  test("gopherFilter and repetitionStats plan no lambda: every executed plan, both keys") {
+    val d = docs(Seq((1L, "the cat the cat the cat"), (2L, "a  b c "), (3L, " ")))
+    def planned(run: => org.apache.spark.sql.DataFrame) = SpecLint.plannedLambdas(spark)(run)
+    for ((name, plans) <- Seq(
+        "gopherFilter" -> planned(TextAnalysis.gopherFilter(d)),
+        "repetitionStats" -> planned(TextAnalysis.repetitionStats(d)),
+        "text_gopher_filter" -> planned(SparkEntry.all("text_gopher_filter").fn(spark, TestSpark.sf)),
+        "text_repetition" -> planned(SparkEntry.all("text_repetition").fn(spark, TestSpark.sf)))) {
+      assert(plans.exists(_._1 == "collect"), s"$name: the executed plan was not seen")
+      val bad = plans.filter(_._2.nonEmpty)
+      assert(bad.isEmpty, s"$name runs interpreted lambdas: $bad")
+    }
+  }
+
   test("tokenStats counts whitespace and BPE-ish tokens") {
     val d = docs(Seq((1L, "Hello world, 42 times!")))
     val r = TextAnalysis.tokenStats(d).collect()(0)

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Spark == DuckDB; this proves the output IS an occlusion-pruned
   * graph — survivors are mutually non-occluding, the best candidate
   * always survives, and pruning only removes (never adds) edges. */
-class VamanaSpec extends AnyFunSuite {
+class VamanaSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   test("ann_vamana_prune: survivors are mutually non-occluding and rank-1 always survives") {
@@ -56,7 +56,7 @@ class VamanaSpec extends AnyFunSuite {
       val v = Array.fill(8)(0.0f); v(c) = scale
       (i.toLong, v.toSeq, c)
     }
-    val dir = java.nio.file.Files.createTempDirectory("nmispec").toString
+    val dir = tempDir("nmispec")
     rows.toDF("vec_id", "embedding", "label").coalesce(1)
       .write.parquet(s"$dir/embeddings.parquet")
     val got = SparkEntry.queries("emb_nmi")(spark, dir).collect()

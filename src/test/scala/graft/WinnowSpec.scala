@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.queries.Winnow
 
 /** Winnowing fingerprint properties (Schleimer et al. 2003), k=4, w=4. */
-class WinnowSpec extends AnyFunSuite {
+class WinnowSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def fp(docs: Seq[(Long, String)]) = {
@@ -68,7 +68,7 @@ class WinnowSpec extends AnyFunSuite {
     // "deep learning of deep nets": stopword 'of' splits two phrases.
     // freq(deep)=2 degree(deep)=4 -> 2.0; learning/nets: 2/1... no:
     // degree(learning)=2 freq=1 -> 2.0; both phrases score 4.0.
-    val dir = java.nio.file.Files.createTempDirectory("rake").toString
+    val dir = tempDir("rake")
     Seq((1L, "deep learning of deep nets")).toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("text_rake_keywords")(spark, dir).collect()
