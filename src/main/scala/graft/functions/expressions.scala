@@ -611,6 +611,20 @@ object Kernels {
     c
   }
 
+  /** Positions i < min(|a|, |b|) where a[i] = b[i], null elements
+    * never matching: the MinHash verify kernel. Equal to Spark's
+    * `size(filter(zip_with(a, b, (x, y) -> x = y), v -> v))` without its
+    * two interpreted lambdas and per-row boolean array. */
+  def sigMatchCount(a: ArrayData, b: ArrayData): Int = {
+    val n = math.min(a.numElements(), b.numElements())
+    var i = 0; var c = 0
+    while (i < n) {
+      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i)) c += 1
+      i += 1
+    }
+    c
+  }
+
   def cosine(a: ArrayData, b: ArrayData): Double = cosine(a, b, true, true)
 
   /** aFloat/bFloat: element width of each array (float32 vs float64). */
@@ -787,6 +801,29 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) =>
       s"${ev.value} = graft.functions.Kernels.sortedIntersectCount($a, $b);")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+/** Count of equal positions of two long arrays, up to the shorter
+  * one's length — the codegen'd MinHash signature match (see
+  * Kernels.sigMatchCount). */
+case class SigMatchCount(left: Expression, right: Expression)
+    extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(
+        s"sig_match_count expects array<bigint> args, got " +
+          s"${left.dataType.sql}, ${right.dataType.sql}")
+    }
+  override def dataType: DataType = IntegerType
+  override def nullSafeEval(a: Any, b: Any): Any =
+    Kernels.sigMatchCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.Kernels.sigMatchCount($a, $b);")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -1139,6 +1176,8 @@ object Fns {
   def cosine_sim(a: Column, b: Column): Column = column(CosineSim(expression(a), expression(b)))
   def sorted_intersect_count(a: Column, b: Column): Column =
     column(SortedIntersectCount(expression(a), expression(b)))
+  def sig_match_count(a: Column, b: Column): Column =
+    column(SigMatchCount(expression(a), expression(b)))
   def simhash64(c: Column): Column = column(SimHash64(expression(c)))
   def minhash_sig(c: Column, numPerms: Int = 128, shingleW: Int = 3): Column =
     column(MinHashSig(expression(c), numPerms, shingleW))
@@ -1176,6 +1215,7 @@ object Fns {
     registerFunction(spark, "cosine_sim", es => CosineSim(es(0), es(1)))
     registerFunction(spark, "sorted_intersect_count",
       es => SortedIntersectCount(es(0), es(1)))
+    registerFunction(spark, "sig_match_count", es => SigMatchCount(es(0), es(1)))
     registerFunction(spark, "simhash64", es => SimHash64(es.head))
     registerFunction(spark, "minhash_sig", {
       case Seq(c) => MinHashSig(c, 128, 3)

@@ -155,13 +155,27 @@ object Dedup {
   }
 
   /** Near-dup pairs via MinHash+LSH: candidates from band collisions,
-    * verified by estimated Jaccard (matching signature fraction). */
+    * verified by estimated Jaccard (matching signature fraction).
+    *
+    * Candidate-first verify. The signature pin keeps its pre-pin size
+    * estimate (about 6.6 MiB at 102k docs while 115 MB is stored), so a
+    * plan left to statistics broadcasts the whole signature table and
+    * the 16-rows-per-doc band index to check a few thousand pairs. Here
+    * the band self-join is pinned to a shuffled hash join, and the
+    * broadcast side is the candidate pairs: first the bare
+    * (doc_a, doc_b) rows (16 B each), streamed past by the pinned
+    * signatures on doc_a, then those pairs with sig_a (16 B plus one
+    * signature each), streamed past by the signatures on doc_b. The
+    * broadcast follows the near-duplicate volume, not the corpus size;
+    * the signature table used to be broadcast at every scale, so no
+    * scale ships more. A candidate set past the broadcast limit has no
+    * shuffled fallback yet. */
   def minhashPairs(docs: DataFrame, threshold: Double,
                    numPerms: Int = 128, bands: Int = 16): DataFrame = {
     // compute signatures once; band from the same frame
     val sigs = docs.select(col("doc_id"), Fns.minhash_sig(col("text"), numPerms).as("sig"))
       .localCheckpoint()
-    val idx = bandSignatures(sigs, numPerms, bands)
+    val idx = bandSignatures(sigs, numPerms, bands).hint("shuffle_hash")
     val cand = idx.as("a")
       .join(idx.as("b"),
         col("a.band") === col("b.band") &&
@@ -169,11 +183,12 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    cand
-      .join(sigs.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sig", "sig_a"), "doc_a")
-      .join(sigs.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sig", "sig_b"), "doc_b")
+    val withA = sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"))
+      .join(broadcast(cand), "doc_a")
+    sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"))
+      .join(broadcast(withA), "doc_b")
       .withColumn("est_jaccard",
-        expr(s"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)) / cast($numPerms as double)"))
+        Fns.sig_match_count(col("sig_a"), col("sig_b")) / lit(numPerms.toDouble))
       .filter(col("est_jaccard") >= threshold)
       .select("doc_a", "doc_b", "est_jaccard")
   }

@@ -29,7 +29,8 @@ object TextAnalysis {
   /** Heuristic quality signals: punctuation density, stopword ratio,
     * mean word length — the standard cheap pre-filters for LLM corpus
     * curation (cf. C4/Gopher rules). All ratios are single double
-    * divisions (oracle-parity safe). */
+    * divisions (oracle-parity safe); a ratio over zero chars (the `""`
+    * document) is null, as in the DuckDB oracle, not an ANSI error. */
   def qualityScore(docs: DataFrame): DataFrame = {
     val st = graft.functions.Fns.text_scan(col("text"))
     // ppb integer ratios (floor): numerators stay < 2^53 after the 1e9
@@ -37,7 +38,7 @@ object TextAnalysis {
     // double floor equals the integer division either engine computes —
     // no dependence on ROUND(double) half-edge behavior.
     def ppb(num: Column, den: Column): Column =
-      floor(num.cast("double") * 1e9 / den).cast("long").cast("double") / 1e9
+      floor(try_divide(num.cast("double") * 1e9, den)).cast("long").cast("double") / 1e9
     docs.select(
       col("doc_id"),
       st.getField("chars").as("n_chars"),
@@ -191,7 +192,9 @@ object TextAnalysis {
     * of exact integer counts, so threshold comparisons are
     * bit-identical across engines. Every leg comes from two one-pass
     * native kernels: `text_scan` (stopwords, word length, punctuation)
-    * and `token_repetition` (token count, top-word and 3-gram counts). */
+    * and `token_repetition` (token count, top-word and 3-gram counts).
+    * The punctuation ratio of the `""` document (zero chars) is null,
+    * as in the DuckDB oracle, so rule 5 does not fire on it. */
   def gopherFilter(docs: DataFrame): DataFrame = {
     val st = graft.functions.Fns.text_scan(col("text"))
     val rep = graft.functions.Fns.token_repetition(col("text"))
@@ -200,8 +203,8 @@ object TextAnalysis {
       st.getField("tokens").cast("double")
     val mwl = st.getField("word_chars").cast("double") /
       st.getField("tokens").cast("double")
-    val punct = st.getField("punct").cast("double") /
-      st.getField("chars").cast("double")
+    val punct = try_divide(st.getField("punct").cast("double"),
+      st.getField("chars").cast("double"))
     val g3 = rep.getField("grams_3")
     val dup3 = when(g3 > 0,
       (g3 - rep.getField("distinct_3")).cast("double") / g3.cast("double"))

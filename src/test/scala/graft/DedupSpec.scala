@@ -1,6 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import graft.functions.Fns
 import graft.operators.Dedup
 
 class DedupSpec extends AnyFunSuite with TempDirs {
@@ -107,6 +110,114 @@ class DedupSpec extends AnyFunSuite with TempDirs {
       val bad = plans.filter(_._2.nonEmpty)
       assert(bad.isEmpty, s"$name runs interpreted lambdas: $bad")
     }
+  }
+
+  test("minhashPairs plans no lambda: est_jaccard is sig_match_count, not zip_with") {
+    val d = docs(Seq((1L, base), (2L, nearDup), (3L, other)))
+    val plans = SpecLint.plannedLambdas(spark)(Dedup.minhashPairs(d, 0.5))
+    assert(plans.exists(_._1 == "localCheckpoint"), "the signature job was not seen")
+    val bad = plans.filter(_._2.nonEmpty)
+    assert(bad.isEmpty, s"minhashPairs runs interpreted lambdas: $bad")
+  }
+
+  /** minhashPairs as it was before the candidate-first verify: a
+    * statistics-chosen band self-join, then the candidates joined to the
+    * whole signature table on each side, matched by zip_with. */
+  def minhashPairsReference(docs: DataFrame, threshold: Double,
+                            numPerms: Int = 128, bands: Int = 16): DataFrame = {
+    val sigs = docs.select(col("doc_id"), Fns.minhash_sig(col("text"), numPerms).as("sig"))
+      .localCheckpoint()
+    val idx = Dedup.bandSignatures(sigs, numPerms, bands)
+    val cand = idx.as("a")
+      .join(idx.as("b"),
+        col("a.band") === col("b.band") &&
+          col("a.band_hash") === col("b.band_hash") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+    cand
+      .join(sigs.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sig", "sig_a"), "doc_a")
+      .join(sigs.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sig", "sig_b"), "doc_b")
+      .withColumn("est_jaccard",
+        expr(s"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)) / cast($numPerms as double)"))
+      .filter(col("est_jaccard") >= threshold)
+      .select("doc_a", "doc_b", "est_jaccard")
+  }
+
+  /** Planted clusters around one bridge document (cluster A edits its
+    * head, cluster B its tail, so it belongs to both), three more
+    * clusters, a byte-identical copy, four "" texts (all-zero
+    * signatures: they collide in every band, est_jaccard 1.0) and 30
+    * unrelated documents. */
+  lazy val plantedCorpus: Seq[(Long, String)] = {
+    val r = new scala.util.Random(17)
+    def words(n: Int) = Vector.fill(n)(s"v${r.nextInt(5000)}")
+    def edit(ws: Vector[String], at: Int*) = at.foldLeft(ws)((w, i) => w.updated(i, s"e${r.nextInt(5000)}"))
+    val bridge = words(40)
+    val clusterA = Seq(edit(bridge, 2), edit(bridge, 3, 5), edit(bridge, 1))
+    val clusterB = Seq(edit(bridge, 36), edit(bridge, 33, 37), edit(bridge, 38))
+    val more = (1 to 3).flatMap { _ => val b = words(30); Seq(b, edit(b, 10), edit(b, 20)) }
+    val copy = words(30)
+    val texts = (bridge +: (clusterA ++ clusterB ++ more ++ Seq(copy, copy))).map(_.mkString(" ")) ++
+      Seq.fill(4)("") ++ Seq.fill(30)(words(25).mkString(" "))
+    texts.zipWithIndex.map { case (t, i) => (i.toLong + 1, t) }
+  }
+
+  def pairSet(df: DataFrame): Set[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  test("minhashPairs returns the reference's rows, est_jaccard included, at thresholds 0.0, 0.5 and 1.0") {
+    val d = docs(plantedCorpus)
+    val n = plantedCorpus.size.toLong
+    val bridge = 1L
+    val (aIds, bIds) = ((2L to 4L).toSet, (5L to 7L).toSet)
+    for (t <- Seq(0.0, 0.5, 1.0)) {
+      val (got, ref) = (Dedup.minhashPairs(d, t), minhashPairsReference(d, t))
+      assert(got.columns.toSeq == Seq("doc_a", "doc_b", "est_jaccard"))
+      assert(got.schema.map(_.dataType) == ref.schema.map(_.dataType))
+      val (g, w) = (pairSet(got), pairSet(ref))
+      assert(g == w, s"threshold $t: only new ${(g -- w).take(5)}, only reference ${(w -- g).take(5)}")
+      if (t == 0.0) {
+        // the corpus shapes the spec claims: the bridge pairs with both
+        // clusters, the empty texts pair with each other
+        def partners(id: Long) = g.collect { case (a, b, _) if a == id => b; case (a, b, _) if b == id => a }
+        assert(partners(bridge).exists(aIds) && partners(bridge).exists(bIds), s"bridge: ${partners(bridge)}")
+        assert((n - 33 to n - 30).combinations(2).forall { case Seq(a, b) => g.contains((a, b, 1.0)) })
+      }
+      if (t == 1.0) assert(g.size >= 7, s"the copy and the six \"\" pairs verify at 1.0: $g")
+    }
+  }
+
+  test("minhashPairs broadcasts the candidate pairs, never the signature table or the band index") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case o => o +: (o.children ++ o.subqueries).flatMap(nodes)
+    }
+    // rows entering the broadcasts of one executed plan, from their
+    // numOutputRows metric; a reused exchange is counted once
+    def broadcastRows(df: DataFrame): Long = {
+      df.collect()
+      nodes(df.queryExecution.executedPlan).collect { case b: BroadcastExchangeExec => b }
+        .distinct.map(_.metrics("numOutputRows").value).sum
+    }
+    val d = docs(plantedCorpus)
+    val n = plantedCorpus.size.toLong
+    val idx = Dedup.bandSignatures(
+      d.select(col("doc_id"), Fns.minhash_sig(col("text"), 128).as("sig")), 128, 16)
+    val nCand = idx.as("a").join(idx.as("b"), col("a.band") === col("b.band") &&
+        col("a.band_hash") === col("b.band_hash") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id"), col("b.doc_id")).distinct().count()
+    assert(nCand > 0 && 2 * nCand < 17 * n, s"$nCand candidates for $n docs")
+    val got = broadcastRows(Dedup.minhashPairs(d, 0.5))
+    assert(got > 0 && got <= 2 * nCand,
+      s"$got rows broadcast for $nCand candidate pairs over $n docs")
+    // the reference ships the signature table and the band index
+    val ref = broadcastRows(minhashPairsReference(d, 0.5))
+    assert(ref >= 17 * n, s"the reference broadcast $ref rows for $n docs")
   }
 
   test("jaccardJoin finds the planted near-dup and nothing else") {

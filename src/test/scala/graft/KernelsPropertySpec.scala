@@ -72,6 +72,44 @@ class KernelsPropertySpec extends AnyFunSuite {
       ArrayData.toArrayData(Array(1L, 2L))) == 0)
   }
 
+  test("sig_match_count == Spark's size(filter(zip_with(a, b, x = y), v -> v)), nulls and unequal lengths included") {
+    import org.apache.spark.sql.functions._
+    val spark = TestSpark.spark
+    graft.functions.Fns.registerAll(spark)
+    import spark.implicits._
+    val r = new scala.util.Random(29)
+    // few distinct values, so equal positions are common; null elements
+    // and null arrays now and then
+    type Arr = Option[Seq[Option[Long]]]
+    def arr(): Arr =
+      if (r.nextInt(10) == 0) None
+      else Some(Seq.fill(r.nextInt(12))(if (r.nextInt(8) == 0) None else Some(r.nextInt(3).toLong)))
+    def of(vs: Long*): Arr = Some(vs.map(Some(_)))
+    val edge: Seq[(Arr, Arr)] = Seq((of(), of()), (of(), of(1L)), (of(1L, 2L), of()),
+      (of(1L, 2L, 3L), of(1L, 2L)), (Some(Seq(None)), Some(Seq(None))),
+      (None, of(1L)), (of(1L), None), (None, None))
+    val pairs = edge ++ Seq.fill(400)((arr(), arr()))
+    val df = pairs.zipWithIndex.map { case ((a, b), i) => (i, a.orNull, b.orNull) }.toDF("id", "a", "b")
+    val rows = df.select($"id",
+        graft.functions.Fns.sig_match_count($"a", $"b").as("got"),
+        expr("sig_match_count(a, b)").as("sql"),
+        expr("size(filter(zip_with(a, b, (x, y) -> x = y), v -> v))").as("want"))
+      .orderBy("id").collect()
+    assert(rows.length == pairs.length)
+    rows.foreach { row =>
+      val id = row.getInt(0)
+      val want = if (row.isNullAt(3)) None else Some(row.getInt(3))
+      assert((if (row.isNullAt(1)) None else Some(row.getInt(1))) == want, s"id=$id ${pairs(id)}")
+      assert((if (row.isNullAt(2)) None else Some(row.getInt(2))) == want, s"sql id=$id")
+      // the direct (non-codegen) kernel call, on non-null arrays
+      def data(vs: Seq[Option[Long]]) =
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(vs.map(_.orNull[Any]).toArray)
+      for (a <- pairs(id)._1; b <- pairs(id)._2)
+        assert(Some(Kernels.sigMatchCount(data(a), data(b))) == want, s"direct id=$id")
+    }
+    assert(rows.count(_.isNullAt(3)) > 10 && rows.count(r => !r.isNullAt(3) && r.getInt(3) > 1) > 50)
+  }
+
   test("boundedLevenshtein == exact levenshtein when within bound, sentinel above") {
     def mutate(s: String, edits: Int): String = {
       var cs = s.toVector
@@ -346,10 +384,8 @@ class KernelsPropertySpec extends AnyFunSuite {
     import spark.implicits._
     val r = new scala.util.Random(23)
     val vocab = Seq("the", "a", "of", "x", "word", "boiler", "plate", "!!", "")
-    // "" is left out: its punctuation ratio divides by zero chars (rule 5)
-    val texts = Seq(None, Some(" "), Some("  "), Some("the")) ++
-      Seq.fill(300)(Seq.fill(r.nextInt(60))(vocab(r.nextInt(vocab.size))).mkString(" "))
-        .filter(_.nonEmpty).map(Some(_))
+    val texts = Seq(None, Some(""), Some(" "), Some("  "), Some("the")) ++
+      Seq.fill(300)(Some(Seq.fill(r.nextInt(60))(vocab(r.nextInt(vocab.size))).mkString(" ")))
     val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t.orNull) }.toDF("doc_id", "text")
     // the two operators as they were, lambdas and token arrays included
     val ws = split($"text", " ")
@@ -362,7 +398,8 @@ class KernelsPropertySpec extends AnyFunSuite {
     val topWord = modeCount.cast("double") / size(ws).cast("double")
     val stopRatio = st.getField("stop_hits").cast("double") / st.getField("tokens").cast("double")
     val mwl = st.getField("word_chars").cast("double") / st.getField("tokens").cast("double")
-    val punct = st.getField("punct").cast("double") / st.getField("chars").cast("double")
+    // null over zero chars (the "" document), as in the DuckDB oracle
+    val punct = try_divide(st.getField("punct").cast("double"), st.getField("chars").cast("double"))
     val rules = Seq(size(ws) < 20, stopRatio < 0.03, mwl < 3.0 || mwl > 10.0,
       topWord > 0.15, dup3 > 0.1, punct > 0.3)
     val mask = rules.zipWithIndex.foldLeft(lit(0L)) { case (acc, (c, bit)) =>

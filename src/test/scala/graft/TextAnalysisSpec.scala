@@ -60,6 +60,20 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(math.abs(r.getAs[Double]("mean_word_len") - 15.0 / 5) < 1e-9)
   }
 
+  test("gopherFilter and qualityScore on empty and blank text: a zero-char ratio is null, as in the oracles") {
+    // rows of textGopherFilterSql / textQualitySql run by DuckDB 1.0.0
+    // on the same texts; DuckDB divides by zero to NULL
+    val d = docs(Seq((1L, ""), (2L, " "), (3L, "a")))
+    val gopher = TextAnalysis.gopherFilter(d).orderBy("doc_id").collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_tokens"), r.getAs[Long]("fail_mask"),
+        r.getAs[Boolean]("keep"))).toSeq
+    assert(gopher == Seq((1L, 1L, 15L, false), (2L, 2L, 15L, false), (3L, 1L, 13L, false)))
+    val q = TextAnalysis.qualityScore(d.filter("doc_id = 1")).collect()(0)
+    assert(q.getAs[Long]("n_chars") == 0L && q.getAs[Long]("n_tokens") == 1L)
+    assert(q.isNullAt(q.fieldIndex("punct_ratio")))
+    assert(q.getAs[Double]("stopword_ratio") == 0.0 && q.getAs[Double]("mean_word_len") == 0.0)
+  }
+
   test("langId picks the profile with most hits") {
     val d = docs(Seq(
       (1L, "the cat and the dog of a to"),
