@@ -337,7 +337,7 @@ object Flac {
         if (pos + 4 > b.length) return None
         last = (b(pos) & 0x80) != 0
         val typ = b(pos) & 0x7f
-        val len = ((b(pos + 1) & 0xff) << 16) | ((b(pos + 2) & 0xff) << 8) | (b(pos + 3) & 0xff)
+        val len = Bytes.be24u(b, pos + 1)
         pos += 4
         if (pos + len > b.length) return None
         if (typ == 0) {
@@ -412,7 +412,7 @@ object Flac {
         br.align()
         val c16at = br.pos
         if (c16at + 2 > b.length) return None
-        val want = ((b(c16at) & 0xff) << 8) | (b(c16at + 1) & 0xff)
+        val want = Bytes.be16u(b, c16at)
         if (crc16(b, frameStart, c16at) != want) return None
         pos = c16at + 2
         // undo stereo decorrelation

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.io.ByteArrayOutputStream
-
 /** Baseline JPEG (ITU-T T.81 sequential DCT, Huffman) — encoder and
   * decoder from scratch, completing the web-image codec arc after
   * BMP/PNG/GIF (reference kept no decoders at all — ClickThru.java is
@@ -150,7 +148,7 @@ object Jpeg {
   // encoder
   // ----------------------------------------------------------------
 
-  private final class BitWriter(out: ByteArrayOutputStream) {
+  private final class BitWriter(out: Bytes.Writer) {
     private var acc = 0
     private var nbits = 0
     def put(code: Int, len: Int): Unit = {
@@ -159,8 +157,8 @@ object Jpeg {
         acc = (acc << 1) | ((code >>> i) & 1)
         nbits += 1
         if (nbits == 8) {
-          out.write(acc & 0xff)
-          if ((acc & 0xff) == 0xff) out.write(0x00) // byte stuffing
+          out.u8(acc & 0xff)
+          if ((acc & 0xff) == 0xff) out.u8(0x00) // byte stuffing
           acc = 0; nbits = 0
         }
         i -= 1
@@ -168,8 +166,8 @@ object Jpeg {
     }
     def flush(): Unit = if (nbits > 0) { // pad with 1-bits per spec
       acc = (acc << (8 - nbits)) | ((1 << (8 - nbits)) - 1)
-      out.write(acc & 0xff)
-      if ((acc & 0xff) == 0xff) out.write(0x00)
+      out.u8(acc & 0xff)
+      if ((acc & 0xff) == 0xff) out.u8(0x00)
       acc = 0; nbits = 0
     }
   }
@@ -313,11 +311,10 @@ object Jpeg {
     require(!(subsample420 && subsample422), "pick one subsampling profile")
     require(!(progressive && restartInterval > 0),
       "progressive encoder does not emit restart markers")
-    val out = new ByteArrayOutputStream()
-    def be16(v: Int): Unit = { out.write((v >>> 8) & 0xff); out.write(v & 0xff) }
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
+    val out = new Bytes.Writer()
+    def marker(m: Int): Unit = { out.u8(0xff); out.u8(m) }
     def seg(m: Int, body: Array[Byte]): Unit = {
-      marker(m); be16(body.length + 2); out.write(body, 0, body.length)
+      marker(m); out.be16(body.length + 2); out.bytes(body)
     }
     marker(0xd8) // SOI
     seg(0xe0, Array[Byte]('J', 'F', 'I', 'F', 0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
@@ -332,26 +329,25 @@ object Jpeg {
     if (!gray) seg(0xdb, dqtBody(1, ChromaQuant))
     // SOF0
     val nComp = if (gray) 1 else 3
-    val sof = new ByteArrayOutputStream()
-    sof.write(8); sof.write((h >>> 8) & 0xff); sof.write(h & 0xff)
-    sof.write((w >>> 8) & 0xff); sof.write(w & 0xff); sof.write(nComp)
+    val sof = new Bytes.Writer()
+    sof.u8(8); sof.be16(h); sof.be16(w); sof.u8(nComp)
     val (hL, vL) =
       if (gray) (1, 1)
       else if (subsample420) (2, 2)
       else if (subsample422) (2, 1)
       else (1, 1)
-    sof.write(1); sof.write((hL << 4) | vL); sof.write(0)
+    sof.u8(1); sof.u8((hL << 4) | vL); sof.u8(0)
     if (!gray) {
-      sof.write(2); sof.write(0x11); sof.write(1)
-      sof.write(3); sof.write(0x11); sof.write(1)
+      sof.u8(2); sof.u8(0x11); sof.u8(1)
+      sof.u8(3); sof.u8(0x11); sof.u8(1)
     }
     seg(if (progressive) 0xc2 else 0xc0, sof.toByteArray)
     // DHT
     def dhtBody(cls: Int, id: Int, bits: Array[Int], vals: Array[Byte]): Array[Byte] = {
-      val b = new ByteArrayOutputStream()
-      b.write((cls << 4) | id)
-      bits.foreach(b.write)
-      b.write(vals, 0, vals.length)
+      val b = new Bytes.Writer()
+      b.u8((cls << 4) | id)
+      bits.foreach(b.u8)
+      b.bytes(vals)
       b.toByteArray
     }
     seg(0xc4, dhtBody(0, 0, DcLumBits, DcLumVals))
@@ -361,19 +357,19 @@ object Jpeg {
       seg(0xc4, dhtBody(1, 1, AcChromaBits, AcChromaVals))
     }
     if (restartInterval > 0) {
-      val dri = new ByteArrayOutputStream()
-      dri.write((restartInterval >>> 8) & 0xff); dri.write(restartInterval & 0xff)
+      val dri = new Bytes.Writer()
+      dri.be16(restartInterval)
       seg(0xdd, dri.toByteArray)
     }
     // SOS header writer: component selectors + spectral params
     def sosSeg(compIds: Seq[Int], ss: Int, se: Int, ahAl: Int): Unit = {
-      val sos = new ByteArrayOutputStream()
-      sos.write(compIds.length)
+      val sos = new Bytes.Writer()
+      sos.u8(compIds.length)
       compIds.foreach { id =>
-        sos.write(id)
-        sos.write(if (id == 1) 0x00 else 0x11) // (dcTab<<4)|acTab
+        sos.u8(id)
+        sos.u8(if (id == 1) 0x00 else 0x11) // (dcTab<<4)|acTab
       }
-      sos.write(ss); sos.write(se); sos.write(ahAl)
+      sos.u8(ss); sos.u8(se); sos.u8(ahAl)
       seg(0xda, sos.toByteArray)
     }
     if (!progressive)
@@ -731,8 +727,6 @@ object Jpeg {
     var sawScan = false
     var skipAdvance = false
 
-    def be16(off: Int): Int = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-
     while (pos + 2 <= b.length) {
       if ((b(pos) & 0xff) != 0xff) return None
       // 0xFF FILL bytes are legal padding before any marker (T.81
@@ -748,7 +742,7 @@ object Jpeg {
       if (pos + 4 > b.length) return None
       if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) { pos += 2 } // standalone
       else {
-        val len = be16(pos + 2)
+        val len = Bytes.be16u(b, pos + 2)
         if (len < 2 || pos + 2 + len > b.length) return None
         val body = pos + 4
         m match {
@@ -764,7 +758,7 @@ object Jpeg {
                 while (k < 64) { t(Zigzag(k)) = b(p + 1 + k) & 0xff; k += 1 }
                 p += 65
               } else {
-                while (k < 64) { t(Zigzag(k)) = be16(p + 1 + 2 * k); k += 1 }
+                while (k < 64) { t(Zigzag(k)) = Bytes.be16u(b, p + 1 + 2 * k); k += 1 }
                 p += 129
               }
               quant(tq) = t
@@ -789,7 +783,7 @@ object Jpeg {
             // this decoder's 8-bit pipeline — None, not garbage pixels
             if ((b(body) & 0xff) != 8) return None
             progressive = m == 0xc2
-            h = be16(body + 1); w = be16(body + 3)
+            h = Bytes.be16u(b, body + 1); w = Bytes.be16u(b, body + 3)
             val n = b(body + 5) & 0xff
             if (w <= 0 || h <= 0 || (n != 1 && n != 3)) return None
             comps = (0 until n).map { i =>
@@ -813,7 +807,7 @@ object Jpeg {
           case 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca | 0xcb |
                0xcd | 0xce | 0xcf =>
             return None // lossless/arithmetic/hierarchical: out of scope
-          case 0xdd => restartInterval = be16(body)
+          case 0xdd => restartInterval = Bytes.be16u(b, body)
           case 0xda => // SOS
             if (comps == null) return None
             val ns = b(body) & 0xff
@@ -1207,8 +1201,6 @@ object Jpeg {
     composeRgb(w, h, comps, planes, planeW, hMax, vMax)
   }
 
-  /** Per-pixel integer luma of a decoded JPEG — the [[Multimodal]]
-    * luminance convention ((299R+587G+114B)/1000). */
   /** [[luminance]] that also returns the decoded dimensions — for
     * container decoders (MJPEG) that must cross-check frame dims
     * against their own header. */
@@ -1217,15 +1209,14 @@ object Jpeg {
       val out = new Array[Long](w * h)
       var i = 0
       while (i < px.length) {
-        val r = (px(i) >>> 16) & 0xff
-        val g = (px(i) >>> 8) & 0xff
-        val bl = px(i) & 0xff
-        out(i) = (299L * r + 587L * g + 114L * bl) / 1000L
+        out(i) = Multimodal.luma((px(i) >>> 16) & 0xff, (px(i) >>> 8) & 0xff, px(i) & 0xff)
         i += 1
       }
       (w, h, out)
     }
 
+  /** Per-pixel integer luma of a decoded JPEG — the [[Multimodal.luma]]
+    * convention ((299R+587G+114B)/1000). */
   def luminance(b: Array[Byte]): Option[Array[Long]] =
     luminanceWithDims(b).map(_._3)
 }

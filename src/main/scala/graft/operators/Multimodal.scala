@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import Bytes._
 
 /** Multimodal-column plumbing (SURVEY.md §2-F).
   *
@@ -13,10 +14,10 @@ import org.apache.spark.sql.functions._
   * the batch size bounds executor memory per task and the blobs never
   * pass through a shuffle — features (tiny) do.
   *
-  * The actual image/audio codecs are NOT in this container, so the
-  * real decoders are stubbed (`StubImageDecoder` et al.) behind the
-  * `Decoder` interface; `ByteStatsDecoder` is a deterministic, fully
-  * real implementation used by the verified query path.
+  * The image, audio and video codecs are implemented here from their
+  * public specs (JPEG in [[Jpeg]], FLAC in [[Flac]]), both directions,
+  * with their byte-order work in [[Bytes]]. `ByteStatsDecoder` and
+  * `HeaderImageDecoder` sit behind the batched `Decoder` interface.
   */
 object Multimodal {
 
@@ -48,23 +49,10 @@ object Multimodal {
     * byte_sum) slots [[resizePlan]] reads as (w, h); unrecognized or
     * truncated blobs decode to (-1, -1) so a mixed corpus flows
     * through without task failures. Height is |height|: a negative
-    * BMP height just means top-down row order. Full pixel decode
-    * still needs codecs absent from this container — this covers the
-    * header/metadata half for real, across the four dominant web
-    * image containers. */
+    * BMP height just means top-down row order. The pixel decoders
+    * ([[bmpLuminance]], [[pngLuminance]], [[gifLuminance]],
+    * [[Jpeg.luminance]]) cover the other half. */
   object HeaderImageDecoder extends Decoder {
-    private val PngSig: Array[Byte] =
-      Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
-    private def beInt(b: Array[Byte], off: Int): Long =
-      ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-        ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
-    private def leInt(b: Array[Byte], off: Int): Int =
-      (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-        ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-    private def leShort(b: Array[Byte], off: Int): Long =
-      ((b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8))
-    private def beShort(b: Array[Byte], off: Int): Long =
-      (((b(off) & 0xffL) << 8) | (b(off + 1) & 0xffL))
     /** JPEG: walk the marker segments to the first SOFn frame header
       * (0xC0-0xCF minus the non-frame C4/C8/CC), which carries
       * height@+5 (BE16) then width@+7. Segment lengths include their
@@ -77,12 +65,12 @@ object Multimodal {
         val marker = b(i + 1) & 0xff
         if (marker >= 0xc0 && marker <= 0xcf &&
             marker != 0xc4 && marker != 0xc8 && marker != 0xcc)
-          return Some((beShort(b, i + 7), beShort(b, i + 5)))
+          return Some((be16u(b, i + 7).toLong, be16u(b, i + 5).toLong))
         if (marker == 0xff) i += 1 // fill byte padding
         else if (marker == 0xd9) return None // EOI: no frame header can follow
         else if (marker == 0xd8 || (marker >= 0xd0 && marker <= 0xd7)) i += 2
         else {
-          val len = beShort(b, i + 2).toInt
+          val len = be16u(b, i + 2)
           if (len < 2) return None
           i += 2 + len
         }
@@ -96,30 +84,25 @@ object Multimodal {
       * LE from 21. VP8X (extended): 24-bit LE canvas width-1@24 /
       * height-1@27. All per the public container spec. */
     private def webpDims(b: Array[Byte]): Option[(Long, Long)] = {
-      def tag(off: Int, s: String) = s.indices.forall(i => b(off + i) == s(i).toByte)
-      if (b.length < 30 || !tag(0, "RIFF") || !tag(8, "WEBP")) None
-      else if (tag(12, "VP8 ") && (b(23) & 0xff) == 0x9d &&
-          (b(24) & 0xff) == 0x01 && (b(25) & 0xff) == 0x2a)
-        Some((leShort(b, 26) & 0x3fff, leShort(b, 28) & 0x3fff))
-      else if (tag(12, "VP8L") && (b(20) & 0xff) == 0x2f) {
-        val bits = leInt(b, 21).toLong & 0xffffffffL
+      if (b.length < 30 || !tagAt(b, 0, "RIFF") || !tagAt(b, 8, "WEBP")) None
+      else if (tagAt(b, 12, "VP8 ") && u8(b, 23) == 0x9d &&
+          u8(b, 24) == 0x01 && u8(b, 25) == 0x2a)
+        Some(((le16u(b, 26) & 0x3fff).toLong, (le16u(b, 28) & 0x3fff).toLong))
+      else if (tagAt(b, 12, "VP8L") && u8(b, 20) == 0x2f) {
+        val bits = le32u(b, 21)
         Some(((bits & 0x3fff) + 1, ((bits >> 14) & 0x3fff) + 1))
-      } else if (tag(12, "VP8X")) {
-        def le24(off: Int): Long =
-          (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) | ((b(off + 2) & 0xffL) << 16)
-        Some((le24(24) + 1, le24(27) + 1))
-      } else None
+      } else if (tagAt(b, 12, "VP8X"))
+        Some((le24u(b, 24) + 1L, le24u(b, 27) + 1L))
+      else None
     }
     /** (width, height) if the blob is a parseable PNG/BMP/GIF/JPEG/WebP header. */
     def dims(blob: Array[Byte]): Option[(Long, Long)] =
-      if (blob.length >= 24 && blob.startsWith(PngSig) &&
-          blob(12) == 'I' && blob(13) == 'H' && blob(14) == 'D' && blob(15) == 'R')
-        Some((beInt(blob, 16), beInt(blob, 20))) // IHDR: width@16, height@20, big-endian
-      else if (blob.length >= 26 && blob(0) == 'B' && blob(1) == 'M')
-        Some((leInt(blob, 18).toLong, math.abs(leInt(blob, 22)).toLong)) // BITMAPINFOHEADER, little-endian
-      else if (blob.length >= 10 && blob(0) == 'G' && blob(1) == 'I' && blob(2) == 'F' &&
-          blob(3) == '8' && (blob(4) == '7' || blob(4) == '9') && blob(5) == 'a')
-        Some((leShort(blob, 6), leShort(blob, 8))) // logical screen, little-endian 16-bit
+      if (blob.length >= 24 && blob.startsWith(pngSig) && tagAt(blob, 12, "IHDR"))
+        Some((be32u(blob, 16), be32u(blob, 20))) // IHDR: width@16, height@20, big-endian
+      else if (blob.length >= 26 && tagAt(blob, 0, "BM"))
+        Some((le32s(blob, 18).toLong, math.abs(le32s(blob, 22)).toLong)) // BITMAPINFOHEADER, little-endian
+      else if (blob.length >= 10 && (tagAt(blob, 0, "GIF87a") || tagAt(blob, 0, "GIF89a")))
+        Some((le16u(blob, 6).toLong, le16u(blob, 8).toLong)) // logical screen, little-endian 16-bit
       else if (blob.length >= 4 && (blob(0) & 0xff) == 0xff && (blob(1) & 0xff) == 0xd8)
         jpegDims(blob)
       else if (blob.length >= 30 && blob(0) == 'R' && blob(1) == 'I')
@@ -128,18 +111,6 @@ object Multimodal {
     def decode(batch: Seq[Asset]): Seq[Features] = batch.map { a =>
       val (w, h) = dims(a.blob).getOrElse((-1L, -1L))
       Features(a.doc_id, a.blob.length.toLong, w, h)
-    }
-  }
-
-  /** STUB — full image decode (JPEG → pixels) needs codecs absent from
-    * this container. Deterministic fake: derives a pseudo
-    * width/height/channel feature from the blob hash so the plumbing
-    * (schema, batching, partitioning) is exercised end-to-end. Use
-    * [[HeaderImageDecoder]] for real PNG/BMP dimensions. */
-  object StubImageDecoder extends Decoder {
-    def decode(batch: Seq[Asset]): Seq[Features] = batch.map { a =>
-      val h = graft.functions.Kernels.fnv64(a.blob, 0, a.blob.length)
-      Features(a.doc_id, a.blob.length.toLong, math.abs(h % 4096), math.abs((h >>> 12) % 4096))
     }
   }
 
@@ -208,19 +179,60 @@ object Multimodal {
     * Width little-endian at offset 18, height at 22, exactly where
     * [[HeaderImageDecoder.dims]] reads them back. */
   def bmpHeader(w: Int, h: Int): Array[Byte] = {
-    val b = new Array[Byte](54)
-    def le(v: Int, off: Int): Unit = {
-      b(off) = v.toByte; b(off + 1) = (v >>> 8).toByte
-      b(off + 2) = (v >>> 16).toByte; b(off + 3) = (v >>> 24).toByte
-    }
-    b(0) = 'B'; b(1) = 'M'
-    le(54, 2)  // file size (header-only blob)
-    le(54, 10) // pixel-array offset
-    le(40, 14) // BITMAPINFOHEADER size
-    le(w, 18)
-    le(h, 22)
-    b
+    val o = new Writer(54)
+    bmpHeaders(o, 54, w, h, planes = 0, bpp = 0)
+    o.toByteArray
   }
+
+  private def bmpHeaders(o: Writer, fileSize: Int, w: Int, h: Int,
+                         planes: Int, bpp: Int): Unit = {
+    o.tag("BM"); o.le32(fileSize); o.le32(0)
+    o.le32(54) // pixel-array offset
+    o.le32(40) // BITMAPINFOHEADER size
+    o.le32(w); o.le32(h); o.le16(planes); o.le16(bpp)
+    o.zeros(24) // BI_RGB (uncompressed); image size, resolution, palette unused
+  }
+
+  /** A 24-bpp raster in the BMP pixel-array layout, which AVI's raw-DIB
+    * frames share: bottom-up rows, BGR order, each row padded to 4
+    * bytes. `rgb(x, y)` is packed 0xRRGGBB with row 0 = TOP row. */
+  private def bgrRaster(w: Int, h: Int, rgb: (Int, Int) => Int): Array[Byte] = {
+    val rowBytes = (w * 3 + 3) & ~3
+    val fr = new Array[Byte](rowBytes * h)
+    for (y <- 0 until h; x <- 0 until w) {
+      val c = rgb(x, y)
+      val off = (h - 1 - y) * rowBytes + x * 3
+      fr(off) = c.toByte; fr(off + 1) = (c >>> 8).toByte; fr(off + 2) = (c >>> 16).toByte
+    }
+    fr
+  }
+
+  /** BT.601 luma, top-down row-major, of a BGR raster at `off` with
+    * `px` bytes per pixel: the inverse of [[bgrRaster]] (rows stored
+    * bottom-up unless `topDown`). The BMP and raw-AVI decoders share it. */
+  private def bgrLuma(b: Array[Byte], off: Int, w: Int, h: Int, px: Int,
+                      topDown: Boolean): Array[Long] = {
+    val rowBytes = (w * px + 3) & ~3
+    val out = new Array[Long](w * h)
+    var y = 0
+    while (y < h) {
+      val rowOff = off + (if (topDown) y else h - 1 - y) * rowBytes
+      var x = 0
+      while (x < w) {
+        val o = rowOff + x * px
+        out(y * w + x) = luma(u8(b, o + 2), u8(b, o + 1), u8(b, o))
+        x += 1
+      }
+      y += 1
+    }
+    out
+  }
+
+  /** Exact integer BT.601 luma, (299·R + 587·G + 114·B) div 1000: every
+    * pixel decoder here emits it, so one image decodes to the same
+    * samples from any container. Gray (v, v, v) has luma exactly v. */
+  private[operators] def luma(r: Int, g: Int, b: Int): Long =
+    (299L * r + 587L * g + 114L * b) / 1000L
 
   /** Full uncompressed 24-bpp BMP for a `w`×`h` image with pixel
     * colors from `rgb(x, y)` (packed 0xRRGGBB, row 0 = TOP row) —
@@ -228,73 +240,33 @@ object Multimodal {
     * round-trips. Rows are stored bottom-up (positive height) and
     * padded to 4-byte boundaries per the BMP spec. */
   def bmpImage(w: Int, h: Int, rgb: (Int, Int) => Int): Array[Byte] = {
-    val rowBytes = (w * 3 + 3) & ~3
-    val b = new Array[Byte](54 + rowBytes * h)
-    def le(v: Int, off: Int): Unit = {
-      b(off) = v.toByte; b(off + 1) = (v >>> 8).toByte
-      b(off + 2) = (v >>> 16).toByte; b(off + 3) = (v >>> 24).toByte
-    }
-    b(0) = 'B'; b(1) = 'M'
-    le(b.length, 2)   // file size
-    le(54, 10)        // pixel-array offset
-    le(40, 14)        // BITMAPINFOHEADER size
-    le(w, 18); le(h, 22)
-    b(26) = 1         // planes
-    b(28) = 24        // bpp
-    le(0, 30)         // BI_RGB (uncompressed)
-    for (y <- 0 until h; x <- 0 until w) {
-      val c = rgb(x, y)
-      val off = 54 + (h - 1 - y) * rowBytes + x * 3 // bottom-up rows, BGR order
-      b(off) = (c & 0xff).toByte
-      b(off + 1) = ((c >>> 8) & 0xff).toByte
-      b(off + 2) = ((c >>> 16) & 0xff).toByte
-    }
-    b
+    val raster = bgrRaster(w, h, rgb)
+    val o = new Writer(54 + raster.length)
+    bmpHeaders(o, 54 + raster.length, w, h, planes = 1, bpp = 24)
+    o.bytes(raster)
+    o.toByteArray
   }
 
   /** REAL pure-JVM BMP pixel decode (r11 VERDICT #8): for an
     * uncompressed (BI_RGB) 24- or 32-bpp BMP, returns the per-pixel
-    * integer luminance in row-major TOP-DOWN order — BT.601 luma
-    * y = (299·R + 587·G + 114·B) div 1000, exact integer math.
+    * integer luminance in row-major TOP-DOWN order ([[luma]]).
     * Handles bottom-up (positive height) and top-down (negative
     * height) row order, 4-byte row padding, and the pixel-array
     * offset from the file header. None for any other container,
     * compression, or a truncated pixel array — callers fall back to
     * byte-level features rather than failing the task. */
   def bmpLuminance(b: Array[Byte]): Option[Array[Long]] = {
-    def leInt(off: Int): Int =
-      (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-        ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-    def leShort(off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-    if (b.length < 54 || b(0) != 'B' || b(1) != 'M') return None
-    val pixOff = leInt(10)
-    if (leInt(14) < 40) return None // pre-BITMAPINFOHEADER variants
-    val w = leInt(18)
-    val hRaw = leInt(22)
+    if (b.length < 54 || !tagAt(b, 0, "BM")) return None
+    val pixOff = le32s(b, 10)
+    if (le32s(b, 14) < 40) return None // pre-BITMAPINFOHEADER variants
+    val w = le32s(b, 18)
+    val hRaw = le32s(b, 22) // signed: negative means top-down rows
     val h = math.abs(hRaw)
-    val topDown = hRaw < 0
-    val bpp = leShort(28)
-    val comp = leInt(30)
-    if (w <= 0 || h == 0 || comp != 0 || (bpp != 24 && bpp != 32)) return None
-    val px = bpp / 8
-    val rowBytes = (w * px + 3) & ~3
+    val bpp = le16u(b, 28)
+    if (w <= 0 || h == 0 || le32s(b, 30) != 0 || (bpp != 24 && bpp != 32)) return None
+    val rowBytes = (w * (bpp / 8) + 3) & ~3
     if (pixOff < 54 || pixOff.toLong + rowBytes.toLong * h > b.length) return None
-    val out = new Array[Long](w * h)
-    var y = 0
-    while (y < h) {
-      val srcRow = if (topDown) y else h - 1 - y
-      var x = 0
-      while (x < w) {
-        val off = pixOff + srcRow * rowBytes + x * px
-        val bl = b(off) & 0xffL
-        val g = b(off + 1) & 0xffL
-        val r = b(off + 2) & 0xffL
-        out(y * w + x) = (299L * r + 587L * g + 114L * bl) / 1000L
-        x += 1
-      }
-      y += 1
-    }
-    Some(out)
+    Some(bgrLuma(b, pixOff, w, h, bpp / 8, topDown = hRaw < 0))
   }
 
   // ---------------------------------------------------------------
@@ -381,18 +353,18 @@ object Multimodal {
     defl.end()
     val idat = zBuf.toByteArray
 
-    val out = new java.io.ByteArrayOutputStream(64 + idat.length)
-    out.write(pngSig, 0, 8)
-    def beInt(v: Int): Array[Byte] =
-      Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
+    val out = new Writer(64 + idat.length)
+    out.bytes(pngSig)
     def chunk(typ: String, data: Array[Byte]): Unit = {
-      out.write(beInt(data.length), 0, 4)
+      out.be32(data.length.toLong)
       val body = typ.getBytes("US-ASCII") ++ data
-      out.write(body, 0, body.length)
-      out.write(beInt(crc32(body, 0, body.length)), 0, 4)
+      out.bytes(body)
+      out.be32(crc32(body, 0, body.length).toLong)
     }
-    chunk("IHDR", beInt(w) ++ beInt(h) ++
-      Array[Byte](8, if (alpha) 6 else 2, 0, 0, 0))
+    val ihdr = new Writer(13)
+    ihdr.be32(w.toLong); ihdr.be32(h.toLong)
+    ihdr.bytes(Array[Byte](8, if (alpha) 6 else 2, 0, 0, 0))
+    chunk("IHDR", ihdr.toByteArray)
     // split IDAT in two when possible: decoders must concatenate
     if (idat.length > 1) {
       val cut = idat.length / 2
@@ -418,15 +390,10 @@ object Multimodal {
     * (inflate integrity subsumes pixel correctness; web crawls are
     * full of CRC-sloppy encoders). */
   def pngLuminance(b: Array[Byte]): Option[Array[Long]] = {
-    if (b.length < 8 + 25 || !pngSig.indices.forall(i => b(i) == pngSig(i)))
-      return None
-    def beInt(off: Int): Int =
-      ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-        ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
+    if (b.length < 8 + 25 || !b.startsWith(pngSig)) return None
     // IHDR must be the first chunk
-    if (beInt(8) != 13 || b(12) != 'I' || b(13) != 'H' || b(14) != 'D' || b(15) != 'R')
-      return None
-    val w = beInt(16); val h = beInt(20)
+    if (be32s(b, 8) != 13 || !tagAt(b, 12, "IHDR")) return None
+    val w = be32s(b, 16); val h = be32s(b, 20) // signed: >= 2^31 is rejected
     val bitDepth = b(24) & 0xff; val colorType = b(25) & 0xff
     val interlace = b(28) & 0xff
     if (w <= 0 || h <= 0 || bitDepth != 8 || interlace != 0 ||
@@ -439,7 +406,7 @@ object Multimodal {
     var sawEnd = false
     while (!sawEnd) {
       if (off + 8 > b.length) return None // truncated chunk header
-      val len = beInt(off)
+      val len = be32s(b, off)
       if (len < 0 || off + 12L + len > b.length) return None // truncated data
       val typ = new String(b, off + 4, 4, "US-ASCII")
       if (typ == "IDAT") idat.write(b, off + 8, len)
@@ -495,8 +462,7 @@ object Multimodal {
       var px = 0
       while (px < w) {
         val o = rowOff + px * bpp
-        out(y * w + px) = (299L * (raw(o) & 0xffL) + 587L * (raw(o + 1) & 0xffL) +
-          114L * (raw(o + 2) & 0xffL)) / 1000L
+        out(y * w + px) = luma(u8(raw, o), u8(raw, o + 1), u8(raw, o + 2))
         px += 1
       }
       y += 1
@@ -505,90 +471,105 @@ object Multimodal {
   }
 
   // ---------------------------------------------------------------
-  // WAV: real pure-JVM PCM16 decode (r12 VERDICT #6) — the audio twin
-  // of the BMP/PNG milestones. RIFF is a plain chunk container and
-  // PCM16 needs no codec, so header+sample parse IS the full decode.
+  // WAV: real pure-JVM decode (r12 VERDICT #6) — the audio twin of
+  // the BMP/PNG milestones. RIFF is a plain chunk container: PCM16
+  // needs no codec, μ-law and IMA ADPCM (below) sit behind the same
+  // chunk walk.
   // ---------------------------------------------------------------
 
+  /** 5-byte LIST payload plus its pad byte: an odd-length chunk between
+    * fmt and data, so a decoder that assumes data follows fmt directly
+    * — instead of walking word-aligned chunks — breaks on the fixtures. */
+  private val WavJunk: Array[Byte] =
+    Array[Byte]('L', 'I', 'S', 'T', 5, 0, 0, 0, 'I', 'N', 'F', 'O', 'x', 0)
+
+  /** RIFF/WAVE bytes: "fmt " with `fmt` as its body, the `extra` chunks,
+    * then "data" padded to an even length. */
+  private def riffWave(fmt: Array[Byte], extra: Array[Byte], data: Array[Byte]): Array[Byte] = {
+    val pad = data.length & 1
+    val o = new Writer(28 + fmt.length + extra.length + data.length + pad)
+    o.tag("RIFF"); o.le32(20 + fmt.length + extra.length + data.length + pad)
+    o.tag("WAVE")
+    o.tag("fmt "); o.le32(fmt.length); o.bytes(fmt)
+    o.bytes(extra)
+    o.tag("data"); o.le32(data.length); o.bytes(data)
+    o.zeros(pad) // RIFF word alignment
+    o.toByteArray
+  }
+
+  /** A WAVEFORMAT body; `ext` are the 16-bit cbSize and extension fields. */
+  private def waveFmt(tag: Int, channels: Int, rate: Int, byteRate: Int,
+                      blockAlign: Int, bits: Int, ext: Int*): Array[Byte] = {
+    val o = new Writer(16 + 2 * ext.length)
+    o.le16(tag); o.le16(channels); o.le32(rate); o.le32(byteRate)
+    o.le16(blockAlign); o.le16(bits); ext.foreach(o.le16)
+    o.toByteArray
+  }
+
   /** Real RIFF/WAVE file: canonical "fmt " (PCM, 16-bit) + "data"
-    * chunks, channels interleaved little-endian. `junkChunk` inserts a
-    * LIST chunk (with odd length, exercising RIFF word-alignment)
-    * between fmt and data, so decoders that assume data follows fmt
-    * directly — instead of walking chunks — break on the fixtures. */
+    * chunks, channels interleaved little-endian; `junkChunk` inserts
+    * the odd-length LIST chunk between them. */
   def wavPcm16(sampleRate: Int, channels: Int, samples: Array[Short],
                junkChunk: Boolean = false): Array[Byte] = {
     require(channels > 0 && samples.length % channels == 0)
-    val junk = if (junkChunk) Array[Byte]('L', 'I', 'S', 'T', 5, 0, 0, 0,
-      'I', 'N', 'F', 'O', 'x', 0) // 5-byte payload + pad to even
-    else Array.empty[Byte]
-    val dataLen = samples.length * 2
-    val b = java.nio.ByteBuffer.allocate(44 + junk.length + dataLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put("RIFF".getBytes("US-ASCII")).putInt(36 + junk.length + dataLen)
-      .put("WAVE".getBytes("US-ASCII"))
-    b.put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1) // PCM
-      .putShort(channels.toShort)
-      .putInt(sampleRate)
-      .putInt(sampleRate * channels * 2) // byte rate
-      .putShort((channels * 2).toShort)  // block align
-      .putShort(16)                      // bits per sample
-    b.put(junk)
-    b.put("data".getBytes("US-ASCII")).putInt(dataLen)
-    samples.foreach(s => b.putShort(s))
-    b.array()
+    val data = new Writer(samples.length * 2)
+    samples.foreach(v => data.le16(v))
+    riffWave(waveFmt(1, channels, sampleRate, sampleRate * channels * 2, channels * 2, 16),
+      if (junkChunk) WavJunk else Array.empty[Byte], data.toByteArray)
   }
 
   /** REAL pure-JVM WAV decode: RIFF chunk walk (word-aligned — odd
-    * chunk sizes pad one byte), "fmt " parse, PCM16 sample read, and
-    * an exact integer mono mixdown (channel sum / channel count,
+    * chunk sizes pad one byte), "fmt " parse, sample decode, and an
+    * exact integer mono mixdown (channel sum / channel count,
     * truncating toward zero — the division both engines agree on).
-    * Returns (sampleRate, channels, monoSamples). None — never a
-    * throw — for non-RIFF/WAVE bytes, compressed or non-16-bit
-    * formats, a missing fmt/data chunk, zero/absurd channel counts,
-    * or a data chunk that overruns the file: mixed corpora degrade to
-    * byte-level features instead of failing the task. */
-  def wavSamples(b: Array[Byte]): Option[(Int, Int, Array[Int])] = {
-    if (b.length < 44) return None
-    def tag(off: Int, s: String) =
-      s.indices.forall(i => b(off + i) == s(i).toByte)
-    if (!tag(0, "RIFF") || !tag(8, "WAVE")) return None
-    def leInt(off: Int): Int =
-      (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-        ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-    def leShort(off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
+    * Returns (sampleRate, channels, fmtTag, monoSamples) for PCM16
+    * (tag 1), μ-law (tag 7, 8-bit, any channel count) and IMA ADPCM
+    * (tag 0x11, mono). None — never a throw — for non-RIFF/WAVE bytes,
+    * any other format or bit depth, a missing fmt/data chunk, data
+    * before fmt, zero/absurd channel counts, or a chunk that overruns
+    * the file: mixed corpora degrade to byte-level features instead of
+    * failing the task. */
+  def wavSamples(b: Array[Byte]): Option[(Int, Int, Int, Array[Int])] = {
+    if (b.length < 44 || !tagAt(b, 0, "RIFF") || !tagAt(b, 8, "WAVE")) return None
     var off = 12
-    var fmt: Option[(Int, Int)] = None // (channels, sampleRate)
+    // (fmtTag, channels, rate, samplesPerBlock)
+    var fmt: Option[(Int, Int, Int, Int)] = None
     while (off + 8 <= b.length) {
-      val size = leInt(off + 4)
+      val size = le32s(b, off + 4)
       if (size < 0 || off + 8L + size > b.length) return None // overrun
-      if (tag(off, "fmt ")) {
+      if (tagAt(b, off, "fmt ")) {
         if (size < 16) return None
-        val audioFormat = leShort(off + 8)
-        val channels = leShort(off + 10)
-        val rate = leInt(off + 12)
-        val bits = leShort(off + 22)
-        if (audioFormat != 1 || bits != 16 ||
-          channels < 1 || channels > 8 || rate <= 0) return None
-        fmt = Some((channels, rate))
-      } else if (tag(off, "data")) {
-        if (fmt.isEmpty) return None // fmt must precede data
-        val (channels, rate) = fmt.get
-        val frames = size / (2 * channels)
-        val out = new Array[Int](frames)
-        var f = 0
-        while (f < frames) {
-          var sum = 0
-          var c = 0
-          while (c < channels) {
-            val o = off + 8 + (f * channels + c) * 2
-            sum += leShort(o).toShort.toInt // sign-extend LE int16
-            c += 1
-          }
-          out(f) = sum / channels // truncates toward zero, both engines
-          f += 1
+        val audioFormat = le16u(b, off + 8)
+        val channels = le16u(b, off + 10)
+        val rate = le32s(b, off + 12)
+        val bits = le16u(b, off + 22)
+        if (channels < 1 || channels > 8 || rate <= 0) return None
+        audioFormat match {
+          case 1 if bits == 16 => fmt = Some((1, channels, rate, 0))
+          case 7 if bits == 8 => fmt = Some((7, channels, rate, 0))
+          case 0x11 if bits == 4 && channels == 1 =>
+            if (size < 20) return None
+            val spb = le16u(b, off + 26)
+            if (spb < 3 || spb % 2 == 0) return None
+            fmt = Some((0x11, 1, rate, spb))
+          case _ => return None
         }
-        return Some((rate, channels, out))
+      } else if (tagAt(b, off, "data")) {
+        val (t, channels, rate, spb) = fmt.getOrElse(return None) // fmt must precede data
+        def mixdown(width: Int)(sample: Int => Int): Array[Int] =
+          Array.tabulate(size / (width * channels)) { f =>
+            var sum = 0; var c = 0
+            while (c < channels) { sum += sample(off + 8 + (f * channels + c) * width); c += 1 }
+            sum / channels // truncates toward zero, both engines
+          }
+        val mono: Array[Int] = t match {
+          case 1 => mixdown(2)(le16s(b, _))
+          case 7 => mixdown(1)(o => ulawDecode(u8(b, o)))
+          case _ =>
+            if (size % (4 + (spb - 1) / 2) != 0) return None
+            imaDecodeMono(b, off + 8, size, spb)
+        }
+        return Some((rate, channels, t, mono))
       }
       off += 8 + size + (size & 1) // RIFF chunks are word-aligned
     }
@@ -680,28 +661,9 @@ object Multimodal {
   def wavUlaw(sampleRate: Int, channels: Int, samples: Array[Int],
               junkChunk: Boolean = false): Array[Byte] = {
     require(channels > 0 && samples.length % channels == 0)
-    val junk = if (junkChunk) Array[Byte]('L', 'I', 'S', 'T', 5, 0, 0, 0,
-      'I', 'N', 'F', 'O', 'x', 0)
-    else Array.empty[Byte]
-    val dataLen = samples.length
-    val b = java.nio.ByteBuffer.allocate(46 + junk.length + dataLen + (dataLen & 1))
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put("RIFF".getBytes("US-ASCII"))
-      .putInt(38 + junk.length + dataLen + (dataLen & 1))
-      .put("WAVE".getBytes("US-ASCII"))
-    b.put("fmt ".getBytes("US-ASCII")).putInt(18)
-      .putShort(7) // μ-law
-      .putShort(channels.toShort)
-      .putInt(sampleRate)
-      .putInt(sampleRate * channels) // byte rate: 1 byte/sample
-      .putShort(channels.toShort)    // block align
-      .putShort(8)                   // bits per sample
-      .putShort(0)                   // cbSize (G.711 carries none)
-    b.put(junk)
-    b.put("data".getBytes("US-ASCII")).putInt(dataLen)
-    samples.foreach(s => b.put(ulawEncode(s).toByte))
-    if ((dataLen & 1) == 1) b.put(0.toByte) // RIFF word alignment
-    b.array()
+    riffWave(waveFmt(7, channels, sampleRate, sampleRate * channels, channels, 8, 0),
+      if (junkChunk) WavJunk else Array.empty[Byte],
+      samples.map(v => ulawEncode(v).toByte))
   }
 
   /** IMA/DVI ADPCM step-size table (89 entries, IMA ADPCM reference). */
@@ -784,12 +746,12 @@ object Multimodal {
     var b = 0
     while (b < nBlocks) {
       val o = from + b * blockBytes
-      var pred = ((data(o) & 0xff) | ((data(o + 1) & 0xff) << 8)).toShort.toInt
-      var index = math.max(0, math.min(88, data(o + 2) & 0xff))
+      var pred = le16s(data, o)
+      var index = math.max(0, math.min(88, u8(data, o + 2)))
       out(b * spb) = pred
       var k = 1
       while (k < spb) {
-        val byte = data(o + 4 + (k - 1) / 2) & 0xff
+        val byte = u8(data, o + 4 + (k - 1) / 2)
         val n = if ((k & 1) == 1) byte & 0x0f else byte >> 4
         val (p2, i2) = imaStep(pred, index, n)
         pred = p2; index = i2
@@ -808,100 +770,10 @@ object Multimodal {
   def wavImaAdpcm(sampleRate: Int, samples: Array[Int], spb: Int = 65): Array[Byte] = {
     val payload = imaEncodeMono(samples, spb)
     val blockAlign = 4 + (spb - 1) / 2
-    val b = java.nio.ByteBuffer
-      .allocate(12 + 8 + 20 + 8 + 4 + 8 + payload.length + (payload.length & 1))
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put("RIFF".getBytes("US-ASCII"))
-      .putInt(4 + 8 + 20 + 8 + 4 + 8 + payload.length + (payload.length & 1))
-      .put("WAVE".getBytes("US-ASCII"))
-    b.put("fmt ".getBytes("US-ASCII")).putInt(20)
-      .putShort(0x11) // IMA ADPCM
-      .putShort(1)    // mono
-      .putInt(sampleRate)
-      .putInt((sampleRate.toLong * blockAlign / spb).toInt) // byte rate
-      .putShort(blockAlign.toShort)
-      .putShort(4)    // bits per sample
-      .putShort(2)    // cbSize
-      .putShort(spb.toShort)
-    b.put("fact".getBytes("US-ASCII")).putInt(4).putInt(samples.length)
-    b.put("data".getBytes("US-ASCII")).putInt(payload.length)
-    b.put(payload)
-    if ((payload.length & 1) == 1) b.put(0.toByte)
-    b.array()
-  }
-
-  /** [[wavSamples]] extended to the compressed formats: returns
-    * (sampleRate, channels, fmtTag, monoSamples) for PCM16 (tag 1),
-    * μ-law (tag 7, 8-bit, any channel count — same exact integer
-    * mixdown as PCM16) and IMA ADPCM (tag 0x11, mono). Same RIFF
-    * discipline as [[wavSamples]]: word-aligned chunk walk, fmt
-    * before data, overrun checks, None — never a throw — for
-    * anything else. */
-  def wavSamplesEx(b: Array[Byte]): Option[(Int, Int, Int, Array[Int])] = {
-    if (b.length < 44) return None
-    def tag(off: Int, s: String) =
-      s.indices.forall(i => b(off + i) == s(i).toByte)
-    if (!tag(0, "RIFF") || !tag(8, "WAVE")) return None
-    def leInt(off: Int): Int =
-      (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-        ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-    def leShort(off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-    var off = 12
-    // (fmtTag, channels, rate, samplesPerBlock)
-    var fmt: Option[(Int, Int, Int, Int)] = None
-    while (off + 8 <= b.length) {
-      val size = leInt(off + 4)
-      if (size < 0 || off + 8L + size > b.length) return None
-      if (tag(off, "fmt ")) {
-        if (size < 16) return None
-        val audioFormat = leShort(off + 8)
-        val channels = leShort(off + 10)
-        val rate = leInt(off + 12)
-        val bits = leShort(off + 22)
-        if (channels < 1 || channels > 8 || rate <= 0) return None
-        audioFormat match {
-          case 1 if bits == 16 => fmt = Some((1, channels, rate, 0))
-          case 7 if bits == 8 => fmt = Some((7, channels, rate, 0))
-          case 0x11 if bits == 4 && channels == 1 =>
-            if (size < 20) return None
-            val spb = leShort(off + 26)
-            if (spb < 3 || spb % 2 == 0) return None
-            fmt = Some((0x11, 1, rate, spb))
-          case _ => return None
-        }
-      } else if (tag(off, "data")) {
-        if (fmt.isEmpty) return None
-        val (t, channels, rate, spb) = fmt.get
-        val mono: Array[Int] = t match {
-          case 1 =>
-            val frames = size / (2 * channels)
-            Array.tabulate(frames) { f =>
-              var sum = 0; var c = 0
-              while (c < channels) {
-                val o = off + 8 + (f * channels + c) * 2
-                sum += leShort(o).toShort.toInt; c += 1
-              }
-              sum / channels
-            }
-          case 7 =>
-            val frames = size / channels
-            Array.tabulate(frames) { f =>
-              var sum = 0; var c = 0
-              while (c < channels) {
-                sum += ulawDecode(b(off + 8 + f * channels + c) & 0xff); c += 1
-              }
-              sum / channels
-            }
-          case _ =>
-            val blockBytes = 4 + (spb - 1) / 2
-            if (size % blockBytes != 0) return None
-            imaDecodeMono(b, off + 8, size, spb)
-        }
-        return Some((rate, channels, t, mono))
-      }
-      off += 8 + size + (size & 1)
-    }
-    None
+    val fact = new Writer(12)
+    fact.tag("fact"); fact.le32(4); fact.le32(samples.length)
+    riffWave(waveFmt(0x11, 1, sampleRate, (sampleRate.toLong * blockAlign / spb).toInt,
+      blockAlign, 4, 2, spb), fact.toByteArray, payload)
   }
 
   // ---------------------------------------------------------------
@@ -990,37 +862,36 @@ object Multimodal {
   def gifImage(w: Int, h: Int, idx: (Int, Int) => Int,
                interlaced: Boolean = false, comment: Boolean = false): Array[Byte] = {
     require(w > 0 && h > 0 && w < 65536 && h < 65536)
-    val out = new java.io.ByteArrayOutputStream(64 + 768 + w * h / 2)
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-    out.write("GIF89a".getBytes("US-ASCII"))
-    le16(w); le16(h)
-    out.write(0xF7) // GCT present, 8-bit color resolution, 256 entries
-    out.write(0)    // background color index
-    out.write(0)    // no aspect ratio
-    for (v <- 0 until 256) { out.write(v); out.write(v); out.write(v) } // gray GCT
+    val out = new Writer(64 + 768 + w * h / 2)
+    out.tag("GIF89a")
+    out.le16(w); out.le16(h)
+    out.u8(0xF7) // GCT present, 8-bit color resolution, 256 entries
+    out.u8(0)    // background color index
+    out.u8(0)    // no aspect ratio
+    for (v <- 0 until 256) { out.u8(v); out.u8(v); out.u8(v) } // gray GCT
     if (comment) {
-      out.write(0x21); out.write(0xFE) // comment extension
-      val msg = "graft synthetic fixture".getBytes("US-ASCII")
-      out.write(msg.length); out.write(msg)
-      out.write(0) // block terminator
+      out.u8(0x21); out.u8(0xFE) // comment extension
+      val msg = "graft synthetic fixture"
+      out.u8(msg.length); out.tag(msg)
+      out.u8(0) // block terminator
     }
-    out.write(0x2C) // image descriptor
-    le16(0); le16(0); le16(w); le16(h)
-    out.write(if (interlaced) 0x40 else 0x00) // no LCT; interlace bit
+    out.u8(0x2C) // image descriptor
+    out.le16(0); out.le16(0); out.le16(w); out.le16(h)
+    out.u8(if (interlaced) 0x40 else 0x00) // no LCT; interlace bit
     val rows = if (interlaced) gifInterlaceRows(h) else Array.range(0, h)
     val indices = new Array[Byte](w * h)
     var n = 0
     for (y <- rows; x <- 0 until w) { indices(n) = (idx(x, y) & 0xff).toByte; n += 1 }
-    out.write(8) // LZW minimum code size
+    out.u8(8) // LZW minimum code size
     val lzw = gifLzwEncode(indices)
     var off = 0
     while (off < lzw.length) {
       val len = math.min(255, lzw.length - off)
-      out.write(len); out.write(lzw, off, len)
+      out.u8(len); out.bytes(lzw, off, len)
       off += len
     }
-    out.write(0)    // data terminator
-    out.write(0x3B) // trailer
+    out.u8(0)    // data terminator
+    out.u8(0x3B) // trailer
     out.toByteArray
   }
 
@@ -1039,16 +910,12 @@ object Multimodal {
     if (b.length < 13) return None
     val sig = new String(b, 0, 6, "US-ASCII")
     if (sig != "GIF87a" && sig != "GIF89a") return None
-    def le16(off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-    val screenW = le16(6); val screenH = le16(8)
+    val screenW = le16u(b, 6); val screenH = le16u(b, 8)
     val packed = b(10) & 0xff
     var off = 13
     def colorTable(at: Int, size: Int): Option[Array[Int]] = {
       if (at + 3 * size > b.length) return None
-      Some(Array.tabulate(size) { i =>
-        ((b(at + 3 * i) & 0xff) << 16) | ((b(at + 3 * i + 1) & 0xff) << 8) |
-          (b(at + 3 * i + 2) & 0xff)
-      })
+      Some(Array.tabulate(size)(i => be24u(b, at + 3 * i)))
     }
     val global: Option[Array[Int]] = if ((packed & 0x80) != 0) {
       val size = 2 << (packed & 7)
@@ -1072,8 +939,8 @@ object Multimodal {
           }) ()
         case 0x2C =>
           if (off + 10 > b.length) return None
-          val left = le16(off + 1); val top = le16(off + 3)
-          val w = le16(off + 5); val h = le16(off + 7)
+          val left = le16u(b, off + 1); val top = le16u(b, off + 3)
+          val w = le16u(b, off + 5); val h = le16u(b, off + 7)
           val flags = b(off + 9) & 0xff
           off += 10
           val palette: Array[Int] =
@@ -1117,8 +984,7 @@ object Multimodal {
               val pi = indices(n) & 0xff
               if (pi >= palette.length) return None
               val c = palette(pi)
-              out(y * w + x) = (299L * ((c >>> 16) & 0xff) +
-                587L * ((c >>> 8) & 0xff) + 114L * (c & 0xff)) / 1000L
+              out(y * w + x) = luma((c >>> 16) & 0xff, (c >>> 8) & 0xff, c & 0xff)
               n += 1; x += 1
             }
             r += 1
@@ -1188,206 +1054,29 @@ object Multimodal {
 
   // ---------------------------------------------------------------
   // AVI: real pure-JVM VIDEO container decode — RIFF LISTs
-  // (hdrl/strl/movi) wrapping raw 24-bpp DIB frames. Reuses WAV's
-  // word-aligned chunk-walk discipline and BMP's raster rules
-  // (bottom-up BGR rows, 4-byte stride padding); uncompressed 'DIB '
-  // video needs no codec, so header+frame parse IS the full decode.
+  // (hdrl/strl/movi) wrapping raw 24-bpp DIB frames or Motion-JPEG.
+  // Reuses WAV's word-aligned chunk-walk discipline and BMP's raster
+  // rules (bottom-up BGR rows, 4-byte stride padding); uncompressed
+  // 'DIB ' video needs no codec, so header+frame parse IS the full
+  // decode.
   // ---------------------------------------------------------------
+
+  /** 'MJPG' as biCompression stores it: the fourcc read little-endian. */
+  private val MjpgFourcc: Int = le32s("MJPG".getBytes("US-ASCII"), 0)
 
   /** Real RIFF/AVI file with one uncompressed 24-bpp 'vids' stream:
     * LIST hdrl (avih + LIST strl (strh 'vids'/'DIB ' + strf
     * BITMAPINFOHEADER)), an optional odd-length JUNK chunk between
     * hdrl and movi (word-aligned walking, not offset arithmetic),
-    * LIST movi with one '00db' raw-DIB chunk per frame (bottom-up BGR
-    * rows padded to 4 bytes — the BMP pixel-array layout), and a
-    * trailing idx1 index. `pix(f, x, y)` is packed 0xRRGGBB with row 0
-    * = TOP row. Deterministic: no timestamps. */
+    * LIST movi with one '00db' raw-DIB chunk per frame (the BMP
+    * pixel-array layout), and a trailing idx1 index. `pix(f, x, y)` is
+    * packed 0xRRGGBB with row 0 = TOP row. Deterministic: no
+    * timestamps. */
   def aviRawVideo(w: Int, h: Int, frames: Int, pix: (Int, Int, Int) => Int,
                   junk: Boolean = false): Array[Byte] = {
     require(w > 0 && h > 0 && frames > 0)
-    val rowBytes = (w * 3 + 3) & ~3
-    val frameBytes = rowBytes * h
-    val out = new java.io.ByteArrayOutputStream(512 + frames * (8 + frameBytes))
-    def tag(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-    def le32(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >>> 8) & 0xff)
-      out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff)
-    }
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-    // sizes, computed inside-out
-    val strhSize = 56; val strfSize = 40
-    val strlSize = 4 + (8 + strhSize) + (8 + strfSize)
-    val avihSize = 56
-    val hdrlSize = 4 + (8 + avihSize) + (8 + strlSize)
-    val junkPayload = if (junk) 7 else 0 // odd on purpose
-    val moviSize = 4 + frames * (8 + frameBytes)
-    val idx1Size = frames * 16
-    val riffSize = 4 + (8 + hdrlSize) +
-      (if (junk) 8 + junkPayload + 1 else 0) + (8 + moviSize) + (8 + idx1Size)
-    tag("RIFF"); le32(riffSize); tag("AVI ")
-    tag("LIST"); le32(hdrlSize); tag("hdrl")
-    tag("avih"); le32(avihSize)
-    le32(40000)            // dwMicroSecPerFrame (25 fps)
-    le32(frameBytes * 25)  // dwMaxBytesPerSec
-    le32(0); le32(0x10)    // padding, AVIF_HASINDEX
-    le32(frames); le32(0)  // dwTotalFrames, dwInitialFrames
-    le32(1)                // dwStreams
-    le32(frameBytes)       // dwSuggestedBufferSize
-    le32(w); le32(h)
-    le32(0); le32(0); le32(0); le32(0) // reserved
-    tag("LIST"); le32(strlSize); tag("strl")
-    tag("strh"); le32(strhSize)
-    tag("vids"); tag("DIB ")
-    le32(0); le16(0); le16(0) // flags, priority, language
-    le32(0)                   // initial frames
-    le32(1); le32(25)         // scale, rate (25 fps)
-    le32(0); le32(frames)     // start, length
-    le32(frameBytes); le32(-1) // bufSize, quality
-    le32(0)                   // sample size
-    le16(0); le16(0); le16(w); le16(h) // rcFrame
-    tag("strf"); le32(strfSize)
-    le32(40); le32(w); le32(h)
-    le16(1); le16(24)          // planes, bpp
-    le32(0)                    // BI_RGB
-    le32(frameBytes)
-    le32(0); le32(0); le32(0); le32(0)
-    if (junk) {
-      tag("JUNK"); le32(junkPayload)
-      out.write(Array.fill[Byte](junkPayload)('j'), 0, junkPayload)
-      out.write(0) // word-align pad
-    }
-    tag("LIST"); le32(moviSize); tag("movi")
-    for (f <- 0 until frames) {
-      tag("00db"); le32(frameBytes)
-      val fr = new Array[Byte](frameBytes)
-      for (y <- 0 until h; x <- 0 until w) {
-        val c = pix(f, x, y)
-        val off = (h - 1 - y) * rowBytes + x * 3 // bottom-up, BGR
-        fr(off) = (c & 0xff).toByte
-        fr(off + 1) = ((c >>> 8) & 0xff).toByte
-        fr(off + 2) = ((c >>> 16) & 0xff).toByte
-      }
-      out.write(fr, 0, frameBytes)
-    }
-    tag("idx1"); le32(idx1Size)
-    var moviOff = 4 // offsets within movi LIST, from its 'movi' tag
-    for (_ <- 0 until frames) {
-      tag("00db"); le32(0x10) // AVIIF_KEYFRAME
-      le32(moviOff); le32(frameBytes)
-      moviOff += 8 + frameBytes
-    }
-    out.toByteArray
-  }
-
-  /** REAL pure-JVM AVI decode: walks the RIFF tree (word-aligned),
-    * parses avih for dimensions, verifies the first stream is
-    * uncompressed 24-bpp 'vids' via strf, then decodes every raw-DIB
-    * '00db' movi chunk into per-pixel BT.601 luminance (top-down
-    * row-major — the same exact rule as the BMP/PNG/GIF decoders).
-    * Returns (w, h, one luma array per frame). None — never a throw —
-    * for a bad signature, compressed or non-24-bpp streams, missing
-    * hdrl/avih/strf/movi, a frame chunk of the wrong size, or any
-    * truncation: mixed corpora degrade to byte-level features. */
-  /** Parsed AVI header + frame index, shared by the raw-DIB and MJPEG
-    * decoders: dimensions from avih; the VIDEO stream's bpp and
-    * biCompression from the strf that follows the first 'vids' strh
-    * (latched once — a later stream's strf, e.g. an audio
-    * WAVEFORMATEX, must not overwrite the video format:
-    * last-writer-wins rejected valid video+audio files); and the
-    * (offset, length) of THAT stream's frame chunks — the chunk id's
-    * two-digit stream number must match the vids stream's strl
-    * position (an audio-first file numbers its video chunks '01xx',
-    * not '00xx'), with `frameSuffix` picking raw ("db") vs compressed
-    * ("dc") payloads. None for a bad signature, tree overrun, missing
-    * header, zero frames, or a >64M-pixel frame. */
-  private final case class AviStreamInfo(w: Int, h: Int, vidsBpp: Int,
-                                         vidsCompression: Int,
-                                         frames: Seq[(Int, Int)])
-
-  private def aviWalk(b: Array[Byte], frameSuffix: String): Option[AviStreamInfo] = {
-    if (b.length < 12) return None
-    def tagAt(off: Int, s: String) =
-      off + s.length <= b.length && s.indices.forall(i => b(off + i) == s(i).toByte)
-    def le32(off: Int): Int =
-      (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-        ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-    def le16(off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-    def digitAt(off: Int): Int = {
-      val c = b(off) & 0xff
-      if (c >= '0' && c <= '9') c - '0' else -1
-    }
-    if (!tagAt(0, "RIFF") || !tagAt(8, "AVI ")) return None
-    var w = -1; var h = -1; var bpp = -1; var compression = -1
-    var pendingVids = false // the next strf belongs to the 'vids' stream
-    var streamIdx = -1      // strl position of the stream being parsed
-    var vidsIdx = -1        // strl position of the FIRST 'vids' stream
-    // (streamNo, off, len) of every NN<suffix> chunk; filtered to the
-    // vids stream's number after the walk
-    val frames = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
-    // walk a chunk range [from, to); recurse into LISTs
-    def walk(from: Int, to: Int): Boolean = {
-      var off = from
-      while (off + 8 <= to) {
-        val size = le32(off + 4)
-        if (size < 0 || off + 8L + size > to) return false // overrun
-        if (tagAt(off, "LIST")) {
-          if (size < 4) return false
-          if (!walk(off + 12, off + 8 + size)) return false
-        } else if (tagAt(off, "avih")) {
-          if (size < 40) return false
-          w = le32(off + 8 + 32); h = le32(off + 8 + 36)
-        } else if (tagAt(off, "strh")) {
-          if (size < 4) return false
-          streamIdx += 1
-          pendingVids = tagAt(off + 8, "vids") && vidsIdx < 0
-          if (pendingVids) vidsIdx = streamIdx
-        } else if (tagAt(off, "strf")) {
-          if (pendingVids) {
-            if (size < 20) return false
-            bpp = le16(off + 8 + 14); compression = le32(off + 8 + 16)
-            pendingVids = false
-          }
-        } else if (digitAt(off) >= 0 && digitAt(off + 1) >= 0 &&
-            tagAt(off + 2, frameSuffix)) {
-          frames += ((digitAt(off) * 10 + digitAt(off + 1), off + 8, size))
-        }
-        off += 8 + size + (size & 1) // RIFF chunks are word-aligned
-      }
-      true
-    }
-    if (!walk(12, math.min(b.length, 8L + le32(4)).toInt)) return None
-    val vidsFrames = frames.collect { case (s, o, l) if s == vidsIdx => (o, l) }
-    if (w <= 0 || h <= 0 || vidsIdx < 0 || vidsFrames.isEmpty) return None
-    if (w.toLong * h > (1L << 26)) return None // 64M-pixel frame bound
-    Some(AviStreamInfo(w, h, bpp, compression, vidsFrames.toSeq))
-  }
-
-  def aviFrameLuma(b: Array[Byte]): Option[(Int, Int, Array[Array[Long]])] = {
-    val info = aviWalk(b, "db") match {
-      case Some(i) if i.vidsBpp == 24 && i.vidsCompression == 0 => i
-      case _ => return None
-    }
-    val w = info.w; val h = info.h
-    val frames = info.frames
-    val rowBytes = (w * 3 + 3) & ~3
-    if (frames.exists(_._2 != rowBytes * h)) return None // wrong frame size
-    val out = frames.map { case (fOff, _) =>
-      val lum = new Array[Long](w * h)
-      var y = 0
-      while (y < h) {
-        val rowOff = fOff + (h - 1 - y) * rowBytes // bottom-up rows
-        var x = 0
-        while (x < w) {
-          val o = rowOff + x * 3 // BGR order
-          lum(y * w + x) = (299L * (b(o + 2) & 0xffL) +
-            587L * (b(o + 1) & 0xffL) + 114L * (b(o) & 0xffL)) / 1000L
-          x += 1
-        }
-        y += 1
-      }
-      lum
-    }.toArray
-    Some((w, h, out))
+    aviVideo(w, h, (0 until frames).map(f => bgrRaster(w, h, pix(f, _, _))),
+      "DIB ", compression = 0, "db", junk, audioStream = false, audioFirst = false)
   }
 
   /** Real RIFF/AVI file carrying a Motion-JPEG ('MJPG') video stream —
@@ -1396,24 +1085,26 @@ object Multimodal {
     * strh/strf declare MJPG compression and each frame is a COMPLETE
     * baseline JPEG in a '00dc' (compressed-data) chunk. JPEG sizes are
     * arbitrary, so odd-length chunks genuinely exercise RIFF word
-    * alignment; idx1 carries the per-frame sizes. */
+    * alignment; idx1 carries the per-frame sizes. `audioStream` adds a
+    * PCM audio stream after the video one, `audioFirst` before it (the
+    * video chunks are then '01dc': a decoder must follow the strl
+    * index). */
   def aviMjpegVideo(w: Int, h: Int, frames: Seq[Array[Byte]],
                     junk: Boolean = false,
                     audioStream: Boolean = false,
                     audioFirst: Boolean = false): Array[Byte] = {
     require(w > 0 && h > 0 && frames.nonEmpty)
-    // audio declared BEFORE video numbers the video stream 1: its
-    // movi chunks are '01dc' — the decoder must follow the strl index
+    aviVideo(w, h, frames, "MJPG", MjpgFourcc, "dc", junk, audioStream, audioFirst)
+  }
+
+  private def aviVideo(w: Int, h: Int, frames: Seq[Array[Byte]], handler: String,
+                       compression: Int, suffix: String, junk: Boolean,
+                       audioStream: Boolean, audioFirst: Boolean): Array[Byte] = {
     val hasAudio = audioStream || audioFirst
-    val vTag = if (audioFirst) "01dc" else "00dc"
+    val vTag = (if (audioFirst) "01" else "00") + suffix
     val maxLen = frames.map(_.length).max
-    val out = new java.io.ByteArrayOutputStream(512 + frames.map(_.length + 9).sum)
-    def tag(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-    def le32(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >>> 8) & 0xff)
-      out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff)
-    }
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
+    val out = new Writer(512 + frames.map(_.length + 9).sum)
+    import out.{le16, le32, tag}
     val strhSize = 56; val strfSize = 40
     val strlSize = 4 + (8 + strhSize) + (8 + strfSize)
     // optional second stream (PCM audio, 16-byte WAVEFORMAT strf) —
@@ -1442,7 +1133,7 @@ object Multimodal {
     def videoStrl(): Unit = {
       tag("LIST"); le32(strlSize); tag("strl")
       tag("strh"); le32(strhSize)
-      tag("vids"); tag("MJPG")
+      tag("vids"); tag(handler)
       le32(0); le16(0); le16(0) // flags, priority, language
       le32(0)                   // initial frames
       le32(1); le32(25)         // scale, rate (25 fps)
@@ -1453,7 +1144,7 @@ object Multimodal {
       tag("strf"); le32(strfSize)
       le32(40); le32(w); le32(h)
       le16(1); le16(24)          // planes, bpp
-      tag("MJPG")                // biCompression
+      le32(compression)          // biCompression
       le32(maxLen)               // biSizeImage (upper bound, compressed)
       le32(0); le32(0); le32(0); le32(0)
     }
@@ -1477,23 +1168,111 @@ object Multimodal {
     else { videoStrl(); if (hasAudio) audioStrl() }
     if (junk) {
       tag("JUNK"); le32(junkPayload)
-      out.write(Array.fill[Byte](junkPayload)('j'), 0, junkPayload)
-      out.write(0) // word-align pad
+      out.bytes(Array.fill[Byte](junkPayload)('j'))
+      out.u8(0) // word-align pad
     }
     tag("LIST"); le32(moviSize); tag("movi")
     frames.foreach { f =>
       tag(vTag); le32(f.length)
-      out.write(f, 0, f.length)
-      if ((f.length & 1) == 1) out.write(0) // word-align pad
+      out.bytes(f)
+      out.zeros(f.length & 1) // word-align pad
     }
     tag("idx1"); le32(idx1Size)
-    var moviOff = 4
+    var moviOff = 4 // offsets within movi LIST, from its 'movi' tag
     frames.foreach { f =>
       tag(vTag); le32(0x10) // AVIIF_KEYFRAME
       le32(moviOff); le32(f.length)
       moviOff += 8 + f.length + (f.length & 1)
     }
     out.toByteArray
+  }
+
+  /** Parsed AVI header + frame index, shared by the raw-DIB and MJPEG
+    * decoders: dimensions from avih; the VIDEO stream's bpp and
+    * biCompression from the strf that follows the first 'vids' strh
+    * (latched once — a later stream's strf, e.g. an audio
+    * WAVEFORMATEX, must not overwrite the video format:
+    * last-writer-wins rejected valid video+audio files); and the
+    * (offset, length) of THAT stream's frame chunks — the chunk id's
+    * two-digit stream number must match the vids stream's strl
+    * position (an audio-first file numbers its video chunks '01xx',
+    * not '00xx'), with `frameSuffix` picking raw ("db") vs compressed
+    * ("dc") payloads. None for a bad signature, tree overrun, missing
+    * header, zero frames, or a >64M-pixel frame. */
+  private final case class AviStreamInfo(w: Int, h: Int, vidsBpp: Int,
+                                         vidsCompression: Int,
+                                         frames: Seq[(Int, Int)])
+
+  private def aviWalk(b: Array[Byte], frameSuffix: String): Option[AviStreamInfo] = {
+    if (b.length < 12) return None
+    def digitAt(off: Int): Int = {
+      val c = u8(b, off)
+      if (c >= '0' && c <= '9') c - '0' else -1
+    }
+    if (!tagAt(b, 0, "RIFF") || !tagAt(b, 8, "AVI ")) return None
+    var w = -1; var h = -1; var bpp = -1; var compression = -1
+    var pendingVids = false // the next strf belongs to the 'vids' stream
+    var streamIdx = -1      // strl position of the stream being parsed
+    var vidsIdx = -1        // strl position of the FIRST 'vids' stream
+    // (streamNo, off, len) of every NN<suffix> chunk; filtered to the
+    // vids stream's number after the walk
+    val frames = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
+    // walk a chunk range [from, to); recurse into LISTs
+    def walk(from: Int, to: Int): Boolean = {
+      var off = from
+      while (off + 8 <= to) {
+        val size = le32s(b, off + 4)
+        if (size < 0 || off + 8L + size > to) return false // overrun
+        if (tagAt(b, off, "LIST")) {
+          if (size < 4) return false
+          if (!walk(off + 12, off + 8 + size)) return false
+        } else if (tagAt(b, off, "avih")) {
+          if (size < 40) return false
+          w = le32s(b, off + 8 + 32); h = le32s(b, off + 8 + 36)
+        } else if (tagAt(b, off, "strh")) {
+          if (size < 4) return false
+          streamIdx += 1
+          pendingVids = tagAt(b, off + 8, "vids") && vidsIdx < 0
+          if (pendingVids) vidsIdx = streamIdx
+        } else if (tagAt(b, off, "strf")) {
+          if (pendingVids) {
+            if (size < 20) return false
+            bpp = le16u(b, off + 8 + 14); compression = le32s(b, off + 8 + 16)
+            pendingVids = false
+          }
+        } else if (digitAt(off) >= 0 && digitAt(off + 1) >= 0 &&
+            tagAt(b, off + 2, frameSuffix)) {
+          frames += ((digitAt(off) * 10 + digitAt(off + 1), off + 8, size))
+        }
+        off += 8 + size + (size & 1) // RIFF chunks are word-aligned
+      }
+      true
+    }
+    if (!walk(12, math.min(b.length, 8L + le32s(b, 4)).toInt)) return None
+    val vidsFrames = frames.collect { case (s, o, l) if s == vidsIdx => (o, l) }
+    if (w <= 0 || h <= 0 || vidsIdx < 0 || vidsFrames.isEmpty) return None
+    if (w.toLong * h > (1L << 26)) return None // 64M-pixel frame bound
+    Some(AviStreamInfo(w, h, bpp, compression, vidsFrames.toSeq))
+  }
+
+  /** REAL pure-JVM AVI decode: walks the RIFF tree (word-aligned),
+    * parses avih for dimensions, verifies the first stream is
+    * uncompressed 24-bpp 'vids' via strf, then decodes every raw-DIB
+    * '00db' movi chunk into per-pixel [[luma]] (top-down row-major).
+    * Returns (w, h, one luma array per frame). None — never a throw —
+    * for a bad signature, compressed or non-24-bpp streams, missing
+    * hdrl/avih/strf/movi, a frame chunk of the wrong size, or any
+    * truncation: mixed corpora degrade to byte-level features. */
+  def aviFrameLuma(b: Array[Byte]): Option[(Int, Int, Array[Array[Long]])] = {
+    val info = aviWalk(b, "db") match {
+      case Some(i) if i.vidsBpp == 24 && i.vidsCompression == 0 => i
+      case _ => return None
+    }
+    val w = info.w; val h = info.h
+    val rowBytes = (w * 3 + 3) & ~3
+    if (info.frames.exists(_._2 != rowBytes * h)) return None // wrong frame size
+    Some((w, h, info.frames.map { case (fOff, _) =>
+      bgrLuma(b, fOff, w, h, 3, topDown = false) }.toArray))
   }
 
   /** MJPEG AVI decode, end to end ours: the same word-aligned RIFF
@@ -1505,27 +1284,30 @@ object Multimodal {
     * throw — for a bad tree, a non-MJPG stream, an undecodable frame,
     * or a header/frame dimension mismatch. */
   def aviMjpegFrameLuma(b: Array[Byte]): Option[(Int, Int, Array[Array[Long]])] = {
-    val MjpgFourcc = // 'MJPG' little-endian, as biCompression stores it
-      ('M'.toInt) | ('J'.toInt << 8) | ('P'.toInt << 16) | ('G'.toInt << 24)
     val info = aviWalk(b, "dc") match {
       case Some(i) if i.vidsCompression == MjpgFourcc => i
       case _ => return None
     }
-    val w = info.w; val h = info.h
-    val frames = info.frames
-    val out = new Array[Array[Long]](frames.length)
+    jpegFrames(b, info.frames.map { case (o, l) => (o.toLong, l) }, info.w, info.h)
+      .map(f => (info.w, info.h, f))
+  }
+
+  /** Decodes each (offset, length) sample of `b` as a JPEG whose
+    * dimensions must be `w`×`h`; None if any frame fails. */
+  private def jpegFrames(b: Array[Byte], samples: Seq[(Long, Int)], w: Int,
+                         h: Int): Option[Array[Array[Long]]] = {
+    val out = new Array[Array[Long]](samples.length)
     var i = 0
-    while (i < frames.length) {
-      val (fOff, fLen) = frames(i)
-      val lum = Jpeg.luminanceWithDims(
-        java.util.Arrays.copyOfRange(b, fOff, fOff + fLen)) match {
+    while (i < samples.length) {
+      val (off, len) = samples(i)
+      out(i) = Jpeg.luminanceWithDims(
+        java.util.Arrays.copyOfRange(b, off.toInt, off.toInt + len)) match {
         case Some((fw, fh, l)) if fw == w && fh == h => l
         case _ => return None // undecodable frame or dims disagree with header
       }
-      out(i) = lum
       i += 1
     }
-    Some((w, h, out))
+    Some(out)
   }
 
   // ── ISO-BMFF (MP4/MOV) ────────────────────────────────────────────
@@ -1568,28 +1350,8 @@ object Multimodal {
                     co64: Boolean = false,
                     audioTrack: Boolean = false): Array[Byte] = {
     require(w > 0 && h > 0 && frames.nonEmpty && samplesPerChunk > 0)
-    var out = new java.io.ByteArrayOutputStream(1024 + frames.map(_.length).sum)
-    def be32(v: Long): Unit = {
-      out.write(((v >>> 24) & 0xff).toInt); out.write(((v >>> 16) & 0xff).toInt)
-      out.write(((v >>> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
-    }
-    def be64(v: Long): Unit = { be32(v >>> 32); be32(v & 0xffffffffL) }
-    def be16(v: Int): Unit = { out.write((v >>> 8) & 0xff); out.write(v & 0xff) }
-    def tag(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-    def box(typ: String)(body: => Unit): Unit = {
-      // render the body into a FRESH stream, then emit size-prefixed —
-      // each byte is copied once per nesting level, never once per
-      // SIBLING box (re-copying the accumulated prefix per box made
-      // corpus-scale synthesis O(file × boxes); measured 2–3× on the
-      // sf10 probes before this)
-      val saved = out
-      out = new java.io.ByteArrayOutputStream()
-      body
-      val payload = out
-      out = saved
-      be32(8L + payload.size()); tag(typ)
-      payload.writeTo(out)
-    }
+    val out = new Writer(1024 + frames.map(_.length).sum)
+    import out.{be16, be32, box, fullBox, tag}
     val n = frames.length
     // audio: tiny fixed-size PCM chunks interleaved after video chunks
     val audioChunks: Seq[Array[Byte]] =
@@ -1599,7 +1361,7 @@ object Multimodal {
     val videoChunks = frames.grouped(samplesPerChunk).toSeq
     box("ftyp") { tag("isom"); be32(0x200); tag("isom"); tag("mp41") }
     // mdat offset = current position + 8 (its own header)
-    val mdatStart = out.size() + 8
+    val mdatStart = out.size + 8
     val vChunkOffs = new Array[Long](videoChunks.length)
     val aChunkOffs = new Array[Long](audioChunks.length)
     locally {
@@ -1612,21 +1374,15 @@ object Multimodal {
       }
     }
     box("mdat") {
-      videoChunks.foreach(_.foreach(f => out.write(f, 0, f.length)))
-      audioChunks.foreach(c => out.write(c, 0, c.length))
+      videoChunks.foreach(_.foreach(f => out.bytes(f)))
+      audioChunks.foreach(c => out.bytes(c))
     }
     val vDuration = if (n == 1) 2L * sampleDelta
       else (n - 1).toLong * sampleDelta + 2L * sampleDelta
-    def fullBox(typ: String, ver: Int = 0, flags: Int = 0)(body: => Unit): Unit =
-      box(typ) { be32(((ver.toLong << 24) | flags)); body }
-    def matrix(): Unit = {
-      be32(0x10000); be32(0); be32(0); be32(0); be32(0x10000); be32(0)
-      be32(0); be32(0); be32(0x40000000L)
-    }
     def stblBox(chunkOffs: Array[Long], sizes: Array[Int], spc: Int,
-                delta: Int, lastDouble: Boolean, entry: () => Unit): Unit =
+                delta: Int, lastDouble: Boolean, entry: => Unit): Unit =
       box("stbl") {
-        fullBox("stsd") { be32(1); entry() }
+        fullBox("stsd") { be32(1); entry }
         fullBox("stts") {
           val k = sizes.length
           if (lastDouble && k > 1) {
@@ -1648,60 +1404,82 @@ object Multimodal {
           } else { be32(1); be32(1); be32(spc); be32(1) }
         }
         fullBox("stsz") { be32(0); be32(sizes.length.toLong); sizes.foreach(s => be32(s.toLong)) }
-        if (co64) fullBox("co64") { be32(chunkOffs.length.toLong); chunkOffs.foreach(be64) }
+        if (co64) fullBox("co64") { be32(chunkOffs.length.toLong); chunkOffs.foreach(out.be64) }
         else fullBox("stco") { be32(chunkOffs.length.toLong); chunkOffs.foreach(o => be32(o)) }
       }
-    def trakBox(tid: Long, handler: String, dur: Long, mediaTs: Long,
-                mediaDur: Long, stbl: () => Unit, isVideo: Boolean): Unit =
-      box("trak") {
-        fullBox("tkhd", flags = 7) {
-          be32(0); be32(0); be32(tid); be32(0); be32(dur)
-          be32(0); be32(0); be16(0); be16(0); be16(if (isVideo) 0 else 0x100); be16(0)
-          matrix()
-          be32(if (isVideo) w.toLong << 16 else 0)
-          be32(if (isVideo) h.toLong << 16 else 0)
-        }
-        box("mdia") {
-          fullBox("mdhd") { be32(0); be32(0); be32(mediaTs); be32(mediaDur); be16(0x55c4); be16(0) }
-          fullBox("hdlr") { be32(0); tag(handler); be32(0); be32(0); be32(0); tag(if (isVideo) "Video" else "Sound"); out.write(0) }
-          box("minf") {
-            if (isVideo) fullBox("vmhd", flags = 1) { be16(0); be16(0); be16(0); be16(0) }
-            else fullBox("smhd") { be16(0); be16(0) }
-            box("dinf") { fullBox("dref") { be32(1); fullBox("url ", flags = 1) {} } }
-            stbl()
-          }
-        }
-      }
     box("moov") {
-      fullBox("mvhd") {
-        be32(0); be32(0)       // creation, modification
-        be32(1000); be32(vDuration * 1000 / timescale) // movie timescale ms
-        be32(0x10000); be16(0x100); be16(0); be32(0); be32(0)
-        matrix()
-        (0 until 6).foreach(_ => be32(0))
-        be32(if (audioTrack) 3 else 2) // next track id
+      mp4Mvhd(out, vDuration * 1000 / timescale, nextTrack = if (audioTrack) 3 else 2)
+      mp4Trak(out, 1, "vide", vDuration * 1000 / timescale, timescale, vDuration, w, h) {
+        stblBox(vChunkOffs, frames.map(_.length).toArray, samplesPerChunk,
+          sampleDelta, lastDouble = true, mp4JpegEntry(out, w, h))
       }
-      trakBox(1, "vide", vDuration * 1000 / timescale, timescale, vDuration,
-        () => stblBox(vChunkOffs, frames.map(_.length).toArray, samplesPerChunk,
-          sampleDelta, lastDouble = true, () => box("jpeg") {
-            (0 until 6).foreach(_ => out.write(0)); be16(1) // reserved, dri
-            be16(0); be16(0); (0 until 3).foreach(_ => be32(0))
-            be16(w); be16(h)
-            be32(0x480000); be32(0x480000); be32(0); be16(1)
-            out.write(new Array[Byte](32), 0, 32) // compressorname
-            be16(24); be16(0xffff)
-          }), isVideo = true)
       if (audioTrack)
-        trakBox(2, "soun", 0, 8000, audioChunks.map(_.length.toLong).sum,
-          () => stblBox(aChunkOffs, audioChunks.map(_.length).toArray, 1,
-            1, lastDouble = false, () => box("twos") {
-              (0 until 6).foreach(_ => out.write(0)); be16(1)
+        mp4Trak(out, 2, "soun", 0, 8000, audioChunks.map(_.length.toLong).sum, 0, 0) {
+          stblBox(aChunkOffs, audioChunks.map(_.length).toArray, 1,
+            1, lastDouble = false, box("twos") {
+              out.zeros(6); be16(1)
               be16(0); be16(0); be32(0)
               be16(1); be16(8); be16(0); be16(0)
               be32(8000L << 16)
-            }), isVideo = false)
+            })
+        }
     }
     out.toByteArray
+  }
+
+  /** mvhd in a 1000-tick movie timescale. */
+  private def mp4Mvhd(out: Writer, durationMs: Long, nextTrack: Int): Unit = {
+    import out._
+    fullBox("mvhd") {
+      be32(0); be32(0)       // creation, modification
+      be32(1000); be32(durationMs)
+      be32(0x10000); be16(0x100); be16(0); be32(0); be32(0)
+      matrix()
+      (0 until 6).foreach(_ => be32(0))
+      be32(nextTrack.toLong)
+    }
+  }
+
+  /** A trak with its tkhd, mdia, mdhd, hdlr and minf; a 'vide' track
+    * gets a vmhd and its `w`×`h` in tkhd, any other handler an smhd. */
+  private def mp4Trak(out: Writer, tid: Long, handler: String, dur: Long,
+                      mediaTs: Long, mediaDur: Long, w: Int, h: Int)(stbl: => Unit): Unit = {
+    import out._
+    val isVideo = handler == "vide"
+    box("trak") {
+      fullBox("tkhd", flags = 7) {
+        be32(0); be32(0); be32(tid); be32(0); be32(dur)
+        be32(0); be32(0); be16(0); be16(0); be16(if (isVideo) 0 else 0x100); be16(0)
+        matrix()
+        be32(w.toLong << 16); be32(h.toLong << 16)
+      }
+      box("mdia") {
+        fullBox("mdhd") { be32(0); be32(0); be32(mediaTs); be32(mediaDur); be16(0x55c4); be16(0) }
+        fullBox("hdlr") {
+          be32(0); tag(handler); be32(0); be32(0); be32(0)
+          tag(if (isVideo) "Video" else "Sound"); u8(0)
+        }
+        box("minf") {
+          if (isVideo) fullBox("vmhd", flags = 1) { be16(0); be16(0); be16(0); be16(0) }
+          else fullBox("smhd") { be16(0); be16(0) }
+          box("dinf") { fullBox("dref") { be32(1); fullBox("url ", flags = 1) {} } }
+          stbl
+        }
+      }
+    }
+  }
+
+  /** The 'jpeg' VisualSampleEntry of a `w`×`h` Motion-JPEG track. */
+  private def mp4JpegEntry(out: Writer, w: Int, h: Int): Unit = {
+    import out._
+    box("jpeg") {
+      zeros(6); be16(1) // reserved, data-reference index
+      be16(0); be16(0); (0 until 3).foreach(_ => be32(0))
+      be16(w); be16(h)
+      be32(0x480000); be32(0x480000); be32(0); be16(1)
+      zeros(32) // compressorname
+      be16(24); be16(0xffff)
+    }
   }
 
   /** Real FRAGMENTED MP4 (fMP4 — the DASH/HLS segment layout that
@@ -1717,68 +1495,19 @@ object Multimodal {
                          timescale: Int, sampleDelta: Int,
                          framesPerFragment: Int = 2): Array[Byte] = {
     require(w > 0 && h > 0 && frames.nonEmpty && framesPerFragment > 0)
-    var out = new java.io.ByteArrayOutputStream(1024 + frames.map(_.length).sum)
-    def be32(v: Long): Unit = {
-      out.write(((v >>> 24) & 0xff).toInt); out.write(((v >>> 16) & 0xff).toInt)
-      out.write(((v >>> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
-    }
-    def be16(v: Int): Unit = { out.write((v >>> 8) & 0xff); out.write(v & 0xff) }
-    def tag(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-    def box(typ: String)(body: => Unit): Unit = {
-      // fresh-stream nesting: bytes copy once per level, never per
-      // sibling (see mp4MjpegVideo.box)
-      val saved = out
-      out = new java.io.ByteArrayOutputStream()
-      body
-      val payload = out
-      out = saved
-      be32(8L + payload.size()); tag(typ)
-      payload.writeTo(out)
-    }
-    def fullBox(typ: String, ver: Int = 0, flags: Int = 0)(body: => Unit): Unit =
-      box(typ) { be32((ver.toLong << 24) | flags); body }
-    def matrix(): Unit = {
-      be32(0x10000); be32(0); be32(0); be32(0); be32(0x10000); be32(0)
-      be32(0); be32(0); be32(0x40000000L)
-    }
+    val out = new Writer(1024 + frames.map(_.length).sum)
+    import out.{be32, box, fullBox, tag}
     val n = frames.length
     box("ftyp") { tag("iso5"); be32(0x200); tag("iso6"); tag("dash") }
     box("moov") {
-      fullBox("mvhd") {
-        be32(0); be32(0); be32(1000); be32(0) // fragmented: duration unknown
-        be32(0x10000); be16(0x100); be16(0); be32(0); be32(0)
-        matrix(); (0 until 6).foreach(_ => be32(0)); be32(2)
-      }
-      box("trak") {
-        fullBox("tkhd", flags = 7) {
-          be32(0); be32(0); be32(1); be32(0); be32(0)
-          be32(0); be32(0); be16(0); be16(0); be16(0); be16(0)
-          matrix(); be32(w.toLong << 16); be32(h.toLong << 16)
-        }
-        box("mdia") {
-          fullBox("mdhd") { be32(0); be32(0); be32(timescale.toLong); be32(0); be16(0x55c4); be16(0) }
-          fullBox("hdlr") { be32(0); tag("vide"); be32(0); be32(0); be32(0); tag("Video"); out.write(0) }
-          box("minf") {
-            fullBox("vmhd", flags = 1) { be16(0); be16(0); be16(0); be16(0) }
-            box("dinf") { fullBox("dref") { be32(1); fullBox("url ", flags = 1) {} } }
-            box("stbl") {
-              fullBox("stsd") {
-                be32(1)
-                box("jpeg") {
-                  (0 until 6).foreach(_ => out.write(0)); be16(1)
-                  be16(0); be16(0); (0 until 3).foreach(_ => be32(0))
-                  be16(w); be16(h)
-                  be32(0x480000); be32(0x480000); be32(0); be16(1)
-                  out.write(new Array[Byte](32), 0, 32)
-                  be16(24); be16(0xffff)
-                }
-              }
-              fullBox("stts") { be32(0) }
-              fullBox("stsc") { be32(0) }
-              fullBox("stsz") { be32(0); be32(0) }
-              fullBox("stco") { be32(0) }
-            }
-          }
+      mp4Mvhd(out, 0, nextTrack = 2) // fragmented: duration unknown
+      mp4Trak(out, 1, "vide", 0, timescale.toLong, 0, w, h) {
+        box("stbl") {
+          fullBox("stsd") { be32(1); mp4JpegEntry(out, w, h) }
+          fullBox("stts") { be32(0) }
+          fullBox("stsc") { be32(0) }
+          fullBox("stsz") { be32(0); be32(0) }
+          fullBox("stco") { be32(0) }
         }
       }
       box("mvex") {
@@ -1792,13 +1521,13 @@ object Multimodal {
       // moof layout is fixed-shape: 8 (moof) + 16 (mfhd) + 8 (traf)
       // + 16 (tfhd) + 20 (tfdt v1) + (20 + 8k) (trun) bytes
       val moofSize = 8 + 16 + 8 + 16 + 20 + 20 + 8 * k
-      val before = out.size()
+      val before = out.size
       box("moof") {
         fullBox("mfhd") { be32(seq) }
         box("traf") {
           // default-base-is-moof, no optional fields
           fullBox("tfhd", flags = 0x020000) { be32(1) }
-          fullBox("tfdt", ver = 1) { be32(base >>> 32); be32(base & 0xffffffffL) }
+          fullBox("tfdt", ver = 1) { out.be64(base) }
           // data-offset + per-sample duration + size
           fullBox("trun", flags = 0x301) {
             be32(k.toLong)
@@ -1812,9 +1541,9 @@ object Multimodal {
           }
         }
       }
-      require(out.size() - before == moofSize,
-        s"moof layout drifted: ${out.size() - before} vs $moofSize")
-      box("mdat") { grp.foreach(f => out.write(f, 0, f.length)) }
+      require(out.size - before == moofSize,
+        s"moof layout drifted: ${out.size - before} vs $moofSize")
+      box("mdat") { grp.foreach(f => out.bytes(f)) }
       seq += 1
     }
     out.toByteArray
@@ -1829,12 +1558,6 @@ object Multimodal {
     * malformed tree, or an inconsistent sample table (counts that
     * don't reconcile across the four boxes). */
   def mp4Walk(b: Array[Byte]): Option[Mp4Info] = {
-    def be16(off: Int): Int =
-      ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-    def be32(off: Int): Long =
-      ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-        ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
-    def be64(off: Int): Long = (be32(off) << 32) | be32(off + 4)
     def fourcc(off: Int): String =
       new String(b, off, 4, "US-ASCII")
     val containers = Set("moov", "trak", "mdia", "minf", "stbl", "dinf", "edts",
@@ -1867,18 +1590,18 @@ object Multimodal {
     def parseLeaf(typ: String, po: Int, pl: Int): Boolean = typ match {
       case "trex" =>
         if (pl < 24) return false
-        val tid = be32(po + 4)
-        trexDefaults(tid) = (be32(po + 12), be32(po + 16)) // (duration, size)
+        val tid = be32u(b, po + 4)
+        trexDefaults(tid) = (be32u(b, po + 12), be32u(b, po + 16)) // (duration, size)
         true
       case "tfhd" if traf != null =>
         if (pl < 8) return false
-        val flags = (be32(po) & 0xffffff).toInt
-        traf.tid = be32(po + 4)
+        val flags = (be32u(b, po) & 0xffffff).toInt
+        traf.tid = be32u(b, po + 4)
         var at = po + 8
-        if ((flags & 0x1) != 0) { if (at + 8 > po + pl) return false; traf.baseOff = Some(be64(at)); at += 8 }
+        if ((flags & 0x1) != 0) { if (at + 8 > po + pl) return false; traf.baseOff = Some(be64(b, at)); at += 8 }
         if ((flags & 0x2) != 0) at += 4  // sample-description-index
-        if ((flags & 0x8) != 0) { if (at + 4 > po + pl) return false; traf.defDur = Some(be32(at)); at += 4 }
-        if ((flags & 0x10) != 0) { if (at + 4 > po + pl) return false; traf.defSize = Some(be32(at)); at += 4 }
+        if ((flags & 0x8) != 0) { if (at + 4 > po + pl) return false; traf.defDur = Some(be32u(b, at)); at += 4 }
+        if ((flags & 0x10) != 0) { if (at + 4 > po + pl) return false; traf.defSize = Some(be32u(b, at)); at += 4 }
         traf.baseIsMoof = (flags & 0x020000) != 0
         at <= po + pl
       case "mfhd" => pl >= 8 // sequence number: presence-checked, unused
@@ -1886,14 +1609,14 @@ object Multimodal {
         pl >= (if ((b(po) & 0xff) == 1) 12 else 8) // decode time: unused
       case "trun" if traf != null =>
         if (pl < 8) return false
-        val flags = (be32(po) & 0xffffff).toInt
-        val cnt = be32(po + 4).toInt
+        val flags = (be32u(b, po) & 0xffffff).toInt
+        val cnt = be32u(b, po + 4).toInt
         var at = po + 8
         // our subset needs an explicit data offset: without one, runs
         // chain off the previous run's end — ambiguous for a reader
         // that refuses to guess
         if ((flags & 0x1) == 0) return false
-        val dataOff = be32(at).toInt; at += 4 // signed i32 per spec
+        val dataOff = be32s(b, at); at += 4 // signed i32 per spec
         if ((flags & 0x4) != 0) at += 4       // first-sample-flags
         val base = traf.baseOff.getOrElse {
           // spec default: relative to the enclosing moof's first byte
@@ -1904,11 +1627,11 @@ object Multimodal {
         var i = 0
         while (i < cnt) {
           val dur =
-            if ((flags & 0x100) != 0) { val d = be32(at); at += 4; d }
+            if ((flags & 0x100) != 0) { val d = be32u(b, at); at += 4; d }
             else traf.defDur.orElse(trexDefaults.get(traf.tid).map(_._1))
               .getOrElse(return false)
           val sz =
-            if ((flags & 0x200) != 0) { val s0 = be32(at); at += 4; s0 }
+            if ((flags & 0x200) != 0) { val s0 = be32u(b, at); at += 4; s0 }
             else traf.defSize.orElse(trexDefaults.get(traf.tid).map(_._2))
               .getOrElse(return false)
           if ((flags & 0x400) != 0) at += 4 // per-sample flags
@@ -1925,19 +1648,19 @@ object Multimodal {
       case "mvhd" =>
         if (pl < 24) return false
         val v = b(po) & 0xff
-        if (v == 1) { movieTs = be32(po + 20); movieDur = be64(po + 24) }
-        else { movieTs = be32(po + 12); movieDur = be32(po + 16) }
+        if (v == 1) { movieTs = be32u(b, po + 20); movieDur = be64(b, po + 24) }
+        else { movieTs = be32u(b, po + 12); movieDur = be32u(b, po + 16) }
         true
       case "tkhd" if trak != null =>
         if (pl < 84) return false
         val v = b(po) & 0xff
-        trak.tid = if (v == 1) be32(po + 20) else be32(po + 12)
+        trak.tid = if (v == 1) be32u(b, po + 20) else be32u(b, po + 12)
         true
       case "mdhd" if trak != null =>
         if (pl < 24) return false
         val v = b(po) & 0xff
-        if (v == 1) { trak.ts = be32(po + 20); trak.dur = be64(po + 24) }
-        else { trak.ts = be32(po + 12); trak.dur = be32(po + 16) }
+        if (v == 1) { trak.ts = be32u(b, po + 20); trak.dur = be64(b, po + 24) }
+        else { trak.ts = be32u(b, po + 12); trak.dur = be32u(b, po + 16) }
         true
       case "hdlr" if trak != null =>
         if (pl < 12) return false
@@ -1950,43 +1673,43 @@ object Multimodal {
         if (eo + 8 > po + pl) return false
         trak.fourcc = fourcc(eo + 4)
         if (trak.handler == "vide" && eo + 36 <= po + pl) {
-          trak.w = be16(eo + 32); trak.h = be16(eo + 34)
+          trak.w = be16u(b, eo + 32); trak.h = be16u(b, eo + 34)
         }
         true
       case "stts" if trak != null =>
         if (pl < 8) return false
-        val k = be32(po + 4).toInt
+        val k = be32u(b, po + 4).toInt
         if (pl < 8 + 8 * k || k < 0) return false
         trak.stts = Array.tabulate(k)(i =>
-          (be32(po + 8 + 8 * i), be32(po + 12 + 8 * i)))
+          (be32u(b, po + 8 + 8 * i), be32u(b, po + 12 + 8 * i)))
         true
       case "stsc" if trak != null =>
         if (pl < 8) return false
-        val k = be32(po + 4).toInt
+        val k = be32u(b, po + 4).toInt
         if (pl < 8 + 12 * k || k < 0) return false
         trak.stsc = Array.tabulate(k)(i =>
-          (be32(po + 8 + 12 * i), be32(po + 12 + 12 * i)))
+          (be32u(b, po + 8 + 12 * i), be32u(b, po + 12 + 12 * i)))
         true
       case "stsz" if trak != null =>
         if (pl < 12) return false
-        trak.fixedSize = be32(po + 4)
-        val k = be32(po + 8).toInt
+        trak.fixedSize = be32u(b, po + 4)
+        val k = be32u(b, po + 8).toInt
         if (trak.fixedSize == 0) {
           if (pl < 12 + 4 * k || k < 0) return false
-          trak.sizes = Array.tabulate(k)(i => be32(po + 12 + 4 * i).toInt)
+          trak.sizes = Array.tabulate(k)(i => be32u(b, po + 12 + 4 * i).toInt)
         } else trak.sizes = Array.fill(k)(trak.fixedSize.toInt)
         true
       case "stco" if trak != null =>
         if (pl < 8) return false
-        val k = be32(po + 4).toInt
+        val k = be32u(b, po + 4).toInt
         if (pl < 8 + 4 * k || k < 0) return false
-        trak.chunkOffs = Array.tabulate(k)(i => be32(po + 8 + 4 * i))
+        trak.chunkOffs = Array.tabulate(k)(i => be32u(b, po + 8 + 4 * i))
         true
       case "co64" if trak != null =>
         if (pl < 8) return false
-        val k = be32(po + 4).toInt
+        val k = be32u(b, po + 4).toInt
         if (pl < 8 + 8 * k || k < 0) return false
-        trak.chunkOffs = Array.tabulate(k)(i => be64(po + 8 + 8 * i))
+        trak.chunkOffs = Array.tabulate(k)(i => be64(b, po + 8 + 8 * i))
         true
       case _ => true // unknown leaves are skipped, the format's rule
     }
@@ -2024,12 +1747,12 @@ object Multimodal {
       var off = from
       while (off < to) {
         if (off + 8 > to) return false
-        var size = be32(off)
+        var size = be32u(b, off)
         var hdr = 8
         val typ = fourcc(off + 4)
         if (size == 1) {
           if (off + 16 > to) return false
-          size = be64(off + 8); hdr = 16
+          size = be64(b, off + 8); hdr = 16
         } else if (size == 0) size = (to - off).toLong
         if (size < hdr || off + size > to) return false
         if (containers.contains(typ)) {
@@ -2082,19 +1805,8 @@ object Multimodal {
     val info = mp4Walk(b).getOrElse(return None)
     val v = info.tracks.find(t => t.handler == "vide" && t.fourcc == "jpeg")
       .getOrElse(return None)
-    val out = new Array[Array[Long]](v.samples.length)
-    var i = 0
-    while (i < v.samples.length) {
-      val (off, len, _) = v.samples(i)
-      val lum = Jpeg.luminanceWithDims(
-        java.util.Arrays.copyOfRange(b, off.toInt, off.toInt + len)) match {
-        case Some((fw, fh, l)) if fw == v.width && fh == v.height => l
-        case _ => return None
-      }
-      out(i) = lum
-      i += 1
-    }
-    Some((v.width, v.height, out))
+    jpegFrames(b, v.samples.map { case (o, l, _) => (o, l) }.toSeq, v.width, v.height)
+      .map(f => (v.width, v.height, f))
   }
 
   /** Perceptual blockhash over REAL decoded luminance when the blob is
@@ -2103,7 +1815,7 @@ object Multimodal {
     * corpus flows, and decodable assets hash actual pixel content
     * (uniform-color images of different byte layouts collide; a
     * brightness gradient sets exactly the bright half's bits —
-    * spec-pinned in Round12EdgeSpec on synthesized known-pixel BMPs).
+    * spec-pinned in BmpDecodeSpec on synthesized known-pixel BMPs).
     * All three decoders share the exact BT.601 integer luma, so the
     * SAME image stored as BMP, PNG or GIF produces the SAME hash — the
     * cross-container dedup property. */
@@ -2236,7 +1948,7 @@ object Multimodal {
     * `div`), clamped to ≥1 so no plan emits a zero-pixel dimension. */
   def resizePlan(features: DataFrame, maxDim: Long): DataFrame = {
     require(maxDim > 0)
-    // StubImageDecoder emits (head_byte, byte_sum) as pseudo (w, h)
+    // HeaderImageDecoder emits (w, h) in the (head_byte, byte_sum) slots
     features
       .select(col("doc_id"), col("head_byte").as("w"), col("byte_sum").as("h"))
       .selectExpr("doc_id", "w", "h",

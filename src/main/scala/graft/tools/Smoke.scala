@@ -23,20 +23,26 @@ object Smoke {
       s"entry() row count drifted: got $entryRows, pinned 91 at sf0.001")
     e.show(5, truncate = false)
 
-    // 2. probe: poison lines through the tolerant JSON source
+    // 2. probe: poison lines through the graft-jsonlog source, whose
+    // row rule keeps the garbage-prefixed and clean lines and drops the
+    // non-JSON, malformed and empty ones
     val schema = StructType(Seq(
       StructField("impressionId", StringType),
       StructField("referrer", StringType),
       StructField("adId", StringType)))
-    val raw = Seq(
+    val logDir = java.nio.file.Files.createTempDirectory("smoke-jsonlog")
+    val poison = Seq(
       """garbage prefix {"impressionId":"i1","referrer":"r1","adId":"a1"}""",
       """{"impressionId":"i2","referrer":"r2","adId":"a2"}""",
       """no json here at all""",
       """{{{{broken json""",
-      "").toDF("value")
-    val parsed = graft.sources.JsonLogs.parse(raw, schema)
+      "")
+    java.nio.file.Files.write(logDir.resolve("poison.jsonl"),
+      poison.map(_ + "\n").mkString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val parsed = spark.read.format("graft-jsonlog").schema(schema).load(logDir.toString)
     println("POISON_PARSED=" + parsed.count())
     parsed.show(truncate = false)
+    graft.queries.StreamReplay.deleteRec(logDir.toFile)
 
     // 3. probe: duplicate clicks for one impression collapse to 0/1
     val imps = Seq(("i1", "r1", "a1"), ("i2", "r1", "a1"), ("i3", "r2", "a9"))

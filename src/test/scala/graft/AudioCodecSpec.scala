@@ -77,26 +77,24 @@ class AudioCodecSpec extends AnyFunSuite {
     assert(maxErr <= 3000, s"ADPCM lost track of a gentle walk: max error $maxErr")
   }
 
-  test("wavSamplesEx: PCM16 path agrees with wavSamples; compressed formats parse; junk others rejected") {
+  test("wavSamples: PCM16, μ-law and IMA ADPCM parse through one chunk walk; other tags rejected") {
     val pcmSamples = Array.tabulate(128)(i => ((i * 523) % 4001 - 2000).toShort)
     val wav = Multimodal.wavPcm16(8000, 2, pcmSamples, junkChunk = true)
-    val legacy = Multimodal.wavSamples(wav).get
-    val ex = Multimodal.wavSamplesEx(wav).get
-    assert(ex._3 == 1 && ex._1 == legacy._1 && ex._2 == legacy._2)
-    assert(ex._4.toSeq == legacy._3.toSeq)
+    val (pr, pc, pf, ps) = Multimodal.wavSamples(wav).get
+    assert(pr == 8000 && pc == 2 && pf == 1)
+    assert(ps.toSeq == Seq.tabulate(64)(f => (pcmSamples(2 * f) + pcmSamples(2 * f + 1)) / 2))
     // μ-law with junk chunk parses through the same walk
     val mono = Array.tabulate(65)(i => if (i % 2 == 0) 1980 else -1980)
     val uw = Multimodal.wavUlaw(11025, 1, mono, junkChunk = true)
-    val (ur, uc, uf, us) = Multimodal.wavSamplesEx(uw).get
+    val (ur, uc, uf, us) = Multimodal.wavSamples(uw).get
     assert(ur == 11025 && uc == 1 && uf == 7)
     assert(us.toSeq == mono.toSeq) // exact rungs round-trip
     // ADPCM parses and yields the constants
     val aw = Multimodal.wavImaAdpcm(8000, Array.fill(65)(777), 65)
-    val (_, _, af, as_) = Multimodal.wavSamplesEx(aw).get
+    val (_, _, af, as_) = Multimodal.wavSamples(aw).get
     assert(af == 0x11 && as_.toSeq == Seq.fill(65)(777))
-    // an unknown compressed tag is still rejected, like wavSamples
+    // an unknown compressed tag is rejected
     val alaw = uw.clone(); alaw(20) = 6 // fmt tag → A-law
-    assert(Multimodal.wavSamplesEx(alaw).isEmpty)
     assert(Multimodal.wavSamples(alaw).isEmpty)
   }
 
@@ -104,7 +102,7 @@ class AudioCodecSpec extends AnyFunSuite {
     val a1 = 1980 + 128 * 3; val a2 = 1980 + 128 * 9
     val pcm = Array(a1, a2, -a1, -a2)
     val wav = Multimodal.wavUlaw(8000, 2, pcm)
-    val (_, _, _, mono) = Multimodal.wavSamplesEx(wav).get
+    val (_, _, _, mono) = Multimodal.wavSamples(wav).get
     assert(mono.toSeq == Seq((a1 + a2) / 2, -(a1 + a2) / 2))
   }
 

@@ -33,14 +33,6 @@ class MultimodalSpec extends AnyFunSuite with TempDirs {
     assert(out.map(_.n_bytes).sum == (1L to 200L).sum)
   }
 
-  test("stub image decoder runs the same plumbing deterministically") {
-    import spark.implicits._
-    val docs = Seq((1L, "imagebytes")).toDF("doc_id", "text")
-    val a = Multimodal.extractFeatures(spark, Multimodal.manifest(spark, docs), Multimodal.StubImageDecoder).collect()
-    val b = Multimodal.extractFeatures(spark, Multimodal.manifest(spark, docs), Multimodal.StubImageDecoder).collect()
-    assert(a.sameElements(b))
-  }
-
   test("full corpus features match source byte lengths") {
     import spark.implicits._
     val docs = Tables.documents(spark, TestSpark.sf)
@@ -276,5 +268,30 @@ class MultimodalSpec extends AnyFunSuite with TempDirs {
     val got = SparkEntry.queries("mm_audio_match")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == Seq((1L, 2L, 4L)), got.toString)
+  }
+
+  test("jpegDims accepts a blob truncated exactly after the SOF width bytes") {
+    // SOI + SOF0 segment whose last byte is the final width byte
+    val sof = Array(0xff, 0xd8, 0xff, 0xc0, 0x00, 0x07,
+      0x08, 0x01, 0x00, 0x02, 0x00).map(_.toByte) // h=256, w=512; ends at width
+    val got = Multimodal.HeaderImageDecoder
+      .decode(Seq(Multimodal.Asset(1L, "image/jpeg", sof))).head
+    assert(got.head_byte == 512L && got.byte_sum == 256L, s"$got")
+  }
+
+  test("mm_shot_boundaries: a single loud frame among quiet ones flags its two transitions") {
+    import spark.implicits._
+    // frames: 4 quiet ('|') + 1 loud (' ') + 1 quiet. Deltas (5 of
+    // them): [0,0,0,588800,588800]; mean 235520 — the two transition
+    // deltas are >=2x mean, the zero deltas are not.
+    val text = "|" * 256 + " " * 64 + "|" * 64
+    val dir = tempDir("shotspec")
+    Seq((9L, text)).toDF("doc_id", "text").coalesce(1)
+      .write.parquet(s"$dir/documents.parquet")
+    val got = SparkEntry.queries("mm_shot_boundaries")(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(got == Seq(
+      (9L, 4L, 588800L, 5L),
+      (9L, 5L, 588800L, 5L)), got.toString)
   }
 }

@@ -35,16 +35,6 @@ class Round6EdgeSpec extends AnyFunSuite with TempDirs {
     assert(spark.read.parquet(s"$dir/z").count() == 0)
   }
 
-  test("jpegDims accepts a blob truncated exactly after the SOF width bytes") {
-    import graft.operators.Multimodal
-    // SOI + SOF0 segment whose last byte is the final width byte
-    val sof = Array(0xff, 0xd8, 0xff, 0xc0, 0x00, 0x07,
-      0x08, 0x01, 0x00, 0x02, 0x00).map(_.toByte) // h=256, w=512; ends at width
-    val got = Multimodal.HeaderImageDecoder
-      .decode(Seq(Multimodal.Asset(1L, "image/jpeg", sof))).head
-    assert(got.head_byte == 512L && got.byte_sum == 256L, s"$got")
-  }
-
   test("q_equidepth degenerates to one bucket on a constant column, no crash") {
     import spark.implicits._
     val dir = tempDir("eq-edge")

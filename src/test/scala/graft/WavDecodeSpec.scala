@@ -13,8 +13,8 @@ class WavDecodeSpec extends AnyFunSuite {
     val tone = Array.tabulate(128)(i => if ((i / 5) % 2 == 0) 1000 else -1000)
     val mono = Multimodal.wavPcm16(8000, 1, tone.map(_.toShort))
     assert(Multimodal.wavSamples(mono).map {
-      case (r, c, s) => (r, c, s.toSeq)
-    }.contains((8000, 1, tone.toSeq)))
+      case (r, c, f, s) => (r, c, f, s.toSeq)
+    }.contains((8000, 1, 1, tone.toSeq)))
     // stereo with ch2 = ch1/2: mixdown (s + s/2)/2, truncation toward zero
     val pcm2 = Array.tabulate(256) { j =>
       val v = tone(j / 2); (if (j % 2 == 0) v else v / 2).toShort
@@ -23,8 +23,8 @@ class WavDecodeSpec extends AnyFunSuite {
     for (junk <- Seq(false, true)) {
       val wav = Multimodal.wavPcm16(44100, 2, pcm2, junkChunk = junk)
       assert(Multimodal.wavSamples(wav).map {
-        case (r, c, s) => (r, c, s.toSeq)
-      }.contains((44100, 2, want2)), s"junk=$junk")
+        case (r, c, f, s) => (r, c, f, s.toSeq)
+      }.contains((44100, 2, 1, want2)), s"junk=$junk")
     }
   }
 
@@ -42,7 +42,7 @@ class WavDecodeSpec extends AnyFunSuite {
 
   test("negative samples decode with sign extension") {
     val s = Array[Short](-32768, 32767, -1, 1, 0, -12345, 100, -100)
-    val got = Multimodal.wavSamples(Multimodal.wavPcm16(16000, 1, s)).get._3
+    val got = Multimodal.wavSamples(Multimodal.wavPcm16(16000, 1, s)).get._4
     assert(got.toSeq == s.map(_.toInt).toSeq)
   }
 

@@ -4,7 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Noise-tolerant JSON-lines ingestion.
+/** The `from_json` reading of the noisy JSON-lines log format, kept as
+  * the reference that `CtrSpec` and `JsonLogSourceSpec`'s property check
+  * the `graft-jsonlog` source against (the source is the one ingest
+  * path in the engine).
   *
   * The reference mapper strips any garbage before the first '{' of each
   * log line before parsing (ClickThru.java:97-98:

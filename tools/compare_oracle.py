@@ -6,15 +6,31 @@ parquet (columns sorted by name, exact value compare).
 Usage: compare_oracle.py [sf_dir] [out_dir] [key1,key2,...]
 The optional third argument compares only the named keys. A filter key
 with no result or oracle counts as a failure, and so does a run that
-compares no key at all."""
+compares no key at all.
+
+DuckDB gets half of the host's MemTotal as its memory_limit and spills
+to a temp directory under out_dir, so a heavy oracle spills instead of
+growing until the machine runs out of memory."""
 import sys, json, glob, math
 import duckdb
+
+
+def mem_total_mb():
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) // 1024
+    raise RuntimeError("no MemTotal in /proc/meminfo")
+
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/vout"
 keys = set(sys.argv[3].split(",")) - {""} if len(sys.argv) > 3 else None
 
 con = duckdb.connect()
+con.execute(f"SET memory_limit = '{mem_total_mb() // 2}MB'")
+# a dot-named dir: the rows-only scan below skips it
+con.execute(f"SET temp_directory = '{out_dir}/.duckdb_tmp'")
 for t in ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
